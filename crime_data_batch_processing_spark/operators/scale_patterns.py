@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum, with_scalars
 from crime_data_batch_processing_spark.registry import query
+from crime_data_batch_processing_spark.session import scoped_conf
 from crime_data_batch_processing_spark.sources.tables import load_table
 
 N_SALTS = 8
@@ -324,17 +325,8 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (decimal sums are reassociation-proof, so chunked hot partitions
     cannot drift).
     """
-    prev = {k: spark.conf.get(k, None) for k in _AQE_SKEW_TEST_CONF}
-    for k, v in _AQE_SKEW_TEST_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _AQE_SKEW_TEST_CONF):
         return skewed_type_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 #: Range-join bucket width in microseconds == the range width, so an
@@ -467,17 +459,8 @@ def join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in tests/test_plans.py, and the oracle verifies the bloom
     never drops a true match (bloom filters have no false negatives).
     """
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_TEST_CONF}
-    for k, v in _BLOOM_TEST_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_TEST_CONF):
         return bloom_gated_join(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 #: Interval-overlap join geometry: promo windows are 7 days, ship

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,23 +34,13 @@ from pyspark.sql import functions as F
 from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum
 from crime_data_batch_processing_spark.registry import query
+from crime_data_batch_processing_spark.session import scoped_conf
 from crime_data_batch_processing_spark.sources.crime_schema import stamp_partitions
 from crime_data_batch_processing_spark.sources.tables import load_table
 
 
-@contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Scoped `partitionOverwriteMode=dynamic` — the conf is
-    session-global, so every writer that needs dynamic semantics must
-    restore the caller's (static-by-default) mode or silently change
-    the overwrite behavior of every later write in the session."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
+#: Overwrites replace only the partitions the written rows land in.
+DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
 
 
 def write_snapshot(df: DataFrame, base_path: str, exec_date: str) -> str:
@@ -62,12 +51,13 @@ def write_snapshot(df: DataFrame, base_path: str, exec_date: str) -> str:
     spark_ingest_script.py:46).
     """
     stamped = stamp_partitions(df, exec_date)
-    (
-        stamped.write.mode("overwrite")
-        .partitionBy("y", "m", "d")
-        .format("parquet")
-        .save(base_path)
-    )
+    with scoped_conf(df.sparkSession, DYNAMIC_OVERWRITE):
+        (
+            stamped.write.mode("overwrite")
+            .partitionBy("y", "m", "d")
+            .format("parquet")
+            .save(base_path)
+        )
     y, m, d = exec_date.split("-")
     return f"{base_path}/y={int(y)}/m={int(m)}/d={int(d)}"
 
@@ -145,12 +135,7 @@ def latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = f"/tmp/cdbp_snap/{os.path.basename(sf_dir.rstrip('/'))}/orders"
     orders = load_table(spark, sf_dir, "orders")
     write_snapshot(orders.filter(F.col("o_orderstatus") == "F"), base, "2026-08-12")
-    # append-style second run: overwrite only its own partition.
-    # The conf is session-shared — restore it so later writes in the
-    # same session keep their expected (static) overwrite semantics.
-    stamped = stamp_partitions(orders, "2026-08-13")
-    with dynamic_partition_overwrite(spark):
-        stamped.write.mode("overwrite").partitionBy("y", "m", "d").parquet(base)
+    write_snapshot(orders, base, "2026-08-13")
     latest = read_latest_snapshot(spark, base, "2026-08-13")
     return (
         latest.groupBy("o_orderstatus")
@@ -207,10 +192,7 @@ def latest_snapshot_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot(
             orders.filter(F.col("o_orderstatus") == "F"), snap, "2026-08-12"
         )
-        with dynamic_partition_overwrite(spark):
-            stamp_partitions(orders, "2026-08-13").write.mode(
-                "overwrite"
-            ).partitionBy("y", "m", "d").parquet(snap)
+        write_snapshot(orders, snap, "2026-08-13")
 
     build_once(base, build)
     paths["stale"] = f"{snap}/y=2026/m=8/d=12"
@@ -693,7 +675,7 @@ def sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         restated = o.where(F.col("o_year") == OVERWRITE_YEAR).withColumn(
             "o_totalprice", F.col("o_totalprice") + PRICE_CORRECTION
         )
-        with dynamic_partition_overwrite(spark):
+        with scoped_conf(spark, DYNAMIC_OVERWRITE):
             restated.write.partitionBy("o_year").mode("overwrite").parquet(tbl)
 
     build_once(base, build)
@@ -750,17 +732,12 @@ def snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
     def build() -> None:
-        with dynamic_partition_overwrite(spark):
-            for exec_date, statuses in _ASOF_RUNS:
-                stamped = stamp_partitions(
-                    orders.filter(F.col("o_orderstatus").isin(*statuses)),
-                    exec_date,
-                )
-                (
-                    stamped.write.mode("overwrite")
-                    .partitionBy("y", "m", "d")
-                    .parquet(base)
-                )
+        for exec_date, statuses in _ASOF_RUNS:
+            write_snapshot(
+                orders.filter(F.col("o_orderstatus").isin(*statuses)),
+                base,
+                exec_date,
+            )
 
     build_once(os.path.dirname(base), build)
     snap = spark.read.parquet(base)
@@ -883,16 +860,8 @@ def snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
     def build() -> None:
-        with dynamic_partition_overwrite(spark):
-            for exec_date, k in _EXPIRE_RUNS:
-                stamped = stamp_partitions(
-                    orders.filter(F.col("o_orderkey") % 7 < k), exec_date
-                )
-                (
-                    stamped.write.mode("overwrite")
-                    .partitionBy("y", "m", "d")
-                    .parquet(base)
-                )
+        for exec_date, k in _EXPIRE_RUNS:
+            write_snapshot(orders.filter(F.col("o_orderkey") % 7 < k), base, exec_date)
         # (1) run enumeration: partition columns only — resolved from
         # directory names, no parquet data pages touched
         runs = sorted(
@@ -992,39 +961,22 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
 
     def build() -> None:
-        with dynamic_partition_overwrite(spark):
-            for exec_date, mod, bad_delta in _RESTORE_RUNS:
-                run = orders.filter(F.col("o_orderkey") % mod == 0)
-                if bad_delta:
-                    run = run.withColumn(
-                        "o_totalprice", F.col("o_totalprice") + bad_delta
-                    )
-                (
-                    stamp_partitions(run, exec_date)
-                    .write.mode("overwrite")
-                    .partitionBy("y", "m", "d")
-                    .parquet(base)
+        for exec_date, mod, bad_delta in _RESTORE_RUNS:
+            run = orders.filter(F.col("o_orderkey") % mod == 0)
+            if bad_delta:
+                run = run.withColumn(
+                    "o_totalprice", F.col("o_totalprice") + bad_delta
                 )
-            # the rollback: partition-pruned read of the good run,
-            # republished as the new latest dated partition.
-            # SAFETY: this reads from `base` and overwrites the SAME
-            # `base` in one job — safe only under dynamic
-            # partitionOverwriteMode (the overwrite touches just the
-            # new _RESTORE_AS partition); under static mode the write
-            # would first DELETE the whole table, including the good
-            # partition being read. Guard against a refactor moving
-            # this outside the context manager above.
-            assert (
-                spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-                == "dynamic"
-            ), "snapshot_restore rollback requires dynamic overwrite mode"
-            good = read_latest_snapshot(spark, base, _RESTORE_TO)
-            (
-                stamp_partitions(good, _RESTORE_AS)
-                .write.mode("overwrite")
-                .partitionBy("y", "m", "d")
-                .parquet(base)
-            )
+            write_snapshot(run, base, exec_date)
+        # the rollback: partition-pruned read of the good run,
+        # republished as the new latest dated partition. It reads from
+        # `base` and overwrites the same `base` in one job, which is
+        # safe only because write_snapshot's dynamic overwrite touches
+        # just the new _RESTORE_AS partition; a static overwrite would
+        # first delete the good partition being read.
+        write_snapshot(
+            read_latest_snapshot(spark, base, _RESTORE_TO), base, _RESTORE_AS
+        )
 
     build_once(os.path.dirname(base), build)
     latest = read_latest_snapshot(spark, base, _RESTORE_AS)

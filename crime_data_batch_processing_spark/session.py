@@ -20,6 +20,7 @@ the configs that matter at 100 TB up front:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -76,3 +77,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set `conf` on the session for the block. On exit, also on error,
+    each key gets its previous value back, or is unset if it was unset.
+
+    The session conf is global: a job or stream started from another
+    thread inside the block sees the scoped values too.
+    """
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

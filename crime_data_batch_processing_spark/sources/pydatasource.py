@@ -550,8 +550,8 @@ class ChunkedParquetStreamReader(SimpleDataSourceStreamReader):
 
     Offsets are row positions ({"row": n}); each read() advances one
     chunk. A caught-up stream returns an empty iterator with an
-    unchanged offset, which is how processAllAvailable() knows to
-    stop triggering."""
+    unchanged offset, which is how a drained run
+    (`run_stream(..., drain=True)`) knows to stop triggering."""
 
     CHUNKS = 4
 

@@ -32,6 +32,8 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from crime_data_batch_processing_spark.functions.exact import sql_dsum
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.streaming.stream_events import (
+    _stream_src,
+    run_stream,
     streaming_events,
 )
 
@@ -80,33 +82,6 @@ def stateful_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_to_memory(
-    spark: SparkSession, src_dir: str, query_name: str
-) -> DataFrame:
-    """Run the stateful stream to completion (AvailableNow) against a
-    file source and return the memory-sink table."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        _bounded_state_conf,
-    )
-
-    out = stateful_user_stats(
-        streaming_events(spark, src_dir, max_files_per_trigger=None)
-    )
-    with _bounded_state_conf(spark):
-        q = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(query_name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(query_name)
-
-
 @query(
     "stream_stateful",
     oracle=f"""
@@ -127,13 +102,10 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness). Multi-batch incremental state transitions are
     exercised in tests/test_streaming.py.
     """
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        _stream_src,
+    out = stateful_user_stats(
+        streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
     )
-
-    return run_stateful_to_memory(
-        spark, _stream_src(sf_dir), query_name="cdbp_stream_stateful"
-    )
+    return spark.table(run_stream(out, "cdbp_stream_stateful", "update").name)
 
 
 #: Streamed twin of operators/windows.window_anomaly: same trailing
@@ -250,24 +222,7 @@ def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     property that lets one codebase serve the lambda architecture's
     both halves.
     """
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        _bounded_state_conf,
-        _stream_src,
-    )
-
-    for q in spark.streams.active:
-        if q.name == "cdbp_stream_anomaly":
-            q.stop()
     out = stateful_anomaly(
         streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
     )
-    with _bounded_state_conf(spark):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("cdbp_stream_anomaly")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("cdbp_stream_anomaly")
+    return spark.table(run_stream(out, "cdbp_stream_anomaly").name)

@@ -20,7 +20,6 @@ exercises a restart against the same checkpoint.
 from __future__ import annotations
 
 import atexit
-import contextlib
 import hashlib
 import os
 import shutil
@@ -29,6 +28,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum
 from crime_data_batch_processing_spark.functions.textkit import sql_shingles
@@ -37,6 +37,7 @@ from crime_data_batch_processing_spark.operators.llm_dedup import (
     DECON_K,
 )
 from crime_data_batch_processing_spark.registry import query
+from crime_data_batch_processing_spark.session import scoped_conf
 
 #: Physical schema of events.parquet files whose ts is int64 NANOS on
 #: disk (Spark's µs TimestampType can't be declared for a nanos
@@ -127,63 +128,88 @@ def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    src_dir: str,
-    query_name: str,
-    output_mode: str = "complete",
+def _scratch_ckpt() -> str:
+    """Ephemeral checkpoint dir for bounded runs: tmpfs when available.
+
+    State-store commits fsync every delta file; a bounded run whose
+    checkpoint is discarded at the end pays that disk cost for nothing
+    (measured ~40% of stream_stream_join wall time locally). Only
+    checkpoints that outlive the query need durable storage, and
+    `run_stream` keeps any checkpoint its caller passes.
+    """
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    return tempfile.mkdtemp(prefix="cdbp_stream_ckpt_", dir=base)
+
+
+def run_stream(
+    df: DataFrame,
+    sink,
+    output_mode: str = "append",
     checkpoint: str | None = None,
-) -> DataFrame:
-    """Run the streaming aggregate to completion (AvailableNow) and
-    return the memory-sink table. Synchronous; stops the query."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    agg = hourly_agg(streaming_events(spark, src_dir))
-    writer = (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    # consistent sizing across restarts: a checkpoint pins its state
-    # partition count at first start, and every caller (including the
-    # restart tests) re-enters through this helper, so the bounded
-    # sizing is applied on both sides of a restart
-    with _bounded_state_conf(spark):
-        q = writer.start()
-        q.awaitTermination()
-    return spark.table(query_name)
+    drain: bool = False,
+) -> StreamingQuery:
+    """Run a bounded streaming query to completion and return the
+    finished query (its `lastProgress`/`recentProgress` stay readable).
 
+    `sink` picks the sink: a query name runs into the memory sink (read
+    it back with `spark.table(q.name)`; an active query of that name is
+    stopped first), a function runs as a `foreachBatch` body, and a
+    `(format, path)` pair writes to a file sink.
 
-def run_stream_to_parquet(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    checkpoint: str,
-) -> DataFrame:
-    """Run the streaming aggregate to a parquet sink (append mode) and
-    return the sink contents. Unlike the memory sink, a file sink
-    RECOVERS from its checkpoint — this is the restart path the
-    watermark-drop test exercises, and the production topology (the
-    memory sink exists only for in-process inspection)."""
-    agg = hourly_agg(streaming_events(spark, src_dir))
-    # same restart-consistency note as run_stream_to_memory: the
-    # bounded sizing is applied on both sides of a checkpoint restart
-    # because every caller re-enters through this helper
-    with _bounded_state_conf(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    Without `checkpoint` the run gets a tmpfs scratch checkpoint that
+    is removed at the end. A checkpoint the caller passes is durable
+    and stays, so a second run against it is a restart.
+
+    State partitions: a stateful query freezes
+    `spark.sql.shuffle.partitions` into its checkpoint at first start,
+    and every micro-batch then commits every state partition, holding
+    rows or not. Bounded runs hold a few to a few thousand keys, so the
+    run scopes the count to min(8, defaultParallelism) (measured:
+    stream_pysource 5.1 s at 32 partitions, 3.8 s at 8, same rows).
+    The rule is fixed, so both sides of a checkpoint restart get the
+    same count. `foreachBatch` bodies run unscoped: they write fixture
+    files whose layout follows the session's own width.
+
+    Trigger: AvailableNow + awaitTermination. `drain=True` runs the
+    default trigger, processAllAvailable() and stop() instead: Python
+    simple stream readers fall back to a single batch under
+    AvailableNow and would stop after their first chunk.
+    """
+    spark = df.sparkSession
+    writer = df.writeStream.outputMode(output_mode)
+    conf = {
+        "spark.sql.shuffle.partitions": str(
+            min(8, spark.sparkContext.defaultParallelism)
         )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    }
+    if isinstance(sink, str):
+        for q in spark.streams.active:
+            if q.name == sink:
+                q.stop()
+        writer = writer.format("memory").queryName(sink)
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+        conf = {}
+    else:
+        fmt, path = sink
+        writer = writer.format(fmt).option("path", path)
+    if not drain:
+        writer = writer.trigger(availableNow=True)
+    ckpt = checkpoint or _scratch_ckpt()
+    try:
+        with scoped_conf(spark, conf):
+            q = writer.option("checkpointLocation", ckpt).start()
+            try:
+                if drain:
+                    q.processAllAvailable()
+                else:
+                    q.awaitTermination()
+            finally:
+                q.stop()
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return q
 
 
 def _stream_src(sf_dir: str, table: str = "events") -> str:
@@ -276,105 +302,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = "cdbp_stream_session"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with _bounded_state_conf(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def _scratch_ckpt() -> str:
-    """Ephemeral checkpoint dir for BOUNDED runs: tmpfs when available.
-
-    State-store commits fsync every delta file; for a bounded
-    AvailableNow run into a memory sink the checkpoint is discarded at
-    the end, so paying disk fsync for it is pure overhead (measured
-    ~40% of stream_stream_join wall time locally). Durable storage is
-    only required for checkpoints that outlive the query — the restart
-    tests and `run_stream_to_parquet` keep theirs on disk.
-    """
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="cdbp_stream_ckpt_", dir=base)
-
-
-#: State-store partition count for the BOUNDED streaming fixtures
-#: (env-overridable). A streaming aggregate/join snapshots
-#: `spark.sql.shuffle.partitions` at query start as its state
-#: partitioning, and every micro-batch then pays a fixed per-partition
-#: commit cost (delta-file write + metadata) for EVERY state partition
-#: regardless of how many hold rows. The right sizing tracks STATE
-#: CARDINALITY and cluster topology, not local core count: these
-#: bounded fixtures hold a handful-to-a-few-thousand keys, where 32
-#: partitions x N micro-batches is pure commit overhead (measured:
-#: stream_pysource 5.1s @ 32 partitions -> 3.8s @ 8, identical rows).
-#: Production streams with high-cardinality state size this up via
-#: SPARK_GRAFT_STREAM_STATE_PARTITIONS; the default is deliberately
-#: core-count-independent (min(8, parallelism)) so bench runs at
-#: different SPARK_GRAFT_CPUS stay comparable.
-STREAM_STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
-
-
-@contextlib.contextmanager
-def _bounded_state_conf(spark: SparkSession):
-    """Scope `spark.sql.shuffle.partitions` (= state partitions at
-    stream start) to the bounded-run sizing; restore on exit.
-
-    Single-threaded-harness assumption (documented per the r14
-    advisor): the session conf is global, so a concurrent batch job
-    or second stream started inside the start→awaitTermination window
-    would inherit the bounded sizing. Every consumer in this repo
-    (bench, strict sweep, driver verify, tests) runs queries
-    sequentially on one driver thread; a multi-tenant deployment
-    should set the sizing on the writer's own session instead.
-    """
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    raw = os.environ.get(STREAM_STATE_PARTITIONS_ENV, "")
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0  # non-integer override: fall back to the default sizing
-    if n <= 0:
-        n = min(8, spark.sparkContext.defaultParallelism)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _run_bounded(agg: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Run a bounded streaming query to completion into a memory sink
-    and return the sink table. Synchronous; stops any prior query of
-    the same name first."""
-    spark = agg.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    ckpt = _scratch_ckpt()
-    try:
-        with _bounded_state_conf(spark):
-            q = (
-                agg.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return spark.table(run_stream(agg, "cdbp_stream_session", "complete").name)
 
 
 @query(
@@ -412,7 +340,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("sum_value"),
         )
     )
-    return _run_bounded(agg, "cdbp_stream_static_join", "complete")
+    return spark.table(run_stream(agg, "cdbp_stream_static_join", "complete").name)
 
 
 @query(
@@ -437,7 +365,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    return _run_bounded(dedup, "cdbp_stream_dedup", "append")
+    return spark.table(run_stream(dedup, "cdbp_stream_dedup").name)
 
 
 @query(
@@ -462,10 +390,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark late-drop behavior is exercised separately in
     tests/test_streaming.py where data arrives across restarts).
     """
-    ckpt = _scratch_ckpt()
-    return run_stream_to_memory(
-        spark, _stream_src(sf_dir), query_name="cdbp_stream_events", checkpoint=ckpt
-    )
+    agg = hourly_agg(streaming_events(spark, _stream_src(sf_dir)))
+    return spark.table(run_stream(agg, "cdbp_stream_events", "complete").name)
 
 
 def click_purchase_join(
@@ -554,17 +480,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stores per shuffle partition (per side: keyToNumValues +
     keyWithIndexToValue). State partition count is frozen into the
     checkpoint at first start, so it must be sized to STATE volume,
-    not compute width — here the filtered sides are small, so 8
-    partitions (32 stores) beat the session's compute-sized default
-    (at 32: 128 stores whose open/commit cost dominates the query).
+    not compute width — here the filtered sides are small, so
+    `run_stream`'s min(8, cores) partitions (4 partitions, 16 stores
+    on a 4-core host) beat a compute-sized default (at 32 partitions:
+    128 stores whose open/commit cost dominates the query).
     """
     joined = click_purchase_join(spark, _stream_src(sf_dir))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_bounded(joined, "cdbp_stream_stream_join", "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return spark.table(run_stream(joined, "cdbp_stream_stream_join").name)
 
 
 def cdc_merge_batch(target_dir: str):
@@ -642,17 +564,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = f"/tmp/cdbp_cdc_target/{key}"
     shutil.rmtree(target, ignore_errors=True)
     events = streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
-    ckpt = _scratch_ckpt()
-    q = (
-        events.writeStream.foreachBatch(cdc_merge_batch(target))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_stream(events, cdc_merge_batch(target))
     return spark.read.parquet(target).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
@@ -745,17 +657,7 @@ def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_base = tempfile.mkdtemp(prefix="cdbp_rollup_delta_")
     _DELTA_DIRS.append(delta_base)
     events = streaming_events(spark, _stream_src(sf_dir))
-    ckpt = _scratch_ckpt()
-    q = (
-        events.writeStream.foreachBatch(rollup_delta_batch(delta_base))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_stream(events, rollup_delta_batch(delta_base))
     from crime_data_batch_processing_spark.functions.exact import dsum_merge
 
     return (
@@ -853,17 +755,7 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_base = tempfile.mkdtemp(prefix="cdbp_cms_delta_")
     _DELTA_DIRS.append(delta_base)
     events = streaming_events(spark, _stream_src(sf_dir))
-    ckpt = _scratch_ckpt()
-    q = (
-        events.writeStream.foreachBatch(cms_delta_batch(delta_base))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_stream(events, cms_delta_batch(delta_base))
     from crime_data_batch_processing_spark.operators.aggregates import (
         _token_code,
         cms_bucket_cols,
@@ -1001,10 +893,10 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntz = lambda df: df.withColumn(  # noqa: E731
             "ts", F.col("ts").cast("timestamp_ntz")
         )
-        _write_slice(ntz(ev.filter(~second)), src, "a_ontime")
-        run_stream_to_parquet(spark, src, out, ckpt)
-        _write_slice(ntz(ev.filter(second)), src, "b_late")
-        run_stream_to_parquet(spark, src, out, ckpt)
+        for name, rows in (("a_ontime", ~second), ("b_late", second)):
+            _write_slice(ntz(ev.filter(rows)), src, name)
+            agg = hourly_agg(streaming_events(spark, src))
+            run_stream(agg, ("parquet", out), checkpoint=ckpt)
 
     build_once(base, build)
     return spark.read.parquet(out).select(
@@ -1120,14 +1012,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is this topology's canonical use.
     """
     joined = click_purchase_left_join(spark, _stream_src(sf_dir))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return _run_bounded(
-            joined, "cdbp_stream_stream_left_join", "append"
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    return spark.table(run_stream(joined, "cdbp_stream_stream_left_join").name)
 
 
 @query(
@@ -1178,7 +1063,7 @@ def stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "hour_us")
         .agg(F.count(F.lit(1)).alias("n_active"))
     )
-    return _run_bounded(agg, "cdbp_stream_pipeline", "complete")
+    return spark.table(run_stream(agg, "cdbp_stream_pipeline", "complete").name)
 
 
 def _transform_state_available() -> bool:
@@ -1317,7 +1202,7 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     API selection at runtime: transformWithStateInPandas needs the
     python protobuf package for its state-server protocol (and the
-    RocksDB state store, set for the run and restored). Where
+    RocksDB state store, scoped to the run). Where
     protobuf is absent — as in this container — the SAME fold runs
     through `applyInPandasWithState`'s GroupState, so the key stays
     green on both runtimes and the two APIs are proven semantically
@@ -1343,20 +1228,12 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        provider_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(provider_key, None)
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            out = _run_bounded(tracked, "cdbp_stream_tws", "update")
-        finally:
-            if prev is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev)
+        conf = {
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            )
+        }
     else:
         from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -1386,7 +1263,9 @@ def stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        out = _run_bounded(tracked, "cdbp_stream_tws", "update")
+        conf = {}
+    with scoped_conf(spark, conf):
+        out = spark.table(run_stream(tracked, "cdbp_stream_tws", "update").name)
     return (
         out.groupBy("user_id")
         .agg(F.max(F.struct("n_events", "n_records", "max_value")).alias("m"))
@@ -1416,10 +1295,10 @@ def stream_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk, a caught-up read() returns an unchanged offset, and
     readBetweenOffsets replays any committed range after restart —
     exactly-once derives from offsets living in the checkpoint, not
-    from source goodwill. Run with the default micro-batch trigger +
-    processAllAvailable() so ALL chunks drain (AvailableNow falls
-    back to single-batch for simple stream readers and would stop
-    after chunk 1 — trap worth encoding). The aggregate downstream is
+    from source goodwill. Run with `drain=True` (default micro-batch
+    trigger, drained to the end) so ALL chunks drain (AvailableNow
+    falls back to single-batch for simple stream readers and would
+    stop after chunk 1 — trap worth encoding). The aggregate downstream is
     the usual per-type count + exact sum, so the oracle proves no
     chunk was lost or double-counted across the 4 batches.
 
@@ -1443,26 +1322,8 @@ def stream_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         dsum("value").alias("sum_value"),
     )
-    name = "cdbp_stream_pysource"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    ckpt = _scratch_ckpt()
-    try:
-        with _bounded_state_conf(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    q = run_stream(agg, "cdbp_stream_pysource", "complete", drain=True)
+    return spark.table(q.name)
 
 
 @query(
@@ -1502,9 +1363,9 @@ def stream_pysource_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     The `cursor_dir` option is the source's DURABLE rate-limit
     bookkeeping (commit() persists each committed offset; the tail
     never regresses across restarts — the correctness trap an
-    in-memory cursor has). It lives alongside the checkpoint and
-    shares its lifecycle; without it the source serves the whole
-    file as one (still multi-task) batch.
+    in-memory cursor has). Like the run's checkpoint it is a tmpfs
+    scratch dir removed after the run; without it the source serves
+    the whole file as one (still multi-task) batch.
 
     The reference has no streaming at all (daily Airflow batch,
     /root/reference/da-capstone-emr-airflow.py:94); this is the
@@ -1515,11 +1376,11 @@ def stream_pysource_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(PartitionedEventsStreamSource)
-    ckpt = _scratch_ckpt()
+    cursor = _scratch_ckpt()
     src = (
         spark.readStream.format("chunked_events_partitioned")
         .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("cursor_dir", ckpt + "_cursor")
+        .option("cursor_dir", cursor)
         .load()
     )
     agg = src.groupBy("event_type").agg(
@@ -1528,26 +1389,13 @@ def stream_pysource_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
-    name = "cdbp_stream_pysource_partitioned"
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     try:
-        with _bounded_state_conf(spark):
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
+        q = run_stream(
+            agg, "cdbp_stream_pysource_partitioned", "complete", drain=True
+        )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(ckpt + "_cursor", ignore_errors=True)
-    return spark.table(name)
+        shutil.rmtree(cursor, ignore_errors=True)
+    return spark.table(q.name)
 
 
 @query(
@@ -1598,17 +1446,10 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> None:
         for _ in range(2):  # second run must be an exactly-once no-op
-            q = (
-                streaming_events(
-                    spark, _stream_src(sf_dir), max_files_per_trigger=None
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            events = streaming_events(
+                spark, _stream_src(sf_dir), max_files_per_trigger=None
             )
-            q.awaitTermination()
+            run_stream(events, ("parquet", out), checkpoint=ckpt)
 
     build_once(base, build)
     back = spark.read.parquet(out)
@@ -1693,17 +1534,12 @@ def stream_sink_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         for _ in range(2):  # second run: exactly-once no-op rerun
-            q = (
+            rows = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", "1")
                 .parquet(src)
-                .writeStream.format("manifest_parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
+            run_stream(rows, ("manifest_parquet", out), checkpoint=ckpt)
         # zombie: a valid parquet file no batch log ever committed —
         # must stay invisible to manifest-resolved readers
         committed = stream_manifest_files(out)
@@ -1793,9 +1629,8 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed gate and the batch SQL must name the same docs with the
     same match counts.
     """
-    return _run_bounded(
-        _decon_gate(spark, sf_dir), "cdbp_stream_decontaminate", "append"
-    )
+    q = run_stream(_decon_gate(spark, sf_dir), "cdbp_stream_decontaminate")
+    return spark.table(q.name)
 
 
 def _decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:

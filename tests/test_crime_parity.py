@@ -143,12 +143,11 @@ def test_latest_snapshot_roundtrip(spark, crime_csv, tmp_path):
     df = read_crime_csv(spark, crime_csv)
     base = str(tmp_path / "snap")
     write_snapshot(df.limit(100), base, "2022-01-04")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    stamp_partitions(df, "2022-01-05").write.mode("overwrite").partitionBy(
-        "y", "m", "d"
-    ).parquet(base)
+    write_snapshot(df, base, "2022-01-05")
     latest = read_latest_snapshot(spark, base, "2022-01-05")
     assert latest.count() == 400
+    # the dynamic overwrite keeps the earlier day's partition
+    assert read_latest_snapshot(spark, base, "2022-01-04").count() == 100
     assert set(latest.columns) == {f.name for f in CRIME_RAW_SCHEMA.fields}
 
 

@@ -27,14 +27,47 @@ def duck(sf_dir):
     con.close()
 
 
+#: Read settings a key sets session-wide on purpose: both are read at
+#: execution time, and the driver hands the library a bare session.
+SESSION_WIDE_CONF = frozenset({
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.python.filterPushdown.enabled",
+})
+
+
+def _scoped_view(spark) -> dict[str, str]:
+    return {
+        k: v for k, v in spark.conf.getAll.items() if k not in SESSION_WIDE_CONF
+    }
+
+
 @pytest.fixture(autouse=True)
-def _release_caches():
+def _release_caches(spark):
     """Unpersist each query's tracked signature/corpus caches after the
-    comparison consumed the result (cachekit contract)."""
+    comparison consumed the result (cachekit contract), and check that
+    the test left the session conf as it found it."""
+    before = _scoped_view(spark)
     yield
     from crime_data_batch_processing_spark import cachekit
 
     cachekit.release_all()
+    assert _scoped_view(spark) == before
+
+
+def test_scoped_conf_restores_unsets_and_survives_errors(spark):
+    from crime_data_batch_processing_spark.session import scoped_conf
+
+    set_key, absent_key = "spark.sql.shuffle.partitions", "cdbp.test.absent"
+    prev = spark.conf.get(set_key)
+    with scoped_conf(spark, {set_key: "3", absent_key: "x"}):
+        assert spark.conf.get(set_key) == "3"
+        assert spark.conf.get(absent_key) == "x"
+    assert spark.conf.get(set_key) == prev
+    assert spark.conf.get(absent_key, None) is None
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {set_key: "5"}):
+            raise RuntimeError("boom")
+    assert spark.conf.get(set_key) == prev
 
 
 @pytest.mark.parametrize("key", ORACLE_KEYS)

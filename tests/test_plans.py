@@ -13,6 +13,7 @@ from crime_data_batch_processing_spark.plans import (
     has_pushed_filters,
     scan_read_schema,
 )
+from crime_data_batch_processing_spark.session import scoped_conf
 
 registry.load_all_operators()
 
@@ -106,16 +107,12 @@ def test_bucketed_join_has_no_join_exchange(spark, sf_dir):
     only Exchange in the plan is the final groupBy's."""
     from crime_data_batch_processing_spark.plans import count_nodes, physical_plan
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = registry.QUERIES["join_bucketed"](spark, sf_dir)
         plan = physical_plan(df)
         assert "SortMergeJoin" in plan, plan
         n = count_nodes(df, "Exchange")
         assert n <= 1, f"expected only the aggregate's shuffle, found {n}"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_cdc_upsert_single_shuffle(spark, sf_dir):
@@ -322,16 +319,10 @@ def test_aqe_splits_skewed_join_without_salting(spark, sf_dir):
         skewed_type_join,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _AQE_SKEW_TEST_CONF}
-    for k, v in _AQE_SKEW_TEST_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _AQE_SKEW_TEST_CONF):
         df = skewed_type_join(spark, sf_dir)
         df.collect()  # AQE decides at runtime; must materialize first
         final = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "skew=true" in final, final
     assert "skewed" in final, final  # the AQEShuffleRead carries splits
 
@@ -346,16 +337,10 @@ def test_bloom_filter_injected_into_fact_scan(spark, sf_dir):
         bloom_gated_join,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_TEST_CONF}
-    for k, v in _BLOOM_TEST_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_TEST_CONF):
         df = bloom_gated_join(spark, sf_dir)
         df.collect()  # injection is decided for the executed plan
         final = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for k, v in prev.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "bloom_filter_agg" in final, final
     assert "might_contain" in final, final
 
@@ -1622,19 +1607,13 @@ def test_model_iter_udf_streams_multiple_batches(spark, sf_dir):
         MODEL_W_UPPER,
     )
 
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "16"}):
         got = {
             r.doc_id: r.model_score
             for r in registry.QUERIES["udf_model_iter"](
                 spark, sf_dir
             ).collect()
         }
-    finally:
-        spark.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", old
-        )
     tab = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
     )

@@ -12,13 +12,15 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import tempfile
 
 import pytest
 
 from crime_data_batch_processing_spark.streaming.stream_events import (
     EVENTS_FILE_SCHEMA,
-    run_stream_to_memory,
-    run_stream_to_parquet,
+    hourly_agg,
+    run_stream,
+    streaming_events,
 )
 
 HOUR_NS = 3_600 * 10**9
@@ -51,10 +53,9 @@ def test_append_mode_emits_only_finalized_windows(spark, stream_dirs):
     # hours 0,1,2 plus a head event at hour 5 that advances the watermark
     rows = [_event(0, 0.5), _event(1, 1.5), _event(2, 2.5), _event(3, 5.5)]
     _write_batch(spark, rows, src, "b0")
-    out = run_stream_to_memory(
-        spark, src, "t_append", output_mode="append", checkpoint=ckpt
-    )
-    got = {(str(r.window_start), r.n_events) for r in out.collect()}
+    agg = hourly_agg(streaming_events(spark, src))
+    q = run_stream(agg, "t_append", checkpoint=ckpt)
+    got = {(str(r.window_start), r.n_events) for r in spark.table(q.name).collect()}
     # watermark after the batch = 5:30 - 1h = 4:30 → windows ending ≤4:30
     # are final: hours 0,1,2. The hour-5 window stays open (not emitted).
     assert got == {
@@ -67,13 +68,19 @@ def test_append_mode_emits_only_finalized_windows(spark, stream_dirs):
 def test_watermark_drops_late_data_across_restart(spark, stream_dirs, tmp_path):
     src, ckpt = stream_dirs
     out = str(tmp_path / "out")
+
+    def run_to_parquet():
+        agg = hourly_agg(streaming_events(spark, src))
+        run_stream(agg, ("parquet", out), checkpoint=ckpt)
+        return spark.read.parquet(out)
+
     _write_batch(
         spark,
         [_event(0, 0.5), _event(1, 1.5), _event(2, 5.5)],
         src,
         "b0",
     )
-    first = run_stream_to_parquet(spark, src, out, ckpt)
+    first = run_to_parquet()
     first_windows = {str(r.window_start) for r in first.collect()}
     assert "2024-01-01 00:00:00" in first_windows  # hour 0 finalized
 
@@ -85,7 +92,7 @@ def test_watermark_drops_late_data_across_restart(spark, stream_dirs, tmp_path):
         src,
         "b1",
     )
-    second = run_stream_to_parquet(spark, src, out, ckpt)
+    second = run_to_parquet()
     emitted = {(str(r.window_start), r.n_events) for r in second.collect()}
     # the late hour-0 row must NOT resurface hour 0 (state was evicted,
     # row dropped); the previously-open hour-5 window is now final.
@@ -104,9 +111,6 @@ def test_stateful_accumulates_across_microbatches(spark, stream_dirs):
     from crime_data_batch_processing_spark.streaming.stateful import (
         stateful_user_stats,
     )
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        streaming_events,
-    )
 
     src, _ = stream_dirs
     # user 1: events in both batches; user 2: only in batch 0
@@ -116,15 +120,7 @@ def test_stateful_accumulates_across_microbatches(spark, stream_dirs):
     )
     _write_batch(spark, [_event(2, 1.5, value=3.0)], src, "b1")
     out = stateful_user_stats(streaming_events(spark, src))
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_stateful")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("t_stateful").collect()
+    rows = spark.table(run_stream(out, "t_stateful", "update").name).collect()
     # update mode emits the running value per batch; the LAST emission
     # per user is the final state
     final = {}
@@ -142,10 +138,9 @@ def test_stream_batch_equivalence_complete_mode(spark, stream_dirs):
     src, ckpt = stream_dirs
     rows = [_event(i, 0.1 * i, "view", float(i)) for i in range(40)]
     _write_batch(spark, rows, src, "b0")
-    out = run_stream_to_memory(
-        spark, src, "t_complete", output_mode="complete", checkpoint=ckpt
-    )
-    stream_total = sum(r.n_events for r in out.collect())
+    agg = hourly_agg(streaming_events(spark, src))
+    q = run_stream(agg, "t_complete", "complete", checkpoint=ckpt)
+    stream_total = sum(r.n_events for r in spark.table(q.name).collect())
     assert stream_total == 40
 
 
@@ -156,16 +151,7 @@ def _run_join_to_parquet(spark, src: str, out: str, ckpt: str):
         click_purchase_join,
     )
 
-    joined = click_purchase_join(spark, src)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(click_purchase_join(spark, src), ("parquet", out), checkpoint=ckpt)
     return spark.read.parquet(out)
 
 
@@ -229,7 +215,6 @@ def test_cdc_merge_folds_batches_into_latest_per_key(spark, stream_dirs, tmp_pat
     (idempotent fold)."""
     from crime_data_batch_processing_spark.streaming.stream_events import (
         cdc_merge_batch,
-        streaming_events,
     )
 
     src, ckpt = stream_dirs
@@ -247,14 +232,8 @@ def test_cdc_merge_folds_batches_into_latest_per_key(spark, stream_dirs, tmp_pat
         [(2, BASE_NS + 2 * HOUR_NS, 1, "purchase", 9.0, "{}")],
         src, "b1",
     )
-    q = (
-        streaming_events(spark, src)  # maxFilesPerTrigger=1 → 2 batches
-        .writeStream.foreachBatch(cdc_merge_batch(target))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # maxFilesPerTrigger=1 → 2 batches
+    run_stream(streaming_events(spark, src), cdc_merge_batch(target), checkpoint=ckpt)
     rows = {r.user_id: (r.event_id, r.event_type, r.value)
             for r in spark.read.parquet(target).collect()}
     assert rows == {1: (2, "purchase", 9.0), 2: (1, "view", 2.0)}, rows
@@ -269,9 +248,6 @@ def test_anomaly_state_carries_across_microbatches(spark, stream_dirs):
     from crime_data_batch_processing_spark.streaming.stateful import (
         stateful_anomaly,
     )
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        streaming_events,
-    )
 
     src, _ = stream_dirs
     _write_batch(
@@ -283,16 +259,8 @@ def test_anomaly_state_carries_across_microbatches(spark, stream_dirs):
     _write_batch(
         spark, [(99, BASE_NS + 99 * 10**9, 1, "view", 1000.0, "{}")], src, "b1"
     )
-    out = stateful_anomaly(streaming_events(spark, src))
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("t_stream_anomaly")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {r.event_id: r for r in spark.table("t_stream_anomaly").collect()}
+    q = run_stream(stateful_anomaly(streaming_events(spark, src)), "t_stream_anomaly")
+    rows = {r.event_id: r for r in spark.table(q.name).collect()}
     assert len(rows) == 20
     spike = rows[99]
     assert spike.n_frame == 20, "state was not carried across batches"
@@ -318,15 +286,7 @@ def test_left_outer_join_null_emission_across_restart(
 
     def run() -> dict:
         joined = click_purchase_left_join(spark, src)
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_stream(joined, ("parquet", out), checkpoint=ckpt)
         return {
             r.click_id: r.purchase_id
             for r in spark.read.parquet(out).collect()
@@ -456,16 +416,7 @@ def test_partitioned_stream_source_reads_in_parallel_tasks(
         if pids:
             batches[batch_id] = pids
 
-    q = (
-        src.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    run_stream(src, sink, checkpoint=str(tmp_path / "ckpt"), drain=True)
 
     assert len(batches) >= PartitionedParquetStreamReader.CHUNKS
     for batch_id, pids in batches.items():
@@ -483,11 +434,8 @@ def test_stream_decontaminate_is_stateless_map_only(spark):
     no aggregation, no watermark. A state store appearing here means
     the topology regressed to the explode-join-reaggregate shape
     whose state grows with the contaminated-doc count."""
-    import pyspark.sql.functions as F
-
     from crime_data_batch_processing_spark.streaming.stream_events import (
-        _scratch_ckpt,
-        _stream_src,
+        _decon_gate,
         stream_decontaminate,
     )
 
@@ -497,25 +445,24 @@ def test_stream_decontaminate_is_stateless_map_only(spark):
     rows = stream_decontaminate(spark, sf_dir).collect()
     assert len(rows) > 0  # vacuous-gate guard (2 docs at sf0.001)
     assert all(r.n_matched_grams >= 1 for r in rows)
-    # re-run THE SAME builder manually to capture the query handle
-    from crime_data_batch_processing_spark.streaming.stream_events import (
-        _decon_gate,
-    )
-
-    flagged = _decon_gate(spark, sf_dir)
-    ckpt = _scratch_ckpt()
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("cdbp_stream_decon_probe")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        progress = q.lastProgress
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # re-run THE SAME builder to capture the query handle
+    q = run_stream(_decon_gate(spark, sf_dir), "cdbp_stream_decon_probe")
+    progress = q.lastProgress
     assert progress is not None
     assert progress["stateOperators"] == [], progress["stateOperators"]
+
+
+def test_bounded_runs_remove_their_scratch_checkpoints(spark, sf_dir):
+    """`run_stream` owns the tmpfs checkpoint it creates: a memory-sink
+    key and a foreachBatch key leave no new cdbp_stream_ckpt_* dir."""
+    from crime_data_batch_processing_spark import registry
+
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+
+    def scratch() -> set[str]:
+        return set(glob.glob(os.path.join(base, "cdbp_stream_ckpt_*")))
+
+    before = scratch()
+    for key in ("stream_events", "stream_cdc_upsert"):
+        assert registry.QUERIES[key](spark, sf_dir).count() > 0
+    assert scratch() - before == set()

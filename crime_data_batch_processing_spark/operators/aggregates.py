@@ -37,7 +37,10 @@ from crime_data_batch_processing_spark.functions.exact import (
     with_scalars,
 )
 from crime_data_batch_processing_spark.registry import query
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import (
+    load_table,
+    local_frame,
+)
 
 
 @query(
@@ -1230,8 +1233,8 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(ENTROPY_TABLE_CAP + 1).collect()
     ]
     assert len(c_values) <= ENTROPY_TABLE_CAP, "entropy log-table overflow"
-    log_c = spark.createDataFrame(
-        [(c, math.log(float(c))) for c in c_values], "c bigint, ln_c double"
+    log_c = local_frame(
+        spark, [(c, math.log(float(c))) for c in c_values], "c bigint, ln_c double"
     )
     per_user = cachekit.track(
         counts.join(F.broadcast(log_c), "c")
@@ -1249,7 +1252,8 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(ENTROPY_TABLE_CAP + 1).collect()
     ]
     assert len(n_values) <= ENTROPY_TABLE_CAP, "entropy log-table overflow"
-    log_n = spark.createDataFrame(
+    log_n = local_frame(
+        spark,
         [(n, math.log(float(n))) for n in n_values],
         "n_events bigint, ln_n double",
     )

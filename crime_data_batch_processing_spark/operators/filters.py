@@ -20,7 +20,10 @@ from pyspark.sql import functions as F
 
 from crime_data_batch_processing_spark.functions.exact import dsum, with_scalars
 from crime_data_batch_processing_spark.registry import query
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import (
+    load_table,
+    local_frame,
+)
 
 
 @query(
@@ -500,7 +503,8 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    lnu_table = spark.createDataFrame(
+    lnu_table = local_frame(
+        spark,
         [(b, math.log((b + 0.5) / ES_U_DOM)) for b in range(ES_U_DOM)],
         "ub bigint, lnu double",
     )

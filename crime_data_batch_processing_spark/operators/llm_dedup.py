@@ -51,7 +51,6 @@ from crime_data_batch_processing_spark.functions.veckit import (
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.sources.tables import (
     load_table,
-    spread,
     spread_table,
 )
 
@@ -104,12 +103,6 @@ PROD_COSINE_THRESHOLD = 0.85
 #: planted-ground-truth evaluation for dedup pipelines).
 PLANT_EVERY = 20
 PLANT_OFFSET = 10_000_000
-
-
-#: promoted to `sources.tables.spread` (r14 advisor: a dedup-module
-#: private was imported across five operator modules); the alias
-#: keeps this module's historical import surface working.
-_spread = spread
 
 
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:

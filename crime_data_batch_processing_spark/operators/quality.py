@@ -27,7 +27,10 @@ from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.functions.exact import (
     with_scalars,
 )
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import (
+    load_table,
+    local_frame,
+)
 
 
 def _rule_rows(agged: DataFrame, n_col: str, rules: list[str]) -> DataFrame:
@@ -359,7 +362,8 @@ def profile_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # format = full materialization, no output cost)
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["n_rows"],

@@ -31,7 +31,10 @@ from pyspark.sql import functions as F
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum, with_scalars
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.session import scoped_conf
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import (
+    load_table,
+    local_frame,
+)
 
 N_SALTS = 8
 _BUCKET_DB_READY: set[str] = set()
@@ -182,6 +185,13 @@ EVENT_TYPE_DIM = [
 _SQL_DIM_ROWS = ", ".join(f"('{t}', '{c}', {w})" for t, c, w in EVENT_TYPE_DIM)
 
 
+def _event_type_dim(spark: SparkSession) -> DataFrame:
+    """`EVENT_TYPE_DIM` as a LocalRelation (`local_frame`)."""
+    return local_frame(
+        spark, EVENT_TYPE_DIM, "event_type string, category string, weight double"
+    )
+
+
 @query(
     "join_salted",
     oracle=f"""
@@ -221,14 +231,7 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the oracle.
     """
     ev = load_table(spark, sf_dir, "events")
-    # VALUES keeps the dim a JVM-side LocalRelation — a Python
-    # createDataFrame would schedule defaultParallelism tasks for 5
-    # rows and drag in the pickle serialization path.
-    dim_rows = ", ".join(f"('{t}', '{c}', {w}D)" for t, c, w in EVENT_TYPE_DIM)
-    dim = spark.sql(
-        f"SELECT * FROM VALUES {dim_rows} AS t(event_type, category, weight)"
-    )
-    salted_dim = dim.withColumn(
+    salted_dim = _event_type_dim(spark).withColumn(
         "salt", F.explode(F.array(*[F.lit(i).cast("long") for i in range(N_SALTS)]))
     )
     salted_fact = ev.withColumn(
@@ -277,13 +280,9 @@ def skewed_type_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk. Same result, no salting code.
     """
     ev = load_table(spark, sf_dir, "events")
-    dim_rows = ", ".join(f"('{t}', '{c}', {w}D)" for t, c, w in EVENT_TYPE_DIM)
-    dim = spark.sql(
-        f"SELECT * FROM VALUES {dim_rows} AS t(event_type, category, weight)"
-    )
     fact = ev.select(_skew_case().alias("event_type"), "value")
     return (
-        fact.join(dim.hint("merge"), "event_type")
+        fact.join(_event_type_dim(spark).hint("merge"), "event_type")
         .groupBy("category")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -708,10 +707,12 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (as production calendars are) — coverage, not data knowledge;
     # spans 1970-2040 so a regenerated testdata year range can never
     # silently fall outside the dim (which would drop years the
-    # oracle keeps)
-    dim = spark.createDataFrame(
-        [(y, "odd" if y % 2 else "even") for y in range(1970, 2041)],
-        "d_year long, parity string",
+    # oracle keeps); built by `range`, not `local_frame`: the optimizer
+    # folds a filter over a LocalRelation at plan time, and DPP needs
+    # the filter to stay a runtime one
+    dim = spark.range(1970, 2041, numPartitions=1).select(
+        F.col("id").alias("d_year"),
+        F.when(F.col("id") % 2 == 1, "odd").otherwise("even").alias("parity"),
     )
     return (
         fact.join(

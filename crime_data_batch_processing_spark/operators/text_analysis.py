@@ -28,6 +28,7 @@ from crime_data_batch_processing_spark.functions.textkit import (
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.sources.tables import (
     load_table,
+    local_frame,
     spread_table,
 )
 
@@ -352,7 +353,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         r[0] for r in df.select("df").distinct().limit(IDF_TABLE_CAP + 1).collect()
     ]
     assert len(df_values) <= IDF_TABLE_CAP, "idf table cap overflow"
-    idf_table = spark.createDataFrame(
+    idf_table = local_frame(
+        spark,
         [
             (d, math.log((n_docs + 1.0) / (d + 1.0)) + 1.0)
             for d in df_values
@@ -964,7 +966,8 @@ def _bm25_ranked(
         for r in dft.select("df").distinct().limit(IDF_TABLE_CAP + 1).collect()
     ]
     assert len(df_values) <= IDF_TABLE_CAP, "idf table cap overflow"
-    idf_table = spark.createDataFrame(
+    idf_table = local_frame(
+        spark,
         [
             (d, math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)))
             for d in df_values
@@ -1272,7 +1275,8 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine's pretraining-curation family (SURVEY.md §2.3).
     """
     merges = _learn_merges(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i + 1, l, r, int(w), int(nw))
             for i, (l, r, w, nw) in enumerate(merges)

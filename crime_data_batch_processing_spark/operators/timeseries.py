@@ -36,7 +36,10 @@ from crime_data_batch_processing_spark.functions.exact import (
     sql_dsum,
 )
 from crime_data_batch_processing_spark.registry import query
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import (
+    load_table,
+    local_frame,
+)
 
 
 @query(
@@ -303,8 +306,8 @@ def _zone_pruned_scan(
         # no zone intersects the key ⇒ the key is absent from the
         # table and the correct (oracle-matching) answer is empty —
         # returned explicitly, since spark.read.parquet() needs ≥1 path
-        return spark.createDataFrame(
-            [], "o_orderkey bigint, o_custkey bigint, o_totalprice double"
+        return local_frame(
+            spark, [], "o_orderkey bigint, o_custkey bigint, o_totalprice double"
         )
     return (
         spark.read.parquet(*paths)

@@ -65,6 +65,42 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A driver-built lookup table (log/idf tables, a 5-row dim, a
+    single observed-metrics row) as a JVM-side `LocalRelation`.
+
+    `rows` are tuples in `ddl` column order; the table is typed by
+    `StructType.fromDDL(ddl)` (nullability included) and handed to
+    Spark as a columnwise `pyarrow.Table`, so it plans as
+    `LocalTableScan`. A Python-list `createDataFrame` instead goes
+    `parallelize` → pickled Python RDD: every evaluation runs
+    defaultParallelism Python-worker tasks, even for 5 rows. Warm
+    medians of six runs of a 50-row broadcast lookup (4 cores,
+    Spark 4.1.2), total CPU / of which Python workers: list
+    1.44 s / 0.79 s, Arrow table 0.57 s / 0 s, SQL `VALUES`
+    0.54 s / 0 s. A 100,000-row table builds in 0.34 s and still
+    plans as `LocalTableScan`.
+
+    Cells are converted by Arrow with no coercion beyond it: a
+    `Decimal` for a `double` column raises, as the list path did.
+    A `LocalRelation` is constant-folded by the optimizer — a filter
+    over it is evaluated at plan time, so a dim meant to feed dynamic
+    partition pruning must not be one (`join_dpp` uses `range`).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    columns = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, schema)],
+            schema=schema,
+        )
+    )
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the SQL-facing operators."""
     for name in TABLES:
@@ -95,9 +131,7 @@ def spread(
     physical plan — cheap once, but it ran on every build of ~20 keys
     (r14 verdict item 5). `probe_key` (callers pass the table path)
     memoizes the verdict per (SparkContext, key, core count) so
-    repeated builds over the same scan layout skip the probe. Shared
-    home per the r14 advisor: previously `operators.llm_dedup._spread`,
-    imported as a private across five operator modules.
+    repeated builds over the same scan layout skip the probe.
     """
     cores = spark.sparkContext.defaultParallelism
     key = None

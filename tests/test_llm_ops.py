@@ -409,7 +409,6 @@ class TestSimilarity:
             PROD_LSH_BANDS,
             PROD_LSH_BITS,
             _planted_quantized2,
-            _spread,
             sim_search_index_append,
         )
         from crime_data_batch_processing_spark.operators.similarity import (
@@ -419,6 +418,7 @@ class TestSimilarity:
         )
         from crime_data_batch_processing_spark.sources.tables import (
             load_table,
+            spread,
         )
 
         inc = {
@@ -427,7 +427,7 @@ class TestSimilarity:
         }
         with_q = signature_frame(
             _planted_quantized2(
-                _spread(load_table(spark, sf_dir, "embeddings"), spark)
+                spread(load_table(spark, sf_dir, "embeddings"), spark)
             ),
             bits=PROD_LSH_BITS,
         )
@@ -533,7 +533,6 @@ class TestSimilarity:
             PROD_LSH_BITS,
             _maintain_dirs,
             _planted_quantized2,
-            _spread,
             purge_compact_dir,
             sim_search_index_append,
             sim_search_index_maintain,
@@ -544,6 +543,7 @@ class TestSimilarity:
         )
         from crime_data_batch_processing_spark.sources.tables import (
             load_table,
+            spread,
         )
 
         sim_search_index_maintain(spark, sf_dir).count()  # build fixture
@@ -553,7 +553,7 @@ class TestSimilarity:
         purge_compact_dir(spark, dirs["index"], ci, no_drops)
         purge_compact_dir(spark, dirs["bands"], cb, no_drops)
         corpus = _planted_quantized2(
-            _spread(load_table(spark, sf_dir, "embeddings"), spark)
+            spread(load_table(spark, sf_dir, "embeddings"), spark)
         )
         inc_q = signature_frame(
             corpus.where(F.col("vec_id") >= PLANT2_OFFSET),

@@ -282,18 +282,20 @@ def test_scan_jdbc_reads_in_stride_partitions(spark, sf_dir):
 
 
 def test_spread_skips_shuffle_on_presplit_input(spark, sf_dir):
-    """_spread() exists to parallelize single-split local inputs; on an
+    """spread() exists to parallelize single-split local inputs; on an
     input already split across the cluster it must be a no-op — an
     unconditional repartition would insert a full-corpus Exchange."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import _spread
-    from crime_data_batch_processing_spark.sources.tables import load_table
+    from crime_data_batch_processing_spark.sources.tables import (
+        load_table,
+        spread,
+    )
 
     cores = spark.sparkContext.defaultParallelism
     presplit = load_table(spark, sf_dir, "documents").repartition(cores)
-    assert _spread(presplit, spark) is presplit
+    assert spread(presplit, spark) is presplit
 
     single = load_table(spark, sf_dir, "documents").coalesce(1)
-    assert _spread(single, spark).rdd.getNumPartitions() == cores
+    assert spread(single, spark).rdd.getNumPartitions() == cores
 
 
 def test_range_join_avoids_nested_loop(spark, sf_dir):
@@ -1706,3 +1708,68 @@ def test_banded_candidate_distinct_keeps_compute_width(spark, sf_dir):
     # the repartition must be the keyed one feeding the distinct, not
     # only the round-robin input spread
     assert "hashpartitioning(vec_a" in plan, plan
+
+
+def test_local_frame_is_a_typed_local_table_scan(spark):
+    """Driver-built lookup tables must plan as a JVM-side
+    LocalTableScan (never a pickled Python RDD scan, which runs
+    Python-worker tasks on every evaluation), typed exactly by the
+    DDL — nullability included — with empty input and None cells
+    supported. A Decimal cell in a double column raises (the list
+    createDataFrame raised FIELD_DATA_TYPE_UNACCEPTABLE) instead of
+    being silently rounded."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pytest
+    from pyspark.sql.types import StructType
+
+    from crime_data_batch_processing_spark.plans import physical_plan
+    from crime_data_batch_processing_spark.sources.tables import local_frame
+
+    ddl = "k bigint not null, x double, s string"
+    rows = [(1, 0.5, "a"), (2, None, None)]
+    df = local_frame(spark, rows, ddl)
+    plan = physical_plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert df.schema == StructType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows
+
+    empty = local_frame(spark, [], ddl)
+    assert "LocalTableScan" in physical_plan(empty)
+    assert empty.schema == StructType.fromDDL(ddl)
+    assert empty.collect() == []
+
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [(1, Decimal("1.5"))], "k bigint, x double")
+
+
+def test_driver_tables_are_built_only_by_local_frame():
+    """Source guard: under the library, `createDataFrame` appears only
+    inside `sources.tables.local_frame`, and no SQL `FROM VALUES`
+    literal table is built anywhere — every driver-side table takes
+    the one Arrow LocalRelation path."""
+    import ast
+    import re
+    from pathlib import Path
+
+    lib = Path(registry.__file__).parent
+    tables = lib / "sources" / "tables.py"
+    fn = next(
+        n
+        for n in ast.parse(tables.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    )
+    allowed = {(tables, i) for i in range(fn.lineno, fn.end_lineno + 1)}
+    stray, values = [], []
+    for path in sorted(lib.rglob("*.py")):
+        text = path.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
+            if "createDataFrame" in line and (path, i) not in allowed:
+                stray.append(f"{path.relative_to(lib)}:{i}")
+        for m in re.finditer(r"\bFROM\s+VALUES\b", text, re.IGNORECASE):
+            line_no = text.count("\n", 0, m.start()) + 1
+            values.append(f"{path.relative_to(lib)}:{line_no}")
+    assert not stray, stray
+    assert not values, values

@@ -66,9 +66,11 @@ def _recall_guard(spark, sf_dir: str) -> list[str]:
         dedup_embedding_lsh_prod,
         dedup_minhash,
         dedup_ngram_jaccard,
-        _spread,
     )
-    from crime_data_batch_processing_spark.sources.tables import load_table
+    from crime_data_batch_processing_spark.sources.tables import (
+        load_table,
+        spread,
+    )
 
     fails: list[str] = []
 
@@ -91,7 +93,7 @@ def _recall_guard(spark, sf_dir: str) -> list[str]:
         )
 
     corpus = _planted_quantized(
-        _spread(load_table(spark, sf_dir, "embeddings"), spark)
+        spread(load_table(spark, sf_dir, "embeddings"), spark)
     ).select(
         "vec_id", "q", descale(idot(F.col("q"), F.col("q"))).alias("nsq")
     )
@@ -182,6 +184,7 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", str(args.cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     assert len(entrymod.entry(spark).collect()) > 0, "entry smoke failed"

@@ -625,7 +625,7 @@ def _sql_embedding_lsh() -> str:
     WITH q AS (
         SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
         FROM embeddings
-    ), sig AS (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
     ), bands AS (
         {sql_bands_cte()}
@@ -633,7 +633,7 @@ def _sql_embedding_lsh() -> str:
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS (
+    ), scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b,
                {sql_cosine('ea.embedding', 'eb.embedding')} AS cos_sim
         FROM cand
@@ -797,7 +797,7 @@ def _sql_prod_scored_ctes(
         {gen_a_arm}
         {corpus_extra}
     ), q AS (SELECT vec_id, qe FROM corpus
-    ), sig AS (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sql_sig_expr(PROD_LSH_BITS)}) AS sig FROM q
     ), bands AS (
         {sql_bands_cte(PROD_LSH_BANDS, PROD_LSH_BAND_BITS)}
@@ -805,7 +805,7 @@ def _sql_prod_scored_ctes(
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS (
+    ), scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b, {qcos} AS cos_sim
         FROM cand
         JOIN corpus ca ON ca.vec_id = cand.vec_a
@@ -1105,23 +1105,22 @@ def sim_search_knn_inc_prod(
     self-join.
 
     Pure composition of verified kernels: `_planted_quantized` (the
-    prod family's corpus), `_with_sig_cols`/`band_rows_of` at the
-    prod constants for the persisted index (built once per testdata
-    generation, appended on real ingests), and the shared
-    `knn_inc_probe` (similarity.py — the same probe
-    `sim_search_knn_inc` runs at weak geometry). The scratch kind
-    bakes geometry, plant cadence, and offset so any constants
-    change keys a fresh index build instead of serving stale
-    signatures (the ZORDER_KIND staleness class)."""
+    prod family's corpus), `write_sig_index` at the prod constants
+    for the persisted index (built once per testdata generation,
+    appended on real ingests), and the shared `knn_inc_probe`
+    (similarity.py — the same probe `sim_search_knn_inc` runs at
+    weak geometry). The scratch kind bakes geometry, plant cadence,
+    and offset so any constants change keys a fresh index build
+    instead of serving stale signatures (the ZORDER_KIND staleness
+    class)."""
     from crime_data_batch_processing_spark.fixtures import (
         build_once,
         scratch_dir,
     )
     from crime_data_batch_processing_spark.operators.similarity import (
-        _with_sig_cols,
-        band_rows_of,
         knn_inc_probe,
         signature_frame,
+        write_sig_index,
     )
 
     base_dir = scratch_dir(
@@ -1130,35 +1129,20 @@ def sim_search_knn_inc_prod(
         sf_dir,
         "embeddings",
     )
-    index_dir, bands_dir = f"{base_dir}/index", f"{base_dir}/bands"
     corpus = _planted_quantized(
         spread_table(spark, sf_dir, "embeddings")
     )
     is_inc = F.col("vec_id") >= PLANT_OFFSET
-
-    def build() -> None:
-        # untracked persist, unpersisted in finally (the
-        # sim_search_knn_inc build contract): the build materializes
-        # to parquet; cachekit tracking is for query-path frames
-        base_q = _with_sig_cols(
-            corpus.where(~is_inc), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(index_dir)
-            band_rows_of(
-                base_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            ).write.mode("overwrite").parquet(bands_dir)
-        finally:
-            base_q.unpersist()
-
-    build_once(base_dir, build)
-    inc_q = signature_frame(corpus.where(is_inc), bits=PROD_LSH_BITS)
-    return knn_inc_probe(
-        inc_q,
-        spark.read.parquet(index_dir),
-        spark.read.parquet(bands_dir),
+    build_once(base_dir, lambda: write_sig_index(
+        corpus.where(~is_inc),
+        base_dir,
+        PROD_LSH_BITS,
         PROD_LSH_BANDS,
         PROD_LSH_BAND_BITS,
+    ))
+    inc_q = signature_frame(corpus.where(is_inc), bits=PROD_LSH_BITS)
+    return knn_inc_probe(
+        inc_q, base_dir, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
     )
 
 
@@ -1224,10 +1208,9 @@ def dedup_semantic_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir,
     )
     from crime_data_batch_processing_spark.operators.similarity import (
-        _with_sig_cols,
-        band_rows_of,
         knn_inc_probe,
         signature_frame,
+        write_sig_index,
     )
 
     base_dir = scratch_dir(
@@ -1237,34 +1220,22 @@ def dedup_semantic_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "embeddings",
     )
-    index_dir, bands_dir = f"{base_dir}/index", f"{base_dir}/bands"
     corpus = _planted_quantized(
         spread_table(spark, sf_dir, "embeddings")
     )
     is_batch = (F.col("vec_id") >= PLANT_OFFSET) | (
         F.col("vec_id") % SEMDEDUP_INC_MOD == SEMDEDUP_INC_RESIDUE
     )
-
-    def build() -> None:
-        base_q = _with_sig_cols(
-            corpus.where(~is_batch), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(index_dir)
-            band_rows_of(
-                base_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            ).write.mode("overwrite").parquet(bands_dir)
-        finally:
-            base_q.unpersist()
-
-    build_once(base_dir, build)
-    inc_q = signature_frame(corpus.where(is_batch), bits=PROD_LSH_BITS)
-    edges = knn_inc_probe(
-        inc_q,
-        spark.read.parquet(index_dir),
-        spark.read.parquet(bands_dir),
+    build_once(base_dir, lambda: write_sig_index(
+        corpus.where(~is_batch),
+        base_dir,
+        PROD_LSH_BITS,
         PROD_LSH_BANDS,
         PROD_LSH_BAND_BITS,
+    ))
+    inc_q = signature_frame(corpus.where(is_batch), bits=PROD_LSH_BITS)
+    edges = knn_inc_probe(
+        inc_q, base_dir, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
     )
     return semantic_verdict(
         edges, corpus.where(is_batch).select("vec_id"), SEMDEDUP_TAU
@@ -1359,7 +1330,7 @@ def sim_search_index_append(
 
     The fixture build writes the base index (natural corpus), then
     replays ingest A: generation-A planted copies are signed with the
-    SAME `_with_sig_cols` integers and appended (parquet append) to
+    SAME integers and appended (`write_sig_index(mode="append")`) to
     the index and band files. The query path signs batch B — a SECOND
     re-collection of the same sources with an independent jitter
     (PLANT2_*) — and runs the shared `knn_inc_probe` against the
@@ -1384,10 +1355,9 @@ def sim_search_index_append(
         scratch_dir,
     )
     from crime_data_batch_processing_spark.operators.similarity import (
-        _with_sig_cols,
-        band_rows_of,
         knn_inc_probe,
         signature_frame,
+        write_sig_index,
     )
 
     base_dir = scratch_dir(
@@ -1396,7 +1366,6 @@ def sim_search_index_append(
         sf_dir,
         "embeddings",
     )
-    index_dir, bands_dir = f"{base_dir}/index", f"{base_dir}/bands"
     corpus = _planted_quantized2(
         spread_table(spark, sf_dir, "embeddings")
     )
@@ -1406,39 +1375,17 @@ def sim_search_index_append(
     is_b = F.col("vec_id") >= PLANT2_OFFSET
 
     def build() -> None:
-        # ingest 0: the base index (natural corpus only)
-        base_q = _with_sig_cols(
-            corpus.where(~is_a & ~is_b), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(index_dir)
-            band_rows_of(
-                base_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            ).write.mode("overwrite").parquet(bands_dir)
-        finally:
-            base_q.unpersist()
-        # ingest A: sign the batch once and APPEND it — the index
-        # grows by exactly the ingested rows (new parquet files; the
-        # base files are never rewritten)
-        a_q = _with_sig_cols(
-            corpus.where(is_a), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            a_q.write.mode("append").parquet(index_dir)
-            band_rows_of(
-                a_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            ).write.mode("append").parquet(bands_dir)
-        finally:
-            a_q.unpersist()
+        # ingest 0: the base index (natural corpus only); ingest A:
+        # APPEND the batch — the index grows by exactly the ingested
+        # rows (new parquet files; the base files are never rewritten)
+        geometry = (PROD_LSH_BITS, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)
+        write_sig_index(corpus.where(~is_a & ~is_b), base_dir, *geometry)
+        write_sig_index(corpus.where(is_a), base_dir, *geometry, mode="append")
 
     build_once(base_dir, build)
     inc_q = signature_frame(corpus.where(is_b), bits=PROD_LSH_BITS)
     return knn_inc_probe(
-        inc_q,
-        spark.read.parquet(index_dir),
-        spark.read.parquet(bands_dir),
-        PROD_LSH_BANDS,
-        PROD_LSH_BAND_BITS,
+        inc_q, base_dir, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
     )
 
 
@@ -1476,27 +1423,30 @@ def purge_compact_dir(
 
 
 def _maintain_dirs(sf_dir: str) -> dict[str, str]:
-    """The maintain fixture's artifact layout, shared with tests:
-    grown index/bands (base overwrite + ingest-A append), the
-    maintained (purged + compacted) twins, and the curation-drop
-    audit sidecar. One definition so the contract tests inspect the
-    exact directories the key builds (the ZORDER_KIND lesson: never
-    respell a fixture kind in a test)."""
+    """The maintain fixture's artifact layout, shared with tests: the
+    grown signature index under `base` (base overwrite + ingest-A
+    append, `write_sig_index`'s index/bands layout), its maintained
+    (purged + compacted) twin under `maintained` in the same layout,
+    and the curation-drop audit sidecar. One definition so the
+    contract tests inspect the exact directories the key builds
+    (never respell a fixture kind in a test)."""
     from crime_data_batch_processing_spark.fixtures import scratch_dir
 
     base = scratch_dir(
         f"knnmaint_b{PROD_LSH_BITS}x{PROD_LSH_BAND_BITS}"
         f"_p{PLANT_EVERY}o{PLANT_OFFSET}m{PLANT2_MULT}"
-        f"_t{SEMDEDUP_TAU}_v1",
+        f"_t{SEMDEDUP_TAU}_v2",
         sf_dir,
         "embeddings",
     )
+    maintained = f"{base}/maintained"
     return {
         "base": base,
         "index": f"{base}/index",
         "bands": f"{base}/bands",
-        "index_m": f"{base}/index_m",
-        "bands_m": f"{base}/bands_m",
+        "maintained": maintained,
+        "index_m": f"{maintained}/index",
+        "bands_m": f"{maintained}/bands",
         "dropped": f"{base}/dropped",
     }
 
@@ -1555,10 +1505,11 @@ def sim_search_index_maintain(
     every generation-A re-upload drops with its base source as
     witness at cos ≈ 0.9999), persists the drop list as an audit
     sidecar, then MAINTAINS both index artifacts with
-    `purge_compact_dir`: one rewrite that anti-joins the drop set and
-    bin-packs the accumulated files (file-count contract asserted in
-    tests/test_plans.py). The query path is ingest B probing the
-    MAINTAINED index: its generation-A sibling — rank-1 against the
+    `purge_compact_dir` into a `maintained` copy in the same
+    index/bands layout: one rewrite per artifact that anti-joins the
+    drop set and bin-packs the accumulated files (file-count contract
+    asserted in tests/test_plans.py). The query path is ingest B
+    probing the MAINTAINED index: its generation-A sibling — rank-1 against the
     merely-grown index (`sim_search_index_append` asserts that) —
     must never surface again, as candidate or witness (asserted in
     tests); the base source still must (rank-1, cos ≈ 0.9999).
@@ -1580,17 +1531,12 @@ def sim_search_index_maintain(
     """
     from crime_data_batch_processing_spark.fixtures import build_once
     from crime_data_batch_processing_spark.operators.similarity import (
-        _with_sig_cols,
-        band_rows_of,
         knn_inc_probe,
         signature_frame,
+        write_sig_index,
     )
 
     dirs = _maintain_dirs(sf_dir)
-    base_dir = dirs["base"]
-    grown_index, grown_bands = dirs["index"], dirs["bands"]
-    m_index, m_bands = dirs["index_m"], dirs["bands_m"]
-    dropped_dir = dirs["dropped"]
     corpus = _planted_quantized2(
         spread_table(spark, sf_dir, "embeddings")
     )
@@ -1601,56 +1547,37 @@ def sim_search_index_maintain(
 
     def build() -> None:
         # ingest 0 + ingest A: the sim_search_index_append protocol
-        # verbatim (base overwrite, A parquet-append = new files only)
-        base_q = _with_sig_cols(
-            corpus.where(~is_a & ~is_b), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        a_q = _with_sig_cols(
-            corpus.where(is_a), bits=PROD_LSH_BITS
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(grown_index)
-            base_bands = band_rows_of(
-                base_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            )
-            base_bands.write.mode("overwrite").parquet(grown_bands)
-            # curation AT INGEST TIME: ingest A's per-batch semantic
-            # verdict against the already-ingested index (the
-            # dedup_semantic_inc decision), audit sidecar persisted
-            semantic_verdict(
-                knn_inc_probe(
-                    a_q,
-                    base_q,
-                    base_bands,
-                    PROD_LSH_BANDS,
-                    PROD_LSH_BAND_BITS,
-                ),
-                corpus.where(is_a).select("vec_id"),
-                SEMDEDUP_TAU,
-            ).where(~F.col("kept")).write.mode("overwrite").parquet(
-                dropped_dir
-            )
-            a_q.write.mode("append").parquet(grown_index)
-            band_rows_of(
-                a_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-            ).write.mode("append").parquet(grown_bands)
-        finally:
-            base_q.unpersist()
-            a_q.unpersist()
+        # (base overwrite, A parquet-append = new files only), with
+        # curation AT INGEST TIME in between: ingest A's per-batch
+        # semantic verdict against the already-ingested index (the
+        # dedup_semantic_inc decision), audit sidecar persisted
+        geometry = (PROD_LSH_BITS, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)
+        write_sig_index(
+            corpus.where(~is_a & ~is_b), dirs["base"], *geometry
+        )
+        a_q = signature_frame(corpus.where(is_a), bits=PROD_LSH_BITS)
+        semantic_verdict(
+            knn_inc_probe(
+                a_q, dirs["base"], PROD_LSH_BANDS, PROD_LSH_BAND_BITS
+            ),
+            a_q.select("vec_id"),
+            SEMDEDUP_TAU,
+        ).where(~F.col("kept")).write.mode("overwrite").parquet(
+            dirs["dropped"]
+        )
+        write_sig_index(
+            corpus.where(is_a), dirs["base"], *geometry, mode="append"
+        )
         # MAINTENANCE: purge the dropped rows + bin-pack the append
         # files, one rewrite per artifact
-        drop_ids = spark.read.parquet(dropped_dir)
-        purge_compact_dir(spark, grown_index, m_index, drop_ids)
-        purge_compact_dir(spark, grown_bands, m_bands, drop_ids)
+        drop_ids = spark.read.parquet(dirs["dropped"])
+        purge_compact_dir(spark, dirs["index"], dirs["index_m"], drop_ids)
+        purge_compact_dir(spark, dirs["bands"], dirs["bands_m"], drop_ids)
 
-    build_once(base_dir, build)
+    build_once(dirs["base"], build)
     inc_q = signature_frame(corpus.where(is_b), bits=PROD_LSH_BITS)
     return knn_inc_probe(
-        inc_q,
-        spark.read.parquet(m_index),
-        spark.read.parquet(m_bands),
-        PROD_LSH_BANDS,
-        PROD_LSH_BAND_BITS,
+        inc_q, dirs["maintained"], PROD_LSH_BANDS, PROD_LSH_BAND_BITS
     )
 
 

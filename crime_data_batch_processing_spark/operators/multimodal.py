@@ -730,23 +730,20 @@ MEDIA_XWIDE_BANDS = 8
 MEDIA_XWIDE_BAND_BITS = 32
 
 
-def _sql_media_ctes(
-    bits: int, bands: int, band_bits: int, materialized: bool = False
-) -> str:
+def _sql_media_ctes(bits: int, bands: int, band_bits: int) -> str:
     """Shared WITH-body for the media oracles, ending at the
     `scored(vec_a, vec_b, cos_sim)` CTE (callers append their final
     shape) — see `_sql_media_scored` for the stage walk-through.
 
-    `materialized=True` marks the q/sig/scored CTEs MATERIALIZED —
-    semantics-neutral, but required by any caller that references the
-    chain MORE THAN ONCE downstream (the incremental oracle's
-    directed-union + witness + batch references): DuckDB inlines
-    non-materialized CTEs per reference, and the `bits`-wide sig
-    expression is referenced by every band arm, so un-hinted re-use
-    multiplies the most expensive expression in the query (measured:
-    the inc oracle read 1121 s un-hinted vs the single-reference wide
-    oracle's 96 s on the same chain)."""
-    mat = " MATERIALIZED" if materialized else ""
+    `sig` and `scored` are MATERIALIZED and `q` is not. DuckDB inlines
+    a non-materialized CTE at every reference: `bands` reads `sig`
+    once per band arm (re-running the `bits`-wide signature
+    expression each time), and the kNN callers read `scored` more
+    than once. Measured DuckDB time per oracle at sf0.001, 4 cores:
+    the 64-bit rung takes 2.0 s (29.6 s un-hinted), the 128-bit rung
+    3.3 s (un-hinted it ran out of memory at 12.5 GiB), the 256-bit
+    rung 9.1 s (31 s with `q` materialized too). Materializing `q`
+    also slows the 128-bit rung to 7.5 s."""
     from crime_data_batch_processing_spark.operators.llm_dedup import (
         PLANT_EVERY,
         PLANT_OFFSET,
@@ -796,10 +793,10 @@ def _sql_media_ctes(
         FROM grid g
         LEFT JOIN cnt c ON c.doc_id = g.doc_id AND c.bkt = g.b
         GROUP BY g.doc_id
-    ), q AS{mat} (
+    ), q AS (
         SELECT * FROM q0
         WHERE len(list_filter(qe, x -> x <> 0)) > 0
-    ), sig AS{mat} (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sql_sig_expr(bits)}) AS sig FROM q
     ), bands AS (
         {sql_bands_cte(bands, band_bits)}
@@ -809,7 +806,7 @@ def _sql_media_ctes(
           ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
     ), nrm AS (
         SELECT vec_id, {qdot('qe', 'qe')} AS nsq FROM q
-    ), scored AS{mat} (
+    ), scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b,
                ({qdot('ca.qe', 'cb.qe')} / sqrt(na.nsq * nb.nsq))
                    AS cos_sim
@@ -821,9 +818,7 @@ def _sql_media_ctes(
     )"""
 
 
-def _sql_media_scored(
-    bits: int, bands: int, band_bits: int, materialized: bool = False
-) -> str:
+def _sql_media_scored(bits: int, bands: int, band_bits: int) -> str:
     """Shared DuckDB oracle body for the media semantic-dedup rungs:
     replay the planted payload augmentation, the sign-trick hashed
     K-gram embedding (characters == bytes on this ASCII corpus, the
@@ -834,30 +829,12 @@ def _sql_media_scored(
     single-rounding arithmetic as Spark's descale(idot(...)),
     bit-identical (the `_sql_prod_scored_ctes` qdot pattern, with
     self-dots precomputed once per vector in a `nrm` CTE so each
-    candidate pair costs ONE cross-dot). `materialized` forwards to
-    `_sql_media_ctes` — required past 128 signature bits, where the
-    per-band-arm inlining of the sig expression dominates the whole
-    oracle (measured 57 s vs 5 s for the bands CTE alone at 256
-    bits, sf0.001)."""
+    candidate pair costs ONE cross-dot)."""
     return f"""
-    WITH {_sql_media_ctes(bits, bands, band_bits, materialized)}
+    WITH {_sql_media_ctes(bits, bands, band_bits)}
     SELECT vec_a AS doc_a, vec_b AS doc_b, cos_sim FROM scored
     WHERE cos_sim >= {MEDIA_COSINE_THRESHOLD}
     """
-
-
-def _sql_media_semantic() -> str:
-    """`multimodal_dedup_semantic` oracle: the shared media chain at
-    the production 64-bit/8×8 constants."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PROD_LSH_BAND_BITS,
-        PROD_LSH_BANDS,
-        PROD_LSH_BITS,
-    )
-
-    return _sql_media_scored(
-        PROD_LSH_BITS, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
-    )
 
 
 def _media_corpus_embedded(
@@ -868,8 +845,8 @@ def _media_corpus_embedded(
     doc_id + PLANT_OFFSET, each embedded by ONE Arrow `mapInPandas`
     pass computing the sign-trick hashed K-gram vector (vectorized
     numpy rolling hash + signed bincount per Arrow batch). Shared by
-    both semantic-dedup rungs (64-bit prod and 128-bit wide) and the
-    incremental key so the feature seam is defined exactly once.
+    the three semantic-dedup rungs and the incremental key so the
+    feature seam is defined exactly once.
     `pred` (a Column over doc_id) restricts the corpus BEFORE the
     Arrow pass — a filter placed after mapInPandas cannot be pushed
     through it, so the incremental paths pass their slice predicate
@@ -975,187 +952,100 @@ def _media_corpus_embedded(
     )
 
 
-@query("multimodal_dedup_semantic", oracle=_sql_media_semantic())
-def multimodal_dedup_semantic(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SEMANTIC media dedup: near-duplicate payload pairs via a
-    byte-feature embedding through the PRODUCTION banded-LSH
-    pipeline — the image-dedup capability a multimodal training-data
-    pipeline needs beyond `multimodal_dedup`'s exact digests (r11
-    verdict stretch item). See the MEDIA_* constants for the feature
-    design, planted ground truth, and separation/recall measurements.
+def _media_semantic_dedup(bits: int, bands: int, band_bits: int):
+    """SEMANTIC media dedup at one band geometry: near-duplicate
+    payload pairs (doc_a < doc_b, cos_sim ≥ MEDIA_COSINE_THRESHOLD)
+    via a byte-feature embedding through the shared banded-LSH
+    pipeline — the image-dedup capability beyond `multimodal_dedup`'s
+    exact digests. See the MEDIA_* constants for the feature design,
+    planted ground truth, and separation measurements.
 
-    Composition: the typed `media_envelope` (payloads stay opaque
-    bytes; a real deployment swaps the hashed K-gram feature for a
-    CLIP or pHash embedding at this exact seam — same schema, same
-    downstream pipeline), ONE Arrow `mapInPandas` pass computing the
-    sign-trick hashed K-gram vector per payload (vectorized numpy
-    rolling hash + signed bincount per Arrow batch — the multimodal
-    family's feature-extraction shape), then the SHARED
-    `signature_frame` → `banded_scored_pairs` helpers at the
-    64-bit/8×8 production constants (similarity.py — the same
-    six-consumer pipeline, now with a media consumer). Scale shape is
-    the prod family's: one linear embed pass, band explode = 8
-    rows/payload, ID-only bucket self-join, exact verify on
-    candidates only — 4.6% candidate mass measured at sf0.1 (see the
-    MEDIA_* constants for why the naive unsigned-histogram design was
-    rejected at 30-52%).
+    Composition: `_media_corpus_embedded` (the typed `media_envelope`
+    and ONE Arrow `mapInPandas` pass computing the sign-trick hashed
+    K-gram vector per payload; a real deployment swaps in a CLIP or
+    pHash embedding at this seam — same schema, same downstream) →
+    `signature_frame(bits)` (sig = int64 at 64 bits, array of int64
+    words above) → `banded_scored_pairs(bands, band_bits)` (band
+    explode, ID-only bucket self-join, exact quantized-cosine verify
+    on candidates only). The oracle replays every stage bit-for-bit
+    through `sql_sig_expr`/`sql_bands_cte`.
+
+    Three rungs are registered (`_media_rungs`), one per corpus
+    decade, each trading planted recall for candidate mass (numpy
+    band replay on the sf0.1 media corpus: 5250 payloads, 250 planted
+    pairs):
+
+    - `multimodal_dedup_semantic`: 64 bits, 8×8 — 4.59%, 250/250;
+    - `multimodal_dedup_semantic_wide`: 128 bits, 8×16 — 0.0416%,
+      249/250;
+    - `multimodal_dedup_semantic_xwide`: 256 bits, 8×32 — 0.0035%,
+      244/250.
+
+    The misses are short payloads whose ~K-gram re-upload delta
+    flips more sign bits than their cosine suggests; they are
+    deterministic and pinned against an independent numpy band
+    replay in tests. The 64-bit rung is the recall-1.0 ground truth;
+    the wider rungs are the ones that hold the verify stage's N²
+    coefficient down at scale (band WIDTH ~ log N at constant band
+    count — see MEDIA_XWIDE_* for the rejected 12×16 and 6×32).
     """
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from crime_data_batch_processing_spark.operators.similarity import (
+            banded_scored_pairs,
+            signature_frame,
+        )
+
+        with_q = signature_frame(
+            _media_corpus_embedded(spark, sf_dir), bits=bits
+        )
+        return (
+            banded_scored_pairs(with_q, bands, band_bits)
+            .where(F.col("cos_sim") >= MEDIA_COSINE_THRESHOLD)
+            .select(
+                F.col("vec_a").alias("doc_a"),
+                F.col("vec_b").alias("doc_b"),
+                "cos_sim",
+            )
+        )
+
+    return run
+
+
+def _media_rungs() -> tuple[tuple[str, int, int, int], ...]:
+    """(key, bits, bands, band_bits) of each media semantic rung, in
+    registration order."""
     from crime_data_batch_processing_spark.operators.llm_dedup import (
         PROD_LSH_BAND_BITS,
         PROD_LSH_BANDS,
         PROD_LSH_BITS,
     )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        signature_frame,
-    )
 
-    emb = _media_corpus_embedded(spark, sf_dir)
-    with_q = signature_frame(emb, bits=PROD_LSH_BITS)
     return (
-        banded_scored_pairs(with_q, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)
-        .where(F.col("cos_sim") >= MEDIA_COSINE_THRESHOLD)
-        .select(
-            F.col("vec_a").alias("doc_a"),
-            F.col("vec_b").alias("doc_b"),
-            "cos_sim",
-        )
+        (
+            "multimodal_dedup_semantic",
+            PROD_LSH_BITS,
+            PROD_LSH_BANDS,
+            PROD_LSH_BAND_BITS,
+        ),
+        (
+            "multimodal_dedup_semantic_wide",
+            MEDIA_WIDE_BITS,
+            MEDIA_WIDE_BANDS,
+            MEDIA_WIDE_BAND_BITS,
+        ),
+        (
+            "multimodal_dedup_semantic_xwide",
+            MEDIA_XWIDE_BITS,
+            MEDIA_XWIDE_BANDS,
+            MEDIA_XWIDE_BAND_BITS,
+        ),
     )
 
 
-def _sql_media_semantic_wide() -> str:
-    """`multimodal_dedup_semantic_wide` oracle: the shared media
-    chain at the 128-bit/8×16 WIDE constants — the multi-word
-    signature path of `sql_sig_expr`/`sql_bands_cte` (LIST-of-words
-    signature, bands sliced across words)."""
-    return _sql_media_scored(
-        MEDIA_WIDE_BITS, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
-    )
-
-
-@query(
-    "multimodal_dedup_semantic_wide", oracle=_sql_media_semantic_wide()
-)
-def multimodal_dedup_semantic_wide(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SEMANTIC media dedup at the 128-bit WIDE geometry — the scale
-    rung the r12 verdict's item 2 names: the banded family's scale
-    knob at a fixed similarity regime is signature bits ~ log N, and
-    the single-int64 signature capped it at 64 bits, leaving
-    `multimodal_dedup_semantic` with a measured flat 4.8% candidate
-    ratio (candidates ∝ N² at fixed geometry — the s100 DNF the judge
-    graded `weak`). This key runs the SAME embed and the SAME shared
-    banded pipeline with the signature packed into TWO int64 words
-    (`_signature` multi-word path) and 8 bands of 16 bits sliced
-    across them.
-
-    Measured on the real corpus (numpy band replay, sf0.1 / 5250
-    payloads — see MEDIA_WIDE_* constants): candidate ratio 0.0458 →
-    0.00042 (109×), which converts the verify stage's N² coefficient
-    into one the s100 tier completes. The cost is planted recall
-    249/250 (vs the 64-bit rung's 1.0): one SHORT payload's re-upload
-    (src 3000, cos 0.9949) flips more sign bits than its cosine
-    suggests and misses all 8 of the tighter bands — the inherent
-    16-bit-band tradeoff (192-bit/12×16 misses the same pair), kept
-    honest in tests by asserting the found set against an independent
-    numpy replay of the banding rather than claiming full recall.
-    Both rungs stay registered — the 64-bit rung is ground truth
-    (recall 1.0 at driver scale), this is the one you run at 100 TB.
-
-    Composition: `_media_corpus_embedded` (one Arrow mapInPandas
-    pass) → `signature_frame(bits=128)` (sig = array<int64>, persisted
-    once) → `banded_scored_pairs(8, 16)` (band explode, ID-only
-    bucket self-join, exact quantized-cosine verify on candidates
-    only) — the oracle replays every stage bit-for-bit through the
-    multi-word `sql_sig_expr`/`sql_bands_cte` generators.
-    """
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        signature_frame,
-    )
-
-    emb = _media_corpus_embedded(spark, sf_dir)
-    with_q = signature_frame(emb, bits=MEDIA_WIDE_BITS)
-    return (
-        banded_scored_pairs(
-            with_q, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
-        )
-        .where(F.col("cos_sim") >= MEDIA_COSINE_THRESHOLD)
-        .select(
-            F.col("vec_a").alias("doc_a"),
-            F.col("vec_b").alias("doc_b"),
-            "cos_sim",
-        )
-    )
-
-
-def _sql_media_semantic_xwide() -> str:
-    """`multimodal_dedup_semantic_xwide` oracle: the shared media
-    chain at the 256-bit/8×32 constants — four signature words, each
-    band exactly half a word (32 divides 64, the `sql_bands_cte`
-    straddle guard's happy path)."""
-    return _sql_media_scored(
-        MEDIA_XWIDE_BITS,
-        MEDIA_XWIDE_BANDS,
-        MEDIA_XWIDE_BAND_BITS,
-        materialized=True,
-    )
-
-
-@query(
-    "multimodal_dedup_semantic_xwide",
-    oracle=_sql_media_semantic_xwide(),
-)
-def multimodal_dedup_semantic_xwide(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """SEMANTIC media dedup at the 256-bit/8×32 NEXT-DECADE geometry
-    — the knob the r13 verdict asked to close ("bits ~ log N per
-    decade"), resolved by measurement: the verdict's candidate
-    192-bit/12×16 RAISES candidate mass (0.061% vs the wide rung's
-    0.042% — extra bands at fixed width add collisions), while
-    widening the bands to 32 bits at the same band count drops it
-    12× (0.0035% measured, see MEDIA_XWIDE_* for the full table).
-    That factor is what the decade needs: the wide rung's s100 warm
-    exponent (1.31) said its fixed 0.042% constant resurfaces the N²
-    term by ~5M payloads; at 0.0035% the same corpus point carries
-    ~12× fewer candidate verifications.
-
-    The trade is the same shape as the wide rung's, one step further:
-    planted recall 244/250 at sf0.1 (the six misses are short
-    payloads whose sign bits flip more than their cosine suggests —
-    deterministic, pinned against an independent numpy band replay in
-    tests, never claimed as 1.0). The recall ladder is therefore
-    64-bit 1.0 → 128-bit 0.996 → 256-bit 0.976, each rung registered,
-    each one decade's geometry.
-
-    Composition is `multimodal_dedup_semantic_wide`'s verbatim at the
-    other constants: `_media_corpus_embedded` (one Arrow mapInPandas
-    pass) → `signature_frame(bits=256)` (sig = array of four int64
-    words) → `banded_scored_pairs(8, 32)` → exact quantized-cosine
-    verify; the oracle replays every stage through the multi-word
-    `sql_sig_expr`/`sql_bands_cte` generators.
-    """
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        signature_frame,
-    )
-
-    emb = _media_corpus_embedded(spark, sf_dir)
-    with_q = signature_frame(emb, bits=MEDIA_XWIDE_BITS)
-    return (
-        banded_scored_pairs(
-            with_q, MEDIA_XWIDE_BANDS, MEDIA_XWIDE_BAND_BITS
-        )
-        .where(F.col("cos_sim") >= MEDIA_COSINE_THRESHOLD)
-        .select(
-            F.col("vec_a").alias("doc_a"),
-            F.col("vec_b").alias("doc_b"),
-            "cos_sim",
-        )
+for _key, _bits, _bands, _band_bits in _media_rungs():
+    query(_key, oracle=_sql_media_scored(_bits, _bands, _band_bits))(
+        _media_semantic_dedup(_bits, _bands, _band_bits)
     )
 
 
@@ -1176,10 +1066,7 @@ def _sql_media_semantic_inc() -> str:
 
     return f"""
     WITH {_sql_media_ctes(
-        MEDIA_WIDE_BITS,
-        MEDIA_WIDE_BANDS,
-        MEDIA_WIDE_BAND_BITS,
-        materialized=True,
+        MEDIA_WIDE_BITS, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
     )}, directed AS (
         SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
         UNION ALL
@@ -1236,15 +1123,13 @@ def multimodal_dedup_semantic_inc(
     self-join never runs.
 
     Composition of verified kernels only: `_media_corpus_embedded`
-    (pred-restricted), `_with_sig_cols`/`band_rows_of` for the
-    persisted index, the shared `knn_inc_probe`, and the shared
-    `semantic_verdict` at the media threshold. The scratch kind bakes
+    (pred-restricted), `write_sig_index` for the persisted index, the
+    shared `knn_inc_probe`, and the shared `semantic_verdict` at the
+    media threshold. The scratch kind bakes
     the wide geometry, gram K, plant cadence, and batch residue so
     any constants change keys a fresh index build (the ZORDER_KIND
     staleness class).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from crime_data_batch_processing_spark.operators.llm_dedup import (
         PLANT_EVERY,
         PLANT_OFFSET,
@@ -1253,10 +1138,9 @@ def multimodal_dedup_semantic_inc(
         semantic_verdict,
     )
     from crime_data_batch_processing_spark.operators.similarity import (
-        _with_sig_cols,
-        band_rows_of,
         knn_inc_probe,
         signature_frame,
+        write_sig_index,
     )
 
     base_dir = scratch_dir(
@@ -1266,35 +1150,22 @@ def multimodal_dedup_semantic_inc(
         sf_dir,
         "documents",
     )
-    index_dir, bands_dir = f"{base_dir}/index", f"{base_dir}/bands"
     is_batch = (F.col("doc_id") >= PLANT_OFFSET) | (
         F.col("doc_id") % SEMDEDUP_INC_MOD == SEMDEDUP_INC_RESIDUE
     )
-
-    def build() -> None:
-        base_q = _with_sig_cols(
-            _media_corpus_embedded(spark, sf_dir, pred=~is_batch),
-            bits=MEDIA_WIDE_BITS,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(index_dir)
-            band_rows_of(
-                base_q, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
-            ).write.mode("overwrite").parquet(bands_dir)
-        finally:
-            base_q.unpersist()
-
-    build_once(base_dir, build)
+    build_once(base_dir, lambda: write_sig_index(
+        _media_corpus_embedded(spark, sf_dir, pred=~is_batch),
+        base_dir,
+        MEDIA_WIDE_BITS,
+        MEDIA_WIDE_BANDS,
+        MEDIA_WIDE_BAND_BITS,
+    ))
     inc_q = signature_frame(
         _media_corpus_embedded(spark, sf_dir, pred=is_batch),
         bits=MEDIA_WIDE_BITS,
     )
     edges = knn_inc_probe(
-        inc_q,
-        spark.read.parquet(index_dir),
-        spark.read.parquet(bands_dir),
-        MEDIA_WIDE_BANDS,
-        MEDIA_WIDE_BAND_BITS,
+        inc_q, base_dir, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
     )
     return semantic_verdict(
         edges, inc_q.select("vec_id"), MEDIA_COSINE_THRESHOLD

@@ -1840,10 +1840,7 @@ def _sql_release_media() -> str:
     exact_off = MEDIA_RELEASE_EXACT_MULT * PLANT_OFFSET
     return f"""
     WITH {_sql_media_ctes(
-        MEDIA_WIDE_BITS,
-        MEDIA_WIDE_BANDS,
-        MEDIA_WIDE_BAND_BITS,
-        materialized=True,
+        MEDIA_WIDE_BITS, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
     )}, ranked AS (
         SELECT vec_a AS src, 1 AS rank, vec_b AS dst, cos_sim
         FROM scored WHERE cos_sim >= {MEDIA_COSINE_THRESHOLD}

@@ -190,10 +190,9 @@ def _with_sig_cols(corpus_q, bits: int = LSH_BITS):
 
 def signature_frame(corpus_q, bits: int = LSH_BITS):
     """`_with_sig_cols` persisted (MEMORY_AND_DISK), cachekit-tracked,
-    and materialized — the form every banded consumer reads (band
-    explode plus both pair join-backs hit the cache). ONE definition
-    for the pattern previously hand-rolled in dedup_embedding_lsh,
-    dedup_embedding_lsh_prod, and all three kNN keys."""
+    and materialized: the form every query-path banded consumer reads,
+    so the band explode and both exact-cosine join-backs hit the cache
+    and the Arrow signature matmul runs once per vector."""
     out = (
         _with_sig_cols(corpus_q, bits)
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -246,36 +245,83 @@ def band_rows_of(
     ).select("vec_id", "bb.band", "bb.bval")
 
 
+def _distinct_at_width(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct (a, b) ID pairs, hash-repartitioned to compute width
+    first. The pair exchange is tiny in bytes (16 B/row), so AQE's
+    byte-based coalescing would shrink it to a few partitions, while
+    the stage above the distinct is the compute-dense exact cosine
+    (~200 long ops plus array traffic per pair). A user-specified
+    repartition is exempt from AQE coalescing and dropDuplicates
+    reuses its hash partitioning, so the plan keeps one exchange, at
+    width max(cores, spark.sql.shuffle.partitions). Measured (sf0.1,
+    local[32], warm): weak-geometry kernel exec 1.92 s → 0.93 s,
+    identical rows."""
+    spark = pairs.sparkSession
+    width = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    return pairs.repartition(width, a, b).dropDuplicates([a, b])
+
+
+def _exact_cosine(
+    cand: DataFrame, left: DataFrame, right: DataFrame, a: str, b: str
+) -> DataFrame:
+    """Score ID pairs cand(a, b): join back `left`'s (vec_id, q, nsq)
+    on a and `right`'s on b, then the exact quantized cosine
+    descale(idot) / sqrt(na·nb). Returns (a, b, cos_sim); vectors
+    never cross the candidate shuffle, only the key join-backs."""
+    la = left.select(
+        F.col("vec_id").alias(a),
+        F.col("q").alias("qa"),
+        F.col("nsq").alias("na"),
+    )
+    rb = right.select(
+        F.col("vec_id").alias(b),
+        F.col("q").alias("qb"),
+        F.col("nsq").alias("nb"),
+    )
+    return (
+        cand.join(la, a)
+        .join(rb, b)
+        .select(
+            a,
+            b,
+            (
+                descale(idot(F.col("qa"), F.col("qb")))
+                / F.sqrt(F.col("na") * F.col("nb"))
+            ).alias("cos_sim"),
+        )
+    )
+
+
+def _rank_per_src(directed: DataFrame, topk: int = 0) -> DataFrame:
+    """Each src's top-k (src, dst, cos_sim) rows by the (cos_sim DESC,
+    dst ASC) total order, as (src, rank, dst, cos_sim); topk=0 means
+    KNN_K. Plans as WindowGroupLimit + Window, so the cut runs per
+    partition before the rank shuffle."""
+    w = Window.partitionBy("src").orderBy(
+        F.col("cos_sim").desc(), F.col("dst").asc()
+    )
+    return (
+        directed.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= (topk or KNN_K))
+        .select("src", "rank", "dst", "cos_sim")
+    )
+
+
 def banded_scored_pairs(
     with_q, bands: int = LSH_BANDS, band_bits: int = LSH_BAND_BITS
 ):
     """The banded candidate pipeline over a `signature_frame`:
     band-explode → ID-only bucket self-join (64-element arrays never
-    cross the candidate shuffle) → distinct → exact-cosine join-backs.
-    Returns (vec_a, vec_b, cos_sim) with vec_a < vec_b — each
-    undirected pair scored exactly once. Shared by the lsh dedup pair
-    keys (threshold consumers) and the kNN graph keys (rank
-    consumers)."""
+    cross the candidate shuffle) → distinct at compute width →
+    exact-cosine join-backs. Returns (vec_a, vec_b, cos_sim) with
+    vec_a < vec_b — each undirected pair scored exactly once. The
+    threshold consumers (dedup pair keys) and rank consumers (kNN
+    graph keys) share it."""
     b_rows = band_rows_of(with_q, bands, band_bits)
-    spark = with_q.sparkSession
-    # Hash-repartition the ID pairs to full core width BEFORE the
-    # distinct (guide §2.2/§2.4): the pair exchange is tiny in BYTES
-    # (16 B/row), so AQE's byte-based coalescing shrank it to ~6
-    # partitions at sf0.1 — but the stage ABOVE the distinct is the
-    # compute-dense exact cosine (~200 long ops + array traffic per
-    # pair), which that coalescing serialized onto 6 cores. A
-    # user-specified repartition is exempt from AQE coalescing, and
-    # dropDuplicates reuses the (vec_a, vec_b) hash partitioning, so
-    # the plan keeps ONE exchange — now at compute width. Measured
-    # (sf0.1, local[32], warm): weak-geometry kernel exec 1.92 s →
-    # 0.93 s, identical rows. Width = max(cores, configured shuffle
-    # partitions): scale-adaptive, never below what production sizing
-    # already asked for.
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
-    cand = (
+    cand = _distinct_at_width(
         b_rows.alias("a")
         .join(
             b_rows.alias("b"),
@@ -286,52 +332,26 @@ def banded_scored_pairs(
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-        )
-        .repartition(width, "vec_a", "vec_b")
-        .dropDuplicates(["vec_a", "vec_b"])
+        ),
+        "vec_a",
+        "vec_b",
     )
-    a = with_q.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("q").alias("qa"),
-        F.col("nsq").alias("na"),
-    )
-    b = with_q.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("q").alias("qb"),
-        F.col("nsq").alias("nb"),
-    )
-    return (
-        cand.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            (
-                descale(idot(F.col("qa"), F.col("qb")))
-                / F.sqrt(F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-    )
+    return _exact_cosine(cand, with_q, with_q, "vec_a", "vec_b")
 
 
 def knn_rank_directed(scored, topk: int = 0):
     """Symmetrize undirected (vec_a, vec_b, cos_sim) pairs into both
-    directions and keep each src's top-k by the (cos_sim DESC,
-    dst ASC) total order — the kNN-graph tail shared by the graph
-    keys. Default topk=0 resolves to KNN_K (defined below).
+    directions and keep each src's top-k (`_rank_per_src`) — the
+    kNN-graph tail shared by the graph keys. Default topk=0 resolves
+    to KNN_K (defined below).
 
     Symmetrization is ONE explode over a 2-struct array, not a
-    self-union: `scored` is the full banded candidate chain (bucket
-    self-join → distinct → two exact-cosine join-backs), and a union
-    of two selects over it plans the ENTIRE chain twice — every
-    candidate generated, deduped, and cosine-scored two times (r14
-    plan audit: the whole subtree duplicated under Union). The
+    self-union: `scored` is the full banded candidate chain, and a
+    union of two selects over it plans the entire chain twice. The
     explode emits both directed rows from each scored pair in the
-    same task, so the chain runs once; the emitted rows and the
-    (cos_sim DESC, dst ASC) ranking are bit-identical to the union
-    form (cos_sim is computed once per pair instead of twice from
-    the same exact-integer inputs, which already yielded identical
-    bits)."""
+    same task, so the chain runs once; the rows and ranks equal the
+    union form's (cos_sim is computed once per pair from the same
+    exact-integer inputs)."""
     directed = scored.select(
         F.explode(
             F.array(
@@ -348,43 +368,67 @@ def knn_rank_directed(scored, topk: int = 0):
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.cos_sim")
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), F.col("dst").asc()
+    return _rank_per_src(directed, topk)
+
+
+def write_sig_index(
+    corpus_q: DataFrame,
+    path: str,
+    bits: int = LSH_BITS,
+    bands: int = LSH_BANDS,
+    band_bits: int = LSH_BAND_BITS,
+    mode: str = "overwrite",
+) -> None:
+    """Write the persisted signature index of (vec_id, q) rows under
+    `path`: `{path}/index` holds `_with_sig_cols` (vec_id, q, nsq,
+    sig) and `{path}/bands` its `band_rows_of` (vec_id, band, bval).
+    `mode="append"` grows both by exactly the given rows (new parquet
+    files, existing ones untouched). The corpus is signed once, under
+    an untracked MEMORY_AND_DISK persist released in `finally`, so a
+    failed write never leaks the frame across `build_once` retries
+    (cachekit tracking is for query-path frames). `knn_inc_probe` is
+    the one reader of this layout."""
+    signed = _with_sig_cols(corpus_q, bits).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    return (
-        directed.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (topk or KNN_K))
-        .select("src", "rank", "dst", "cos_sim")
-    )
+    try:
+        signed.write.mode(mode).parquet(f"{path}/index")
+        band_rows_of(signed, bands, band_bits).write.mode(mode).parquet(
+            f"{path}/bands"
+        )
+    finally:
+        signed.unpersist()
 
 
 def knn_inc_probe(
     inc_q: DataFrame,
-    base_q: DataFrame,
-    base_bands: DataFrame,
+    path: str,
     bands: int = LSH_BANDS,
     band_bits: int = LSH_BAND_BITS,
     topk: int = 0,
 ) -> DataFrame:
-    """The incremental kNN probe shared by `sim_search_knn_inc` (weak
-    geometry, modulus split) and `sim_search_knn_inc_prod` (production
-    geometry, planted-ingest split): given the increment's signature
-    frame `inc_q` (vec_id, q, nsq, sig — a `signature_frame`), the
-    persisted index rows `base_q` (same columns) and the index's
-    exploded `base_bands` (vec_id, band, bval), compute the
-    increment's top-k edges WITHOUT re-running the corpus self-join.
+    """The incremental kNN probe against the signature index that
+    `write_sig_index` wrote under `path`: given the increment's
+    signature frame `inc_q` (vec_id, q, nsq, sig — a
+    `signature_frame`), return its top-k edges (src, rank, dst,
+    cos_sim) without re-running the corpus self-join. `bands` and
+    `band_bits` must be the index's geometry.
 
     Candidates = increment band rows hash-joined against the index's
     band rows (new→corpus) plus a self-join of the increment's own
-    tiny band set (new→new), deduped on (src, dst); exact-cosine
-    re-rank fetches vectors by key join from index ∪ increment; the
-    per-source top-k cut runs under WindowGroupLimit. Because index
-    and probe share the same `_signature` integers, the increment's
-    edges equal what a full rebuild would assign those sources — the
-    invariant the inc-equals-rebuild tests pin for both geometries.
+    tiny band set (new→new), deduped on (src, dst) at compute width;
+    the exact-cosine re-rank fetches vectors by key join from index ∪
+    increment; the per-source top-k cut runs under WindowGroupLimit.
+    Index and probe share the same `_signature` integers, so the
+    increment's edges equal what a full rebuild would assign those
+    sources — the inc-equals-rebuild invariant every caller's tests
+    pin, at every geometry.
     """
+    spark = inc_q.sparkSession
+    base_q = spark.read.parquet(f"{path}/index")
+    base_bands = spark.read.parquet(f"{path}/bands")
     inc_bands = band_rows_of(inc_q, bands, band_bits)
-    cand = (
+    cand = _distinct_at_width(
         inc_bands.alias("a")
         .join(
             base_bands.alias("b"),
@@ -407,55 +451,14 @@ def knn_inc_probe(
                 F.col("a.vec_id").alias("src"),
                 F.col("b.vec_id").alias("dst"),
             )
-        )
-        # same width fix as banded_scored_pairs: the ID-pair exchange
-        # is tiny in bytes, AQE would coalesce it, and the stage above
-        # the distinct is the compute-dense exact cosine
-        .repartition(
-            max(
-                inc_q.sparkSession.sparkContext.defaultParallelism,
-                int(
-                    inc_q.sparkSession.conf.get(
-                        "spark.sql.shuffle.partitions"
-                    )
-                ),
-            ),
-            "src",
-            "dst",
-        )
-        .dropDuplicates(["src", "dst"])
+        ),
+        "src",
+        "dst",
     )
-    all_q = base_q.unionByName(inc_q)
-    a = inc_q.select(
-        F.col("vec_id").alias("src"),
-        F.col("q").alias("qa"),
-        F.col("nsq").alias("na"),
+    scored = _exact_cosine(
+        cand, inc_q, base_q.unionByName(inc_q), "src", "dst"
     )
-    b = all_q.select(
-        F.col("vec_id").alias("dst"),
-        F.col("q").alias("qb"),
-        F.col("nsq").alias("nb"),
-    )
-    scored = (
-        cand.join(a, "src")
-        .join(b, "dst")
-        .select(
-            "src",
-            "dst",
-            (
-                descale(idot(F.col("qa"), F.col("qb")))
-                / F.sqrt(F.col("na") * F.col("nb"))
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), F.col("dst").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (topk or KNN_K))
-        .select("src", "rank", "dst", "cos_sim")
-    )
+    return _rank_per_src(scored, topk)
 
 
 _PAIR_COS = (
@@ -554,16 +557,20 @@ _SQL_QUANT = (
 def sql_sig_expr(bits: int = LSH_BITS) -> str:
     """SQL expression computing the packed hyperplane signature of a
     quantized vector column named `qe`: each bit is `SUM(q_i·w_i) >= 0`
-    over a literal integer plane, rendered with the proven
-    lockstep-unnest dot pattern. Shared by the `sim_search_lsh`,
-    `dedup_embedding_lsh`, and `dedup_embedding_lsh_prod` oracles —
-    integer math end-to-end, so the oracle's buckets ARE the Spark
-    buckets. At bit 63 of each word the weight is the min-long
-    literal (2^63 overflows a signed BIGINT; same two's-complement
-    pattern numpy's int64 wraparound produces — the idiom
-    llm_dedup._sql_simhash_pairs established). Above 64 bits the
-    expression is a LIST literal of words, little-endian, mirroring
-    `_signature`'s multi-word packing exactly."""
+    over a literal integer plane, rendered with the lockstep-unnest
+    dot pattern. It is the SQL twin of `_signature` and the body of
+    every banded oracle's `sig` CTE — integer math end-to-end, so the
+    oracle's buckets ARE the Spark buckets. At bit 63 of each word the
+    weight is the min-long literal (2^63 overflows a signed BIGINT;
+    same two's-complement pattern numpy's int64 wraparound produces).
+    Above 64 bits the expression is a LIST literal of words,
+    little-endian, mirroring `_signature`'s multi-word packing.
+
+    The expression costs one correlated unnest-dot per bit, and
+    DuckDB inlines a non-materialized CTE at every reference — the
+    bands CTE reads `sig` once per band arm — so every caller marks
+    its `sig` CTE MATERIALIZED (and its `scored` CTE, which the
+    directed kNN union reads twice)."""
     planes = _hyperplanes(bits)
 
     def bit_dot(plane: list[int]) -> str:
@@ -640,7 +647,7 @@ def _sql_lsh() -> str:
     WITH q AS (
         SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
         FROM embeddings
-    ), sig AS (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sig}) AS sig FROM q
     ), bands AS (
         {bands}
@@ -649,7 +656,7 @@ def _sql_lsh() -> str:
         FROM bands qb JOIN bands cb
           ON qb.band = cb.band AND qb.bval = cb.bval
         WHERE qb.vec_id < {N_QUERIES} AND cb.vec_id != qb.vec_id
-    ), scored AS (
+    ), scored AS MATERIALIZED (
         SELECT cand.qid, cand.vec_id,
                {sql_cosine('qe.embedding', 'ce.embedding')} AS cos_sim
         FROM cand
@@ -1548,7 +1555,7 @@ def sql_knn_graph_ctes() -> str:
     return f"""q AS (
         SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
         FROM embeddings
-    ), sig AS (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
     ), bands AS (
         {sql_bands_cte()}
@@ -1556,7 +1563,7 @@ def sql_knn_graph_ctes() -> str:
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS (
+    ), scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b,
                {sql_cosine('ea.embedding', 'eb.embedding')} AS cos_sim
         FROM cand
@@ -1649,7 +1656,7 @@ def _sql_knn_inc() -> str:
     WITH q AS (
         SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
         FROM embeddings
-    ), sig AS (
+    ), sig AS MATERIALIZED (
         SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
     ), bands AS (
         {sql_bands_cte()}
@@ -1659,7 +1666,7 @@ def _sql_knn_inc() -> str:
           ON a.band = b.band AND a.bval = b.bval
          AND a.vec_id % {KNN_INC_MOD} = 0
          AND b.vec_id != a.vec_id
-    ), scored AS (
+    ), scored AS MATERIALIZED (
         SELECT cand.src, cand.dst,
                {sql_cosine('ea.embedding', 'eb.embedding')} AS cos_sim
         FROM cand
@@ -1686,10 +1693,11 @@ def sim_search_knn_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     appending, at O(increment × collision fan-in) per ingest instead
     of O(corpus²) — the only affordable cadence at 100 TB.
 
-    The corpus keeps two append-only artifacts (built once here,
-    appended on real ingests): the quantized-vector/norm/signature
-    table and its exploded (band, bval) rows — the SAME `_signature`
-    integers as `sim_search_knn_graph`, so index and probe agree
+    The corpus keeps the signature index (`write_sig_index`, built
+    once here, appended on real ingests): the quantized-vector/norm/
+    signature table and its exploded (band, bval) rows — the SAME
+    `_signature` integers as `sim_search_knn_graph`, so index and
+    probe agree
     bit-for-bit and the increment's edges equal what a full rebuild
     would assign those vectors. The increment computes its own
     signatures in-plan (persisted + tracked), probes the index on
@@ -1720,7 +1728,6 @@ def sim_search_knn_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "embeddings",
     )
-    index_dir, bands_dir = f"{base_dir}/index", f"{base_dir}/bands"
     emb = load_table(spark, sf_dir, "embeddings")
     is_inc = F.col("vec_id") % KNN_INC_MOD == 0
 
@@ -1729,38 +1736,20 @@ def sim_search_knn_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", quantize(F.col("embedding")).alias("q")
         )
 
-    def build() -> None:
-        # untracked persist: the build materializes the index to
-        # parquet and unpersists immediately (signature_frame's
-        # cachekit tracking is for query-path frames)
-        base_q = _with_sig_cols(
+    build_once(
+        base_dir,
+        lambda: write_sig_index(
             quantized(
                 spread(emb.where(~is_inc), spark,
                        probe_key=f"{sf_dir}/embeddings")
-            )
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            base_q.write.mode("overwrite").parquet(index_dir)
-            band_rows_of(base_q).write.mode("overwrite").parquet(
-                bands_dir
-            )
-        finally:
-            # unpersist even when a write throws (r11 advisor): this
-            # persist is deliberately untracked by cachekit, so a
-            # failed build would otherwise leak the MEMORY_AND_DISK
-            # frame across build_once retries
-            base_q.unpersist()
-
-    build_once(base_dir, build)
-
+            ),
+            base_dir,
+        ),
+    )
     inc_q = signature_frame(
         quantized(
             spread(emb.where(is_inc), spark,
                    probe_key=f"{sf_dir}/embeddings")
         )
     )
-    return knn_inc_probe(
-        inc_q,
-        spark.read.parquet(index_dir),
-        spark.read.parquet(bands_dir),
-    )
+    return knn_inc_probe(inc_q, base_dir)

@@ -549,7 +549,8 @@ class TestSimilarity:
         sim_search_index_maintain(spark, sf_dir).count()  # build fixture
         dirs = _maintain_dirs(sf_dir)
         no_drops = spark.createDataFrame([], "vec_id long")
-        ci, cb = f"{tmp_path}/index_c", f"{tmp_path}/bands_c"
+        compacted_dir = f"{tmp_path}/c"
+        ci, cb = f"{compacted_dir}/index", f"{compacted_dir}/bands"
         purge_compact_dir(spark, dirs["index"], ci, no_drops)
         purge_compact_dir(spark, dirs["bands"], cb, no_drops)
         corpus = _planted_quantized2(
@@ -562,11 +563,7 @@ class TestSimilarity:
         compacted = {
             (r.src, r.rank, r.dst, r.cos_sim)
             for r in knn_inc_probe(
-                inc_q,
-                spark.read.parquet(ci),
-                spark.read.parquet(cb),
-                PROD_LSH_BANDS,
-                PROD_LSH_BAND_BITS,
+                inc_q, compacted_dir, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
             ).collect()
         }
         raw = {
@@ -577,6 +574,92 @@ class TestSimilarity:
         assert compacted == raw, (
             f"compaction changed edges: {sorted(compacted ^ raw)[:4]}"
         )
+
+    def test_write_sig_index_round_trip_append_and_probe(
+        self, spark, sf_dir, tmp_path
+    ):
+        """`write_sig_index` writes exactly `_with_sig_cols` to
+        `{path}/index` and its `band_rows_of` to `{path}/bands`;
+        `mode="append"` grows both by exactly the appended ids; and
+        `knn_inc_probe` on the written path gives the increment the
+        edges a full rebuild over the same rows assigns it. Runs at
+        the 64-bit prod geometry, so signatures with the sign bit set
+        round-trip too."""
+        from crime_data_batch_processing_spark.functions.veckit import (
+            quantize,
+        )
+        from crime_data_batch_processing_spark.operators.llm_dedup import (
+            PROD_LSH_BAND_BITS,
+            PROD_LSH_BANDS,
+            PROD_LSH_BITS,
+        )
+        from crime_data_batch_processing_spark.operators.similarity import (
+            band_rows_of,
+            banded_scored_pairs,
+            knn_inc_probe,
+            knn_rank_directed,
+            signature_frame,
+            write_sig_index,
+        )
+        from crime_data_batch_processing_spark.sources.tables import (
+            load_table,
+        )
+
+        def rows(df):
+            return {
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.collect()
+            }
+
+        q = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", quantize(F.col("embedding")).alias("q")
+        )
+        # every vector signed once (signature_frame = persisted
+        # _with_sig_cols); the expected rows are slices of it
+        signed = signature_frame(q, bits=PROD_LSH_BITS)
+        bands_of = band_rows_of(signed, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)
+        part = F.col("vec_id") % 5
+        base, appended = part > 1, part == 1
+        path = str(tmp_path)
+        geometry = (PROD_LSH_BITS, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)
+
+        def assert_index_holds(ids):
+            index = spark.read.parquet(f"{path}/index")
+            assert index.columns == signed.columns
+            assert rows(index) == rows(signed.where(ids))
+            bands = spark.read.parquet(f"{path}/bands")
+            assert rows(bands) == rows(bands_of.where(ids))
+            return index.count(), bands.count()
+
+        write_sig_index(q.where(base), path, *geometry)
+        n_index, n_bands = assert_index_holds(base)
+        write_sig_index(q.where(appended), path, *geometry, mode="append")
+        n_app = q.where(appended).count()
+        assert assert_index_holds(base | appended) == (
+            n_index + n_app,
+            n_bands + PROD_LSH_BANDS * n_app,
+        )
+
+        inc = part == 0
+        probed = rows(
+            knn_inc_probe(
+                signed.where(inc), path, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
+            )
+        )
+        inc_ids = {r.vec_id for r in signed.where(inc).collect()}
+        rebuilt = {
+            r
+            for r in rows(
+                knn_rank_directed(
+                    banded_scored_pairs(
+                        signed, PROD_LSH_BANDS, PROD_LSH_BAND_BITS
+                    )
+                )
+            )
+            if r[0] in inc_ids
+        }
+        assert probed, "no probe edges"
+        assert probed == rebuilt, sorted(probed ^ rebuilt)[:4]
 
     def test_knn_inc_prod_probe_finds_sources_in_index(
         self, spark, sf_dir
@@ -1667,15 +1750,17 @@ class TestMultimodalSemantic:
             PLANT_EVERY,
             PLANT_OFFSET,
         )
+        from crime_data_batch_processing_spark import registry
         from crime_data_batch_processing_spark.operators.multimodal import (
             MEDIA_COSINE_THRESHOLD,
-            multimodal_dedup_semantic,
         )
         from crime_data_batch_processing_spark.sources.tables import (
             load_table,
         )
 
-        rows = multimodal_dedup_semantic(spark, sf_dir).collect()
+        rows = registry.QUERIES["multimodal_dedup_semantic"](
+            spark, sf_dir
+        ).collect()
         assert rows, "no media near-dup pairs"
         pairs = {(r.doc_a, r.doc_b): r.cos_sim for r in rows}
         n_docs = load_table(spark, sf_dir, "documents").count()
@@ -1807,6 +1892,7 @@ class TestMultimodalSemantic:
         and this test pins that trade bit-for-bit."""
         import numpy as np
 
+        from crime_data_batch_processing_spark import registry
         from crime_data_batch_processing_spark.operators import (
             multimodal as mm,
         )
@@ -1838,7 +1924,7 @@ class TestMultimodalSemantic:
             getattr(mm, pfx + "BANDS"),
             getattr(mm, pfx + "BAND_BITS"),
         ) == (bits, bands, band_bits)
-        key_fn = getattr(mm, f"multimodal_dedup_semantic_{rung}")
+        key_fn = registry.QUERIES[f"multimodal_dedup_semantic_{rung}"]
 
         def embed(s: str):
             b = np.frombuffer(s.encode(), dtype=np.uint8).astype("int64")

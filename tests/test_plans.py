@@ -1773,3 +1773,65 @@ def test_driver_tables_are_built_only_by_local_frame():
             values.append(f"{path.relative_to(lib)}:{line_no}")
     assert not stray, stray
     assert not values, values
+
+
+def test_banded_oracles_materialize_sig_and_scored():
+    """Every oracle that defines a `sig` CTE marks `sig` and `scored`
+    MATERIALIZED and never `q`. DuckDB inlines a non-materialized CTE
+    at every reference, so an un-hinted `sig` re-runs the per-bit
+    signature expression once per band arm (the 128-bit media and
+    prod-kNN oracles then exhaust memory at sf0.001), while a
+    materialized `q` only slows the chain down."""
+    import re
+
+    banded = {k: v for k, v in registry.ORACLES.items() if " sig AS " in v}
+    assert banded, "no banded oracle found"
+    for key, sql in banded.items():
+        assert re.search(r"\bsig AS MATERIALIZED \(", sql), key
+        assert re.search(r"\bscored AS MATERIALIZED \(", sql), key
+        assert not re.search(r"\bq AS MATERIALIZED\b", sql), key
+
+
+def test_signature_index_layout_lives_in_two_functions():
+    """Source guard: the persisted signature index is written only by
+    `similarity.write_sig_index` and read only by
+    `similarity.knn_inc_probe`. No other library function both
+    computes band rows and writes, and no other function that handles
+    hyperplane signatures spells an `…/index` or `…/bands` path next
+    to a parquet read or write."""
+    import ast
+    from pathlib import Path
+
+    lib = Path(registry.__file__).parent
+    sig_names = {
+        "_signature",
+        "_with_sig_cols",
+        "signature_frame",
+        "band_rows_of",
+        "write_sig_index",
+        "knn_inc_probe",
+    }
+    writers, readers = set(), set()
+    for path in sorted(lib.rglob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            nodes = list(ast.walk(fn))
+            names = {n.id for n in nodes if isinstance(n, ast.Name)}
+            attrs = {n.attr for n in nodes if isinstance(n, ast.Attribute)}
+            layout = any(
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and n.value.endswith(("/index", "/bands"))
+                for n in nodes
+            )
+            where = f"{path.relative_to(lib)}:{fn.name}"
+            if "band_rows_of" in names and "write" in attrs:
+                writers.add(where)
+            if layout and "parquet" in attrs and names & sig_names:
+                readers.add(where)
+    assert writers == {"operators/similarity.py:write_sig_index"}, writers
+    assert readers == {
+        "operators/similarity.py:write_sig_index",
+        "operators/similarity.py:knn_inc_probe",
+    }, readers

@@ -21,7 +21,9 @@ for these semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark.storagelevel import StorageLevel
@@ -51,6 +53,7 @@ from crime_data_batch_processing_spark.operators.text_analysis import (
     QM_W_STOP,
     QM_W_TOKENS,
     _bm25_ranked,
+    quality_logit,
     sql_bm25_ctes,
 )
 from crime_data_batch_processing_spark.operators.chunking import (
@@ -218,7 +221,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-dedup → mixture-targeted sample, composed lazily.
 
     `pipeline_pretrain` proves the dedup/chunking stages compose; this
-    one proves the ROUND-3 stages do — benchmark decontamination
+    one proves the curation stages do — benchmark decontamination
     first (an eval-overlapping doc must not survive into any later
     stage), Gopher-style quality rules, keep-first exact dedup, then
     language-mixture rebalancing whose keep rates are computed from
@@ -382,12 +385,11 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from crime_data_batch_processing_spark.functions.textkit import tokens
 
-    # no _spread here: measured NEGATIVE on this key (r14: 0.371s →
-    # 0.753s builder, 0.579s driver — the added Exchange costs more
-    # than the parallelism buys on this tokenize-then-tiny-agg shape;
-    # the digest window shuffles anyway, which already spreads the
-    # aggregation stages). Reverted per r15, same discipline as
-    # text_tfidf.
+    # no `spread` here: it measured slower on this key (0.371 s →
+    # 0.753 s at sf0.1 on 32 cores): the added Exchange costs more
+    # than the parallelism buys on this tokenize-then-tiny-agg shape,
+    # and the digest window shuffles anyway, which already spreads the
+    # aggregation stages.
     docs = load_table(spark, sf_dir, "documents")
     flags = docs.select(
         "lang",
@@ -419,19 +421,47 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Training-manifest geometry: shards per split; the quality gate
-#: reuses the linear model's weights/threshold (text_analysis).
+#: Training-manifest geometry: shards per split.
 MANIFEST_SHARDS = 8
 
+#: A manifest row's (split, shard) in SQL, over rows exposing doc_id
+#: and its sample hash `h`; `_manifest_coords` is the Spark side.
+_SQL_MANIFEST_COORDS = f"""CASE WHEN h < {SPLIT_TRAIN_HI} THEN 'train'
+                WHEN h < {SPLIT_VAL_HI} THEN 'val'
+                ELSE 'test' END AS split,
+           CAST(doc_id % {MANIFEST_SHARDS} AS BIGINT) AS shard"""
 
-@query(
-    "pipeline_train_manifest",
-    oracle=f"""
-    WITH kept AS (
-        SELECT doc_id, text,
+
+def _manifest_coords() -> list[Column]:
+    """A manifest row's (split, shard): `sample_split`'s
+    key-deterministic 80/10/10 hash split (co-keyed tables land on the
+    same side) and doc_id sharding."""
+    h = sample_hash32(F.col("doc_id"))
+    split = (
+        F.when(h < SPLIT_TRAIN_HI, "train")
+        .when(h < SPLIT_VAL_HI, "val")
+        .otherwise("test")
+    )
+    return [
+        split.alias("split"),
+        (F.col("doc_id") % MANIFEST_SHARDS).alias("shard"),
+    ]
+
+
+def _sql_quality_dedup(src: str, where: str = "", lang: bool = False) -> str:
+    """The `kept` and `dedup` CTEs of every curation oracle: the
+    quality gate over the rows of `src` that match `where` (all rows
+    when empty), then exact keep-first dedup — of the texts sharing an
+    md5, the lowest doc_id survives. `dedup` yields (doc_id, n_toks),
+    plus lang after doc_id when `lang` is set. The Spark side is
+    `quality_logit` and `_keep_first`."""
+    slice_ = f"{where}\n          AND " if where else ""
+    kept_lang, dedup_lang = ("lang, ", "k.lang, ") if lang else ("", "")
+    return f"""kept AS (
+        SELECT doc_id, {kept_lang}text,
                len(string_split(text, ' ')) AS n_toks
-        FROM documents
-        WHERE ({QM_BIAS}
+        FROM {src}
+        WHERE {slice_}({QM_BIAS}
                + {QM_W_TOKENS} * len(string_split(text, ' '))
                + {QM_W_STOP} * len(list_filter(string_split(text, ' '),
                                                t -> t IN ('the', 'a')))
@@ -441,14 +471,31 @@ MANIFEST_SHARDS = 8
                                                t -> len(t) > 12)))
               >= {QM_THRESHOLD}
     ), dedup AS (
-        SELECT k.doc_id, k.n_toks FROM kept k
+        SELECT k.doc_id, {dedup_lang}k.n_toks FROM kept k
         WHERE k.doc_id = (SELECT MIN(k2.doc_id) FROM kept k2
                           WHERE md5(k2.text) = md5(k.text))
+    )"""
+
+
+def _keep_first(kept: DataFrame, *cols: str) -> DataFrame:
+    """Exact keep-first dedup over `kept` (doc_id, digest, ...): of
+    the rows sharing a digest, the one with the lowest doc_id
+    survives, projected to `cols`. One digest aggregate joined back
+    onto `kept`; the digest is cryptographic, so its shuffle is
+    uniform at any scale."""
+    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
+    return (
+        kept.join(first, "digest")
+        .where(F.col("doc_id") == F.col("keep_id"))
+        .select(*cols)
     )
-    SELECT CASE WHEN h < {SPLIT_TRAIN_HI} THEN 'train'
-                WHEN h < {SPLIT_VAL_HI} THEN 'val'
-                ELSE 'test' END AS split,
-           CAST(doc_id % {MANIFEST_SHARDS} AS BIGINT) AS shard,
+
+
+@query(
+    "pipeline_train_manifest",
+    oracle=f"""
+    WITH {_sql_quality_dedup("documents")}
+    SELECT {_SQL_MANIFEST_COORDS},
            COUNT(*) AS n_docs,
            CAST(SUM(n_toks) AS BIGINT) AS n_tokens
     FROM (SELECT doc_id, n_toks,
@@ -464,52 +511,24 @@ def pipeline_train_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     config.
 
     Composes verified kernels in ONE lazy plan: the linear quality
-    gate (`text_quality_model`'s integer logit as a pushed filter),
-    exact keep-first dedup (md5 digest, min-id wins), the
-    key-deterministic 80/10/10 split (`sample_split`'s hash — co-keyed
-    tables land on the same side), and id-based sharding. Counts and
-    token totals per (split, shard) are the checksum a release ships:
-    two runs — or two ENGINES — must produce identical manifests,
-    which is exactly what the oracle asserts. One corpus-sized shuffle
-    (the dedup digest aggregate); everything else is map-only.
+    gate (`_quality_kept`: `quality_logit` as a pushed filter), exact
+    keep-first dedup
+    (`_keep_first` over the md5 digest), the key-deterministic
+    80/10/10 split and id-based sharding (`_manifest_coords`). Counts
+    and token totals per (split, shard) are the checksum a release
+    ships: two runs — or two ENGINES — must produce identical
+    manifests, which is exactly what the oracle asserts. One
+    corpus-sized shuffle (the dedup digest aggregate); everything else
+    is map-only.
     """
-    # no _spread here: measured NEGATIVE on this key (r14: 0.829s →
-    # 0.97s builder, 0.86s driver — the dedup digest aggregate
-    # shuffles right after the map stage, so the extra Exchange buys
-    # nothing). Reverted per r15, same discipline as text_tfidf.
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens("text")
-    logit = (
-        F.lit(QM_BIAS)
-        + F.lit(QM_W_TOKENS) * F.size(toks)
-        + F.lit(QM_W_STOP)
-        * F.size(F.filter(toks, lambda t: t.isin("the", "a")))
-        + F.lit(QM_W_DISTINCT) * F.size(F.array_distinct(toks))
-        + F.lit(QM_W_LONG)
-        * F.size(F.filter(toks, lambda t: F.length(t) > 12))
-    )
-    kept = docs.where(logit >= QM_THRESHOLD).select(
-        "doc_id",
-        F.md5("text").alias("digest"),
-        F.size(tokens("text")).alias("n_toks"),
-    )
-    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
-    dedup = (
-        kept.join(first, "digest")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "n_toks")
-    )
-    h = sample_hash32(F.col("doc_id"))
-    split = (
-        F.when(h < SPLIT_TRAIN_HI, "train")
-        .when(h < SPLIT_VAL_HI, "val")
-        .otherwise("test")
-    )
+    # no `spread` here: it measured slower on this key (0.829 s →
+    # 0.97 s at sf0.1 on 32 cores): the dedup digest aggregate
+    # shuffles right after the map stage, so an extra Exchange buys
+    # nothing.
+    kept = _quality_kept(load_table(spark, sf_dir, "documents"))
     return (
-        dedup.groupBy(
-            split.alias("split"),
-            (F.col("doc_id") % MANIFEST_SHARDS).alias("shard"),
-        )
+        _keep_first(kept, "doc_id", "n_toks")
+        .groupBy(*_manifest_coords())
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").alias("n_tokens"),
@@ -545,25 +564,7 @@ EVAL_AUDIT_QUERIES = 32
         EVAL_RETRIEVAL_POOL,
         candidate_pred=f"c.doc_id % {BENCH_MOD} <> 0",
     )},
-    kept AS (
-        SELECT doc_id, text,
-               len(string_split(text, ' ')) AS n_toks
-        FROM documents
-        WHERE doc_id % {BENCH_MOD} <> 0
-          AND ({QM_BIAS}
-               + {QM_W_TOKENS} * len(string_split(text, ' '))
-               + {QM_W_STOP} * len(list_filter(string_split(text, ' '),
-                                               t -> t IN ('the', 'a')))
-               + {QM_W_DISTINCT}
-                   * len(list_distinct(string_split(text, ' ')))
-               + {QM_W_LONG} * len(list_filter(string_split(text, ' '),
-                                               t -> len(t) > 12)))
-              >= {QM_THRESHOLD}
-    ), dedup AS (
-        SELECT k.doc_id, k.n_toks FROM kept k
-        WHERE k.doc_id = (SELECT MIN(k2.doc_id) FROM kept k2
-                          WHERE md5(k2.text) = md5(k.text))
-    ), qsh AS (
+    {_sql_quality_dedup("documents", f"doc_id % {BENCH_MOD} <> 0")}, qsh AS (
         SELECT doc_id AS query_id,
                unnest({sql_shingles('text', DECON_K)}) AS g
         FROM documents WHERE doc_id % {BENCH_MOD} = 0
@@ -579,10 +580,7 @@ EVAL_AUDIT_QUERIES = 32
         FROM cpairs p LEFT JOIN lexranked r USING (query_id, doc_id)
         GROUP BY doc_id
     )
-    SELECT CASE WHEN h < {SPLIT_TRAIN_HI} THEN 'train'
-                WHEN h < {SPLIT_VAL_HI} THEN 'val'
-                ELSE 'test' END AS split,
-           CAST(doc_id % {MANIFEST_SHARDS} AS BIGINT) AS shard,
+    SELECT {_SQL_MANIFEST_COORDS},
            CAST(SUM(CASE WHEN NOT fl THEN 1 ELSE 0 END) AS BIGINT)
                AS n_docs,
            CAST(SUM(CASE WHEN NOT fl THEN n_toks ELSE 0 END) AS BIGINT)
@@ -610,8 +608,7 @@ def pipeline_eval_decontaminate(
     many of the removed documents a per-query BM25 retrieval pass
     (top-EVAL_RETRIEVAL_POOL) would also have surfaced.
 
-    Composes three verified kernels into ONE lazy plan (the r9
-    verdict's suggested composition):
+    Composes three verified kernels into ONE lazy plan:
 
     - the exact 5-gram membership verdict (`text_decontaminate`'s
       broadcast shape) is the GATE — eval-set grams are tiny relative
@@ -630,10 +627,10 @@ def pipeline_eval_decontaminate(
       constant's note; BM25 is O(corpus) per query, so a
       corpus-proportional panel is quadratic), while the gate always
       covers every eval doc.
-    - `pipeline_train_manifest`'s quality gate + exact keep-first
-      dedup + hash split/shard kernels produce the manifest
-      coordinates, restricted to the train slice (the bench slice is
-      the eval set — it is never trained on).
+    - `pipeline_train_manifest`'s quality gate, `_keep_first` dedup
+      and `_manifest_coords` produce the manifest coordinates,
+      restricted to the train slice (the bench slice is the eval set —
+      it is never trained on).
 
     Scale shape: three corpus passes (tf for BM25, shingles for the
     verdict, quality/digest for the manifest), each one scan; the
@@ -655,11 +652,10 @@ def pipeline_eval_decontaminate(
         candidate_pred=F.col("doc_id") % BENCH_MOD != 0,
     )
 
-    # ONE persisted corpus pass for shingles AND quality/dedup columns
-    # (r15: the separate quality scan re-tokenized the corpus; see
-    # _decon_quality_profile). An un-persisted explode would
-    # re-evaluate the whole shingle transform per OUTPUT gram (the
-    # text_decontaminate lesson — measured 10x).
+    # one persisted corpus pass feeds the shingle branches and the
+    # quality/dedup columns (`_decon_quality_profile`); an
+    # un-persisted explode would re-evaluate the whole shingle
+    # transform per output gram (measured 10x on text_decontaminate)
     prof = _decon_quality_profile(docs)
     qsh = prof.where(is_bench).select(
         F.col("doc_id").alias("query_id"), F.explode("sh").alias("g")
@@ -684,109 +680,133 @@ def pipeline_eval_decontaminate(
     kept = prof.where(~is_bench & F.col("q_ok")).select(
         "doc_id", "digest", "n_toks"
     )
-    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
-    dedup = (
-        kept.join(first, "digest")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "n_toks")
-    )
-
-    audit = dedup.join(flagged, "doc_id", "left").select(
-        "doc_id",
-        "n_toks",
-        F.col("hit_retrieved").isNotNull().alias("fl"),
-        F.coalesce("hit_retrieved", F.lit(0)).alias("hr"),
-    )
-    h = sample_hash32(F.col("doc_id"))
-    split = (
-        F.when(h < SPLIT_TRAIN_HI, "train")
-        .when(h < SPLIT_VAL_HI, "val")
-        .otherwise("test")
-    )
-    return (
-        audit.groupBy(
-            split.alias("split"),
-            (F.col("doc_id") % MANIFEST_SHARDS).alias("shard"),
-        )
-        .agg(
-            F.sum(F.when(~F.col("fl"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_docs"),
-            F.sum(F.when(~F.col("fl"), F.col("n_toks")).otherwise(0))
-            .cast("long")
-            .alias("n_tokens"),
-            F.sum(F.when(F.col("fl"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_flagged"),
-            F.sum(F.when(F.col("fl"), F.col("n_toks")).otherwise(0))
-            .cast("long")
-            .alias("n_flagged_tokens"),
-            F.sum("hr").cast("long").alias("n_flagged_retrieved"),
+    audit = (
+        _keep_first(kept, "doc_id", "n_toks")
+        .join(flagged, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_toks",
+            F.col("hit_retrieved").isNotNull().alias("fl"),
+            F.coalesce("hit_retrieved", F.lit(0)).alias("hr"),
         )
     )
+    return audit.groupBy(*_manifest_coords()).agg(
+        F.sum(F.when(~F.col("fl"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_docs"),
+        F.sum(F.when(~F.col("fl"), F.col("n_toks")).otherwise(0))
+        .cast("long")
+        .alias("n_tokens"),
+        F.sum(F.when(F.col("fl"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_flagged"),
+        F.sum(F.when(F.col("fl"), F.col("n_toks")).otherwise(0))
+        .cast("long")
+        .alias("n_flagged_tokens"),
+        F.sum("hr").cast("long").alias("n_flagged_retrieved"),
+    )
 
 
-def _sql_release_card_over(src: str) -> str:
-    """Release-card SQL — quality gate → exact keep-first dedup →
-    decontamination gate → per-language card + digest — over an
-    arbitrary corpus select `src` (must yield doc_id, lang, text).
-    ONE rebuild definition serves `pipeline_release` (the natural
-    corpus) and `pipeline_release_inc` (the re-upload-planted corpus
-    — whose oracle being the FULL REBUILD makes the driver compare
-    itself the card-equals-rebuild proof)."""
-    return f"""
-    WITH docsrc AS ({src}
-    ), qsh AS (
-        SELECT DISTINCT unnest({sql_shingles('text', DECON_K)}) AS g
-        FROM docsrc WHERE doc_id % {BENCH_MOD} = 0
-    ), contaminated AS (
-        SELECT DISTINCT e.doc_id
-        FROM (SELECT doc_id, unnest({sql_shingles('text', DECON_K)}) AS g
-              FROM docsrc WHERE doc_id % {BENCH_MOD} <> 0) e
-        JOIN qsh q ON e.g = q.g
-    ), kept AS (
-        SELECT doc_id, lang, text,
-               len(string_split(text, ' ')) AS n_toks
-        FROM docsrc
-        WHERE doc_id % {BENCH_MOD} <> 0
-          AND ({QM_BIAS}
-               + {QM_W_TOKENS} * len(string_split(text, ' '))
-               + {QM_W_STOP} * len(list_filter(string_split(text, ' '),
-                                               t -> t IN ('the', 'a')))
-               + {QM_W_DISTINCT}
-                   * len(list_distinct(string_split(text, ' ')))
-               + {QM_W_LONG} * len(list_filter(string_split(text, ' '),
-                                               t -> len(t) > 12)))
-              >= {QM_THRESHOLD}
-    ), dedup AS (
-        SELECT k.doc_id, k.lang, k.n_toks FROM kept k
-        WHERE k.doc_id = (SELECT MIN(k2.doc_id) FROM kept k2
-                          WHERE md5(k2.text) = md5(k.text))
-    ), clean AS (
-        SELECT d.doc_id, d.lang, d.n_toks,
-               (d.doc_id IN (SELECT doc_id FROM contaminated)) AS fl
-        FROM dedup d
-    ), per AS (
+class _Card(NamedTuple):
+    """Column names of a release card: per language, `count` rows
+    ship, their summed `size` is `total`, `flagged` rows were removed,
+    and `share` is the language's share of all shipped rows."""
+
+    size: str
+    count: str
+    total: str
+    flagged: str
+    share: str
+
+
+_TEXT_CARD = _Card("n_toks", "n_docs", "n_tokens", "n_flagged", "doc_share")
+_MEDIA_CARD = _Card(
+    "blen", "n_assets", "n_bytes", "n_dropped_semantic", "asset_share"
+)
+
+
+def _sql_card(card: _Card, semantic: bool = False) -> str:
+    """The `per` and `tot` CTEs and the final SELECT of a release card
+    over `clean` (lang, <card.size>, [sem,] fl): the card's counters,
+    the share of all shipped rows, and the release digest — md5 over
+    `lang:count:total` rows in lang order. With `semantic`, rows with
+    `sem` set are counted in `n_semantic` and neither ship nor count
+    as flagged. `_card_counters` and `_card_finish` are the Spark
+    side."""
+    ship, flag, n_semantic, semantic_col = "NOT fl", "fl", "", ""
+    if semantic:
+        ship, flag = "NOT sem AND NOT fl", "NOT sem AND fl"
+        n_semantic = """,
+               CAST(SUM(CASE WHEN sem THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_semantic"""
+        semantic_col = " n_semantic,"
+    return f"""per AS (
         SELECT lang,
-               CAST(SUM(CASE WHEN NOT fl THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_docs,
-               CAST(SUM(CASE WHEN NOT fl THEN n_toks ELSE 0 END)
-                    AS BIGINT) AS n_tokens,
-               CAST(SUM(CASE WHEN fl THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_flagged
+               CAST(SUM(CASE WHEN {ship} THEN 1 ELSE 0 END) AS BIGINT)
+                   AS {card.count},
+               CAST(SUM(CASE WHEN {ship} THEN {card.size} ELSE 0 END)
+                    AS BIGINT) AS {card.total},
+               CAST(SUM(CASE WHEN {flag} THEN 1 ELSE 0 END) AS BIGINT)
+                   AS {card.flagged}{n_semantic}
         FROM clean GROUP BY lang
     ), tot AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS grand_total,
+        SELECT CAST(SUM({card.count}) AS BIGINT) AS grand_total,
                md5(string_agg(
-                   lang || ':' || n_docs || ':' || n_tokens, '|'
+                   lang || ':' || {card.count} || ':' || {card.total}, '|'
                    ORDER BY lang)) AS release_digest
         FROM per
     )
-    SELECT lang, n_docs, n_tokens, n_flagged,
-           CAST(n_docs AS DOUBLE) / CAST(grand_total AS DOUBLE)
-               AS doc_share,
+    SELECT lang, {card.count}, {card.total}, {card.flagged},{semantic_col}
+           CAST({card.count} AS DOUBLE) / CAST(grand_total AS DOUBLE)
+               AS {card.share},
            release_digest
-    FROM per, tot
+    FROM per, tot"""
+
+
+def _sql_release_card_over(
+    src: str | None,
+    corpus: str = "docsrc",
+    head: tuple[str, ...] = (),
+    bench: str = f"doc_id % {BENCH_MOD} = 0",
+    train: str = f"doc_id % {BENCH_MOD} <> 0",
+    semantic: bool = False,
+) -> str:
+    """Release-card SQL — quality gate → exact keep-first dedup →
+    [semantic drop →] decontamination gate → per-language card +
+    digest — over the corpus `corpus`, defined as the CTE `src` or,
+    when `src` is None, an existing table. The corpus yields (doc_id,
+    lang, text). `bench` selects the eval suite whose DECON_K grams
+    form the gate; `train` is its complement, the slice that ships.
+    The `head` CTEs come first; with `semantic`, one of them is
+    `witness` (vec_id): the docs the semantic stage drops.
+
+    One rebuild definition serves the whole text release family. The
+    oracle of `pipeline_release_inc` is this rebuild over its planted
+    corpus, so its oracle check proves the incremental fold equals
+    the rebuild."""
+    ctes = [*head, f"{corpus} AS ({src}\n    )"] if src else [*head]
+    # AND binds tighter than OR: a disjunctive slice needs parentheses
+    # where the quality gate ANDs onto it
+    kept_slice = f"({train})" if " OR " in train else train
+    sem = (
+        "(d.doc_id IN (SELECT vec_id FROM witness)) AS sem,\n"
+        if semantic
+        else ""
+    )
+    return f"""
+    WITH {", ".join(ctes)}, qsh AS (
+        SELECT DISTINCT unnest({sql_shingles('text', DECON_K)}) AS g
+        FROM {corpus} WHERE {bench}
+    ), contaminated AS (
+        SELECT DISTINCT e.doc_id
+        FROM (SELECT doc_id, unnest({sql_shingles('text', DECON_K)}) AS g
+              FROM {corpus} WHERE {train}) e
+        JOIN qsh q ON e.g = q.g
+    ), {_sql_quality_dedup(corpus, kept_slice, lang=True)}, clean AS (
+        SELECT d.doc_id, d.lang, d.n_toks,
+               {sem}(d.doc_id IN (SELECT doc_id FROM contaminated)) AS fl
+        FROM dedup d
+    ), {_sql_card(_TEXT_CARD, semantic)}
     """
 
 
@@ -797,11 +817,10 @@ _SQL_RELEASE_CARD = _sql_release_card_over(
 
 @query("pipeline_release", oracle=_SQL_RELEASE_CARD)
 def pipeline_release(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The artifact set a corpus RELEASE ships (the r10 verdict's
-    stretch composition): the per-language dataset card of the fully
-    cleaned release — quality gate → exact keep-first dedup →
-    decontamination gate — plus a content-derived RELEASE DIGEST
-    pinning the whole card, all as ONE lazy plan.
+    """The artifact set a corpus RELEASE ships: the per-language
+    dataset card of the fully cleaned release — quality gate → exact
+    keep-first dedup → decontamination gate — plus a content-derived
+    RELEASE DIGEST pinning the whole card, all as ONE lazy plan.
 
     Per language: documents and tokens in the release, documents the
     decontamination gate removed, and the language's share of the
@@ -819,73 +838,29 @@ def pipeline_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs; integers render identically in both engines' string
     casts).
 
-    Composition of verified kernels only: the quality logit and
-    keep-first dedup are `pipeline_train_manifest`'s, the broadcast
-    5-gram gate is `text_decontaminate`'s (eval grams are
-    eval-suite-sized — broadcast; the corpus streams map-only through
-    the probe), the card aggregation is `pipeline_dataset_card`'s,
-    and the single-row digest/total broadcast is the `with_scalars`
-    scalar idiom. Scale shape: two corpus passes (shingles for the
-    gate, quality/digest for the manifest — the card aggregates the
-    second), one corpus-sized shuffle (the dedup digest aggregate),
-    one gram-probe shuffle bounded by the contaminated-doc count, a
-    language-sized final aggregate, and a 1-row broadcast back onto
-    ~|langs| rows.
+    Stages: `_decon_quality_profile` (one persisted corpus pass),
+    `_decon_gate` (quality logit, `_keep_first` dedup, the broadcast
+    5-gram gate of `text_decontaminate`) and the card tail
+    `_card_counters` → `_card_finish`. Scale shape: two corpus passes
+    (shingles for the gate, quality/digest for the manifest — the card
+    aggregates the second), one corpus-sized shuffle (the dedup digest
+    aggregate), one gram-probe shuffle bounded by the contaminated-doc
+    count, a language-sized final aggregate, and a 1-row broadcast
+    back onto ~|langs| rows.
     """
-    docs = spread_table(spark, sf_dir, "documents")
-    is_bench = F.col("doc_id") % BENCH_MOD == 0
-
-    # ONE persisted corpus pass for shingles AND quality/dedup columns
-    # (r15: the separate _quality_kept scan re-tokenized the corpus;
-    # see _decon_quality_profile)
-    prof = _decon_quality_profile(docs)
-    qgrams = (
-        prof.where(is_bench)
-        .select(F.explode("sh").alias("g"))
-        .distinct()
-    )
-    contaminated = (
-        prof.where(~is_bench)
-        .select("doc_id", F.explode("sh").alias("g"))
-        .join(F.broadcast(qgrams), "g")
-        .select("doc_id")
-        .distinct()
-    )
-
-    kept = prof.where(~is_bench & F.col("q_ok")).select(
-        "doc_id", "lang", "digest", "n_toks"
-    )
-    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
-    dedup = (
-        kept.join(first, "digest")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "lang", "n_toks")
-    )
-    clean = dedup.join(
-        contaminated.withColumn("fl_", F.lit(True)), "doc_id", "left"
-    ).select(
-        "lang", "n_toks", F.coalesce("fl_", F.lit(False)).alias("fl")
-    )
+    prof = _decon_quality_profile(spread_table(spark, sf_dir, "documents"))
+    clean = _decon_gate(prof, F.col("doc_id") % BENCH_MOD == 0)
     return _card_finish(_card_counters(clean))
 
 
 def _quality_kept(docs: DataFrame) -> DataFrame:
-    """Release candidacy, shared by `pipeline_release*` and the
-    incremental fold: quality-logit gate over the given documents,
-    projected to the dedup universe (doc_id, lang, digest, n_toks).
-    The caller supplies the slice (full corpus minus eval suite for
-    the rebuild; one ingest batch for the fold)."""
-    toks = tokens("text")
-    logit = (
-        F.lit(QM_BIAS)
-        + F.lit(QM_W_TOKENS) * F.size(toks)
-        + F.lit(QM_W_STOP)
-        * F.size(F.filter(toks, lambda t: t.isin("the", "a")))
-        + F.lit(QM_W_DISTINCT) * F.size(F.array_distinct(toks))
-        + F.lit(QM_W_LONG)
-        * F.size(F.filter(toks, lambda t: F.length(t) > 12))
-    )
-    return docs.where(logit >= QM_THRESHOLD).select(
+    """Release candidacy, shared by `pipeline_train_manifest` and
+    `pipeline_release_inc`'s fixture and fold: the quality gate over
+    the given documents, projected to the dedup universe (doc_id,
+    lang, digest, n_toks). The caller supplies the slice (the whole
+    corpus for the manifest; full corpus minus eval suite for the
+    rebuild; one ingest batch for the fold)."""
+    return docs.where(quality_logit(tokens("text")) >= QM_THRESHOLD).select(
         "doc_id",
         "lang",
         F.md5("text").alias("digest"),
@@ -896,28 +871,16 @@ def _quality_kept(docs: DataFrame) -> DataFrame:
 def _decon_quality_profile(docs: DataFrame) -> DataFrame:
     """ONE persisted corpus pass carrying BOTH derived families the
     release/decontamination keys consume: the DECON_K shingle arrays
-    (eval-gram branch + corpus probe) AND the quality/dedup columns
-    (md5 digest, token count, quality-gate verdict). Until r15 these
-    were two independent full scans per key — the persisted shingle
-    frame plus a separate tokenize+quality scan of the same documents
-    (guide §1 redundant passes; tokenize is the expensive map work
-    here: the extra pass measured ~0.75 s warm at sf0.1 per release
-    key). Every column is the EXACT expression the split branches
-    evaluated (`_quality_kept`'s logit and projection, the shingle
-    frame's `shingles_of(tokens(text), DECON_K)`), so consumers are
-    bit-identical; downstream InMemoryTableScans prune to the columns
-    each branch reads, so the gram branches never deserialize the
-    quality columns."""
+    `sh` (eval-gram branch + corpus probe) AND the quality/dedup
+    columns (md5 `digest`, `n_toks`, the quality verdict `q_ok`).
+    Tokenizing is the expensive map work here: a separate quality scan
+    of the same documents cost ~0.75 s warm per release key at sf0.1.
+    Every column is the expression the separate passes evaluate
+    (`quality_logit`, `shingles_of(tokens(text), DECON_K)`), so
+    consumers are bit-identical; downstream InMemoryTableScans prune
+    to the columns each branch reads, so the gram branches never
+    deserialize the quality columns."""
     toks = F.col("toks")
-    logit = (
-        F.lit(QM_BIAS)
-        + F.lit(QM_W_TOKENS) * F.size(toks)
-        + F.lit(QM_W_STOP)
-        * F.size(F.filter(toks, lambda t: t.isin("the", "a")))
-        + F.lit(QM_W_DISTINCT) * F.size(F.array_distinct(toks))
-        + F.lit(QM_W_LONG)
-        * F.size(F.filter(toks, lambda t: F.length(t) > 12))
-    )
     return (
         docs.select("doc_id", "lang", "text", tokens("text").alias("toks"))
         .select(
@@ -926,41 +889,113 @@ def _decon_quality_profile(docs: DataFrame) -> DataFrame:
             shingles_of(toks, DECON_K).alias("sh"),
             F.md5("text").alias("digest"),
             F.size(toks).alias("n_toks"),
-            (logit >= QM_THRESHOLD).alias("q_ok"),
+            (quality_logit(toks) >= QM_THRESHOLD).alias("q_ok"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
         .transform(track)
     )
 
 
-def _card_counters(clean: DataFrame) -> DataFrame:
-    """Per-language card counters over flagged survivors (lang,
-    n_toks, fl) — the additive half of the card: pure sums, so a
-    batch delta merges into persisted counters by one more sum."""
-    return clean.groupBy("lang").agg(
-        F.sum(F.when(~F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_docs"),
-        F.sum(F.when(~F.col("fl"), F.col("n_toks")).otherwise(0))
-        .cast("long")
-        .alias("n_tokens"),
-        F.sum(F.when(F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flagged"),
+def _decon_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): the DECON_K shingle arrays of `docs`, tokenized
+    once per document."""
+    return docs.select("doc_id", tokens("text").alias("toks")).select(
+        "doc_id", shingles_of(F.col("toks"), DECON_K).alias("sh")
     )
 
 
-def _card_finish(per: DataFrame) -> DataFrame:
-    """The release-card tail shared by `pipeline_release*` and the
-    incremental fold: given per-language counters (lang, n_docs,
-    n_tokens, n_flagged), attach the grand-total share and the
-    content-derived release digest (md5 over lang:n_docs:n_tokens
-    rows in lang order) via the 1-row `with_scalars` broadcast. The
-    digest is a pure function of the CARD — which is what lets an
-    incremental release recompute it from merged counters without
-    touching the corpus."""
+def _contaminated(sh: DataFrame, qgrams: DataFrame) -> DataFrame:
+    """The doc_ids of `sh` (doc_id, sh) that share a gram with the
+    eval gram set `qgrams` (g). The eval set is eval-suite-sized, so
+    it is broadcast and the corpus streams map-only through the
+    probe."""
+    return (
+        sh.select("doc_id", F.explode("sh").alias("g"))
+        .join(F.broadcast(qgrams), "g")
+        .select("doc_id")
+        .distinct()
+    )
+
+
+def _flag(
+    dedup: DataFrame,
+    contaminated: DataFrame,
+    sem_drops: DataFrame | None = None,
+) -> DataFrame:
+    """Flagged survivors (lang, n_toks, [sem,] fl) of the exact-dedup
+    survivors `dedup` (doc_id, lang, n_toks): `fl` marks a doc in
+    `contaminated`, and `sem` a doc in the semantic drop list
+    `sem_drops` (doc_id) when one is given. The drop list holds only
+    duplicates, a small fraction of the corpus, so it is broadcast."""
+    sem = []
+    if sem_drops is not None:
+        dedup = dedup.join(
+            F.broadcast(sem_drops.withColumn("sem_", F.lit(True))),
+            "doc_id",
+            "left",
+        )
+        sem = [F.coalesce("sem_", F.lit(False)).alias("sem")]
+    return dedup.join(
+        contaminated.withColumn("fl_", F.lit(True)), "doc_id", "left"
+    ).select(
+        "lang", "n_toks", *sem, F.coalesce("fl_", F.lit(False)).alias("fl")
+    )
+
+
+def _decon_gate(
+    prof: DataFrame, is_bench: Column, sem_drops: DataFrame | None = None
+) -> DataFrame:
+    """The text release's curation stages over the persisted profile
+    `prof` (`_decon_quality_profile`): the quality gate and
+    `_keep_first` dedup over the non-eval rows, then `_flag` against
+    the 5-gram gate built from the eval rows (`is_bench`) and the
+    optional semantic drop list. Returns the flagged survivors the
+    card counts."""
+    qgrams = prof.where(is_bench).select(F.explode("sh").alias("g")).distinct()
+    contaminated = _contaminated(prof.where(~is_bench), qgrams)
+    kept = prof.where(~is_bench & F.col("q_ok")).select(
+        "doc_id", "lang", "digest", "n_toks"
+    )
+    return _flag(
+        _keep_first(kept, "doc_id", "lang", "n_toks"), contaminated, sem_drops
+    )
+
+
+def _card_counters(clean: DataFrame, card: _Card = _TEXT_CARD) -> DataFrame:
+    """Per-language card counters over flagged survivors (lang,
+    <card.size>, [sem,] fl) — the additive half of the card: pure
+    sums, so a batch delta merges into persisted counters by one more
+    sum. A `sem` column adds the `n_semantic` counter; its rows
+    neither ship nor count as flagged."""
+    fl = F.col("fl")
+    ship, flag, n_semantic = ~fl, fl, []
+    if "sem" in clean.columns:
+        sem = F.col("sem")
+        ship, flag = ~sem & ~fl, ~sem & fl
+        n_semantic = [
+            F.sum(F.when(sem, 1).otherwise(0)).cast("long").alias("n_semantic")
+        ]
+    return clean.groupBy("lang").agg(
+        F.sum(F.when(ship, 1).otherwise(0)).cast("long").alias(card.count),
+        F.sum(F.when(ship, F.col(card.size)).otherwise(0))
+        .cast("long")
+        .alias(card.total),
+        F.sum(F.when(flag, 1).otherwise(0)).cast("long").alias(card.flagged),
+        *n_semantic,
+    )
+
+
+def _card_finish(per: DataFrame, card: _Card = _TEXT_CARD) -> DataFrame:
+    """The release-card tail of every `pipeline_release*` key: given
+    per-language counters `per` (lang, then the `_card_counters`
+    columns), attach the share of all shipped rows and the
+    content-derived release digest (md5 over `lang:count:total` rows
+    in lang order) via the 1-row `with_scalars` broadcast. The digest
+    is a pure function of the CARD — which is what lets an incremental
+    release recompute it from merged counters without touching the
+    corpus."""
     tot = per.agg(
-        F.sum("n_docs").cast("long").alias("grand_total"),
+        F.sum(card.count).cast("long").alias("grand_total"),
         F.md5(
             F.encode(
                 F.concat_ws(
@@ -968,14 +1003,14 @@ def _card_finish(per: DataFrame) -> DataFrame:
                     F.transform(
                         F.sort_array(
                             F.collect_list(
-                                F.struct("lang", "n_docs", "n_tokens")
+                                F.struct("lang", card.count, card.total)
                             )
                         ),
                         lambda s: F.concat_ws(
                             ":",
                             s["lang"],
-                            s["n_docs"].cast("string"),
-                            s["n_tokens"].cast("string"),
+                            s[card.count].cast("string"),
+                            s[card.total].cast("string"),
                         ),
                     ),
                 ),
@@ -984,14 +1019,11 @@ def _card_finish(per: DataFrame) -> DataFrame:
         ).alias("release_digest"),
     )
     return with_scalars(per, tot).select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        "n_flagged",
+        *per.columns,
         (
-            F.col("n_docs").cast("double")
+            F.col(card.count).cast("double")
             / F.col("grand_total").cast("double")
-        ).alias("doc_share"),
+        ).alias(card.share),
         "release_digest",
     )
 
@@ -1012,7 +1044,8 @@ RELEASE_INC_RESIDUE = 3
 #: Planted re-uploads for the ingest batch: the testdata corpus has
 #: ZERO exact-duplicate texts below sf0.1, so without planting the
 #: fold's index anti-join would pass VACUOUSLY at the driver's
-#: correctness SF (the round-4 cluster_assign lesson). Every base doc
+#: correctness SF (a symmetric bug zeroing both sides would match the
+#: oracle). Every base doc
 #: with doc_id ≡ 6 (mod 20) is re-collected once (and ≡ 6 (mod 40) a
 #: second time, exercising within-batch keep-first) at
 #: BASE + 970·doc_id + 3. The arithmetic pins the planted ids into
@@ -1106,12 +1139,11 @@ def _release_inc_dirs(sf_dir: str) -> dict[str, str]:
 
 @query("pipeline_release_inc", oracle=_sql_release_inc())
 def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The INCREMENTAL release (r13 verdict item 2): maintain the
-    user-facing release deliverable — `pipeline_release`'s
-    per-language card + content digest — per ingest, instead of
-    recomputing the corpus. The incremental ladder already covered
-    exact digests (`dedup_incremental`), graph edges
-    (`sim_search_knn_inc_prod`), curation verdicts
+    """The INCREMENTAL release: maintain the user-facing release
+    deliverable — `pipeline_release`'s per-language card + content
+    digest — per ingest, instead of recomputing the corpus. The
+    incremental ladder covers exact digests (`dedup_incremental`),
+    graph edges (`sim_search_knn_inc_prod`), curation verdicts
     (`dedup_semantic_inc`), media (`multimodal_dedup_semantic_inc`),
     and index maintenance (`sim_search_index_append`/`_maintain`);
     this key closes it at the artifact users actually consume.
@@ -1167,67 +1199,30 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the release as of ingest N: eval grams over the FULL corpus
         # (fixed suite), then pipeline_release's stages over the base
         # slice only
-        with_sh = (
-            docs.select("doc_id", tokens("text").alias("toks"))
-            .select(
-                "doc_id", shingles_of(F.col("toks"), DECON_K).alias("sh")
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        with_sh = _decon_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
+        kept = _quality_kept(docs.where(~is_batch & ~is_bench)).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
+        dedup = _keep_first(
+            kept, "digest", "doc_id", "lang", "n_toks"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            qgrams = (
-                with_sh.where(is_bench)
-                .select(F.explode("sh").alias("g"))
-                .distinct()
+            with_sh.where(is_bench).select(
+                F.explode("sh").alias("g")
+            ).distinct().write.mode("overwrite").parquet(dirs["qgrams"])
+            dedup.select("digest", "doc_id").write.mode("overwrite").parquet(
+                dirs["index"]
             )
-            qgrams.write.mode("overwrite").parquet(dirs["qgrams"])
-            kept = _quality_kept(
-                docs.where(~is_batch & ~is_bench)
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                first = kept.groupBy("digest").agg(
-                    F.min("doc_id").alias("keep_id")
-                )
-                dedup = (
-                    kept.join(first, "digest")
-                    .where(F.col("doc_id") == F.col("keep_id"))
-                    .select("digest", "doc_id", "lang", "n_toks")
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                try:
-                    dedup.select("digest", "doc_id").write.mode(
-                        "overwrite"
-                    ).parquet(dirs["index"])
-                    contaminated = (
-                        with_sh.where(~is_bench & ~is_batch)
-                        .select("doc_id", F.explode("sh").alias("g"))
-                        .join(
-                            F.broadcast(
-                                spark.read.parquet(dirs["qgrams"])
-                            ),
-                            "g",
-                        )
-                        .select("doc_id")
-                        .distinct()
-                    )
-                    clean = dedup.join(
-                        contaminated.withColumn("fl_", F.lit(True)),
-                        "doc_id",
-                        "left",
-                    ).select(
-                        "lang",
-                        "n_toks",
-                        F.coalesce("fl_", F.lit(False)).alias("fl"),
-                    )
-                    _card_counters(clean).write.mode(
-                        "overwrite"
-                    ).parquet(dirs["card"])
-                finally:
-                    dedup.unpersist()
-            finally:
-                kept.unpersist()
+            contaminated = _contaminated(
+                with_sh.where(~is_bench & ~is_batch),
+                spark.read.parquet(dirs["qgrams"]),
+            )
+            _card_counters(_flag(dedup, contaminated)).write.mode(
+                "overwrite"
+            ).parquet(dirs["card"])
         finally:
-            with_sh.unpersist()
+            for df in (dedup, kept, with_sh):
+                df.unpersist()
 
     build_once(dirs["base"], build)
 
@@ -1255,27 +1250,16 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     new_b = dedup_b.join(F.broadcast(matched), "digest", "left_anti")
     batch_sh = track(
-        batch.where(~is_bench)
-        .select("doc_id", tokens("text").alias("toks"))
-        .select(
-            "doc_id", shingles_of(F.col("toks"), DECON_K).alias("sh")
+        _decon_shingles(batch.where(~is_bench)).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    contaminated_b = (
-        batch_sh.select("doc_id", F.explode("sh").alias("g"))
-        .join(F.broadcast(spark.read.parquet(dirs["qgrams"])), "g")
-        .select("doc_id")
-        .distinct()
-    )
-    clean_b = new_b.join(
-        contaminated_b.withColumn("fl_", F.lit(True)), "doc_id", "left"
-    ).select(
-        "lang", "n_toks", F.coalesce("fl_", F.lit(False)).alias("fl")
+    contaminated_b = _contaminated(
+        batch_sh, spark.read.parquet(dirs["qgrams"])
     )
     merged = (
         spark.read.parquet(dirs["card"])
-        .unionByName(_card_counters(clean_b))
+        .unionByName(_card_counters(_flag(new_b, contaminated_b)))
         .groupBy("lang")
         .agg(
             F.sum("n_docs").cast("long").alias("n_docs"),
@@ -1302,71 +1286,22 @@ RELEASE_SEMDEDUP_TAU = COSINE_THRESHOLD
 def _sql_release_semantic() -> str:
     """Full-value DuckDB oracle for `pipeline_release_semantic`: the
     weak-geometry kNN-graph chain + the shared SemDeDup witness CTE
-    (the drop verdict), then `pipeline_release`'s quality → exact
-    keep-first dedup → decon-gate → per-language card CTEs with the
-    semantic stage spliced between dedup and the gate."""
+    (the drop verdict), then `_sql_release_card_over`'s release chain
+    over `documents` with the semantic stage between dedup and the
+    gate."""
     from crime_data_batch_processing_spark.operators.similarity import (
         sql_knn_graph_ctes,
     )
 
-    return f"""
-    WITH {sql_knn_graph_ctes()},
-    {sql_semantic_witness_cte(RELEASE_SEMDEDUP_TAU)},
-    qsh AS (
-        SELECT DISTINCT unnest({sql_shingles('text', DECON_K)}) AS g
-        FROM documents WHERE doc_id % {BENCH_MOD} = 0
-    ), contaminated AS (
-        SELECT DISTINCT e.doc_id
-        FROM (SELECT doc_id, unnest({sql_shingles('text', DECON_K)}) AS g
-              FROM documents WHERE doc_id % {BENCH_MOD} <> 0) e
-        JOIN qsh q ON e.g = q.g
-    ), kept AS (
-        SELECT doc_id, lang, text,
-               len(string_split(text, ' ')) AS n_toks
-        FROM documents
-        WHERE doc_id % {BENCH_MOD} <> 0
-          AND ({QM_BIAS}
-               + {QM_W_TOKENS} * len(string_split(text, ' '))
-               + {QM_W_STOP} * len(list_filter(string_split(text, ' '),
-                                               t -> t IN ('the', 'a')))
-               + {QM_W_DISTINCT}
-                   * len(list_distinct(string_split(text, ' ')))
-               + {QM_W_LONG} * len(list_filter(string_split(text, ' '),
-                                               t -> len(t) > 12)))
-              >= {QM_THRESHOLD}
-    ), dedup AS (
-        SELECT k.doc_id, k.lang, k.n_toks FROM kept k
-        WHERE k.doc_id = (SELECT MIN(k2.doc_id) FROM kept k2
-                          WHERE md5(k2.text) = md5(k.text))
-    ), clean AS (
-        SELECT d.doc_id, d.lang, d.n_toks,
-               (d.doc_id IN (SELECT vec_id FROM witness)) AS sem,
-               (d.doc_id IN (SELECT doc_id FROM contaminated)) AS fl
-        FROM dedup d
-    ), per AS (
-        SELECT lang,
-               CAST(SUM(CASE WHEN NOT sem AND NOT fl THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN NOT sem AND NOT fl THEN n_toks
-                             ELSE 0 END) AS BIGINT) AS n_tokens,
-               CAST(SUM(CASE WHEN NOT sem AND fl THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_flagged,
-               CAST(SUM(CASE WHEN sem THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_semantic
-        FROM clean GROUP BY lang
-    ), tot AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS grand_total,
-               md5(string_agg(
-                   lang || ':' || n_docs || ':' || n_tokens, '|'
-                   ORDER BY lang)) AS release_digest
-        FROM per
+    return _sql_release_card_over(
+        None,
+        "documents",
+        head=(
+            sql_knn_graph_ctes(),
+            sql_semantic_witness_cte(RELEASE_SEMDEDUP_TAU),
+        ),
+        semantic=True,
     )
-    SELECT lang, n_docs, n_tokens, n_flagged, n_semantic,
-           CAST(n_docs AS DOUBLE) / CAST(grand_total AS DOUBLE)
-               AS doc_share,
-           release_digest
-    FROM per, tot
-    """
 
 
 @query("pipeline_release_semantic", oracle=_sql_release_semantic())
@@ -1374,11 +1309,11 @@ def pipeline_release_semantic(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """`pipeline_release` with the SEMANTIC dedup stage a SemDeDup
-    curation pass actually ships (the r11 verdict's item 3): quality
-    gate → exact keep-first dedup → **semantic keep/drop verdict**
-    (`semantic_verdict`, the `dedup_semantic` kernel, consumed over
-    the corpus kNN graph at the corpus's semantic-duplicate regime —
-    see RELEASE_SEMDEDUP_TAU) → decontamination gate → per-language
+    curation pass actually ships: quality gate → exact keep-first
+    dedup → **semantic keep/drop verdict** (`semantic_verdict`, the
+    `dedup_semantic` kernel, consumed over the corpus kNN graph at
+    the corpus's semantic-duplicate regime — see
+    RELEASE_SEMDEDUP_TAU) → decontamination gate → per-language
     dataset card + release digest, ONE lazy plan.
 
     Stage order is the curation pipeline's: semantic drops are
@@ -1397,127 +1332,28 @@ def pipeline_release_semantic(
     Composition of verified kernels only: the weak-geometry corpus
     kNN graph (`sim_search_knn_graph` — the SemDeDup input shape),
     the shared `semantic_verdict` kernel (llm_dedup), and
-    `pipeline_release`'s quality/dedup/gate/card/digest stages.
-    Scale shape adds ONE k·N-bounded branch to `pipeline_release`'s:
-    the graph build (linear in corpus + band collisions), the O(k·N)
-    verdict window, and a broadcast-sized semantic-drop join against
-    the manifest — the card aggregate and digest broadcast are
-    unchanged.
+    `pipeline_release`'s stages (`_decon_gate` with the drop list,
+    `_card_counters`, `_card_finish`). Scale shape adds ONE
+    k·N-bounded branch to `pipeline_release`'s: the graph build
+    (linear in corpus + band collisions), the O(k·N) verdict window,
+    and a broadcast-sized semantic-drop join against the manifest —
+    the card aggregate and digest broadcast are unchanged.
     """
     from crime_data_batch_processing_spark.operators.similarity import (
         sim_search_knn_graph,
     )
 
-    docs = spread_table(spark, sf_dir, "documents")
-    is_bench = F.col("doc_id") % BENCH_MOD == 0
-
-    # ONE persisted corpus pass for shingles AND quality/dedup columns
-    # (r15: the separate quality scan re-tokenized the corpus; see
-    # _decon_quality_profile)
-    prof = _decon_quality_profile(docs)
-    qgrams = (
-        prof.where(is_bench)
-        .select(F.explode("sh").alias("g"))
-        .distinct()
-    )
-    contaminated = (
-        prof.where(~is_bench)
-        .select("doc_id", F.explode("sh").alias("g"))
-        .join(F.broadcast(qgrams), "g")
-        .select("doc_id")
-        .distinct()
-    )
-
-    kept = prof.where(~is_bench & F.col("q_ok")).select(
-        "doc_id", "lang", "digest", "n_toks"
-    )
-    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
-    dedup = (
-        kept.join(first, "digest")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "lang", "n_toks")
-    )
-
-    # the SEMANTIC stage: the dedup_semantic keep/drop verdict over
-    # the corpus kNN graph, consumed as a broadcast-sized drop list
-    # (drops are a small fraction of the corpus by construction —
-    # they are the duplicates)
+    prof = _decon_quality_profile(spread_table(spark, sf_dir, "documents"))
     verdict = semantic_verdict(
         sim_search_knn_graph(spark, sf_dir),
         load_table(spark, sf_dir, "embeddings").select("vec_id"),
         RELEASE_SEMDEDUP_TAU,
     )
-    sem_drops = (
-        verdict.where(~F.col("kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-        .withColumn("sem_", F.lit(True))
+    sem_drops = verdict.where(~F.col("kept")).select(
+        F.col("vec_id").alias("doc_id")
     )
-
-    clean = (
-        dedup.join(F.broadcast(sem_drops), "doc_id", "left")
-        .join(
-            contaminated.withColumn("fl_", F.lit(True)), "doc_id", "left"
-        )
-        .select(
-            "lang",
-            "n_toks",
-            F.coalesce("sem_", F.lit(False)).alias("sem"),
-            F.coalesce("fl_", F.lit(False)).alias("fl"),
-        )
-    )
-    per = clean.groupBy("lang").agg(
-        F.sum(F.when(~F.col("sem") & ~F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_docs"),
-        F.sum(
-            F.when(~F.col("sem") & ~F.col("fl"), F.col("n_toks"))
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
-        F.sum(F.when(~F.col("sem") & F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flagged"),
-        F.sum(F.when(F.col("sem"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_semantic"),
-    )
-    tot = per.agg(
-        F.sum("n_docs").cast("long").alias("grand_total"),
-        F.md5(
-            F.encode(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.struct("lang", "n_docs", "n_tokens")
-                            )
-                        ),
-                        lambda s: F.concat_ws(
-                            ":",
-                            s["lang"],
-                            s["n_docs"].cast("string"),
-                            s["n_tokens"].cast("string"),
-                        ),
-                    ),
-                ),
-                "UTF-8",
-            )
-        ).alias("release_digest"),
-    )
-    return with_scalars(per, tot).select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        "n_flagged",
-        "n_semantic",
-        (
-            F.col("n_docs").cast("double")
-            / F.col("grand_total").cast("double")
-        ).alias("doc_share"),
-        "release_digest",
-    )
+    clean = _decon_gate(prof, F.col("doc_id") % BENCH_MOD == 0, sem_drops)
+    return _card_finish(_card_counters(clean))
 
 
 #: Deterministic text mutation for the planted RE-UPLOAD documents of
@@ -1533,12 +1369,11 @@ def _sql_release_semantic_prod() -> str:
     """Full-value DuckDB oracle for `pipeline_release_semantic_prod`:
     the PRODUCTION-geometry kNN-graph chain over the planted
     embeddings corpus + the shared SemDeDup witness CTE at the
-    production SEMDEDUP_TAU, then `pipeline_release`'s quality →
-    exact keep-first dedup → semantic stage → decon-gate →
-    per-language card CTEs over the AUGMENTED document corpus (base
-    docs plus a deterministically mutated re-upload copy of every
-    embedding-covered PLANT_EVERY-th doc). The eval/bench set is the
-    BASE corpus's only (doc_id < PLANT_OFFSET in qsh): a planted
+    production SEMDEDUP_TAU, then `_sql_release_card_over`'s release
+    chain with the semantic stage over the AUGMENTED document corpus
+    (base docs plus a deterministically mutated re-upload copy of
+    every embedding-covered PLANT_EVERY-th doc). The eval/bench set is
+    the BASE corpus's only (doc_id < PLANT_OFFSET): a planted
     re-upload must never become an eval query, or its grams would
     contaminate its own source and every near-dup of it."""
     from crime_data_batch_processing_spark.operators.llm_dedup import (
@@ -1548,76 +1383,24 @@ def _sql_release_semantic_prod() -> str:
         SEMDEDUP_TAU,
     )
 
-    return f"""
-    WITH {_sql_knn_graph_prod_ctes()},
-    {sql_semantic_witness_cte(SEMDEDUP_TAU)},
-    docaug AS (
+    return _sql_release_card_over(
+        f"""
         SELECT doc_id, lang, text FROM documents
         UNION ALL
         SELECT doc_id + {PLANT_OFFSET} AS doc_id, lang,
                text || '{RELEASE_PLANT_SUFFIX}' AS text
         FROM documents
         WHERE doc_id % {PLANT_EVERY} = 0
-          AND doc_id IN (SELECT vec_id FROM embeddings)
-    ),
-    qsh AS (
-        SELECT DISTINCT unnest({sql_shingles('text', DECON_K)}) AS g
-        FROM docaug
-        WHERE doc_id % {BENCH_MOD} = 0 AND doc_id < {PLANT_OFFSET}
-    ), contaminated AS (
-        SELECT DISTINCT e.doc_id
-        FROM (SELECT doc_id, unnest({sql_shingles('text', DECON_K)}) AS g
-              FROM docaug
-              WHERE doc_id % {BENCH_MOD} <> 0
-                 OR doc_id >= {PLANT_OFFSET}) e
-        JOIN qsh q ON e.g = q.g
-    ), kept AS (
-        SELECT doc_id, lang, text,
-               len(string_split(text, ' ')) AS n_toks
-        FROM docaug
-        WHERE (doc_id % {BENCH_MOD} <> 0 OR doc_id >= {PLANT_OFFSET})
-          AND ({QM_BIAS}
-               + {QM_W_TOKENS} * len(string_split(text, ' '))
-               + {QM_W_STOP} * len(list_filter(string_split(text, ' '),
-                                               t -> t IN ('the', 'a')))
-               + {QM_W_DISTINCT}
-                   * len(list_distinct(string_split(text, ' ')))
-               + {QM_W_LONG} * len(list_filter(string_split(text, ' '),
-                                               t -> len(t) > 12)))
-              >= {QM_THRESHOLD}
-    ), dedup AS (
-        SELECT k.doc_id, k.lang, k.n_toks FROM kept k
-        WHERE k.doc_id = (SELECT MIN(k2.doc_id) FROM kept k2
-                          WHERE md5(k2.text) = md5(k.text))
-    ), clean AS (
-        SELECT d.doc_id, d.lang, d.n_toks,
-               (d.doc_id IN (SELECT vec_id FROM witness)) AS sem,
-               (d.doc_id IN (SELECT doc_id FROM contaminated)) AS fl
-        FROM dedup d
-    ), per AS (
-        SELECT lang,
-               CAST(SUM(CASE WHEN NOT sem AND NOT fl THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_docs,
-               CAST(SUM(CASE WHEN NOT sem AND NOT fl THEN n_toks
-                             ELSE 0 END) AS BIGINT) AS n_tokens,
-               CAST(SUM(CASE WHEN NOT sem AND fl THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_flagged,
-               CAST(SUM(CASE WHEN sem THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_semantic
-        FROM clean GROUP BY lang
-    ), tot AS (
-        SELECT CAST(SUM(n_docs) AS BIGINT) AS grand_total,
-               md5(string_agg(
-                   lang || ':' || n_docs || ':' || n_tokens, '|'
-                   ORDER BY lang)) AS release_digest
-        FROM per
+          AND doc_id IN (SELECT vec_id FROM embeddings)""",
+        "docaug",
+        head=(
+            _sql_knn_graph_prod_ctes(),
+            sql_semantic_witness_cte(SEMDEDUP_TAU),
+        ),
+        bench=f"doc_id % {BENCH_MOD} = 0 AND doc_id < {PLANT_OFFSET}",
+        train=f"doc_id % {BENCH_MOD} <> 0 OR doc_id >= {PLANT_OFFSET}",
+        semantic=True,
     )
-    SELECT lang, n_docs, n_tokens, n_flagged, n_semantic,
-           CAST(n_docs AS DOUBLE) / CAST(grand_total AS DOUBLE)
-               AS doc_share,
-           release_digest
-    FROM per, tot
-    """
 
 
 @query(
@@ -1627,13 +1410,12 @@ def _sql_release_semantic_prod() -> str:
 def pipeline_release_semantic_prod(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The semantic release at the PRODUCTION regime (the r12
-    verdict's item 1): `pipeline_release_semantic`'s composition with
-    the semantic stage run at the production 64-bit/8×8 band geometry
-    and SEMDEDUP_TAU 0.9, over a corpus where that regime is
-    NON-VACUOUS — the planted embeddings corpus `dedup_semantic`
-    decides over, joined to documents by the identity doc↔vec fixture
-    mapping.
+    """The semantic release at the PRODUCTION regime:
+    `pipeline_release_semantic`'s composition with the semantic stage
+    run at the production 64-bit/8×8 band geometry and SEMDEDUP_TAU
+    0.9, over a corpus where that regime is NON-VACUOUS — the planted
+    embeddings corpus `dedup_semantic` decides over, joined to
+    documents by the identity doc↔vec fixture mapping.
 
     Why this key exists: `pipeline_release_semantic` runs its graph
     branch at the weak 18-bit/6×3 geometry and tau 0.4 because the
@@ -1655,15 +1437,14 @@ def pipeline_release_semantic_prod(
 
     Composition of verified kernels only: the full `dedup_semantic`
     verdict frame (prod graph + shared `semantic_verdict` kernel) is
-    consumed as the drop list; quality gate, exact keep-first dedup,
-    broadcast decon gate, per-language card, and the md5 release
-    digest are `pipeline_release`'s stages over the augmented corpus.
-    Scale shape vs `pipeline_release`: one extra corpus-sized
-    semi-join (docs ⋈ embedding ids — the doc↔vec mapping), the
-    linear signature pass + 3.7%-candidate banded join of the prod
-    graph, the O(k·N) verdict window, and a broadcast-sized semantic
-    drop join; the card aggregate and 1-row digest broadcast are
-    unchanged.
+    consumed as the drop list; `pipeline_release`'s stages
+    (`_decon_gate`, `_card_counters`, `_card_finish`) run over the
+    augmented corpus. Scale shape vs `pipeline_release`: one extra
+    corpus-sized semi-join (docs ⋈ embedding ids — the doc↔vec
+    mapping), the linear signature pass + 3.7%-candidate banded join
+    of the prod graph, the O(k·N) verdict window, and a
+    broadcast-sized semantic drop join; the card aggregate and 1-row
+    digest broadcast are unchanged.
     """
     from crime_data_batch_processing_spark.operators.llm_dedup import (
         PLANT_EVERY,
@@ -1698,110 +1479,15 @@ def pipeline_release_semantic_prod(
     is_bench = (F.col("doc_id") % BENCH_MOD == 0) & (
         F.col("doc_id") < PLANT_OFFSET
     )
-
-    # ONE persisted corpus pass for shingles AND quality/dedup columns
-    # over the AUGMENTED corpus (r15: the separate quality scan
-    # re-tokenized it; see _decon_quality_profile)
     prof = _decon_quality_profile(docaug)
-    qgrams = (
-        prof.where(is_bench)
-        .select(F.explode("sh").alias("g"))
-        .distinct()
-    )
-    contaminated = (
-        prof.where(~is_bench)
-        .select("doc_id", F.explode("sh").alias("g"))
-        .join(F.broadcast(qgrams), "g")
-        .select("doc_id")
-        .distinct()
-    )
-
-    kept = prof.where(~is_bench & F.col("q_ok")).select(
-        "doc_id", "lang", "digest", "n_toks"
-    )
-    first = kept.groupBy("digest").agg(F.min("doc_id").alias("keep_id"))
-    dedup = (
-        kept.join(first, "digest")
-        .where(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "lang", "n_toks")
-    )
-
-    # the SEMANTIC stage at PROD constants: the full dedup_semantic
-    # verdict frame (prod graph over the planted corpus, tau 0.9),
-    # consumed as a broadcast-sized drop list — drops are exactly the
-    # planted re-uploads, a small fraction by construction
+    # the semantic stage at PROD constants: drops are exactly the
+    # planted re-uploads
     sem_drops = (
         dedup_semantic(spark, sf_dir)
         .where(~F.col("kept"))
         .select(F.col("vec_id").alias("doc_id"))
-        .withColumn("sem_", F.lit(True))
     )
-
-    clean = (
-        dedup.join(F.broadcast(sem_drops), "doc_id", "left")
-        .join(
-            contaminated.withColumn("fl_", F.lit(True)), "doc_id", "left"
-        )
-        .select(
-            "lang",
-            "n_toks",
-            F.coalesce("sem_", F.lit(False)).alias("sem"),
-            F.coalesce("fl_", F.lit(False)).alias("fl"),
-        )
-    )
-    per = clean.groupBy("lang").agg(
-        F.sum(F.when(~F.col("sem") & ~F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_docs"),
-        F.sum(
-            F.when(~F.col("sem") & ~F.col("fl"), F.col("n_toks"))
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_tokens"),
-        F.sum(F.when(~F.col("sem") & F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_flagged"),
-        F.sum(F.when(F.col("sem"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_semantic"),
-    )
-    tot = per.agg(
-        F.sum("n_docs").cast("long").alias("grand_total"),
-        F.md5(
-            F.encode(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.struct("lang", "n_docs", "n_tokens")
-                            )
-                        ),
-                        lambda s: F.concat_ws(
-                            ":",
-                            s["lang"],
-                            s["n_docs"].cast("string"),
-                            s["n_tokens"].cast("string"),
-                        ),
-                    ),
-                ),
-                "UTF-8",
-            )
-        ).alias("release_digest"),
-    )
-    return with_scalars(per, tot).select(
-        "lang",
-        "n_docs",
-        "n_tokens",
-        "n_flagged",
-        "n_semantic",
-        (
-            F.col("n_docs").cast("double")
-            / F.col("grand_total").cast("double")
-        ).alias("doc_share"),
-        "release_digest",
-    )
+    return _card_finish(_card_counters(_decon_gate(prof, is_bench, sem_drops)))
 
 
 #: `pipeline_release_media`'s exact-re-upload generation: every
@@ -1868,34 +1554,14 @@ def _sql_release_media() -> str:
     ), clean AS (
         SELECT s.lang, s.blen, (w.vec_id IS NOT NULL) AS fl
         FROM surv s LEFT JOIN witness w ON s.doc_id = w.vec_id
-    ), per AS (
-        SELECT lang,
-               CAST(SUM(CASE WHEN NOT fl THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_assets,
-               CAST(SUM(CASE WHEN NOT fl THEN blen ELSE 0 END)
-                    AS BIGINT) AS n_bytes,
-               CAST(SUM(CASE WHEN fl THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_dropped_semantic
-        FROM clean GROUP BY lang
-    ), tot AS (
-        SELECT CAST(SUM(n_assets) AS BIGINT) AS grand_total,
-               md5(string_agg(
-                   lang || ':' || n_assets || ':' || n_bytes, '|'
-                   ORDER BY lang)) AS release_digest
-        FROM per
-    )
-    SELECT lang, n_assets, n_bytes, n_dropped_semantic,
-           CAST(n_assets AS DOUBLE) / CAST(grand_total AS DOUBLE)
-               AS asset_share,
-           release_digest
-    FROM per, tot
+    ), {_sql_card(_MEDIA_CARD)}
     """
 
 
 @query("pipeline_release_media", oracle=_sql_release_media())
 def pipeline_release_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RELEASE pipeline's multimodal twin (r13 verdict stretch
-    item 8), closing the release family across both corpora: the
+    """The RELEASE pipeline's multimodal twin, closing the release
+    family across both corpora: the
     per-language dataset card of a shipped MEDIA release — validity
     gate → exact byte-digest dedup → wide-geometry SEMANTIC dedup —
     plus the content-derived release digest, all the release-card
@@ -1911,8 +1577,8 @@ def pipeline_release_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     witness, and natural ≥ 0.97 byte-space groups are curated
     identically. Card semantics: n_assets/n_bytes are what SHIPS,
     n_dropped_semantic is the semantic audit trail (the text card's
-    n_flagged seat), and the digest pins the card exactly as
-    `_card_finish` does for text.
+    n_flagged seat), and `_card_finish` pins the card with the same
+    digest as the text cards (`_MEDIA_CARD` names its columns).
 
     Scale shape: one digest window (uniform shuffle — cryptographic
     key), the one Arrow embed pass, the banded wide-geometry machinery
@@ -1988,8 +1654,8 @@ def pipeline_release_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).where(F.col("cos_sim") >= MEDIA_COSINE_THRESHOLD)
     # one explode, not a self-union: `pairs` is the whole banded
     # chain (bucket join → distinct → cosine join-backs) and a union
-    # of two selects over it would plan that chain twice (the
-    # knn_rank_directed lesson, r14)
+    # of two selects over it would plan that chain twice (as
+    # `knn_rank_directed` measured)
     directed = pairs.select(
         F.explode(
             F.array(
@@ -2014,49 +1680,4 @@ def pipeline_release_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = surv.join(verdict, "vec_id").select(
         "lang", "blen", (~F.col("kept")).alias("fl")
     )
-    per = clean.groupBy("lang").agg(
-        F.sum(F.when(~F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_assets"),
-        F.sum(F.when(~F.col("fl"), F.col("blen")).otherwise(0))
-        .cast("long")
-        .alias("n_bytes"),
-        F.sum(F.when(F.col("fl"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_dropped_semantic"),
-    )
-    tot = per.agg(
-        F.sum("n_assets").cast("long").alias("grand_total"),
-        F.md5(
-            F.encode(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.sort_array(
-                            F.collect_list(
-                                F.struct("lang", "n_assets", "n_bytes")
-                            )
-                        ),
-                        lambda s: F.concat_ws(
-                            ":",
-                            s["lang"],
-                            s["n_assets"].cast("string"),
-                            s["n_bytes"].cast("string"),
-                        ),
-                    ),
-                ),
-                "UTF-8",
-            )
-        ).alias("release_digest"),
-    )
-    return with_scalars(per, tot).select(
-        "lang",
-        "n_assets",
-        "n_bytes",
-        "n_dropped_semantic",
-        (
-            F.col("n_assets").cast("double")
-            / F.col("grand_total").cast("double")
-        ).alias("asset_share"),
-        "release_digest",
-    )
+    return _card_finish(_card_counters(clean, _MEDIA_CARD), _MEDIA_CARD)

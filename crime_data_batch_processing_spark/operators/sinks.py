@@ -9,18 +9,18 @@ Reference capabilities:
   whose LOCATION is repointed at the newest y/m/d directory each run
   (`CREATE TABLE ... USING PARQUET LOCATION` then `ALTER TABLE ...
   SET LOCATION`, spark_ingest_script.py:97-105,
-  spark_process_script.py:74-82). Rebuilt here on partition-pruned
-  reads — the idiomatic replacement SURVEY.md §1.4 recommends: a
-  predicate on the partition columns prunes to exactly one directory
-  via catalog metadata, giving the same "readers see only the latest
+  spark_process_script.py:74-82). Rebuilt here on reads of exactly
+  one dated directory — the idiomatic replacement SURVEY.md §1.4
+  recommends: `read_latest_snapshot` lists only the requested
+  y=/m=/d= directory, giving the same "readers see only the latest
   snapshot" semantics without mutable-location DDL (which is a race
   under concurrent readers and needs a Hive metastore).
 
 Scale notes: dynamic-partition overwrite touches only the partitions
-being written; a predicate-pruned read of one partition is O(snapshot
-size), not O(history size) — `.explain` shows the pruned partition
-count. Snapshot writes should also be compacted (coalesce to a target
-file size) so each 100 TB run doesn't leave millions of small files.
+being written; the dated read of one partition is O(snapshot size),
+not O(history size), in listing as well as in scanning. Snapshot
+writes should also be compacted (coalesce to a target file size) so
+each 100 TB run doesn't leave millions of small files.
 """
 
 from __future__ import annotations
@@ -65,15 +65,21 @@ def write_snapshot(df: DataFrame, base_path: str, exec_date: str) -> str:
 def read_latest_snapshot(
     spark: SparkSession, base_path: str, exec_date: str
 ) -> DataFrame:
-    """O12 natively: partition-pruned read of the newest snapshot.
+    """O12 natively: read the snapshot of `exec_date` alone.
 
-    The predicate on y/m/d is resolved against directory metadata —
-    only the latest partition's files are listed and scanned.
+    Only that day's `y=/m=/d=` directory is listed and scanned, so the
+    read costs O(snapshot), not O(history), and directories elsewhere
+    under `base_path` (other days, stray output) are never looked at.
+    `basePath` keeps the partition discovery rooted at `base_path`;
+    the y/m/d columns are dropped, so the result has the snapshot's
+    data columns only. A date with no snapshot raises Spark's
+    path-not-found `AnalysisException` rather than returning an empty
+    frame.
     """
-    y, m, d = (str(int(p)) for p in exec_date.split("-"))
+    y, m, d = (int(p) for p in exec_date.split("-"))
     return (
-        spark.read.parquet(base_path)
-        .filter((F.col("y") == y) & (F.col("m") == m) & (F.col("d") == d))
+        spark.read.option("basePath", base_path)
+        .parquet(f"{base_path}/y={y}/m={m}/d={d}")
         .drop("y", "m", "d")
     )
 
@@ -165,7 +171,7 @@ def latest_snapshot_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark_ingest_script.py:97-105, spark_process_script.py:74-82) —
     the compat mode for a user migrating off the reference's two-table
     protocol. `latest_snapshot` is the recommended replacement
-    (partition-pruned predicate read, no mutable DDL); this key proves
+    (a read of the one dated directory, no mutable DDL); this key proves
     the metastore form works verbatim on the local catalog.
 
     One call replays the full two-run lifecycle so BOTH branches of
@@ -326,7 +332,7 @@ def pin_latest_table(
     public `spark.catalog.tableExists`, not the `_jsparkSession` JVM
     handle the reference reaches for at line 99).
 
-    The predicate-pruned read (`read_latest_snapshot`) is the default
+    The dated-directory read (`read_latest_snapshot`) is the default
     and strictly better (no mutable-location DDL race under concurrent
     readers); this exists for bit-parity with deployments whose
     downstream consumers address the unsuffixed table name through a
@@ -944,7 +950,7 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers never observe a gap — they see the bad run until the
     instant the new partition commits, never an empty table.
 
-    Scale shape: the restore is one partition-pruned read of the
+    Scale shape: the restore is one dated-directory read of the
     source run (O(run size), zero history scanned) piped straight
     back through the dynamic-partition writer — the same two
     metadata-bounded primitives every operator in this family uses
@@ -968,7 +974,7 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "o_totalprice", F.col("o_totalprice") + bad_delta
                 )
             write_snapshot(run, base, exec_date)
-        # the rollback: partition-pruned read of the good run,
+        # the rollback: dated-directory read of the good run,
         # republished as the new latest dated partition. It reads from
         # `base` and overwrites the same `base` in one job, which is
         # safe only because write_snapshot's dynamic overwrite touches

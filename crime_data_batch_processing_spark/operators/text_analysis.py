@@ -17,7 +17,7 @@ repartition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crime_data_batch_processing_spark.functions.textkit import (
@@ -633,6 +633,23 @@ QM_W_LONG = -40       # per token longer than 12 chars (junk signal)
 QM_THRESHOLD = 200
 
 
+def quality_logit(toks: Column) -> Column:
+    """The linear quality model's integer logit over a token-array
+    column: QM_BIAS plus the weighted token, stopword, distinct-token
+    and over-long-token counts. A document passes the quality gate
+    when the logit is >= QM_THRESHOLD. Every key that scores or gates
+    on document quality builds the logit here."""
+    return (
+        F.lit(QM_BIAS)
+        + F.lit(QM_W_TOKENS) * F.size(toks)
+        + F.lit(QM_W_STOP)
+        * F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
+        + F.lit(QM_W_DISTINCT) * F.size(F.array_distinct(toks))
+        + F.lit(QM_W_LONG)
+        * F.size(F.filter(toks, lambda t: F.length(t) > 12))
+    )
+
+
 @query(
     "text_quality_model",
     oracle=f"""
@@ -682,15 +699,7 @@ def text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("toks"))
-    logit = (
-        F.lit(QM_BIAS)
-        + F.lit(QM_W_TOKENS) * F.size("toks")
-        + F.lit(QM_W_STOP)
-        * F.size(F.filter("toks", lambda t: t.isin(*STOPWORDS)))
-        + F.lit(QM_W_DISTINCT) * F.size(F.array_distinct("toks"))
-        + F.lit(QM_W_LONG)
-        * F.size(F.filter("toks", lambda t: F.length(t) > 12))
-    )
+    logit = quality_logit(F.col("toks"))
     return toks.select(
         "doc_id",
         logit.cast("bigint").alias("quality_score"),

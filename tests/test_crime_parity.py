@@ -151,6 +151,31 @@ def test_latest_snapshot_roundtrip(spark, crime_csv, tmp_path):
     assert set(latest.columns) == {f.name for f in CRIME_RAW_SCHEMA.fields}
 
 
+def test_latest_snapshot_lists_only_the_requested_day(
+    spark, crime_csv, tmp_path
+):
+    """A latest read lists only the requested day's directory: a stray
+    directory that is not `d=` under another day's month must not break
+    it, and a day with no snapshot raises instead of reading empty."""
+    from pyspark.errors import AnalysisException
+
+    from crime_data_batch_processing_spark.operators.sinks import (
+        read_latest_snapshot,
+        write_snapshot,
+    )
+
+    df = read_crime_csv(spark, crime_csv)
+    base = str(tmp_path / "snap")
+    write_snapshot(df.limit(100), base, "2022-01-04")
+    write_snapshot(df, base, "2022-02-05")
+    df.limit(3).write.parquet(f"{base}/y=2022/m=1/stray")
+    latest = read_latest_snapshot(spark, base, "2022-02-05")
+    assert latest.count() == 400
+    assert set(latest.columns) == {f.name for f in CRIME_RAW_SCHEMA.fields}
+    with pytest.raises(AnalysisException):
+        read_latest_snapshot(spark, base, "2022-02-06")
+
+
 class TestLatestSnapshotCompat:
     def test_location_pinning_repoints_table(self, spark, sf_dir, tmp_path):
         """O12 compat mode: readers of the unsuffixed table see exactly

@@ -2242,6 +2242,27 @@ class TestReleaseSemantic:
         assert {r.release_digest for r in rerun} == {expected}
 
 
+    def test_prod_semantic_release_matches_oracle_smoke(self, spark, sf_dir):
+        """Default-tier smoke of the shared semantic-drop path: the prod
+        semantic release matches its DuckDB oracle at the smoke scale,
+        and its semantic stage drops documents there, so `_decon_gate`'s
+        drop-list branch runs without the slow oracle tests."""
+        from crime_data_batch_processing_spark import cachekit, registry
+        from tests.oracle_harness import compare, duck_connection
+
+        key = "pipeline_release_semantic_prod"
+        registry.load_all_operators()
+        df = registry.QUERIES[key](spark, sf_dir).cache()
+        con = duck_connection(sf_dir)
+        try:
+            compare(df, con, registry.ORACLES[key])
+            assert sum(r.n_semantic for r in df.collect()) > 0
+        finally:
+            con.close()
+            df.unpersist()
+            cachekit.release_all()
+
+
 class TestHardNegatives:
     def test_no_returned_negative_shares_a_gram(self, spark, sf_dir):
         """The whole point of the exclusion: no mined negative may

@@ -587,7 +587,57 @@ def sql_cms_bucket(code_expr: str, d_expr: str) -> str:
     )
 
 
-_SQL_TOKEN_CODE = sql_token_code("token")
+def cms_estimates(
+    exact: DataFrame, key: str, grid: DataFrame | None = None
+) -> DataFrame:
+    """Count-min estimates (key, exact_n, est_n) for the distinct keys
+    of `exact` (key, exact_n): code each key once, band the code into
+    its CMS_D cells, and take the minimum cell count.
+
+    `grid` is a (d, bucket, n) count-min grid. Without it the grid is
+    built from `exact` itself: cells are additive, so summing exact
+    counts per cell equals counting the raw stream.
+    """
+    # bind the char-fold code ONCE per distinct key, then band it —
+    # inlining _token_code under the explode would re-run the fold per
+    # emitted band row
+    coded = exact.select(key, "exact_n", _token_code(F.col(key)).alias("code"))
+    bands = coded.select(
+        key,
+        "exact_n",
+        F.posexplode(F.array(*cms_bucket_cols(F.col("code")))).alias(
+            "d", "bucket"
+        ),
+    )
+    if grid is None:
+        grid = bands.groupBy("d", "bucket").agg(F.sum("exact_n").alias("n"))
+    return (
+        bands.join(grid, ["d", "bucket"])
+        .groupBy(key, "exact_n")
+        .agg(F.min("n").alias("est_n"))
+    )
+
+
+def sql_cms_ctes(key: str, source: str) -> str:
+    """DuckDB CTEs `exact`, `coded`, `bands`, `cms` (comma-separated,
+    no WITH): exact counts of `key` over `source`, their codes, CMS
+    cells and the grid built from them — the SQL form of
+    :func:`cms_estimates` without a `grid`. Probe with
+    `FROM bands b JOIN cms c USING (d, bucket)`."""
+    return f"""exact AS (
+        SELECT {key}, COUNT(*)::BIGINT AS exact_n
+        FROM {source} GROUP BY {key}
+    ), coded AS (
+        SELECT {key}, exact_n, {sql_token_code(key)} AS code
+        FROM exact
+    ), bands AS (
+        SELECT {key}, exact_n, d.d AS d,
+               {sql_cms_bucket('code', 'd.d')} AS bucket
+        FROM coded, range({CMS_D}) d(d)
+    ), cms AS (
+        SELECT d, bucket, CAST(SUM(exact_n) AS BIGINT) AS n
+        FROM bands GROUP BY d, bucket
+    )"""
 
 
 @query(
@@ -595,18 +645,7 @@ _SQL_TOKEN_CODE = sql_token_code("token")
     oracle=f"""
     WITH tok AS (
         SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ), exact AS (
-        SELECT token, COUNT(*)::BIGINT AS exact_n FROM tok GROUP BY token
-    ), coded AS (
-        SELECT token, exact_n, {_SQL_TOKEN_CODE} AS code FROM exact
-    ), bands AS (
-        SELECT token, exact_n, d.d AS d,
-               {sql_cms_bucket('code', 'd.d')} AS bucket
-        FROM coded, range({CMS_D}) d(d)
-    ), cms AS (
-        SELECT d, bucket, CAST(SUM(exact_n) AS BIGINT) AS n
-        FROM bands GROUP BY d, bucket
-    ), est AS (
+    ), {sql_cms_ctes('token', 'tok')}, est AS (
         SELECT b.token, b.exact_n, MIN(c.n) AS est_n
         FROM bands b JOIN cms c USING (d, bucket)
         GROUP BY b.token, b.exact_n
@@ -632,7 +671,8 @@ def agg_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     band/probe joins. Hash families are fixed integer affines over a
     char-level polynomial code, so the DuckDB oracle rebuilds the
     identical grid and the ESTIMATES — overestimates from bucket
-    collisions included — match value-for-value.
+    collisions included — match value-for-value (`cms_estimates`,
+    shared with `stream_count_min`).
     """
     docs = load_table(spark, sf_dir, "documents")
     exact = (
@@ -640,22 +680,7 @@ def agg_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_n"))
     )
-    coded = exact.select(
-        "token", "exact_n", _token_code(F.col("token")).alias("code")
-    )
-    bands = coded.select(
-        "token",
-        "exact_n",
-        F.posexplode(F.array(*cms_bucket_cols(F.col("code")))).alias(
-            "d", "bucket"
-        ),
-    )
-    cms = bands.groupBy("d", "bucket").agg(F.sum("exact_n").alias("n"))
-    est = (
-        bands.join(cms, ["d", "bucket"])
-        .groupBy("token", "exact_n")
-        .agg(F.min("n").alias("est_n"))
-    )
+    est = cms_estimates(exact, "token")
     return est.orderBy(F.col("exact_n").desc(), F.col("token").asc()).limit(20)
 
 
@@ -691,18 +716,17 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replicates every input row 2^d times, so cubing the raw table
     # runs the decimal accumulation over 4x the corpus. One plain
     # groupBy first collapses 600k rows to the ~10 observed dim pairs;
-    # the cube then expands only those partials. Measured r14: 2.4s →
-    # ~0.8s at sf0.1 with identical rows. Exactness: partials stay
-    # DECIMAL(38,6) END-TO-END — the r14 version routed them through
-    # dsum (decimal→double) + dsum_merge (double→decimal), whose
-    # losslessness requires each partial < 2^33 ≈ 8.6e9 (the ulp of a
-    # double that large reaches the 1e-6 quantum); sum_price partials
-    # hit ~5.3e9 at sf0.1, i.e. exactness would have broken at
-    # sf≈0.16 (r14 advisor). A plain decimal F.sum over decimal
-    # partials is exact and associative at ANY scale, so the re-fold
-    # equals the one-pass dsum bit-for-bit with no magnitude caveat;
-    # the single final cast to double matches the oracle's
-    # CAST(SUM(...) AS DOUBLE) exactly as dsum itself does.
+    # the cube then expands only those partials (measured 2.4s →
+    # ~0.8s at sf0.1, identical rows). Exactness: partials stay
+    # DECIMAL(38,6) END-TO-END. Routing them through dsum
+    # (decimal→double) + dsum_merge (double→decimal) would be lossless
+    # only while each partial < 2^33 ≈ 8.6e9 (the ulp of a double that
+    # large reaches the 1e-6 quantum); sum_price partials reach ~5.3e9
+    # at sf0.1, so exactness would break at sf≈0.16. A plain decimal
+    # F.sum over decimal partials is exact and associative at ANY
+    # scale, so the re-fold equals the one-pass dsum bit-for-bit with
+    # no magnitude caveat; the single final cast to double matches the
+    # oracle's CAST(SUM(...) AS DOUBLE) exactly as dsum itself does.
     pre = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")

@@ -89,6 +89,20 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def latest_per_user(df: DataFrame) -> DataFrame:
+    """The latest row per user_id: greatest (ts, event_id), a total
+    order, so the winner per key is unique. One window, one shuffle on
+    the key."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 @query(
     "cdc_upsert",
     oracle="""
@@ -106,21 +120,15 @@ def cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest-record-per-key compaction (the MERGE/upsert read path).
 
     Treats `events` as a change stream keyed by user_id and reduces
-    it to current state: one window, one shuffle on the key, ties
-    broken by event_id for determinism. This is the incremental
+    it to current state with `latest_per_user` (shared with the
+    streaming twin `stream_cdc_upsert`). This is the incremental
     replacement for the reference's daily full-table overwrite — at
     100 TB you compact the delta against the snapshot instead of
-    rewriting the world. The window shuffles by user_id exactly once;
-    at scale the same plan runs per partition of a date-partitioned
-    snapshot.
+    rewriting the world; at scale the same plan runs per partition of
+    a date-partitioned snapshot.
     """
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        latest_per_user(load_table(spark, sf_dir, "events"))
         .select(
             "user_id",
             "event_id",
@@ -508,7 +516,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     child's size), so at mid scales the planner judged the exploded
     FACT side broadcastable and built a multi-million-row broadcast
     hash table — 3-4x slower at the soak's s3 tier and a guaranteed
-    driver OOM at 100 TB. Found by the round-8 relational soak
+    driver OOM at 100 TB. Found by the relational soak
     (non-monotone tier timings); plan-asserted in
     tests/test_plans.py::test_interval_overlap_never_broadcasts_fact.
     """

@@ -1,10 +1,20 @@
-"""Batch time-windowing: tumbling, sliding, session (P34-P36).
+"""Time windowing: tumbling, sliding, session (P34-P36).
 
-The reference's only notion of time is the Airflow daily schedule
-(/root/reference/da-capstone-emr-airflow.py:94); nothing in-engine.
-These operators give streaming-window semantics on batch data — the
-same `F.window`/`F.session_window` expressions the streaming module
-reuses, so batch/stream equivalence is by construction.
+The tumbling and session aggregates are each defined once, as a
+function over an events frame, and both the batch keys here and the
+streaming keys in `streaming/stream_events.py` call it:
+
+* `hourly_agg` — 1-hour tumbling windows per event type
+  (`window_tumbling`, `stream_events`, `stream_watermark_late`);
+* `session_agg` — 30-minute-gap sessions per user (`window_session`,
+  `stream_session`).
+
+Each carries its own watermark. On a stream the watermark bounds
+window state; on a batch frame Spark's optimizer removes it
+(EliminateEventTimeWatermark), so the batch plan is the plain
+aggregate. The twin keys also share one oracle each (`SQL_HOURLY`,
+`SQL_SESSIONS`), so batch/stream equivalence holds by construction on
+both engines.
 
 Scale notes: time-window grouping is an ordinary hash aggregate whose
 key is the derived window struct — partial aggregation + one shuffle.
@@ -25,27 +35,14 @@ from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.sources.tables import load_table
 
 
-@query(
-    "window_tumbling",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS window_start,
-           date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-           event_type,
-           COUNT(*) AS n_events,
-           {sql_dsum('value')} AS sum_value
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
-)
-def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Non-overlapping 1-hour buckets per event type.
-
-    A tumbling window is just date_trunc as a group key — the oracle
-    says exactly that.
-    """
-    ev = load_table(spark, sf_dir, "events")
+def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Hourly tumbling aggregate per event type: (window_start,
+    window_end, event_type, n_events, sum_value), the sum exact
+    (`dsum`). `watermark` is the allowed event-time delay of a stream;
+    a batch frame ignores it."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             dsum("value").alias("sum_value"),
@@ -58,6 +55,25 @@ def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
+
+
+#: Oracle of `hourly_agg` over all events: a tumbling window is
+#: date_trunc as a group key.
+SQL_HOURLY = f"""
+    SELECT date_trunc('hour', ts) AS window_start,
+           date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
+           event_type,
+           COUNT(*) AS n_events,
+           {sql_dsum('value')} AS sum_value
+    FROM events
+    GROUP BY 1, 2, 3
+    """
+
+
+@query("window_tumbling", oracle=SQL_HOURLY)
+def window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Non-overlapping 1-hour buckets per event type (`hourly_agg`)."""
+    return hourly_agg(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -93,9 +109,32 @@ def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "window_session",
-    oracle="""
+def session_agg(events: DataFrame) -> DataFrame:
+    """Gap-based session windows (30-minute inactivity) per user:
+    (user_id, session_start_us, session_end_us, n_events).
+
+    Spark's `session_window` ends a session at last_event + gap.
+    Bounds are emitted as epoch-µs to sidestep ns-vs-µs timestamp
+    rendering (sources/tables.py). The 1-hour watermark bounds a
+    stream's session state; a batch frame ignores it.
+    """
+    return (
+        events.withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_micros("w.start").alias("session_start_us"),
+            F.unix_micros("w.end").alias("session_end_us"),
+            "n_events",
+        )
+    )
+
+
+#: Oracle of `session_agg` over all events: the classic gaps-and-islands
+#: SQL (lag → new-session flag → running island id → group), all in
+#: integer µs.
+SQL_SESSIONS = """
     WITH ordered AS (
         SELECT user_id, event_id, epoch_us(ts) AS us,
                LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
@@ -116,28 +155,14 @@ def window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n_events
     FROM islands
     GROUP BY user_id, session_id
-    """,
-)
-def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows (30-minute inactivity) per user.
-
-    Spark's `session_window` defines a session's end as last_event +
-    gap; the oracle reproduces that with the classic gaps-and-islands
-    SQL (lag → new-session flag → running island id → group), all in
-    integer µs. Emitted as epoch-µs to sidestep ns-vs-µs timestamp
-    rendering (sources/tables.py).
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("session_start_us"),
-            F.unix_micros("w.end").alias("session_end_us"),
-            "n_events",
-        )
-    )
+
+
+@query("window_session", oracle=SQL_SESSIONS)
+def window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gap-based session windows (30-minute inactivity) per user
+    (`session_agg`)."""
+    return session_agg(load_table(spark, sf_dir, "events"))
 
 
 #: EWMA smoothing factor 1/4: both 0.25 and 0.75 are exact binary
@@ -209,7 +234,7 @@ def window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session labeling gap — shared with the session-window aggregate.
+#: Session labeling gap: `session_agg`'s 30 minutes, in µs.
 LABEL_GAP_US = 30 * 60 * 1_000_000
 
 

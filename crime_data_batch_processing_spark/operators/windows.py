@@ -163,10 +163,9 @@ def window_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
 ANOMALY_FRAME = 19
 ANOMALY_SIGMA = 3
 
-
-@query(
-    "window_anomaly",
-    oracle=f"""
+#: Oracle of the trailing-frame anomaly flag, shared by the batch
+#: `window_anomaly` and the keyed-state `stream_anomaly`.
+SQL_ANOMALY = f"""
     WITH f AS (
         SELECT event_id, user_id,
                CAST(value AS DECIMAL(10,2)) AS x,
@@ -187,8 +186,10 @@ ANOMALY_SIGMA = 3
                > {ANOMALY_SIGMA * ANOMALY_SIGMA} * (n * s2 - s * s)
                AS is_anomaly
     FROM f
-    """,
-)
+    """
+
+
+@query("window_anomaly", oracle=SQL_ANOMALY)
 def window_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-window 3-sigma anomaly flag per entity — EXACT, with
     no floating point anywhere.

@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from crime_data_batch_processing_spark.functions.exact import sql_dsum
+from crime_data_batch_processing_spark.operators.windows import (
+    ANOMALY_FRAME,
+    ANOMALY_SIGMA,
+    SQL_ANOMALY,
+)
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.streaming.stream_events import (
     _stream_src,
@@ -131,11 +136,6 @@ def stateful_anomaly(events: DataFrame) -> DataFrame:
     Python integers are exact, so there is no accumulation drift
     across micro-batch boundaries.
     """
-    from crime_data_batch_processing_spark.operators.windows import (
-        ANOMALY_FRAME,
-        ANOMALY_SIGMA,
-    )
-
     k2 = ANOMALY_SIGMA * ANOMALY_SIGMA
 
     def _flag(key, pdfs, state):
@@ -186,34 +186,11 @@ def stateful_anomaly(events: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "stream_anomaly",
-    # Same contract as the batch window operator (windows.py): the
-    # streamed fold must reproduce the batch frame algebra exactly.
-    oracle="""
-    WITH f AS (
-        SELECT event_id, user_id,
-               CAST(value AS DECIMAL(10,2)) AS x,
-               CAST(COUNT(*) OVER w AS DECIMAL(6,0)) AS n,
-               CAST(SUM(CAST(value AS DECIMAL(10,2))) OVER w
-                    AS DECIMAL(14,2)) AS s,
-               CAST(SUM(CAST(value AS DECIMAL(10,2))
-                        * CAST(value AS DECIMAL(10,2))) OVER w
-                    AS DECIMAL(20,4)) AS s2
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-    )
-    SELECT event_id, user_id, CAST(n AS BIGINT) AS n_frame,
-           CAST(n * x - s AS DECIMAL(14,2))
-               * CAST(n * x - s AS DECIMAL(14,2))
-               > 9 * (n * s2 - s * s) AS is_anomaly
-    FROM f
-    """,
-)
+@query("stream_anomaly", oracle=SQL_ANOMALY)
 def stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming per-event anomaly flags from keyed state, checked
-    bit-for-bit against the batch window operator's oracle.
+    bit-for-bit against the batch window operator's oracle
+    (`SQL_ANOMALY`).
 
     The monitoring topology `window_anomaly` only batch-simulates:
     state is the per-entity trailing frame, each event is flagged AS

@@ -1,12 +1,24 @@
 """Structured Streaming over events (P37): source → watermark →
-tumbling aggregate → sink.
+stateful operator → sink.
 
-The reference is pure batch on a daily Airflow schedule
-(/root/reference/da-capstone-emr-airflow.py:94); this is the native
-streaming generalization: the SAME window aggregate as the batch
-`window_tumbling` operator, run through `readStream` with a watermark.
-Batch/stream equivalence is therefore by construction, and the
-registered query's oracle is the same SQL as the batch one.
+Every streaming key here whose answer equals a batch key's runs the
+batch key's own stage, defined once in `operators/`, and registers the
+batch key's oracle:
+
+* `stream_events`, `stream_watermark_late` — `time_windows.hourly_agg`
+  (`SQL_HOURLY`, shared with `window_tumbling`);
+* `stream_session` — `time_windows.session_agg` (`SQL_SESSIONS`,
+  shared with `window_session`);
+* `stream_rollup_incremental` — `timeseries.hourly_partial` per
+  micro-batch and `timeseries.fold_partials` at read time
+  (`SQL_HOURLY_ROLLUP`, shared with `rollup_hypertable`);
+* `stream_count_min` — `aggregates.cms_estimates` over the merged grid
+  (`sql_cms_ctes`, shared with `agg_count_min`);
+* `stream_cdc_upsert` — `scale_patterns.latest_per_user` per
+  micro-batch merge.
+
+Batch/stream equivalence therefore holds by construction: a change to
+one of those stages or oracles changes both keys.
 
 Scale notes: the file source here stands in for Kafka — swap
 `.format("parquet").load(dir)` for `.format("kafka")...` and nothing
@@ -32,9 +44,29 @@ from pyspark.sql.streaming import StreamingQuery
 
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum
 from crime_data_batch_processing_spark.functions.textkit import sql_shingles
+from crime_data_batch_processing_spark.operators.aggregates import (
+    _token_code,
+    cms_bucket_cols,
+    cms_estimates,
+    sql_cms_ctes,
+)
 from crime_data_batch_processing_spark.operators.llm_dedup import (
     BENCH_MOD,
     DECON_K,
+)
+from crime_data_batch_processing_spark.operators.scale_patterns import (
+    latest_per_user,
+)
+from crime_data_batch_processing_spark.operators.time_windows import (
+    SQL_HOURLY,
+    SQL_SESSIONS,
+    hourly_agg,
+    session_agg,
+)
+from crime_data_batch_processing_spark.operators.timeseries import (
+    SQL_HOURLY_ROLLUP,
+    fold_partials,
+    hourly_partial,
 )
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.session import scoped_conf
@@ -107,25 +139,6 @@ def streaming_events(
     if unit == "ns":
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """The tumbling aggregate shared with the batch operator."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def _scratch_ckpt() -> str:
@@ -243,8 +256,8 @@ def streaming_documents(
     """readStream over a directory of documents parquet files.
 
     The declared schema is DERIVED from the files already present
-    (metadata-only batch read of the footers — the round-9 discipline:
-    never hardcode a physical schema the driver may regenerate).
+    (metadata-only batch read of the footers), never hardcoded: the
+    testdata's physical types may be regenerated.
     Documents have no event-time column, so no ts flavor probe is
     needed.
     """
@@ -255,52 +268,19 @@ def streaming_documents(
     return reader.parquet(src_dir)
 
 
-@query(
-    "stream_session",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, event_id, epoch_us(ts) AS us,
-               LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-                   AS prev_us
-        FROM events
-    ), islands AS (
-        SELECT user_id, us,
-               SUM(CASE WHEN prev_us IS NULL
-                         OR us - prev_us > 1800000000 THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY user_id ORDER BY us, event_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-        FROM ordered
-    )
-    SELECT user_id,
-           MIN(us) AS session_start_us,
-           MAX(us) + 1800000000 AS session_end_us,
-           COUNT(*) AS n_events
-    FROM islands
-    GROUP BY user_id, session_id
-    """,
-)
+@query("stream_session", oracle=SQL_SESSIONS)
 def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming gap-based session windows (30-minute inactivity).
+    """Streaming gap-based session windows (30-minute inactivity):
+    `session_agg` over the event stream.
 
     `session_window` in a streaming aggregate exercises the state
     store's session MERGE path (overlapping partial sessions combined
     as events arrive) — the hardest stateful-streaming shape. Run to
     completion in complete mode over the bounded source, the final
-    state must equal the batch gaps-and-islands answer
-    (`window_session`'s oracle) exactly.
+    state must equal the batch gaps-and-islands answer exactly.
     """
-    agg = (
+    agg = session_agg(
         streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("session_start_us"),
-            F.unix_micros("w.end").alias("session_end_us"),
-            "n_events",
-        )
     )
     return spark.table(run_stream(agg, "cdbp_stream_session", "complete").name)
 
@@ -368,20 +348,10 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(run_stream(dedup, "cdbp_stream_dedup").name)
 
 
-@query(
-    "stream_events",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS window_start,
-           date_trunc('hour', ts) + INTERVAL 1 HOUR AS window_end,
-           event_type,
-           COUNT(*) AS n_events,
-           {sql_dsum('value')} AS sum_value
-    FROM events
-    GROUP BY 1, 2, 3
-    """,
-)
+@query("stream_events", oracle=SQL_HOURLY)
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming tumbling aggregate, checked against the BATCH oracle.
+    """Streaming tumbling aggregate (`hourly_agg`), checked against
+    the batch oracle.
 
     Runs the file stream to completion with Trigger.AvailableNow in
     complete mode — the final streaming state over a bounded source
@@ -399,10 +369,13 @@ def click_purchase_join(
     src_dir: str,
     max_files_per_trigger: int | None = None,
     watermark: str = "1 hour",
+    how: str = "inner",
 ) -> DataFrame:
     """The stream-stream interval-join TOPOLOGY (unstarted): clicks
     joined to purchases within [click, click+1h] per user, both sides
-    watermarked. Shared by the registered query (bounded run) and the
+    watermarked. `how` is the join type: "inner" for
+    `stream_stream_join`, "leftOuter" for `stream_stream_left_join`.
+    Shared by the registered queries (bounded runs) and the
     restart/late-data tests (file-by-file micro-batches against a
     checkpoint)."""
     clicks = (
@@ -434,6 +407,7 @@ def click_purchase_join(
             AND purchase_ts <= click_ts + INTERVAL 1 HOUR
             """
         ),
+        how,
     ).select(
         "user_id",
         "click_id",
@@ -443,9 +417,8 @@ def click_purchase_join(
     )
 
 
-@query(
-    "stream_stream_join",
-    oracle="""
+#: Oracle of the inner click→purchase interval join: the batch join.
+_SQL_CLICK_PURCHASE = """
     SELECT c.user_id,
            c.event_id AS click_id,
            p.event_id AS purchase_id,
@@ -455,8 +428,10 @@ def click_purchase_join(
       ON c.user_id = p.user_id
      AND c.event_type = 'click' AND p.event_type = 'purchase'
      AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
-    """,
-)
+    """
+
+
+@query("stream_stream_join", oracle=_SQL_CLICK_PURCHASE)
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: purchases attributed to the click
     they followed within one hour, both sides unbounded.
@@ -502,9 +477,8 @@ def cdc_merge_batch(target_dir: str):
 
     At 100 TB the target would be partitioned/bucketed by key and the
     merge restricted to the partitions a batch touches; the fold logic
-    is unchanged.
+    (`latest_per_user`, the batch `cdc_upsert` stage) is unchanged.
     """
-    from pyspark.sql import Window
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
         s = batch.sparkSession
@@ -516,19 +490,33 @@ def cdc_merge_batch(target_dir: str):
             all_rows = existing.unionByName(batch.select(existing.columns))
         else:
             all_rows = batch
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            all_rows.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
+        latest = latest_per_user(all_rows)
         latest.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             target_dir
         )
 
     return _merge
+
+
+#: Per-run scratch roots of the foreachBatch keys, removed at
+#: interpreter exit: the returned (lazy) DataFrame re-reads them, so
+#: they must outlive the call.
+_RUN_DIRS: list[str] = []
+
+
+@atexit.register
+def _reclaim_run_dirs() -> None:
+    for d in _RUN_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _run_dir(prefix: str) -> str:
+    """A fresh scratch root for one key invocation. Unique per run, so
+    a later call (or a concurrent one) never deletes the files behind
+    a frame an earlier call returned."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _RUN_DIRS.append(d)
+    return d
 
 
 @query(
@@ -558,11 +546,10 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes foreachBatch's at-least-once contract safe here. The
     oracle is the batch latest-per-key query over all events;
     (ts, event_id) descending is a total order, so the winner per key
-    is unique and the result deterministic.
+    is unique and the result deterministic. The target lives in a
+    per-run directory (`_run_dir`).
     """
-    key = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
-    target = f"/tmp/cdbp_cdc_target/{key}"
-    shutil.rmtree(target, ignore_errors=True)
+    target = f"{_run_dir('cdbp_cdc_target_')}/target"
     events = streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
     run_stream(events, cdc_merge_batch(target))
     return spark.read.parquet(target).select(
@@ -572,18 +559,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("last_type"),
         F.col("value").alias("last_value"),
     )
-
-
-#: Per-invocation rollup delta roots, reclaimed at interpreter exit —
-#: they must outlive the returned (lazy) DataFrame, so in-function
-#: cleanup is impossible; without this each call leaks a /tmp dir.
-_DELTA_DIRS: list[str] = []
-
-
-@atexit.register
-def _reclaim_delta_dirs() -> None:
-    for d in _DELTA_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def rollup_delta_batch(delta_base: str):
@@ -597,39 +572,19 @@ def rollup_delta_batch(delta_base: str):
     batch id lands in the same directory), and the merge moves to
     read time — the incremental-materialized-view layout used on
     object storage, where compaction of deltas into the base is a
-    separate background fold.
+    separate background fold. The partial is `hourly_partial`, the
+    one `rollup_hypertable` materializes.
     """
 
     def _write(batch: DataFrame, batch_id: int) -> None:
-        from crime_data_batch_processing_spark.functions.exact import dsum
-
-        (
-            batch.groupBy(
-                F.unix_micros(F.date_trunc("hour", "ts")).alias("hour_us"),
-                "event_type",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value").alias("sum_value"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{delta_base}/batch={batch_id}")
+        hourly_partial(batch).write.mode("overwrite").parquet(
+            f"{delta_base}/batch={batch_id}"
         )
 
     return _write
 
 
-@query(
-    "stream_rollup_incremental",
-    oracle=f"""
-    SELECT CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS hour_us,
-           event_type,
-           COUNT(*) AS n_events,
-           {sql_dsum('value')} AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
+@query("stream_rollup_incremental", oracle=SQL_HOURLY_ROLLUP)
 def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the continuous aggregate: each
     micro-batch appends an hourly partial-aggregate delta; the serving
@@ -645,29 +600,13 @@ def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-file micro-batches (`maxFilesPerTrigger=1`) make the
     incremental path real even on the single-file testdata source;
     each delta is O(hours × types), so a day of micro-batches folds
-    thousands of tiny rows, not the event history.
+    thousands of tiny rows, not the event history. Every run restreams
+    from scratch into its own delta root (`_run_dir`).
     """
-    # per-RUN-unique delta root (mkdtemp): each invocation restreams
-    # from scratch, and a shared path-keyed dir would let a concurrent
-    # run's cleanup delete this run's deltas mid-fold. The dir is tiny
-    # (O(hours x types) rows per batch) and /tmp-resident. It cannot
-    # be removed here — the returned DataFrame lazily re-reads it —
-    # so each dir is registered for atexit reclamation instead of
-    # leaking one per invocation.
-    delta_base = tempfile.mkdtemp(prefix="cdbp_rollup_delta_")
-    _DELTA_DIRS.append(delta_base)
+    delta_base = _run_dir("cdbp_rollup_delta_")
     events = streaming_events(spark, _stream_src(sf_dir))
     run_stream(events, rollup_delta_batch(delta_base))
-    from crime_data_batch_processing_spark.functions.exact import dsum_merge
-
-    return (
-        spark.read.parquet(delta_base)
-        .groupBy("hour_us", "event_type")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            dsum_merge("sum_value").alias("sum_value"),
-        )
-    )
+    return fold_partials(spark.read.parquet(delta_base))
 
 
 def cms_delta_batch(delta_base: str):
@@ -682,10 +621,6 @@ def cms_delta_batch(delta_base: str):
     keeps replay idempotent under foreachBatch's at-least-once
     contract.
     """
-    from crime_data_batch_processing_spark.operators.aggregates import (
-        _token_code,
-        cms_bucket_cols,
-    )
 
     def _write(batch: DataFrame, batch_id: int) -> None:
         coded = batch.select(_token_code(F.col("event_type")).alias("code"))
@@ -704,38 +639,15 @@ def cms_delta_batch(delta_base: str):
     return _write
 
 
-def _sql_stream_count_min() -> str:
-    """Built from the SAME SQL-side hash-family builders as
-    `agg_count_min`'s oracle (operators/aggregates.py), so a CMS
-    geometry change can never silently strand one of the two."""
-    from crime_data_batch_processing_spark.operators.aggregates import (
-        CMS_D,
-        sql_cms_bucket,
-        sql_token_code,
-    )
-
-    return f"""
-    WITH exact AS (
-        SELECT event_type, COUNT(*)::BIGINT AS exact_n
-        FROM events GROUP BY event_type
-    ), coded AS (
-        SELECT event_type, exact_n, {sql_token_code('event_type')} AS code
-        FROM exact
-    ), bands AS (
-        SELECT event_type, exact_n, d.d AS d,
-               {sql_cms_bucket('code', 'd.d')} AS bucket
-        FROM coded, range({CMS_D}) d(d)
-    ), cms AS (
-        SELECT d, bucket, CAST(SUM(exact_n) AS BIGINT) AS n
-        FROM bands GROUP BY d, bucket
-    )
+@query(
+    "stream_count_min",
+    oracle=f"""
+    WITH {sql_cms_ctes('event_type', 'events')}
     SELECT b.event_type, b.exact_n, MIN(c.n) AS est_n
     FROM bands b JOIN cms c USING (d, bucket)
     GROUP BY b.event_type, b.exact_n
-    """
-
-
-@query("stream_count_min", oracle=_sql_stream_count_min())
+    """,
+)
 def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming maintenance of the count-min sketch: each micro-batch
     appends its partial D×W grid; serving merges cells by SUM and
@@ -750,16 +662,11 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hash families are shared with `agg_count_min`
     (operators/aggregates.py), so the two sketches are
     interchangeable — a batch-built grid can seed the stream and vice
-    versa.
+    versa. The serving probe is `cms_estimates`, `agg_count_min`'s.
     """
-    delta_base = tempfile.mkdtemp(prefix="cdbp_cms_delta_")
-    _DELTA_DIRS.append(delta_base)
+    delta_base = _run_dir("cdbp_cms_delta_")
     events = streaming_events(spark, _stream_src(sf_dir))
     run_stream(events, cms_delta_batch(delta_base))
-    from crime_data_batch_processing_spark.operators.aggregates import (
-        _token_code,
-        cms_bucket_cols,
-    )
     from crime_data_batch_processing_spark.sources.tables import load_table
 
     grid = (
@@ -772,24 +679,7 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("exact_n"))
     )
-    # bind the char-fold code ONCE per distinct key, then band it —
-    # inlining _token_code under the explode would re-run the fold per
-    # emitted band row
-    coded = exact.select(
-        "event_type", "exact_n", _token_code(F.col("event_type")).alias("code")
-    )
-    bands = coded.select(
-        "event_type",
-        "exact_n",
-        F.posexplode(F.array(*cms_bucket_cols(F.col("code")))).alias(
-            "d", "bucket"
-        ),
-    )
-    return (
-        bands.join(grid, ["d", "bucket"])
-        .groupBy("event_type", "exact_n")
-        .agg(F.min("n").alias("est_n"))
-    )
+    return cms_estimates(exact, "event_type", grid)
 
 
 #: Deterministic re-delivery plant for the watermark-accounting key:
@@ -907,59 +797,10 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def click_purchase_left_join(
-    spark: SparkSession,
-    src_dir: str,
-    max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """The LEFT OUTER stream-stream interval-join topology
-    (unstarted) — `click_purchase_join`'s outer sibling, shared by the
-    registered query (bounded run) and the restart tests (file-by-file
-    micro-batches against a checkpoint)."""
-    clicks = (
-        streaming_events(spark, src_dir, max_files_per_trigger)
-        .where(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        streaming_events(spark, src_dir, max_files_per_trigger)
-        .where(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id
-            AND purchase_ts >= click_ts
-            AND purchase_ts <= click_ts + INTERVAL 1 HOUR
-            """
-        ),
-        "leftOuter",
-    ).select(
-        "user_id",
-        "click_id",
-        "purchase_id",
-        F.unix_micros("click_ts").alias("click_ts_us"),
-        F.unix_micros("purchase_ts").alias("purchase_ts_us"),
-    )
-
-
 @query(
     "stream_stream_left_join",
     # The oracle replays the OUTER-emission rule: matched pairs are
-    # the batch interval join; unmatched clicks appear with NULL
+    # the batch interval join (`stream_stream_join`'s oracle); unmatched clicks appear with NULL
     # purchase only once the global watermark (min of both sides'
     # max-event-time minus delay) passes the end of their match
     # window — clicks near the stream tail stay unemitted, exactly as
@@ -972,15 +813,7 @@ def click_purchase_left_join(
             (SELECT MAX(epoch_us(ts)) FROM events
              WHERE event_type = 'purchase')) - {_HOUR_US} AS w
     )
-    SELECT c.user_id,
-           c.event_id AS click_id,
-           p.event_id AS purchase_id,
-           epoch_us(c.ts) AS click_ts_us,
-           epoch_us(p.ts) AS purchase_ts_us
-    FROM events c JOIN events p
-      ON c.user_id = p.user_id
-     AND c.event_type = 'click' AND p.event_type = 'purchase'
-     AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 1 HOUR
+    {_SQL_CLICK_PURCHASE}
     UNION ALL
     SELECT c.user_id, c.event_id, NULL, epoch_us(c.ts), NULL
     FROM events c, wm
@@ -1011,7 +844,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream. Funnel drop-off analysis ("clicks that never converted")
     is this topology's canonical use.
     """
-    joined = click_purchase_left_join(spark, _stream_src(sf_dir))
+    joined = click_purchase_join(spark, _stream_src(sf_dir), how="leftOuter")
     return spark.table(run_stream(joined, "cdbp_stream_stream_left_join").name)
 
 
@@ -1570,8 +1403,7 @@ STREAM_EVAL_DOCS = 64
 #: grams per document, so one oversized eval doc could balloon the
 #: driver collect + broadcast silently. Mirror the text_tfidf
 #: IDF_TABLE_CAP discipline — limit(CAP+1) then overflow-assert, so
-#: an oversized panel fails LOUDLY instead of degrading the driver
-#: (r10 advisor finding).
+#: an oversized panel fails LOUDLY instead of degrading the driver.
 DECON_GRAM_CAP = 200_000
 
 
@@ -1669,7 +1501,7 @@ def _decon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(DECON_GRAM_CAP + 1)
         .collect()
     )
-    # explicit raise, not `assert` (r11 advisor): under `python -O`
+    # explicit raise, not `assert`: under `python -O`
     # asserts are stripped, which would silently re-enable the
     # unbounded broadcast AND let the limit(CAP+1) truncate the gram
     # set — the guard must survive optimized interpreters

@@ -1885,3 +1885,57 @@ def test_curation_stages_are_defined_once():
     assert weights == {"operators/text_analysis.py:quality_logit"}, weights
     assert digests == {"operators/pipeline.py:_card_finish"}, digests
     assert keep_first == {"operators/pipeline.py:_keep_first"}, keep_first
+
+
+def test_batch_stream_twins_share_one_body():
+    """Source guard for the batch/stream twins: `session_window`, the
+    two-argument `window("ts", "1 hour")` and `dsum_merge("sum_value")`
+    are each called in exactly one library function, and no two inline
+    `@query(oracle=...)` literals of 8 or more source lines are equal
+    after whitespace normalization (a twin registers the shared
+    oracle instead of a copy)."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    lib = Path(registry.__file__).parent
+
+    def name_of(func):
+        return getattr(func, "attr", getattr(func, "id", None))
+
+    def consts(call):
+        return [a.value if isinstance(a, ast.Constant) else None for a in call.args]
+
+    sessions, hourly, merges = set(), set(), set()
+    oracles = defaultdict(list)
+    for path in sorted(lib.rglob("*.py")):
+        src = path.read_text()
+        for top in ast.parse(src).body:
+            where = f"{path.relative_to(lib)}:{getattr(top, 'name', '<module>')}"
+            for n in ast.walk(top):
+                if isinstance(n, ast.Call):
+                    fn = name_of(n.func)
+                    if fn == "session_window":
+                        sessions.add(where)
+                    if fn == "window" and consts(n) == ["ts", "1 hour"]:
+                        hourly.add(where)
+                    if fn == "dsum_merge" and consts(n) == ["sum_value"]:
+                        merges.add(where)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    for d in n.decorator_list:
+                        if not (isinstance(d, ast.Call) and name_of(d.func) == "query"):
+                            continue
+                        for kw in d.keywords:
+                            lit = kw.value
+                            if kw.arg != "oracle" or not isinstance(
+                                lit, (ast.Constant, ast.JoinedStr)
+                            ):
+                                continue
+                            if lit.end_lineno - lit.lineno + 1 >= 8:
+                                text = " ".join(ast.get_source_segment(src, lit).split())
+                                oracles[text].append(f"{path.relative_to(lib)}:{n.name}")
+    assert sessions == {"operators/time_windows.py:session_agg"}, sessions
+    assert hourly == {"operators/time_windows.py:hourly_agg"}, hourly
+    assert merges == {"operators/timeseries.py:fold_partials"}, merges
+    copies = [fns for fns in oracles.values() if len(fns) > 1]
+    assert not copies, copies

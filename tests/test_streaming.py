@@ -278,14 +278,14 @@ def test_left_outer_join_null_emission_across_restart(
     whose window is still open at shutdown must NOT have produced a
     premature null row."""
     from crime_data_batch_processing_spark.streaming.stream_events import (
-        click_purchase_left_join,
+        click_purchase_join,
     )
 
     src, ckpt = stream_dirs
     out = str(tmp_path / "out")
 
     def run() -> dict:
-        joined = click_purchase_left_join(spark, src)
+        joined = click_purchase_join(spark, src, how="leftOuter")
         run_stream(joined, ("parquet", out), checkpoint=ckpt)
         return {
             r.click_id: r.purchase_id
@@ -466,3 +466,21 @@ def test_bounded_runs_remove_their_scratch_checkpoints(spark, sf_dir):
     for key in ("stream_events", "stream_cdc_upsert"):
         assert registry.QUERIES[key](spark, sf_dir).count() > 0
     assert scratch() - before == set()
+
+
+def test_cdc_upsert_result_survives_a_second_call(spark, sf_dir):
+    """Each `stream_cdc_upsert` call merges into its own target: a
+    second call must not delete the files behind the frame the first
+    call returned, so that frame still equals the oracle."""
+    from crime_data_batch_processing_spark import registry
+    from tests.oracle_harness import compare, duck_connection
+
+    run = registry.QUERIES["stream_cdc_upsert"]
+    first = run(spark, sf_dir)
+    second = run(spark, sf_dir)
+    assert second.count() > 0
+    con = duck_connection(sf_dir)
+    try:
+        compare(first, con, registry.ORACLES["stream_cdc_upsert"])
+    finally:
+        con.close()

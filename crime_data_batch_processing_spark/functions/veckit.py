@@ -106,6 +106,17 @@ def sql_dot(a_expr: str, b_expr: str) -> str:
     )
 
 
+def sql_qdot(a_expr: str, b_expr: str) -> str:
+    """DuckDB rendering of `descale(idot(qa, qb))` over two ALREADY
+    quantized BIGINT lists (scale 10^6 each): the exact integer dot,
+    one HUGEINT→DOUBLE rounding, then /10^12 (exactly representable)
+    — the same single rounding as the Spark side, so bit-identical."""
+    return (
+        f"(SELECT CAST(SUM(__ax * __bx) AS DOUBLE) / {SCALE_SQ} "
+        f"FROM (SELECT unnest({a_expr}) AS __ax, unnest({b_expr}) AS __bx))"
+    )
+
+
 def sql_cosine(a_expr: str, b_expr: str) -> str:
     """DuckDB rendering of :func:`cosine`."""
     return (

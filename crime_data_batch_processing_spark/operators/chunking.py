@@ -9,7 +9,7 @@ chunks, then assign chunks/docs to fixed-token-budget packs so the
 trainer reads dense, same-size sequences.
 
 Both are pure Catalyst expressions — `split`/`sequence`/`slice`/
-`posexplode` for chunking, a partitioned window cumsum for packing —
+`explode` for chunking, a partitioned window cumsum for packing —
 no Python in the row path, so they codegen and scale like any other
 projection. Tokenization here is whitespace splitting; the BPE-ish
 regex tokenizer lives in `text_analysis` and composes the same way.
@@ -37,30 +37,13 @@ PACK_CAPACITY = 256
 PACK_SHARDS = 8
 
 
-@query(
-    "doc_chunks",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ), starts AS (
-        SELECT doc_id, t,
-               unnest(range(0, greatest(len(t), 1), {CHUNK_STRIDE})) AS i
-        FROM toks
-    )
-    SELECT doc_id,
-           i // {CHUNK_STRIDE} AS chunk_id,
-           array_to_string(list_slice(t, i + 1, i + {CHUNK_TOKENS}), ' ')
-               AS chunk_text,
-           least(i + {CHUNK_TOKENS}, len(t)) - i AS n_tokens
-    FROM starts
-    """,
-)
-def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking: every document becomes overlapping
-    {CHUNK_TOKENS}-token chunks, stride {CHUNK_STRIDE}.
+def chunk_stage(docs: DataFrame) -> DataFrame:
+    """Sliding-window chunking of a (doc_id, text) frame into (doc_id,
+    chunk_id, chunk_text, n_tokens) rows: CHUNK_TOKENS-token windows,
+    stride CHUNK_STRIDE.
 
     `sequence(0, n_tokens-1, stride)` generates the start offsets,
-    `posexplode` fans them out, `slice` cuts each window — one narrow
+    `explode` fans them out, `slice` cuts each window — one narrow
     projection plus one explode, no shuffle at all: chunking 100 TB
     is embarrassingly parallel and this plan keeps it that way (the
     explode multiplies rows ~2.3× at these document lengths, far
@@ -71,8 +54,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     toks = F.split(F.col("text"), " ")
     return (
-        load_table(spark, sf_dir, "documents")
-        .select(
+        docs.select(
             "doc_id",
             toks.alias("t"),
             F.sequence(
@@ -93,6 +75,30 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_tokens"),
         )
     )
+
+
+def sql_chunk_stage(source: str) -> str:
+    """The SQL twin of `chunk_stage` over a `{source}(doc_id, text)`
+    relation: the `toks` and `starts` CTEs plus the final SELECT."""
+    return f"""toks AS (
+        SELECT doc_id, string_split(text, ' ') AS t FROM {source}
+    ), starts AS (
+        SELECT doc_id, t,
+               unnest(range(0, greatest(len(t), 1), {CHUNK_STRIDE})) AS i
+        FROM toks
+    )
+    SELECT doc_id,
+           i // {CHUNK_STRIDE} AS chunk_id,
+           array_to_string(list_slice(t, i + 1, i + {CHUNK_TOKENS}), ' ')
+               AS chunk_text,
+           least(i + {CHUNK_TOKENS}, len(t)) - i AS n_tokens
+    FROM starts"""
+
+
+@query("doc_chunks", oracle=f"WITH {sql_chunk_stage('documents')}")
+def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window chunking of every document (`chunk_stage`)."""
+    return chunk_stage(load_table(spark, sf_dir, "documents"))
 
 
 @query(

@@ -188,53 +188,24 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIXTURE_BP = {"en": 4000, "de": 1500, "es": 1500, "fr": 1500, "zh": 1500}
 MIXTURE_BUDGET_NUM, MIXTURE_BUDGET_DEN = 3, 10
 
-_SQL_MIXTURE_CASE = " ".join(
-    f"WHEN '{k}' THEN {v}" for k, v in MIXTURE_BP.items()
-)
 
+def mixture_sample(docs: DataFrame) -> DataFrame:
+    """The mixture-rate stage over a (doc_id, lang) frame: per-lang
+    keep thresholds computed from the frame's own counts, then the
+    hash-keep filter, as (doc_id, lang) rows.
 
-@query(
-    "sample_mixture",
-    oracle=f"""
-    WITH counts AS (
-        SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang
-    ), tot AS (
-        SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM counts
-    ), rates AS (
-        SELECT lang,
-               {SAMPLE_M} * LEAST(10000,
-                   10000 * ((total * {MIXTURE_BUDGET_NUM}
-                             // {MIXTURE_BUDGET_DEN})
-                            * (CASE lang {_SQL_MIXTURE_CASE} ELSE 0 END)
-                            // 10000)
-                   // cnt) // 10000 AS thr
-        FROM counts, tot
-    )
-    SELECT d.doc_id, d.lang
-    FROM documents d JOIN rates r ON d.lang = r.lang
-    WHERE {sql_sample_hash32('d.doc_id')} < r.thr
-    """,
-)
-def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture-targeted sampling: hit a TARGET language mix, not fixed
-    per-stratum rates (`sample_stratified` is the fixed-rate cousin).
-
-    The domain/language-rebalancing pass of a pretraining pipeline:
-    given target proportions and a total budget, the keep-rate per
-    stratum is computed FROM the observed counts —
-    rate = min(1, budget·weight / observed) — so over-represented
+    rate = min(1, budget·weight / observed), so over-represented
     strata are cut to the target and under-represented ones keep all
     rows. Two passes: a tiny per-stratum count aggregate (broadcast
-    back to the scan), then the same deterministic multiplicative-hash
-    keep decision as `sample_hash` — re-runnable, partition-layout-
-    independent, co-samplable with any other table keyed the same way.
-
-    All rate math is int64 (basis points, truncating division —
-    Spark `div` and DuckDB `//` agree on non-negatives), so thresholds
-    are bit-identical cross-engine; bounds: 10^4 · budget < 2^63 keeps
-    every intermediate exact past 10^14-row corpora.
+    back onto the frame), then the same deterministic
+    multiplicative-hash keep decision as `sample_hash` — re-runnable,
+    partition-layout-independent, co-samplable with any other table
+    keyed the same way. All rate math is int64 (basis points,
+    truncating division — Spark `div` and DuckDB `//` agree on
+    non-negatives), so thresholds are bit-identical cross-engine;
+    bounds: 10^4 · budget < 2^63 keeps every intermediate exact past
+    10^14-row corpora.
     """
-    docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     w_bp = F.coalesce(
@@ -263,6 +234,39 @@ def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(sample_hash32(F.col("doc_id")) < F.col("thr"))
         .select("doc_id", "lang")
     )
+
+
+def sql_mixture_sample(source: str) -> str:
+    """The SQL twin of `mixture_sample` over a `{source}(doc_id, lang)`
+    relation: the `counts`, `tot` and `rates` CTEs plus the final
+    SELECT."""
+    case = " ".join(f"WHEN '{k}' THEN {v}" for k, v in MIXTURE_BP.items())
+    return f"""counts AS (
+        SELECT lang, COUNT(*) AS cnt FROM {source} GROUP BY lang
+    ), tot AS (
+        SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM counts
+    ), rates AS (
+        SELECT lang,
+               {SAMPLE_M} * LEAST(10000,
+                   10000 * ((total * {MIXTURE_BUDGET_NUM}
+                             // {MIXTURE_BUDGET_DEN})
+                            * (CASE lang {case} ELSE 0 END)
+                            // 10000)
+                   // cnt) // 10000 AS thr
+        FROM counts, tot
+    )
+    SELECT d.doc_id, d.lang
+    FROM {source} d JOIN rates r ON d.lang = r.lang
+    WHERE {sql_sample_hash32('d.doc_id')} < r.thr"""
+
+
+@query("sample_mixture", oracle=f"WITH {sql_mixture_sample('documents')}")
+def sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mixture-targeted sampling: hit a TARGET language mix, not fixed
+    per-stratum rates (`sample_stratified` is the fixed-rate cousin).
+    The domain/language-rebalancing pass of a pretraining pipeline,
+    over the whole corpus (`mixture_sample`)."""
+    return mixture_sample(load_table(spark, sf_dir, "documents"))
 
 
 #: Exact-size deterministic sample: the BOTTOM_K smallest hash values.
@@ -482,7 +486,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus exceeds ~ES_K*4096 docs all k winners would come from
     bucket 4095 tie-broken by doc_id, a weight-blind sample.
     Efraimidis–Spirtes requires u in (0,1); the half-bucket offset
-    keeps every u strictly inside it (r10 advisor finding).
+    keeps every u strictly inside it.
 
     Bit-exactness: rank by the monotone-equivalent ln(u)/w rather
     than u^(1/w) — `pow` is a libm call with no cross-engine

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from crime_data_batch_processing_spark.cachekit import track
+from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
 from crime_data_batch_processing_spark.functions.textkit import (
     SHINGLE_K,
     jaccard,
@@ -47,6 +48,18 @@ from crime_data_batch_processing_spark.functions.veckit import (
     idot,
     quantize,
     sql_cosine,
+    sql_qdot,
+)
+from crime_data_batch_processing_spark.operators.similarity import (
+    banded_scored_pairs,
+    knn_inc_probe,
+    knn_rank_directed,
+    signature_frame,
+    sql_knn_ranked_ctes,
+    sql_pair_cand_ctes,
+    sql_weak_scored_ctes,
+    write_sig_index,
+    _SQL_QUANT,
 )
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.sources.tables import (
@@ -75,7 +88,7 @@ HAMMING_THRESHOLD = 7
 #: binds — the max per-doc degree ever observed on driver data is 120
 #: (sf0.1) — but on a vocabulary-saturated corpus every fingerprint
 #: converges and the UNCAPPED pair set is quadratic (186M pairs at
-#: the 500k-doc soak tier, round 8). The cap turns worst-case output
+#: the 500k-doc soak tier). The cap turns worst-case output
 #: O(n²) into O(n·k); dedup consumers only need nearest neighbors,
 #: never the full pair list.
 SIMHASH_TOPK = 128
@@ -329,7 +342,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as `dedup_minhash`'s oracle (see that key's registration note and
     tests/test_llm_ops.py::test_minhash_oracle_validity_full_recall).
 
-    Why consumers moved off `dedup_ngram_jaccard` (round 8): the
+    Why consumers use this instead of `dedup_ngram_jaccard`: the
     shared-shingle join's candidate mass is sum_g df(g)^2 — on a
     vocabulary-saturated corpus (the builder soak tiers) it measured
     ~n^2 growth and dragged every downstream graph/cluster key
@@ -479,8 +492,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STRINGS, not Column-API chains: each Column operator is a Py4J
     # round-trip plus an eager re-analysis of the growing Dataset, and
     # this 64-wide tree measured 1.1-1.5 s of pure DRIVER time per
-    # build (guide §5 — driver cost is real at any scale; r15 A/B:
-    # plan 1.48 s → 0.23 s warm, byte-identical output, same exec).
+    # build (driver cost is real at any scale; measured A/B: plan
+    # 1.48 s → 0.23 s warm, byte-identical output, same exec).
     # The parsed expressions are the SAME resolved tree, so codegen
     # and the oracle equivalence are untouched. Packing joins with `|`
     # over disjoint bit terms — exactly the bitwiseOR fold it replaces.
@@ -610,36 +623,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_embedding_lsh() -> str:
-    """Full-value DuckDB oracle for `dedup_embedding_lsh`: replay the
-    hyperplane signature → banding → bucket-collision candidate pairs →
-    exact-cosine verify, sharing the signature/band SQL builders with
-    `sim_search_lsh` (operators/similarity.py) so both engines bucket
-    identically."""
-    from crime_data_batch_processing_spark.operators.similarity import (
-        _SQL_QUANT,
-        sql_bands_cte,
-        sql_sig_expr,
-    )
-
+    """Full-value DuckDB oracle for `dedup_embedding_lsh`: the weak
+    scored chain (`similarity.sql_weak_scored_ctes` — signature,
+    banding, bucket-collision pairs, exact-cosine verify, the same
+    signature/band SQL as `sim_search_lsh`, so both engines bucket
+    identically) cut at the threshold."""
     return f"""
-    WITH q AS (
-        SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
-        FROM embeddings
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
-    ), bands AS (
-        {sql_bands_cte()}
-    ), cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS MATERIALIZED (
-        SELECT cand.vec_a, cand.vec_b,
-               {sql_cosine('ea.embedding', 'eb.embedding')} AS cos_sim
-        FROM cand
-        JOIN embeddings ea ON ea.vec_id = cand.vec_a
-        JOIN embeddings eb ON eb.vec_id = cand.vec_b
-    )
+    WITH {sql_weak_scored_ctes()}
     SELECT vec_a, vec_b, cos_sim FROM scored
     WHERE cos_sim >= {COSINE_THRESHOLD}
     """
@@ -676,10 +666,6 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     follow `sim_search_lsh`'s weak-neighbor tuning so the two share
     one verified signature pipeline on this corpus.
     """
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        signature_frame,
-    )
 
     emb = spread_table(spark, sf_dir, "embeddings")
     with_q = signature_frame(
@@ -763,21 +749,10 @@ def _sql_prod_scored_ctes(
     the maintain-lifecycle oracle models a corpus from which curation
     PURGED generation A, so its rows must not exist anywhere in the
     chain (not merely be filtered from the final cut)."""
-    from crime_data_batch_processing_spark.operators.similarity import (
-        _SQL_QUANT,
-        sql_bands_cte,
-        sql_sig_expr,
-    )
-
-    def qdot(a: str, b: str) -> str:
-        return (
-            "(SELECT CAST(SUM(__ax * __bx) AS DOUBLE) / 1000000000000.0 "
-            f"FROM (SELECT unnest({a}) AS __ax, unnest({b}) AS __bx))"
-        )
 
     qcos = (
-        f"({qdot('ca.qe', 'cb.qe')} / "
-        f"sqrt({qdot('ca.qe', 'ca.qe')} * {qdot('cb.qe', 'cb.qe')}))"
+        f"({sql_qdot('ca.qe', 'cb.qe')} / "
+        f"sqrt({sql_qdot('ca.qe', 'ca.qe')} * {sql_qdot('cb.qe', 'cb.qe')}))"
     )
     gen_a_arm = (
         f"""
@@ -797,15 +772,8 @@ def _sql_prod_scored_ctes(
         {gen_a_arm}
         {corpus_extra}
     ), q AS (SELECT vec_id, qe FROM corpus
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sql_sig_expr(PROD_LSH_BITS)}) AS sig FROM q
-    ), bands AS (
-        {sql_bands_cte(PROD_LSH_BANDS, PROD_LSH_BAND_BITS)}
-    ), cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS MATERIALIZED (
+    ), {sql_pair_cand_ctes(PROD_LSH_BITS, PROD_LSH_BANDS, PROD_LSH_BAND_BITS)},
+    scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b, {qcos} AS cos_sim
         FROM cand
         JOIN corpus ca ON ca.vec_id = cand.vec_a
@@ -851,10 +819,6 @@ def dedup_embedding_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately (tests/test_llm_ops.py) at fixture scale, and the
     recall analysis above covers the planted regime analytically.
     """
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        signature_frame,
-    )
 
     emb = spread_table(spark, sf_dir, "embeddings")
     with_q = signature_frame(
@@ -870,27 +834,7 @@ def _sql_knn_graph_prod_ctes() -> str:
     symmetrized and ranked into `ranked(src, rank, dst, cos_sim)`.
     Used by the `sim_search_knn_graph_prod` oracle and, as the edge
     input, by `dedup_semantic`'s."""
-    return f"""{_sql_prod_scored_ctes()}, directed AS (
-        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
-        UNION ALL
-        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
-    ), ranked AS (
-        SELECT src, rank, dst, cos_sim FROM (
-            SELECT src, dst, cos_sim,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY cos_sim DESC, dst ASC)
-                       AS rank
-            FROM directed
-        ) WHERE rank <= {_knn_k()}
-    )"""
-
-
-def _knn_k() -> int:
-    from crime_data_batch_processing_spark.operators.similarity import (
-        KNN_K,
-    )
-
-    return KNN_K
+    return f"{_sql_prod_scored_ctes()}, {sql_knn_ranked_ctes()}"
 
 
 def _sql_knn_graph_prod() -> str:
@@ -920,10 +864,10 @@ def sim_search_knn_graph_prod(
     cos ≈ 0.9999 (asserted in tests, analogous to the lsh_prod
     recall contract).
 
-    Why both rungs exist: the r11 soak measured the weak 18-bit/6×3
-    layout at a FLAT 55% candidate mass on structureless corpora
-    (quadratic pair term — s100 DNF), while these constants hold
-    3.7–3.8% on the same data (BASELINE round-11 probes). A
+    Why both rungs exist: on structureless soak corpora the weak
+    18-bit/6×3 layout measured a FLAT 55% candidate mass (quadratic
+    pair term — the s100 tier did not finish), while these constants
+    hold 3.7–3.8% on the same data (BASELINE.md soak probes). A
     production embedding corpus has near-dup neighbors at cos ≥ 0.85
     (per-bit agreement ≥ 0.95 → recall across 8 bands ≈ 0.9998),
     which is exactly the planted regime this key verifies. The weak
@@ -931,11 +875,6 @@ def sim_search_knn_graph_prod(
     (cos 0.3–0.5) are below any geometry that prunes — recall there
     is the point; here, pruning is.
     """
-    from crime_data_batch_processing_spark.operators.similarity import (
-        banded_scored_pairs,
-        knn_rank_directed,
-        signature_frame,
-    )
 
     emb = spread_table(spark, sf_dir, "embeddings")
     with_q = signature_frame(
@@ -1089,10 +1028,10 @@ def sim_search_knn_inc_prod(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """INCREMENTAL kNN at the PRODUCTION band geometry — the scale
-    rung the r11 BASELINE soak adjudication names as "the path" for
-    graph maintenance (the weak 18-bit/6×3 incremental key carries a
-    measured candidate-mass caveat; these 64-bit/8×8 constants hold
-    3.7–3.8% candidate mass and complete every soak tier).
+    rung for graph maintenance (the weak 18-bit/6×3 incremental key
+    carries a measured candidate-mass caveat; these 64-bit/8×8
+    constants hold 3.7–3.8% candidate mass and complete every soak
+    tier, BASELINE.md soak probes).
 
     The ingest story is the planted corpus's own: the persisted
     signature index covers the already-ingested base corpus, and the
@@ -1113,15 +1052,6 @@ def sim_search_knn_inc_prod(
     and offset so any constants change keys a fresh index build
     instead of serving stale signatures (the ZORDER_KIND staleness
     class)."""
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        knn_inc_probe,
-        signature_frame,
-        write_sig_index,
-    )
 
     base_dir = scratch_dir(
         f"knninc_prod_b{PROD_LSH_BITS}x{PROD_LSH_BAND_BITS}"
@@ -1203,15 +1133,6 @@ def dedup_semantic_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tuple-identical to `dedup_semantic`'s restriction — pinned by
     test, and the oracle replays exactly that restriction.
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        knn_inc_probe,
-        signature_frame,
-        write_sig_index,
-    )
 
     base_dir = scratch_dir(
         f"semdedupinc_b{PROD_LSH_BITS}x{PROD_LSH_BAND_BITS}"
@@ -1288,41 +1209,35 @@ def _sql_corpus_extra_gen_b() -> str:
         FROM base WHERE vec_id % {PLANT_EVERY} = 0"""
 
 
-def _sql_index_append() -> str:
-    """Full-value DuckDB oracle for `sim_search_index_append`: the
-    union-replay form over base ∪ A ∪ B — signature, banding, and
-    scoring over the WHOLE two-generation corpus (the grown persisted
-    index and the in-plan batch produce the same integers by
-    construction), the kNN ranking cut to batch B's sources. The
-    restriction IS the contract: the per-src rank window never mixes
-    sources, so the full graph cut to src >= PLANT2_OFFSET equals
-    grown-index-plus-probe edge-for-edge (the inc-equals-rebuild
-    invariant at the GROWN index, pinned as a Spark-vs-Spark test)."""
+def _sql_gen_b_edges(gen_a: bool) -> str:
+    """Full-value DuckDB oracle of the persisted-index lifecycle keys:
+    the union-replay form over base ∪ A ∪ B (`gen_a=True`,
+    `sim_search_index_append`) or base ∪ B (`gen_a=False`,
+    `sim_search_index_maintain`, whose curation PURGED generation A:
+    `_sql_prod_scored_ctes(gen_a=False)` drops it from the whole
+    chain, not merely from the final cut). Signature, banding and
+    scoring run over the whole corpus (the persisted index and the
+    in-plan batch produce the same integers by construction), and the
+    kNN ranking is cut to batch B's sources. The restriction IS the
+    contract: the per-src rank window never mixes sources, so the
+    full graph cut to src >= PLANT2_OFFSET equals index-plus-probe
+    edge-for-edge (the inc-equals-rebuild invariant, pinned as a
+    Spark-vs-Spark test). For the maintain key, a generation-A row the
+    Spark-side verdict wrongly kept would surface as a probe candidate
+    and mismatch this oracle, so the compare checks the purge too."""
     return f"""
-    WITH {_sql_prod_scored_ctes(_sql_corpus_extra_gen_b())}, directed AS (
-        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
-        UNION ALL
-        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
-    ), ranked AS (
-        SELECT src, rank, dst, cos_sim FROM (
-            SELECT src, dst, cos_sim,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY cos_sim DESC, dst ASC)
-                       AS rank
-            FROM directed
-        ) WHERE rank <= {_knn_k()}
-    )
+    WITH {_sql_prod_scored_ctes(_sql_corpus_extra_gen_b(), gen_a=gen_a)},
+    {sql_knn_ranked_ctes()}
     SELECT src, rank, dst, cos_sim FROM ranked
     WHERE src >= {PLANT2_OFFSET}
     """
 
 
-@query("sim_search_index_append", oracle=_sql_index_append())
+@query("sim_search_index_append", oracle=_sql_gen_b_edges(gen_a=True))
 def sim_search_index_append(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The persisted-index APPEND lifecycle (r12 verdict item 3): two
-    successive ingests against ONE index. Ingest A probed the base
+    """The persisted-index APPEND lifecycle: two successive ingests against ONE index. Ingest A probed the base
     index and APPENDED its signatures and band rows; this key is
     ingest B probing the GROWN index — proving the maintenance story
     the incremental family's docstrings claim ("appended on real
@@ -1350,15 +1265,6 @@ def sim_search_index_append(
     self-join never runs, and the index grows by exactly the ingested
     rows (parquet append = new files, no rewrite of existing ones).
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        knn_inc_probe,
-        signature_frame,
-        write_sig_index,
-    )
 
     base_dir = scratch_dir(
         f"knnappend_b{PROD_LSH_BITS}x{PROD_LSH_BAND_BITS}"
@@ -1430,7 +1336,6 @@ def _maintain_dirs(sf_dir: str) -> dict[str, str]:
     and the curation-drop audit sidecar. One definition so the
     contract tests inspect the exact directories the key builds
     (never respell a fixture kind in a test)."""
-    from crime_data_batch_processing_spark.fixtures import scratch_dir
 
     base = scratch_dir(
         f"knnmaint_b{PROD_LSH_BITS}x{PROD_LSH_BAND_BITS}"
@@ -1451,45 +1356,12 @@ def _maintain_dirs(sf_dir: str) -> dict[str, str]:
     }
 
 
-def _sql_index_maintain() -> str:
-    """Full-value DuckDB oracle for `sim_search_index_maintain`: the
-    union-replay form over a corpus from which curation PURGED
-    generation A — `_sql_prod_scored_ctes(gen_a=False)` builds
-    base ∪ B only, so a generation-A row cannot appear anywhere in
-    the chain (not merely filtered from the final cut), exactly what
-    the post-purge index guarantees. The ranking is cut to batch B's
-    sources (the inc-equals-rebuild restriction at the MAINTAINED
-    index). If the Spark-side curation verdict ever kept a
-    generation-A row (recall < 1 at these constants would be a bug —
-    dedup_semantic's tests pin full planted recall), that row would
-    surface as a probe candidate and hash-mismatch this oracle — the
-    compare checks the purge, not just the probe."""
-    return f"""
-    WITH {_sql_prod_scored_ctes(_sql_corpus_extra_gen_b(), gen_a=False)},
-    directed AS (
-        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
-        UNION ALL
-        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
-    ), ranked AS (
-        SELECT src, rank, dst, cos_sim FROM (
-            SELECT src, dst, cos_sim,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY cos_sim DESC, dst ASC)
-                       AS rank
-            FROM directed
-        ) WHERE rank <= {_knn_k()}
-    )
-    SELECT src, rank, dst, cos_sim FROM ranked
-    WHERE src >= {PLANT2_OFFSET}
-    """
-
-
-@query("sim_search_index_maintain", oracle=_sql_index_maintain())
+@query("sim_search_index_maintain", oracle=_sql_gen_b_edges(gen_a=False))
 def sim_search_index_maintain(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The index MAINTENANCE half of the persisted-index lifecycle
-    (r13 verdict item 1): compaction + curation-driven delete
+    """The index MAINTENANCE half of the persisted-index lifecycle:
+    compaction + curation-driven delete
     propagation, closing build → append → compact/purge. The append
     lifecycle (`sim_search_index_append`) grows the signature/band
     index by new parquet files forever — small-file proliferation,
@@ -1529,12 +1401,6 @@ def sim_search_index_maintain(
     gaps `snapshot_expire`/`snapshot_restore` close for snapshots and
     this key closes for index artifacts.
     """
-    from crime_data_batch_processing_spark.fixtures import build_once
-    from crime_data_batch_processing_spark.operators.similarity import (
-        knn_inc_probe,
-        signature_frame,
-        write_sig_index,
-    )
 
     dirs = _maintain_dirs(sf_dir)
     corpus = _planted_quantized2(
@@ -1622,8 +1488,8 @@ def connected_components(
     silently returning split components.
     """
     a, b = pairs.columns[:2]
-    # symmetrize via ONE explode, not a self-union (r14
-    # knn_rank_directed lesson): `pairs` is usually the whole banded
+    # symmetrize via ONE explode, not a self-union (as in
+    # `knn_rank_directed`): `pairs` is usually the whole banded
     # candidate + exact-verify chain, and a union of two selects over
     # it RUNS that chain once per branch when the persist below
     # materializes — the explode emits both directed rows in the same
@@ -1675,7 +1541,7 @@ def connected_components(
             # LAZY checkpoint: the convergence count below is the
             # round's first action, so it both materializes the
             # checkpoint AND returns the scalar — one job per round
-            # instead of the eager-checkpoint-then-count two (r14:
+            # instead of the eager-checkpoint-then-count two (measured
             # ~0.2-0.3s of per-job overhead per round per key)
             .localCheckpoint(eager=False)
         )
@@ -1790,7 +1656,7 @@ def connected_components_star(
         # Symmetrized by ONE explode, not a self-union: `edges` is the
         # (un-checkpointed) inner star's whole plan when this is the
         # outer star of a round, and a union would plan/run it per
-        # branch (r14 knn_rank_directed lesson).
+        # branch (as in `knn_rank_directed`).
         both = edges.select(
             F.explode(
                 F.array(
@@ -1829,8 +1695,8 @@ def connected_components_star(
         # and because both edge frames are DISTINCT sets, equality ⟺
         # |e| == |stepped| AND stepped∖e = ∅ — the count gate skips
         # BOTH exceptAll set-differences on every non-final round and
-        # the second one always (r14: exceptAll is 2 shuffles each,
-        # previously 2 per round)
+        # the second one always (exceptAll is 2 shuffles each; without
+        # the gate that is 2 per round)
         stepped = _star(_star(e, large=True), large=False).localCheckpoint(
             eager=False
         )
@@ -2178,10 +2044,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding recall miss would surface as a hash mismatch — the guard
     the minhash key documents applies here identically.
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
 
     base = scratch_dir("incdedup", sf_dir, "documents")
     digest_dir, index_dir, shingle_dir = (

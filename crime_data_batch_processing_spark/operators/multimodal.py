@@ -35,8 +35,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
+from crime_data_batch_processing_spark.functions.veckit import sql_qdot
+from crime_data_batch_processing_spark.operators.llm_dedup import (
+    PLANT_EVERY,
+    PLANT_OFFSET,
+    PROD_LSH_BAND_BITS,
+    PROD_LSH_BANDS,
+    PROD_LSH_BITS,
+    SEMDEDUP_INC_MOD,
+    SEMDEDUP_INC_RESIDUE,
+    semantic_verdict,
+    sql_semantic_witness_cte,
+)
+from crime_data_batch_processing_spark.operators.similarity import (
+    banded_scored_pairs,
+    knn_inc_probe,
+    signature_frame,
+    sql_knn_ranked_ctes,
+    sql_pair_cand_ctes,
+    write_sig_index,
+)
 from crime_data_batch_processing_spark.registry import query
-from crime_data_batch_processing_spark.sources.tables import load_table
+from crime_data_batch_processing_spark.sources.tables import load_table, spread
 
 CHECKSUM_MOD = 1_000_000_007
 #: scan_binary fixture size — enough files to exercise listing +
@@ -322,7 +342,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → header parse + pixel-plane slice → per-channel integer
     stats, all through the generic `transform_media` plumbing — the
     executed form of the plug point `decode_media` documents for
-    PIL/ffmpeg formats (round-8 verdict item 8).
+    PIL/ffmpeg formats.
 
     The fixture writes one binary-PPM (P6) file per doc_id < PPM_DOCS
     with deterministic dims/pixels and three legal header spellings
@@ -692,12 +712,12 @@ MEDIA_MIX_MULT = 2654435761
 MEDIA_MIX_MOD = 1 << 32
 MEDIA_COSINE_THRESHOLD = 0.97
 MEDIA_PLANT_SUFFIX = " "
-#: WIDE band geometry for the 128-bit media rung (r12 verdict item 2
-#: — the multi-word signature knob, bits ~ log N): 8 bands of 16 bits
-#: across TWO signature words. Numpy band replay on the REAL corpus
+#: WIDE band geometry for the 128-bit media rung (the multi-word
+#: signature knob, bits ~ log N): 8 bands of 16 bits across TWO
+#: signature words. Numpy band replay on the REAL corpus
 #: (sf0.1, 5250 payloads): candidate ratio drops 0.0458 → 0.00042
-#: (109×) — the knob that removes the fixed-geometry N² boundary the
-#: r12 judge graded `weak` — at a measured planted recall of 249/250
+#: (109×) — the knob that removes the fixed-geometry N² boundary of
+#: the 64-bit rung — at a measured planted recall of 249/250
 #: (the one miss, src=3000 at cos 0.9949, is a SHORT payload whose
 #: ~10-gram delta flips more sign bits than its cosine suggests;
 #: 192-bit/12×16 misses the same pair, so the loss is inherent to
@@ -708,10 +728,9 @@ MEDIA_WIDE_BITS = 128
 MEDIA_WIDE_BANDS = 8
 MEDIA_WIDE_BAND_BITS = 16
 
-#: The NEXT-decade geometry (r13 verdict item 3), chosen by
-#: measurement, not by the verdict's guess: the numpy band replay on
-#: the sf0.1 media corpus (5250 payloads, tools/… probe re-run r14)
-#: measured the candidate-pair union ratio per geometry as
+#: The NEXT-decade geometry, chosen by measurement: the numpy band
+#: replay on the sf0.1 media corpus (5250 payloads) measured the
+#: candidate-pair union ratio per geometry as
 #:   64-bit  8×8  → 4.59%    (recall 250/250)
 #:   128-bit 8×16 → 0.0416%  (recall 249/250, the shipped wide rung)
 #:   192-bit 12×16 → 0.0606% (recall 249/250 — REJECTED: adding
@@ -744,20 +763,6 @@ def _sql_media_ctes(bits: int, bands: int, band_bits: int) -> str:
     3.3 s (un-hinted it ran out of memory at 12.5 GiB), the 256-bit
     rung 9.1 s (31 s with `q` materialized too). Materializing `q`
     also slows the 128-bit rung to 7.5 s."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PLANT_EVERY,
-        PLANT_OFFSET,
-    )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        sql_bands_cte,
-        sql_sig_expr,
-    )
-
-    def qdot(a: str, b: str) -> str:
-        return (
-            "(SELECT CAST(SUM(__ax * __bx) AS DOUBLE) / 1000000000000.0 "
-            f"FROM (SELECT unnest({a}) AS __ax, unnest({b}) AS __bx))"
-        )
 
     gram = "ascii(text[i])"
     for j in range(1, MEDIA_GRAM_K):
@@ -796,19 +801,11 @@ def _sql_media_ctes(bits: int, bands: int, band_bits: int) -> str:
     ), q AS (
         SELECT * FROM q0
         WHERE len(list_filter(qe, x -> x <> 0)) > 0
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sql_sig_expr(bits)}) AS sig FROM q
-    ), bands AS (
-        {sql_bands_cte(bands, band_bits)}
-    ), cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), nrm AS (
-        SELECT vec_id, {qdot('qe', 'qe')} AS nsq FROM q
+    ), {sql_pair_cand_ctes(bits, bands, band_bits)}, nrm AS (
+        SELECT vec_id, {sql_qdot('qe', 'qe')} AS nsq FROM q
     ), scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b,
-               ({qdot('ca.qe', 'cb.qe')} / sqrt(na.nsq * nb.nsq))
+               ({sql_qdot('ca.qe', 'cb.qe')} / sqrt(na.nsq * nb.nsq))
                    AS cos_sim
         FROM cand
         JOIN q ca ON ca.vec_id = cand.vec_a
@@ -851,11 +848,6 @@ def _media_corpus_embedded(
     Arrow pass — a filter placed after mapInPandas cannot be pushed
     through it, so the incremental paths pass their slice predicate
     here and embed only what they ingest."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PLANT_EVERY,
-        PLANT_OFFSET,
-    )
-    from crime_data_batch_processing_spark.sources.tables import spread
 
     docs = load_table(spark, sf_dir, "documents")
     # same id-collision guard as llm_dedup._planted_quantized: a
@@ -898,11 +890,10 @@ def _media_corpus_embedded(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         # NESTED (ships by value); rolling-hash + signed bincount,
-        # vectorized ACROSS the whole Arrow batch (r15, guide §4.2 —
-        # native code inside the UDF): the previous per-payload Python
-        # loop paid ~k numpy-call overheads per document. All payloads
-        # are concatenated; windows that straddle a document boundary
-        # are masked out (doc_of[i] == doc_of[i+k-1]); each surviving
+        # vectorized ACROSS the whole Arrow batch (native code inside
+        # the UDF): a per-payload Python loop pays ~k numpy-call
+        # overheads per document. All payloads are concatenated;
+        # windows that straddle a document boundary are masked out (doc_of[i] == doc_of[i+k-1]); each surviving
         # window lands in its OWN document's histogram via a
         # doc-offset flattened two-sided np.bincount (unweighted →
         # exact int64 counts; add.at measured 4x slower). Per-window
@@ -991,10 +982,6 @@ def _media_semantic_dedup(bits: int, bands: int, band_bits: int):
     """
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from crime_data_batch_processing_spark.operators.similarity import (
-            banded_scored_pairs,
-            signature_frame,
-        )
 
         with_q = signature_frame(
             _media_corpus_embedded(spark, sf_dir), bits=bits
@@ -1015,11 +1002,6 @@ def _media_semantic_dedup(bits: int, bands: int, band_bits: int):
 def _media_rungs() -> tuple[tuple[str, int, int, int], ...]:
     """(key, bits, bands, band_bits) of each media semantic rung, in
     registration order."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PROD_LSH_BAND_BITS,
-        PROD_LSH_BANDS,
-        PROD_LSH_BITS,
-    )
 
     return (
         (
@@ -1056,30 +1038,11 @@ def _sql_media_semantic_inc() -> str:
     threshold, restricted to the ingest batch — the union-replay form
     (probe edges equal the full graph's restriction to batch sources,
     the inc-equals-rebuild invariant)."""
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PLANT_OFFSET,
-        SEMDEDUP_INC_MOD,
-        SEMDEDUP_INC_RESIDUE,
-        _knn_k,
-        sql_semantic_witness_cte,
-    )
 
     return f"""
     WITH {_sql_media_ctes(
         MEDIA_WIDE_BITS, MEDIA_WIDE_BANDS, MEDIA_WIDE_BAND_BITS
-    )}, directed AS (
-        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
-        UNION ALL
-        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
-    ), ranked AS (
-        SELECT src, rank, dst, cos_sim FROM (
-            SELECT src, dst, cos_sim,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY cos_sim DESC, dst ASC)
-                       AS rank
-            FROM directed
-        ) WHERE rank <= {_knn_k()}
-    ),
+    )}, {sql_knn_ranked_ctes()},
     {sql_semantic_witness_cte(MEDIA_COSINE_THRESHOLD)},
     batch AS (
         SELECT vec_id FROM q
@@ -1100,8 +1063,7 @@ def _sql_media_semantic_inc() -> str:
 def multimodal_dedup_semantic_inc(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """INCREMENTAL semantic MEDIA dedup (r12 verdict item 6): the
-    keep/drop verdict for a newly ingested media batch, decided from
+    """INCREMENTAL semantic MEDIA dedup: the keep/drop verdict for a newly ingested media batch, decided from
     the incremental probe against a persisted media signature index —
     `dedup_semantic_inc`'s per-ingest curation cadence composed with
     the media embed, at the 128-bit WIDE geometry (the multi-word
@@ -1130,18 +1092,6 @@ def multimodal_dedup_semantic_inc(
     any constants change keys a fresh index build (the ZORDER_KIND
     staleness class).
     """
-    from crime_data_batch_processing_spark.operators.llm_dedup import (
-        PLANT_EVERY,
-        PLANT_OFFSET,
-        SEMDEDUP_INC_MOD,
-        SEMDEDUP_INC_RESIDUE,
-        semantic_verdict,
-    )
-    from crime_data_batch_processing_spark.operators.similarity import (
-        knn_inc_probe,
-        signature_frame,
-        write_sig_index,
-    )
 
     base_dir = scratch_dir(
         f"mediainc_b{MEDIA_WIDE_BITS}x{MEDIA_WIDE_BAND_BITS}"

@@ -35,14 +35,11 @@ from crime_data_batch_processing_spark.functions.textkit import (
     tokens,
 )
 from crime_data_batch_processing_spark.operators.filters import (
-    _SQL_MIXTURE_CASE,
-    MIXTURE_BP,
-    MIXTURE_BUDGET_DEN,
-    MIXTURE_BUDGET_NUM,
-    SAMPLE_M,
     SPLIT_TRAIN_HI,
     SPLIT_VAL_HI,
+    mixture_sample,
     sample_hash32,
+    sql_mixture_sample,
     sql_sample_hash32,
 )
 from crime_data_batch_processing_spark.operators.text_analysis import (
@@ -57,8 +54,8 @@ from crime_data_batch_processing_spark.operators.text_analysis import (
     sql_bm25_ctes,
 )
 from crime_data_batch_processing_spark.operators.chunking import (
-    CHUNK_STRIDE,
-    CHUNK_TOKENS,
+    chunk_stage,
+    sql_chunk_stage,
 )
 from crime_data_batch_processing_spark.operators.llm_dedup import (
     _SQL_PAIR_BASE,
@@ -88,15 +85,30 @@ MIN_TOKENS = 20
 MIN_DISTINCT_RATIO = 0.35
 
 
+def gopher_keep() -> Column:
+    """The Gopher keep predicate over a `text` column: at least
+    MIN_TOKENS whitespace tokens, and a distinct-token ratio of at
+    least MIN_DISTINCT_RATIO."""
+    toks_c = tokens("text")
+    n = F.size(toks_c)
+    return (n >= MIN_TOKENS) & (
+        F.size(F.array_distinct(toks_c)).cast("double") / n >= MIN_DISTINCT_RATIO
+    )
+
+
+#: The SQL twin of `gopher_keep`, a WHERE-clause predicate over `text`.
+_SQL_GOPHER_KEEP = f"""len(string_split(text, ' ')) >= {MIN_TOKENS}
+          AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+              / len(string_split(text, ' ')) >= {MIN_DISTINCT_RATIO}"""
+
+
 @query(
     "pipeline_pretrain",
     oracle=f"""
     WITH q AS (
         SELECT doc_id, text
         FROM documents
-        WHERE len(string_split(text, ' ')) >= {MIN_TOKENS}
-          AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-              / len(string_split(text, ' ')) >= {MIN_DISTINCT_RATIO}
+        WHERE {_SQL_GOPHER_KEEP}
     ), kept AS (
         SELECT MIN(doc_id) AS doc_id, text FROM q GROUP BY text
     ), dup_b AS (
@@ -108,19 +120,7 @@ MIN_DISTINCT_RATIO = 0.35
     ), survivors AS (
         SELECT doc_id, text FROM kept
         WHERE doc_id NOT IN (SELECT doc_b FROM dup_b)
-    ), toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t FROM survivors
-    ), starts AS (
-        SELECT doc_id, t,
-               unnest(range(0, greatest(len(t), 1), {CHUNK_STRIDE})) AS i
-        FROM toks
-    )
-    SELECT doc_id,
-           i // {CHUNK_STRIDE} AS chunk_id,
-           array_to_string(list_slice(t, i + 1, i + {CHUNK_TOKENS}), ' ')
-               AS chunk_text,
-           least(i + {CHUNK_TOKENS}, len(t)) - i AS n_tokens
-    FROM starts
+    ), {sql_chunk_stage('survivors')}
     """,
 )
 def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,43 +131,19 @@ def pipeline_pretrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower-id twin survives) — the cheap non-transitive heuristic;
     `dedup_clusters` is the transitive-closure upgrade when cluster
     identity matters. The final output is the training-ready chunk
-    stream of the surviving corpus.
+    stream of the surviving corpus (`chunk_stage`).
     """
     docs = spread_table(spark, sf_dir, "documents")
-    toks_c = tokens("text")
-    n = F.size(toks_c)
-    quality = docs.where(
-        (n >= MIN_TOKENS)
-        & (F.size(F.array_distinct(toks_c)).cast("double") / n >= MIN_DISTINCT_RATIO)
+    kept = (
+        docs.where(gopher_keep())
+        .groupBy("text")
+        .agg(F.min("doc_id").alias("doc_id"))
     )
-    kept = quality.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     dup_b = dedup_ngram_jaccard(spark, sf_dir).select("doc_b").distinct()
     survivors = kept.join(
         dup_b, kept["doc_id"] == dup_b["doc_b"], "left_anti"
     )
-    t = F.split(F.col("text"), " ")
-    return (
-        survivors.select(
-            "doc_id",
-            t.alias("t"),
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.size(t) - 1, F.lit(0)),
-                F.lit(CHUNK_STRIDE),
-            ).alias("starts"),
-        )
-        .select("doc_id", "t", F.explode("starts").alias("i"))
-        .select(
-            "doc_id",
-            (F.col("i") / CHUNK_STRIDE).cast("long").alias("chunk_id"),
-            F.array_join(
-                F.slice(F.col("t"), F.col("i") + 1, CHUNK_TOKENS), " "
-            ).alias("chunk_text"),
-            (
-                F.least(F.col("i") + CHUNK_TOKENS, F.size("t")) - F.col("i")
-            ).alias("n_tokens"),
-        )
-    )
+    return chunk_stage(survivors)
 
 
 _SQL_CURATE = f"""
@@ -188,30 +164,12 @@ _SQL_CURATE = f"""
         WHERE c.doc_id NOT IN (SELECT doc_id FROM hits)
     ), q AS (
         SELECT * FROM clean
-        WHERE len(string_split(text, ' ')) >= {MIN_TOKENS}
-          AND CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-              / len(string_split(text, ' ')) >= {MIN_DISTINCT_RATIO}
+        WHERE {_SQL_GOPHER_KEEP}
     ), kept AS (
         SELECT d.doc_id, d.lang
         FROM q d JOIN (SELECT MIN(doc_id) AS m FROM q GROUP BY text) k
           ON d.doc_id = k.m
-    ), counts AS (
-        SELECT lang, COUNT(*) AS cnt FROM kept GROUP BY lang
-    ), tot AS (
-        SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM counts
-    ), rates AS (
-        SELECT lang,
-               {SAMPLE_M} * LEAST(10000,
-                   10000 * ((total * {MIXTURE_BUDGET_NUM}
-                             // {MIXTURE_BUDGET_DEN})
-                            * (CASE lang {_SQL_MIXTURE_CASE} ELSE 0 END)
-                            // 10000)
-                   // cnt) // 10000 AS thr
-        FROM counts, tot
-    )
-    SELECT d.doc_id, d.lang
-    FROM kept d JOIN rates r ON d.lang = r.lang
-    WHERE {sql_sample_hash32('d.doc_id')} < r.thr
+    ), {sql_mixture_sample('kept')}
 """
 
 
@@ -233,9 +191,9 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup aggregate are the only corpus-sized shuffles; the mixture
     stage adds a tiny count aggregate broadcast back onto the
     survivors. Stage semantics are the registered operators'
-    (`text_decontaminate`, `pipeline_pretrain`'s quality rules,
-    `dedup_exact` keep-first, `sample_mixture` rate algebra), so each
-    piece is also independently driver-verified.
+    (`text_decontaminate`, `gopher_keep`, `dedup_exact` keep-first,
+    `mixture_sample`), so each piece is also independently
+    driver-verified.
     """
     docs = spread_table(spark, sf_dir, "documents")
     verdicts = text_decontaminate(spark, sf_dir)
@@ -244,12 +202,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             verdicts.where(~F.col("contaminated")).select("doc_id"), "doc_id"
         )
     )
-    toks_c = tokens("text")
-    n = F.size(toks_c)
-    q = clean.where(
-        (n >= MIN_TOKENS)
-        & (F.size(F.array_distinct(toks_c)).cast("double") / n >= MIN_DISTINCT_RATIO)
-    )
+    q = clean.where(gopher_keep())
     winners = q.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     # persisted: the curated spine feeds the rate computation AND the
     # final sampled join — un-persisted, each branch re-runs the
@@ -260,32 +213,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
         .transform(track)
     )
-
-    counts = kept.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt"))
-    total = counts.agg(F.sum("cnt").alias("total"))
-    w_bp = F.coalesce(
-        *[F.when(F.col("lang") == k, F.lit(v)) for k, v in MIXTURE_BP.items()],
-        F.lit(0),
-    ).cast("long")
-    rates = (
-        with_scalars(counts, total)
-        .withColumn("w_bp", w_bp)
-        .withColumn(
-            "thr",
-            F.expr(
-                f"{SAMPLE_M}L * least(10000L, "
-                f"10000L * ((total * {MIXTURE_BUDGET_NUM} "
-                f"div {MIXTURE_BUDGET_DEN}) * w_bp div 10000) "
-                f"div cnt) div 10000"
-            ),
-        )
-        .select("lang", "thr")
-    )
-    return (
-        kept.join(F.broadcast(rates), "lang")
-        .where(sample_hash32(F.col("doc_id")) < F.col("thr"))
-        .select("doc_id", "lang")
-    )
+    return mixture_sample(kept)
 
 
 def _sql_collapse() -> str:

@@ -511,6 +511,34 @@ def scan_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MALFORMED_MOD, _MALFORMED_REM = 5, 3
 
 
+def _read_malformed(spark: SparkSession, fmt: str, path: str) -> DataFrame:
+    """PERMISSIVE read of a planted nation fixture in `fmt` ("json" /
+    "csv") under the declared nation schema plus a `corrupt_raw`
+    string column (the corrupt-record field, last as the CSV source
+    requires), as (n_nationkey, n_name, n_regionkey, corrupt)."""
+    schema = T.StructType(
+        [
+            T.StructField("n_nationkey", T.IntegerType()),
+            T.StructField("n_name", T.StringType()),
+            T.StructField("n_regionkey", T.IntegerType()),
+            T.StructField("corrupt_raw", T.StringType()),
+        ]
+    )
+    df = (
+        spark.read.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "corrupt_raw")
+        .format(fmt)
+        .load(path)
+    )
+    return df.select(
+        "n_nationkey",
+        "n_name",
+        "n_regionkey",
+        F.col("corrupt_raw").isNotNull().alias("corrupt"),
+    )
+
+
 @query(
     "scan_json_malformed",
     oracle=f"""
@@ -555,26 +583,7 @@ def scan_json_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         good.unionByName(bad).coalesce(1).write.mode("overwrite").text(jdir)
 
     build_once(os.path.dirname(jdir), _build)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-            T.StructField("corrupt_raw", T.StringType()),
-        ]
-    )
-    df = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "corrupt_raw")
-        .json(jdir)
-    )
-    return df.select(
-        "n_nationkey",
-        "n_name",
-        "n_regionkey",
-        F.col("corrupt_raw").isNotNull().alias("corrupt"),
-    )
+    return _read_malformed(spark, "json", jdir)
 
 
 @query(
@@ -641,26 +650,7 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").text(cdir)
 
     build_once(os.path.dirname(cdir), _build)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-            T.StructField("corrupt_raw", T.StringType()),
-        ]
-    )
-    df = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "corrupt_raw")
-        .csv(cdir)
-    )
-    return df.select(
-        "n_nationkey",
-        "n_name",
-        "n_regionkey",
-        F.col("corrupt_raw").isNotNull().alias("corrupt"),
-    )
+    return _read_malformed(spark, "csv", cdir)
 
 
 @query(

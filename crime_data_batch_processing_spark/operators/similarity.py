@@ -47,6 +47,7 @@ from crime_data_batch_processing_spark.functions.veckit import (
     sql_cosine,
 )
 from crime_data_batch_processing_spark.cachekit import track
+from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
 from crime_data_batch_processing_spark.operators.text_analysis import (
     sql_bm25_ctes,
 )
@@ -84,9 +85,13 @@ EMBED_DIM = 64
 #: quantized) vector — overflow-free (64 · 2·10^6 · 2^20 ≈ 1.3·10^14
 #: « 2^63) and bit-identical in Spark, NumPy, and the DuckDB oracle.
 PLANE_SCALE = 1 << 20
+#: Corpus-wide kNN graph: per-vector neighbor count. 8 matches the
+#: SemDeDup/kNN-graph literature's small-k regime (the consumer keeps
+#: the graph sparse: |E| = k·N, never N²).
+KNN_K = 8
 
 
-def _hyperplanes(bits: int = LSH_BITS, dim: int = EMBED_DIM) -> list[list[int]]:
+def _hyperplanes(bits: int = LSH_BITS) -> list[list[int]]:
     """Deterministic pseudo-random INTEGER hyperplanes in [-2^20, 2^20).
 
     A fixed-seed 64-bit LCG (MMIX constants) rather than any RNG
@@ -100,7 +105,7 @@ def _hyperplanes(bits: int = LSH_BITS, dim: int = EMBED_DIM) -> list[list[int]]:
     planes: list[list[int]] = []
     for _ in range(bits):
         row = []
-        for _ in range(dim):
+        for _ in range(EMBED_DIM):
             state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
             row.append((state >> 11) % (2 * PLANE_SCALE) - PLANE_SCALE)
         planes.append(row)
@@ -116,7 +121,7 @@ def _signature(vec, bits: int = LSH_BITS) -> F.Column:
     two's-complement, the same bit pattern the SQL oracle's min-long
     literal produces, so cross-engine equality holds for every width.
 
-    MULTI-WORD PACKING (bits > 64, the r12 verdict's item 2): the
+    MULTI-WORD PACKING (bits > 64): the
     scale knob of the banded family at a fixed similarity regime is
     signature bits ~ log N, and a single int64 caps it at 64. Above
     64 bits the signature is an ARRAY of int64 words, little-endian
@@ -295,17 +300,17 @@ def _exact_cosine(
     )
 
 
-def _rank_per_src(directed: DataFrame, topk: int = 0) -> DataFrame:
-    """Each src's top-k (src, dst, cos_sim) rows by the (cos_sim DESC,
-    dst ASC) total order, as (src, rank, dst, cos_sim); topk=0 means
-    KNN_K. Plans as WindowGroupLimit + Window, so the cut runs per
-    partition before the rank shuffle."""
+def _rank_per_src(directed: DataFrame) -> DataFrame:
+    """Each src's top-KNN_K (src, dst, cos_sim) rows by the (cos_sim
+    DESC, dst ASC) total order, as (src, rank, dst, cos_sim). Plans as
+    WindowGroupLimit + Window, so the cut runs per partition before
+    the rank shuffle."""
     w = Window.partitionBy("src").orderBy(
         F.col("cos_sim").desc(), F.col("dst").asc()
     )
     return (
         directed.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= (topk or KNN_K))
+        .where(F.col("rank") <= KNN_K)
         .select("src", "rank", "dst", "cos_sim")
     )
 
@@ -339,11 +344,10 @@ def banded_scored_pairs(
     return _exact_cosine(cand, with_q, with_q, "vec_a", "vec_b")
 
 
-def knn_rank_directed(scored, topk: int = 0):
+def knn_rank_directed(scored):
     """Symmetrize undirected (vec_a, vec_b, cos_sim) pairs into both
-    directions and keep each src's top-k (`_rank_per_src`) — the
-    kNN-graph tail shared by the graph keys. Default topk=0 resolves
-    to KNN_K (defined below).
+    directions and keep each src's top-KNN_K (`_rank_per_src`) — the
+    kNN-graph tail shared by the graph keys.
 
     Symmetrization is ONE explode over a 2-struct array, not a
     self-union: `scored` is the full banded candidate chain, and a
@@ -368,7 +372,7 @@ def knn_rank_directed(scored, topk: int = 0):
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.cos_sim")
-    return _rank_per_src(directed, topk)
+    return _rank_per_src(directed)
 
 
 def write_sig_index(
@@ -405,12 +409,11 @@ def knn_inc_probe(
     path: str,
     bands: int = LSH_BANDS,
     band_bits: int = LSH_BAND_BITS,
-    topk: int = 0,
 ) -> DataFrame:
     """The incremental kNN probe against the signature index that
     `write_sig_index` wrote under `path`: given the increment's
     signature frame `inc_q` (vec_id, q, nsq, sig — a
-    `signature_frame`), return its top-k edges (src, rank, dst,
+    `signature_frame`), return its top-KNN_K edges (src, rank, dst,
     cos_sim) without re-running the corpus self-join. `bands` and
     `band_bits` must be the index's geometry.
 
@@ -458,7 +461,7 @@ def knn_inc_probe(
     scored = _exact_cosine(
         cand, inc_q, base_q.unionByName(inc_q), "src", "dst"
     )
-    return _rank_per_src(scored, topk)
+    return _rank_per_src(scored)
 
 
 _PAIR_COS = (
@@ -500,6 +503,19 @@ def _with_norms(
     return queries, corpus
 
 
+def _sql_topk_tail(source: str) -> str:
+    """The `ranked` CTE and top-TOP_K SELECT over a `{source}(qid,
+    vec_id, cos_sim)` CTE: the SQL twin of `_topk`, the final cut of
+    every fixed-panel search oracle."""
+    return f"""ranked AS (
+        SELECT qid, vec_id, cos_sim,
+               ROW_NUMBER() OVER (PARTITION BY qid
+                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
+        FROM {source}
+    )
+    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}"""
+
+
 def _topk(scored: DataFrame, topk: int = TOP_K) -> DataFrame:
     w = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()  # total order: ties by id
@@ -519,13 +535,7 @@ def _topk(scored: DataFrame, topk: int = TOP_K) -> DataFrame:
                {sql_cosine('q.embedding', 'c.embedding')} AS cos_sim
         FROM embeddings q JOIN embeddings c ON q.vec_id < {N_QUERIES}
          AND c.vec_id != q.vec_id
-    ), ranked AS (
-        SELECT qid, vec_id, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+    ), {_sql_topk_tail("scored")}
     """,
 )
 def sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -568,9 +578,9 @@ def sql_sig_expr(bits: int = LSH_BITS) -> str:
 
     The expression costs one correlated unnest-dot per bit, and
     DuckDB inlines a non-materialized CTE at every reference — the
-    bands CTE reads `sig` once per band arm — so every caller marks
-    its `sig` CTE MATERIALIZED (and its `scored` CTE, which the
-    directed kNN union reads twice)."""
+    bands CTE reads `sig` once per band arm — so `sql_sig_bands_ctes`
+    marks `sig` MATERIALIZED (and every `scored` CTE the directed kNN
+    union reads twice is MATERIALIZED too)."""
     planes = _hyperplanes(bits)
 
     def bit_dot(plane: list[int]) -> str:
@@ -614,7 +624,7 @@ def sql_bands_cte(bands: int = LSH_BANDS, band_bits: int = LSH_BAND_BITS) -> str
     its word-straddle guard: an invalid multi-word geometry (band_bits
     not dividing 64) fails here at SQL-generation time instead of
     silently emitting a slice that reads past a word boundary while
-    the Spark side raises (r13 advisor)."""
+    the Spark side raises."""
     band_mask = (1 << band_bits) - 1
     total = bands * band_bits
     if total > 64:
@@ -635,23 +645,48 @@ def sql_bands_cte(bands: int = LSH_BANDS, band_bits: int = LSH_BAND_BITS) -> str
     )
 
 
+#: The weak-geometry oracles' `q(vec_id, qe)` CTE: every embedding,
+#: quantized.
+_SQL_EMB_Q = f"""q AS (
+        SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
+        FROM embeddings
+    )"""
+
+
+def sql_sig_bands_ctes(
+    bits: int = LSH_BITS, bands: int = LSH_BANDS, band_bits: int = LSH_BAND_BITS
+) -> str:
+    """The `sig` (MATERIALIZED, see `sql_sig_expr`) and `bands` CTEs
+    of every banded oracle, at one geometry, over a `q(vec_id, qe)`
+    CTE in scope."""
+    return f"""sig AS MATERIALIZED (
+        SELECT vec_id, ({sql_sig_expr(bits)}) AS sig FROM q
+    ), bands AS (
+        {sql_bands_cte(bands, band_bits)}
+    )"""
+
+
+def sql_pair_cand_ctes(
+    bits: int = LSH_BITS, bands: int = LSH_BANDS, band_bits: int = LSH_BAND_BITS
+) -> str:
+    """`sql_sig_bands_ctes` plus the pair-form `cand(vec_a, vec_b)`
+    CTE: every bucket-colliding pair once, vec_a < vec_b — the SQL
+    twin of `banded_scored_pairs`' candidate stage."""
+    return f"""{sql_sig_bands_ctes(bits, bands, band_bits)}, cand AS (
+        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
+    )"""
+
+
 def _sql_lsh() -> str:
     """Full-value DuckDB oracle for `sim_search_lsh`: replay the exact
     signature → banding → bucket join → exact-cosine re-rank pipeline
     (see `sql_sig_expr` for why this checks the index machinery itself,
     not just a recall contract).
     """
-    sig = sql_sig_expr()
-    bands = sql_bands_cte()
     return f"""
-    WITH q AS (
-        SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
-        FROM embeddings
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sig}) AS sig FROM q
-    ), bands AS (
-        {bands}
-    ), cand AS (
+    WITH {_SQL_EMB_Q}, {sql_sig_bands_ctes()}, cand AS (
         SELECT DISTINCT qb.vec_id AS qid, cb.vec_id AS vec_id
         FROM bands qb JOIN bands cb
           ON qb.band = cb.band AND qb.bval = cb.bval
@@ -662,13 +697,7 @@ def _sql_lsh() -> str:
         FROM cand
         JOIN embeddings qe ON qe.vec_id = cand.qid
         JOIN embeddings ce ON ce.vec_id = cand.vec_id
-    ), ranked AS (
-        SELECT qid, vec_id, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+    ), {_sql_topk_tail("scored")}
     """
 
 
@@ -775,13 +804,7 @@ def _sql_ivf() -> str:
         FROM cand
         JOIN embeddings qe ON qe.vec_id = cand.qid
         JOIN embeddings ce ON ce.vec_id = cand.vec_id
-    ), ranked AS (
-        SELECT qid, vec_id, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
-        FROM scored
-    )
-    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+    ), {_sql_topk_tail("scored")}
     """
 
 
@@ -917,13 +940,7 @@ def _sql_sq() -> str:
     ), reranked AS (
         SELECT qid, vec_id, {sql_cosine('qe', 'ce')} AS cos_sim
         FROM cand WHERE crank <= {SQ_CANDIDATES}
-    ), ranked AS (
-        SELECT qid, vec_id, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
-        FROM reranked
-    )
-    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+    ), {_sql_topk_tail("reranked")}
     """
 
 
@@ -1152,13 +1169,7 @@ def _sql_pq() -> str:
         JOIN corpus qv ON qv.vec_id = cd.qid
         JOIN corpus cv ON cv.vec_id = cd.vec_id
         WHERE cd.crank <= {PQ_CANDIDATES}
-    ), ranked AS (
-        SELECT qid, vec_id, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                                  ORDER BY cos_sim DESC, vec_id ASC) AS rank
-        FROM rr
-    )
-    SELECT qid, rank, vec_id, cos_sim FROM ranked WHERE rank <= {TOP_K}
+    ), {_sql_topk_tail("rr")}
     """
 
 
@@ -1538,50 +1549,56 @@ def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Corpus-wide kNN graph: per-vector neighbor count. 8 matches the
-#: SemDeDup/kNN-graph literature's small-k regime (the consumer keeps
-#: the graph sparse: |E| = k·N, never N²).
-KNN_K = 8
-
-
-def sql_knn_graph_ctes() -> str:
-    """Shared WITH-body for the WEAK-geometry kNN graph (signature →
-    banding → bucket-collision candidates → exact-cosine scoring —
-    the `dedup_embedding_lsh` pipeline verbatim — symmetrized and
-    ranked into `ranked(src, rank, dst, cos_sim)`). Used by the
-    `sim_search_knn_graph` oracle and, as the edge input, by
-    `pipeline_release_semantic`'s — the weak twin of llm_dedup's
-    `_sql_knn_graph_prod_ctes`."""
-    return f"""q AS (
-        SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
-        FROM embeddings
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
-    ), bands AS (
-        {sql_bands_cte()}
-    ), cand AS (
-        SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bval = b.bval AND a.vec_id < b.vec_id
-    ), scored AS MATERIALIZED (
+def sql_weak_scored_ctes() -> str:
+    """WITH-body of the WEAK-geometry banded chain over `embeddings`:
+    quantize → signature → banding → bucket-collision pairs →
+    exact-cosine scoring, ending at `scored(vec_a, vec_b, cos_sim)`
+    (MATERIALIZED: the kNN callers read it twice). The
+    `dedup_embedding_lsh` oracle cuts it at the threshold; the kNN
+    graph oracles rank it (`sql_knn_graph_ctes`)."""
+    return f"""{_SQL_EMB_Q}, {sql_pair_cand_ctes()}, scored AS MATERIALIZED (
         SELECT cand.vec_a, cand.vec_b,
                {sql_cosine('ea.embedding', 'eb.embedding')} AS cos_sim
         FROM cand
         JOIN embeddings ea ON ea.vec_id = cand.vec_a
         JOIN embeddings eb ON eb.vec_id = cand.vec_b
-    ), directed AS (
-        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
-        UNION ALL
-        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
-    ), ranked AS (
+    )"""
+
+
+def sql_knn_rank(source: str) -> str:
+    """SELECT of each src's top-KNN_K rows of a `{source}(src, dst,
+    cos_sim)` relation by (cos_sim DESC, dst ASC), as (src, rank,
+    dst, cos_sim): the SQL twin of `_rank_per_src`."""
+    return f"""
         SELECT src, rank, dst, cos_sim FROM (
             SELECT src, dst, cos_sim,
                    ROW_NUMBER() OVER (PARTITION BY src
                                       ORDER BY cos_sim DESC, dst ASC)
                        AS rank
-            FROM directed
-        ) WHERE rank <= {KNN_K}
+            FROM {source}
+        ) WHERE rank <= {KNN_K}"""
+
+
+def sql_knn_ranked_ctes() -> str:
+    """The `directed` and `ranked(src, rank, dst, cos_sim)` CTEs over
+    a `scored(vec_a, vec_b, cos_sim)` CTE in scope: the SQL twin of
+    `knn_rank_directed`, shared by every kNN-graph oracle at every
+    geometry."""
+    return f"""directed AS (
+        SELECT vec_a AS src, vec_b AS dst, cos_sim FROM scored
+        UNION ALL
+        SELECT vec_b AS src, vec_a AS dst, cos_sim FROM scored
+    ), ranked AS ({sql_knn_rank('directed')}
     )"""
+
+
+def sql_knn_graph_ctes() -> str:
+    """Shared WITH-body for the WEAK-geometry kNN graph: the weak
+    scored chain (`sql_weak_scored_ctes`) symmetrized and ranked into
+    `ranked(src, rank, dst, cos_sim)`. Used by the
+    `sim_search_knn_graph` oracle and, as the edge input, by
+    `pipeline_release_semantic`'s."""
+    return f"{sql_weak_scored_ctes()}, {sql_knn_ranked_ctes()}"
 
 
 def _sql_knn_graph() -> str:
@@ -1653,14 +1670,7 @@ def _sql_knn_inc() -> str:
     every other vector's band rows, exact-cosine re-rank, per-source
     top-KNN_K."""
     return f"""
-    WITH q AS (
-        SELECT vec_id, {_SQL_QUANT.format(e='embedding')} AS qe
-        FROM embeddings
-    ), sig AS MATERIALIZED (
-        SELECT vec_id, ({sql_sig_expr()}) AS sig FROM q
-    ), bands AS (
-        {sql_bands_cte()}
-    ), cand AS (
+    WITH {_SQL_EMB_Q}, {sql_sig_bands_ctes()}, cand AS (
         SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.bval = b.bval
@@ -1672,13 +1682,7 @@ def _sql_knn_inc() -> str:
         FROM cand
         JOIN embeddings ea ON ea.vec_id = cand.src
         JOIN embeddings eb ON eb.vec_id = cand.dst
-    )
-    SELECT src, rank, dst, cos_sim FROM (
-        SELECT src, dst, cos_sim,
-               ROW_NUMBER() OVER (PARTITION BY src
-                                  ORDER BY cos_sim DESC, dst ASC) AS rank
-        FROM scored
-    ) WHERE rank <= {KNN_K}
+    ){sql_knn_rank('scored')}
     """
 
 
@@ -1711,12 +1715,9 @@ def sim_search_knn_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     index trustworthy.
 
     Same weak-geometry candidate-mass caveat as the full-graph key
-    (BASELINE r11 probes); the prod constants drop in identically.
+    (BASELINE.md soak probes); the prod constants drop in
+    identically.
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
     # the persisted index is a pure function of the band geometry, the
     # hyperplane PRNG, quantize(), and the split modulus — bake the
     # geometry into the kind so a future constants change keys a fresh

@@ -35,13 +35,13 @@ from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.sources.tables import load_table
 
 
-def hourly_agg(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def hourly_agg(events: DataFrame) -> DataFrame:
     """Hourly tumbling aggregate per event type: (window_start,
     window_end, event_type, n_events, sum_value), the sum exact
-    (`dsum`). `watermark` is the allowed event-time delay of a stream;
-    a batch frame ignores it."""
+    (`dsum`). A stream's allowed event-time delay is one hour (the
+    watermark); a batch frame ignores it."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

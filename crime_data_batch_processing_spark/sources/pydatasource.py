@@ -45,6 +45,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from crime_data_batch_processing_spark.fixtures import acquire_lock, release_lock
+
 #: Columns the source serves (no column-pruning hook exists in the
 #: Python DS API yet, so the projection is fixed at the source).
 DOC_COLUMNS = ["doc_id", "lang", "source", "n_chars"]
@@ -158,24 +160,29 @@ class RowGroupParquetSource(DataSource):
 
 
 def _pickle_self_by_value() -> None:
-    """Ship this module's classes BY VALUE to Python workers.
+    """Ship this module's classes, and the `fixtures` lock protocol
+    the manifest commit holds, BY VALUE to Python workers.
 
     A registered DataSource class is cloudpickled on the driver and
     unpickled inside Spark's Python worker processes, which do not
     have this library on their import path (the driver adds it to
     sys.path at runtime; workers inherit only PYTHONPATH). Closure
     functions (mapInPandas etc.) are pickled by value automatically,
-    but module-level classes default to by-reference — so the worker
-    would die with ModuleNotFoundError. Registering the module for
-    by-value pickling embeds the class definition in the plan instead;
-    on a real cluster the alternative is shipping the wheel via
-    `spark.submit.pyFiles`.
+    but module-level classes and functions default to by-reference —
+    so the worker would die with ModuleNotFoundError. Registering the
+    modules for by-value pickling embeds their definitions in the plan
+    instead; on a real cluster the alternative is shipping the wheel
+    via `spark.submit.pyFiles`. Pinned by
+    tests/test_pysource.py::test_commit_runs_without_repo_on_sys_path.
     """
     import sys
 
     from pyspark import cloudpickle
 
+    from crime_data_batch_processing_spark import fixtures
+
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(fixtures)
 
 
 _pickle_self_by_value()
@@ -223,164 +230,6 @@ def _write_arrow_task(path: str, iterator) -> FileCommit:
 STALE_COMMIT_LOCK_S = 60.0
 
 
-class _CommitLockHandle:
-    """Held commit lock: the O_EXCL fd plus its heartbeat thread.
-
-    The heartbeat `os.utime(fd)`s the lock every `stale_s / 4` while
-    the holder works, so a commit that legitimately stalls past
-    `stale_s` (slow network FS, very large manifest merge) keeps its
-    lock LIVE in peers' eyes instead of getting it broken mid-critical-
-    section. utime goes through the FD, not the path: if a peer has
-    (wrongly or rightly) broken this lock and created its own file at
-    the same path, the heartbeat touches only this holder's orphaned
-    inode — it can never freshen a peer's lock.
-    """
-
-    #: how long `stop_heartbeat` waits for the thread to confirm exit
-    #: before declaring it stuck (class attribute so tests exercising
-    #: the stuck path don't pay the full production wait)
-    JOIN_TIMEOUT_S = 5.0
-
-    def __init__(self, fd: int, stop, thread) -> None:
-        self.fd = fd
-        self._stop = stop
-        self._thread = thread
-
-    def stop_heartbeat(self) -> bool:
-        """Signal the heartbeat to exit and wait for it; returns True
-        once the thread has CONFIRMED exit (or never existed). A False
-        return means the thread may still be inside `os.utime(fd)`
-        (e.g. hung network FS) — the caller must then NOT close the
-        fd: a later utime on a recycled fd number would touch an
-        unrelated file."""
-        if self._stop is not None:
-            self._stop.set()
-            self._thread.join(timeout=self.JOIN_TIMEOUT_S)
-            if self._thread.is_alive():
-                return False
-            self._stop = None
-        return True
-
-
-def _acquire_commit_lock(
-    lock: str,
-    stale_s: float = STALE_COMMIT_LOCK_S,
-    timeout_s: float = 120.0,
-    heartbeat: bool = True,
-) -> _CommitLockHandle:
-    """O_EXCL-elect the commit lock; returns the holder's handle
-    (open fd + heartbeat thread — see `_CommitLockHandle`).
-
-    A lock whose mtime is older than `stale_s` is broken with the
-    same same-inode/same-mtime guard `fixtures.build_once` uses (an
-    orphan from a committer killed before its finally-release), so
-    one crash never wedges every future commit behind a manual
-    unlink. A LIVE lock is waited on up to `timeout_s`; every retry
-    path re-checks the deadline at the top of the loop, so lock churn
-    (holders finishing / stale breaks) cannot extend the wait
-    unboundedly. `heartbeat=False` is for tests that simulate a
-    holder whose heartbeat itself died (the ownership-checked release
-    still protects that case).
-
-    SELF-CONTAINED by design (stdlib imports only, stale-break guard
-    inlined rather than imported from fixtures): Spark runs a data
-    source's commit() in a JVM-spawned Python worker that does NOT
-    have the repo on sys.path, and the surrounding functions ship
-    there by cloudpickle VALUE — a call-time package import here
-    raises ModuleNotFoundError in that worker (latent until round 8's
-    generated-tier sweep forced a fresh fixture build outside a
-    repo cwd; the same rule streaming/stateful.py documents for UDF
-    helpers).
-    """
-    import os
-    import threading
-    import time
-
-    def _break_if_still_stale(lockfile: str, observed) -> None:
-        # unlink only the SAME file (ino) with the SAME mtime we
-        # judged stale — a refreshed or re-created lock is a no-op
-        # (same guard as fixtures._break_if_still_stale)
-        try:
-            cur = os.stat(lockfile)
-            if (cur.st_ino, cur.st_mtime_ns) == (
-                observed.st_ino,
-                observed.st_mtime_ns,
-            ):
-                os.unlink(lockfile)
-        except FileNotFoundError:
-            pass
-
-    deadline = time.monotonic() + timeout_s
-    fd = None
-    while fd is None:
-        if time.monotonic() > deadline:
-            raise TimeoutError(
-                f"manifest commit lock still live after "
-                f"{timeout_s:.0f}s: {lock} — another commit "
-                "appears wedged mid-critical-section; investigate "
-                "before removing the lock"
-            )
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            try:
-                st = os.stat(lock)
-            except FileNotFoundError:
-                continue  # holder just finished: re-elect
-            if time.time() - st.st_mtime > stale_s:
-                _break_if_still_stale(lock, st)
-                continue
-            time.sleep(0.05)
-    if not heartbeat:
-        return _CommitLockHandle(fd, None, None)
-    stop = threading.Event()
-
-    def _beat() -> None:
-        while not stop.wait(stale_s / 4):
-            try:
-                os.utime(fd)
-            except OSError:
-                return  # fd closed under us: holder is releasing
-
-    t = threading.Thread(target=_beat, daemon=True)
-    t.start()
-    return _CommitLockHandle(fd, stop, t)
-
-
-def _release_commit_lock(lock: str, handle: _CommitLockHandle) -> None:
-    """Ownership-checked release of a `_acquire_commit_lock` handle.
-
-    Stops the heartbeat FIRST (so a released lock can go stale
-    normally), then unlinks. If this holder's heartbeat died and it
-    stalled past STALE_COMMIT_LOCK_S, a peer may have broken the lock
-    and created its OWN lock file at the same path — an unconditional
-    unlink here would delete the peer's live lock and re-enable the
-    concurrent read-merge-write the lock exists to prevent. Unlink
-    only while the path still names the inode we created (fstat of
-    our kept fd). Pinned by
-    tests/test_pysource.py::test_commit_lock_release_spares_peer_lock.
-
-    If the heartbeat thread does NOT confirm exit within its join
-    timeout (stuck in `os.utime` on a hung network FS), the fd is
-    deliberately LEAKED instead of closed: a still-running heartbeat
-    utime on a recycled fd number would touch an unrelated file. The
-    unlink still happens (path-level; a late utime on our orphaned
-    inode is harmless). Pinned by
-    tests/test_pysource.py::test_commit_lock_release_leaks_fd_on_stuck_heartbeat.
-    """
-    import os
-
-    heartbeat_exited = handle.stop_heartbeat()
-    try:
-        if os.stat(lock).st_ino == os.fstat(handle.fd).st_ino:
-            os.unlink(lock)
-    except FileNotFoundError:
-        pass
-    finally:
-        if heartbeat_exited:
-            os.close(handle.fd)
-
-
 class ManifestParquetWriter(DataSourceArrowWriter):
     """Per-task Arrow->parquet writer; commit publishes the manifest."""
 
@@ -406,7 +255,7 @@ class ManifestParquetWriter(DataSourceArrowWriter):
         # covers the whole read-merge-publish cycle, so concurrent
         # appends compose. os.replace alone still protects READERS.
         lock = manifest + ".lock"
-        lock_handle = _acquire_commit_lock(lock)
+        lock_handle = acquire_lock(lock, STALE_COMMIT_LOCK_S, timeout_s=120.0)
         try:
             if not self.overwrite and os.path.exists(manifest):
                 # append merges the prior committed list — a wholesale
@@ -424,7 +273,7 @@ class ManifestParquetWriter(DataSourceArrowWriter):
             # the table-format convention (vacuum is a separate concern).
             os.replace(tmp, manifest)
         finally:
-            _release_commit_lock(lock, lock_handle)
+            release_lock(lock, lock_handle)
 
     def abort(self, messages) -> None:
         import os

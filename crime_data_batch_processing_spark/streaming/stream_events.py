@@ -250,10 +250,9 @@ def _stream_src(sf_dir: str, table: str = "events") -> str:
     return src
 
 
-def streaming_documents(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """readStream over a directory of documents parquet files.
+def streaming_documents(spark: SparkSession, src_dir: str) -> DataFrame:
+    """readStream over a directory of documents parquet files, every
+    available file in one micro-batch.
 
     The declared schema is DERIVED from the files already present
     (metadata-only batch read of the footers), never hardcoded: the
@@ -262,10 +261,7 @@ def streaming_documents(
     needed.
     """
     schema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(src_dir)
+    return spark.readStream.schema(schema).parquet(src_dir)
 
 
 @query("stream_session", oracle=SQL_SESSIONS)
@@ -365,38 +361,35 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def click_purchase_join(
-    spark: SparkSession,
-    src_dir: str,
-    max_files_per_trigger: int | None = None,
-    watermark: str = "1 hour",
-    how: str = "inner",
+    spark: SparkSession, src_dir: str, how: str = "inner"
 ) -> DataFrame:
     """The stream-stream interval-join TOPOLOGY (unstarted): clicks
     joined to purchases within [click, click+1h] per user, both sides
-    watermarked. `how` is the join type: "inner" for
+    watermarked at one hour, every available file in one micro-batch
+    per side. `how` is the join type: "inner" for
     `stream_stream_join`, "leftOuter" for `stream_stream_left_join`.
     Shared by the registered queries (bounded runs) and the
     restart/late-data tests (file-by-file micro-batches against a
     checkpoint)."""
     clicks = (
-        streaming_events(spark, src_dir, max_files_per_trigger)
+        streaming_events(spark, src_dir, max_files_per_trigger=None)
         .where(F.col("event_type") == "click")
         .select(
             "user_id",
             F.col("event_id").alias("click_id"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        streaming_events(spark, src_dir, max_files_per_trigger)
+        streaming_events(spark, src_dir, max_files_per_trigger=None)
         .where(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user_id"),
             F.col("event_id").alias("purchase_id"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", "1 hour")
     )
     return clicks.join(
         purchases,

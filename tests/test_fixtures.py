@@ -68,7 +68,7 @@ def test_break_if_still_stale_spares_refreshed_lock(tmp_path):
 
 
 def test_builder_heartbeats_lock_during_build(tmp_path, monkeypatch):
-    monkeypatch.setattr(fixtures, "HEARTBEAT_S", 0.05)
+    monkeypatch.setattr(fixtures, "STALE_LOCK_S", 0.2)
     base = str(tmp_path / "fx")
     lock = f"{base}/_BUILD_LOCK"
     seen = []
@@ -91,8 +91,7 @@ def test_waiter_does_not_break_heartbeated_live_lock(tmp_path, monkeypatch):
     import threading
     import time
 
-    monkeypatch.setattr(fixtures, "HEARTBEAT_S", 0.05)
-    monkeypatch.setattr(fixtures, "STALE_LOCK_S", 0.3)
+    monkeypatch.setattr(fixtures, "STALE_LOCK_S", 0.2)
     base = str(tmp_path / "fx")
     calls = []
 

@@ -1939,3 +1939,124 @@ def test_batch_stream_twins_share_one_body():
     assert merges == {"operators/timeseries.py:fold_partials"}, merges
     copies = [fns for fns in oracles.values() if len(fns) > 1]
     assert not copies, copies
+
+
+#: The library's duplicated-window count this guard holds: 8-line
+#: windows, whitespace-normalized, comment and blank lines dropped,
+#: at least 200 characters, counted once per distinct window seen at
+#: two or more places. The four left are two windows of the import
+#: block `operators/pipeline.py` and `operators/similarity.py` share
+#: and two of the index-lifecycle prelude `sim_search_index_append`
+#: and `sim_search_index_maintain` share.
+MAX_DUPLICATED_WINDOWS = 4
+
+
+def test_copied_mechanisms_are_defined_once():
+    """Source guard for the mechanisms with one definition each: the
+    O_EXCL lockfile election and its `os.utime` heartbeat (one
+    function, `fixtures.acquire_lock`); the kNN `directed AS (` CTE
+    and the quantized `CAST(SUM(__ax * __bx)` dot (one SQL builder
+    each); the chunk-start `F.sequence(..., CHUNK_STRIDE)` (one
+    function); `MIXTURE_BUDGET_NUM` and `MIN_DISTINCT_RATIO` (read by
+    one Spark stage and one SQL builder each); and the library's
+    duplicated 8-line windows, at most MAX_DUPLICATED_WINDOWS."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    lib = Path(registry.__file__).parent
+
+    def is_attr(n, base, attr):
+        return (
+            isinstance(n, ast.Attribute)
+            and n.attr == attr
+            and isinstance(n.value, ast.Name)
+            and n.value.id == base
+        )
+
+    def top_name(top):
+        targets = [t.id for t in getattr(top, "targets", []) if isinstance(t, ast.Name)]
+        return getattr(top, "name", None) or ",".join(targets) or "<module>"
+
+    uses = defaultdict(set)
+    windows = defaultdict(set)
+    for path in sorted(lib.rglob("*.py")):
+        rel = str(path.relative_to(lib))
+        src = path.read_text()
+        for top in ast.parse(src).body:
+            where = f"{rel}:{top_name(top)}"
+            for n in ast.walk(top):
+                if is_attr(n, "os", "O_EXCL"):
+                    uses["O_EXCL"].add(where)
+                if is_attr(n, "os", "utime"):
+                    uses["utime"].add(where)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    if "directed AS (" in n.value:
+                        uses["directed"].add(where)
+                    if "CAST(SUM(__ax * __bx)" in n.value:
+                        uses["qdot"].add(where)
+                if (
+                    isinstance(n, ast.Call)
+                    and is_attr(n.func, "F", "sequence")
+                    and any(
+                        isinstance(a, ast.Name) and a.id == "CHUNK_STRIDE"
+                        for arg in n.args
+                        for a in ast.walk(arg)
+                    )
+                ):
+                    uses["chunk_starts"].add(where)
+                if isinstance(n, ast.Name) and n.id in (
+                    "MIXTURE_BUDGET_NUM",
+                    "MIN_DISTINCT_RATIO",
+                ) and isinstance(n.ctx, ast.Load):
+                    uses[n.id].add(where)
+        lines = [
+            (i, " ".join(ln.split()))
+            for i, ln in enumerate(src.splitlines(), 1)
+            if ln.strip() and not ln.strip().startswith("#")
+        ]
+        for k in range(len(lines) - 7):
+            text = "\n".join(s for _, s in lines[k : k + 8])
+            if len(text) >= 200:
+                windows[text].add(f"{rel}:{lines[k][0]}")
+
+    assert uses["O_EXCL"] == {"fixtures.py:acquire_lock"}, uses["O_EXCL"]
+    assert uses["utime"] == {"fixtures.py:acquire_lock"}, uses["utime"]
+    assert uses["directed"] == {"operators/similarity.py:sql_knn_ranked_ctes"}, uses[
+        "directed"
+    ]
+    assert uses["qdot"] == {"functions/veckit.py:sql_qdot"}, uses["qdot"]
+    assert uses["chunk_starts"] == {"operators/chunking.py:chunk_stage"}, uses[
+        "chunk_starts"
+    ]
+    assert uses["MIXTURE_BUDGET_NUM"] == {
+        "operators/filters.py:mixture_sample",
+        "operators/filters.py:sql_mixture_sample",
+    }, uses["MIXTURE_BUDGET_NUM"]
+    assert uses["MIN_DISTINCT_RATIO"] == {
+        "operators/pipeline.py:gopher_keep",
+        "operators/pipeline.py:_SQL_GOPHER_KEEP",
+    }, uses["MIN_DISTINCT_RATIO"]
+    copies = sorted(sorted(locs) for locs in windows.values() if len(locs) > 1)
+    assert len(copies) <= MAX_DUPLICATED_WINDOWS, copies
+
+
+def test_verify_first_lists_registered_keys():
+    """`__spark_entry__._VERIFY_FIRST` names only registered keys, each
+    once, and at most 50 of them (the driver's per-run check budget);
+    `_ordered` would otherwise drop a misspelt entry silently."""
+    import sys
+    from pathlib import Path
+
+    root = str(Path(registry.__file__).resolve().parents[1])
+    if root not in sys.path:
+        sys.path.insert(0, root)
+    import __spark_entry__
+
+    first = __spark_entry__._VERIFY_FIRST
+    assert len(first) <= 50, len(first)
+    assert len(set(first)) == len(first), sorted(
+        k for k in set(first) if first.count(k) > 1
+    )
+    missing = [k for k in first if k not in registry.QUERIES]
+    assert not missing, missing

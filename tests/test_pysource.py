@@ -395,34 +395,34 @@ def test_commit_lock_release_spares_peer_lock(tmp_path):
     release fails this test."""
     import os
 
-    from crime_data_batch_processing_spark.sources.pydatasource import (
-        _acquire_commit_lock,
-        _release_commit_lock,
+    from crime_data_batch_processing_spark.fixtures import (
+        acquire_lock,
+        release_lock,
     )
 
     lock = str(tmp_path / "_manifest.json.lock")
 
     # holder A elects, then stalls WITH a dead heartbeat (the one
     # case the ownership check still guards): backdate its lock
-    fd_a = _acquire_commit_lock(lock, stale_s=60.0, heartbeat=False)
+    fd_a = acquire_lock(lock, stale_s=60.0, heartbeat=False)
     past = os.stat(lock).st_mtime - 3600
     os.utime(lock, (past, past))
 
     # peer B judges A's lock stale, breaks it, holds its OWN lock
-    fd_b = _acquire_commit_lock(lock, stale_s=60.0)
+    fd_b = acquire_lock(lock, stale_s=60.0)
     assert os.stat(lock).st_ino == os.fstat(fd_b.fd).st_ino
     assert os.stat(lock).st_ino != os.fstat(fd_a.fd).st_ino
 
     # A's (late) release must leave B's live lock intact
-    _release_commit_lock(lock, fd_a)
+    release_lock(lock, fd_a)
     assert os.path.exists(lock)
     assert os.stat(lock).st_ino == os.fstat(fd_b.fd).st_ino
 
     # B's release removes its own lock; the path is then free again
-    _release_commit_lock(lock, fd_b)
+    release_lock(lock, fd_b)
     assert not os.path.exists(lock)
-    fd_c = _acquire_commit_lock(lock, stale_s=60.0)
-    _release_commit_lock(lock, fd_c)
+    fd_c = acquire_lock(lock, stale_s=60.0)
+    release_lock(lock, fd_c)
     assert not os.path.exists(lock)
 
 
@@ -438,33 +438,33 @@ def test_commit_lock_heartbeat_keeps_stalled_holder_live(tmp_path):
 
     import pytest
 
-    from crime_data_batch_processing_spark.sources.pydatasource import (
-        _acquire_commit_lock,
-        _release_commit_lock,
+    from crime_data_batch_processing_spark.fixtures import (
+        acquire_lock,
+        release_lock,
     )
 
     # margins: stale_s=2.0 → 0.5s beats; the heartbeat thread would
     # need a >2.0s scheduler stall (vs >0.4s at the old margins) for
     # the peer to wrongly judge the lock stale on a loaded CI host
     lock = str(tmp_path / "_manifest.json.lock")
-    h = _acquire_commit_lock(lock, stale_s=2.0)
+    h = acquire_lock(lock, stale_s=2.0)
     ino_a = os.fstat(h.fd).st_ino
     time.sleep(2.4)  # stall 1.2x past the staleness horizon
     # peer judges by the SAME stale_s: the heartbeat must have kept
     # the mtime fresh, so the peer waits and times out
     with pytest.raises(TimeoutError):
-        _acquire_commit_lock(lock, stale_s=2.0, timeout_s=0.5)
+        acquire_lock(lock, stale_s=2.0, timeout_s=0.5)
     assert os.stat(lock).st_ino == ino_a  # still holder A's lock
-    _release_commit_lock(lock, h)
+    release_lock(lock, h)
     assert not os.path.exists(lock)
 
     # contrast: the SAME stall with a dead heartbeat is broken
-    h2 = _acquire_commit_lock(lock, stale_s=2.0, heartbeat=False)
+    h2 = acquire_lock(lock, stale_s=2.0, heartbeat=False)
     time.sleep(2.4)
-    h3 = _acquire_commit_lock(lock, stale_s=2.0, timeout_s=0.5)
+    h3 = acquire_lock(lock, stale_s=2.0, timeout_s=0.5)
     assert os.fstat(h3.fd).st_ino != os.fstat(h2.fd).st_ino
-    _release_commit_lock(lock, h3)
-    _release_commit_lock(lock, h2)  # ownership check: no-op unlink
+    release_lock(lock, h3)
+    release_lock(lock, h2)  # ownership check: no-op unlink
 
 
 def test_commit_lock_release_leaks_fd_on_stuck_heartbeat(tmp_path):
@@ -476,14 +476,14 @@ def test_commit_lock_release_leaks_fd_on_stuck_heartbeat(tmp_path):
     import os
     import threading
 
-    from crime_data_batch_processing_spark.sources.pydatasource import (
-        _acquire_commit_lock,
-        _CommitLockHandle,
-        _release_commit_lock,
+    from crime_data_batch_processing_spark.fixtures import (
+        LockHandle,
+        acquire_lock,
+        release_lock,
     )
 
     lock = str(tmp_path / "_manifest.json.lock")
-    h = _acquire_commit_lock(lock, stale_s=60.0, heartbeat=False)
+    h = acquire_lock(lock, stale_s=60.0, heartbeat=False)
 
     # swap in a "stuck" heartbeat: ignores the stop event, exits only
     # on its own private release event (simulates a hung utime)
@@ -494,7 +494,7 @@ def test_commit_lock_release_leaks_fd_on_stuck_heartbeat(tmp_path):
     h._thread = t
     h.JOIN_TIMEOUT_S = 0.2  # don't pay the production join wait
 
-    _release_commit_lock(lock, h)
+    release_lock(lock, h)
     assert not os.path.exists(lock)  # unlink still happened
     os.fstat(h.fd)  # fd deliberately leaked: still valid, raises if closed
 
@@ -506,15 +506,15 @@ def test_commit_lock_release_leaks_fd_on_stuck_heartbeat(tmp_path):
     os.close(h.fd)
 
     # sanity: normal handles still close their fd on release
-    h2 = _acquire_commit_lock(lock, stale_s=60.0)
-    _release_commit_lock(lock, h2)
+    h2 = acquire_lock(lock, stale_s=60.0)
+    release_lock(lock, h2)
     try:
         os.fstat(h2.fd)
     except OSError:
         pass
     else:  # pragma: no cover - fd must be closed
         raise AssertionError("normal release must close the fd")
-    assert isinstance(h2, _CommitLockHandle)
+    assert isinstance(h2, LockHandle)
 
 
 def test_commit_lock_waits_for_live_holder(tmp_path):
@@ -523,18 +523,18 @@ def test_commit_lock_waits_for_live_holder(tmp_path):
     holder persists, and elect immediately once the holder releases."""
     import pytest
 
-    from crime_data_batch_processing_spark.sources.pydatasource import (
-        _acquire_commit_lock,
-        _release_commit_lock,
+    from crime_data_batch_processing_spark.fixtures import (
+        acquire_lock,
+        release_lock,
     )
 
     lock = str(tmp_path / "_manifest.json.lock")
-    fd_a = _acquire_commit_lock(lock)
+    fd_a = acquire_lock(lock)
     with pytest.raises(TimeoutError):
-        _acquire_commit_lock(lock, timeout_s=0.3)
-    _release_commit_lock(lock, fd_a)
-    fd_b = _acquire_commit_lock(lock, timeout_s=0.3)
-    _release_commit_lock(lock, fd_b)
+        acquire_lock(lock, timeout_s=0.3)
+    release_lock(lock, fd_a)
+    fd_b = acquire_lock(lock, timeout_s=0.3)
+    release_lock(lock, fd_b)
 
 
 def test_commit_runs_without_repo_on_sys_path(tmp_path):

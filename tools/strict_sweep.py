@@ -2,10 +2,10 @@
 """Strict cross-engine sweep: every registered query vs its DuckDB
 oracle, bit-exact, in one fresh process walking the driver's key order.
 
-This is the repo-checked-in form of the driver-replica harness the
-round workflow uses (stricter than tests/oracle_harness.py's
-12-sig-digit normalization — cells are compared by exact repr).
-Running it at MULTIPLE scale factors and parallelism configs is the
+This is the repo-checked-in form of the driver-replica harness.
+Cells compare by exact repr (doubles bit-for-bit), the rule
+tests/oracle_harness.py's `_norm_cell` also applies, with int/float
+type tags on top. Running it at MULTIPLE scale factors and parallelism configs is the
 point: the sf0.1 sweep is what surfaced the 1-ULP JVM-vs-libm log
 drift in text_tfidf that the sf0.01 gate could never see.
 
@@ -32,10 +32,7 @@ REPO = str(Path(__file__).resolve().parent.parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from crime_data_batch_processing_spark.sources.tables import TABLES  # noqa: E402
 
 
 def canon(v: object) -> str:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.functions.exact import (
     davg,
     dcol,
@@ -1242,14 +1243,12 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from crime_data_batch_processing_spark import cachekit
     from crime_data_batch_processing_spark.functions.exact import dcol
 
     events = load_table(spark, sf_dir, "events")
-    counts = cachekit.track(
+    counts = cachekit.persist(
         events.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     c_values = [
         r[0]
@@ -1260,7 +1259,7 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_c = local_frame(
         spark, [(c, math.log(float(c))) for c in c_values], "c bigint, ln_c double"
     )
-    per_user = cachekit.track(
+    per_user = cachekit.persist(
         counts.join(F.broadcast(log_c), "c")
         .groupBy("user_id")
         .agg(
@@ -1268,7 +1267,6 @@ def agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_types"),
             F.sum(dcol(F.col("c") * F.col("ln_c"))).cast("double").alias("s"),
         )
-        .persist()
     )
     n_values = [
         r[0]

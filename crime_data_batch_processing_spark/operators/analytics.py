@@ -500,9 +500,8 @@ def analytics_customer_distribution(
 #: "important" when its revenue exceeds IMPORTANT_AVG_MULT times the
 #: AVERAGE part revenue. Q11's spec threshold (FRACTION of the total)
 #: is deliberately SF-divided in TPC-H because a fixed fraction goes
-#: vacuous as the part count grows — exactly what round 5's sf0.1
-#: sweep caught with the previous fixed-ppm form (0 rows at sf0.1,
-#: vacuously matching an equally-empty oracle). A multiple of the
+#: vacuous as the part count grows — a fixed-ppm form returns 0 rows
+#: at sf0.1, vacuously matching an equally-empty oracle. A multiple of the
 #: average is the scale-invariant statement of "above-average
 #: concentration": non-empty at every test SF (2 / 29 / 252 rows).
 #: 1.5 is a dyadic rational — exactly representable, IEEE-identical
@@ -815,7 +814,7 @@ def analytics_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (38,6) width: since 0 ≤ tq − q ≤ tq, the subtraction can never
     overflow at ANY data scale, so there is no down-cast whose
     overflow behavior diverges between engines (Spark non-ANSI NULLs,
-    DuckDB errors — round-7 advisor item). Exact in both engines, no
+    DuckDB errors). Exact in both engines, no
     division, no multiplication.
     """
     lineitem = load_table(spark, sf_dir, "lineitem").filter(
@@ -1373,7 +1372,7 @@ def analytics_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ps.join(
-            best,
+            F.broadcast(best),
             (F.col("l_partkey") == F.col("b_partkey"))
             & (F.col("supplycost") == F.col("min_cost")),
         )

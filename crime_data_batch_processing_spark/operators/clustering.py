@@ -37,9 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from crime_data_batch_processing_spark.cachekit import track
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.functions.veckit import idot, quantize
 from crime_data_batch_processing_spark.operators.similarity import (
     _SQL_QUANT,
@@ -139,8 +138,7 @@ def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select("vec_id", quantize(F.col("embedding")).alias("q"))
     corpus = (
         corpus.select("vec_id", "q", idot(F.col("q"), F.col("q")).alias("nsq"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     n = corpus.count()  # also materializes the quantized corpus once
     stride = max(1, n // K_CLUSTERS)
@@ -311,63 +309,66 @@ def cluster_assign_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def build() -> None:
-        corpus = (
-            _corpus(emb.where(~is_inc))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        n = corpus.count()
-        # floor of 2, NOT 1: residue-1 selection degenerates at
-        # stride 1 (x % 1 == 1 is never true → zero seeds → an empty
-        # result that would vacuously match the equally-empty oracle
-        # on a corpus smaller than 2·K). The oracle applies the same
-        # GREATEST(2, …).
-        stride = max(2, n // K_CLUSTERS)
-        # seeds: every stride-th TRAINING vector by rank (vec_id
-        # strides don't work on the gapped split)
-        from pyspark.sql import Window as W
+        corpus = _corpus(emb.where(~is_inc))
+        with cachekit.held(corpus):
+            n = corpus.count()
+            # floor of 2, NOT 1: residue-1 selection degenerates at
+            # stride 1 (x % 1 == 1 is never true → zero seeds → an empty
+            # result that would vacuously match the equally-empty oracle
+            # on a corpus smaller than 2·K). The oracle applies the same
+            # GREATEST(2, …).
+            stride = max(2, n // K_CLUSTERS)
+            # seeds: every stride-th TRAINING vector by rank (vec_id
+            # strides don't work on the gapped split)
+            from pyspark.sql import Window as W
 
-        # seed selection: the stride-filtered frame holds ~k rows, so
-        # the unpartitioned row_number window here is bounded by k,
-        # never by the corpus. Residue 1, NOT 0: when stride is a
-        # multiple of ASSIGN_MOD, every id with residue 0 belongs to
-        # the increment split and the training corpus would yield
-        # zero seeds.
-        seeds = (
-            corpus.where(F.col("vec_id") % stride == 1)
-            .withColumn(
-                "cid",
-                (F.row_number().over(W.orderBy("vec_id")) - 1).cast("int"),
-            )
-            .where(F.col("cid") < K_CLUSTERS)
-            .select("cid", F.col("q").alias("c"), F.col("nsq").alias("cn"))
-        )
-        c = seeds
-        for _ in range(KMEANS_ITERS):
-            assigned = assign(corpus, c)
-            ex = assigned.join(corpus, "vec_id").select(
-                "cid", F.posexplode("q").alias("dim", "x")
-            )
-            per = ex.groupBy("cid", "dim").agg(
-                F.sum("x").alias("s"), F.count(F.lit(1)).alias("cnt")
-            )
-            cd = per.select(
-                "cid", "dim",
-                F.expr("(s - pmod(s, cnt)) div cnt").alias("cd"),
-            )
-            c = (
-                cd.groupBy("cid")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(F.struct("dim", "cd"))
-                    ).alias("a")
+            # seed selection: the stride-filtered frame holds ~k rows, so
+            # the unpartitioned row_number window here is bounded by k,
+            # never by the corpus. Residue 1, NOT 0: when stride is a
+            # multiple of ASSIGN_MOD, every id with residue 0 belongs to
+            # the increment split and the training corpus would yield
+            # zero seeds.
+            seeds = (
+                corpus.where(F.col("vec_id") % stride == 1)
+                .withColumn(
+                    "cid",
+                    (F.row_number().over(W.orderBy("vec_id")) - 1).cast(
+                        "int"
+                    ),
                 )
-                .select("cid", F.transform("a", lambda s: s["cd"]).alias("c"))
+                .where(F.col("cid") < K_CLUSTERS)
                 .select(
-                    "cid", "c", idot(F.col("c"), F.col("c")).alias("cn")
+                    "cid", F.col("q").alias("c"), F.col("nsq").alias("cn")
                 )
             )
-        c.write.mode("overwrite").parquet(cents_path)
-        corpus.unpersist()
+            c = seeds
+            for _ in range(KMEANS_ITERS):
+                assigned = assign(corpus, c)
+                ex = assigned.join(corpus, "vec_id").select(
+                    "cid", F.posexplode("q").alias("dim", "x")
+                )
+                per = ex.groupBy("cid", "dim").agg(
+                    F.sum("x").alias("s"), F.count(F.lit(1)).alias("cnt")
+                )
+                cd = per.select(
+                    "cid", "dim",
+                    F.expr("(s - pmod(s, cnt)) div cnt").alias("cd"),
+                )
+                c = (
+                    cd.groupBy("cid")
+                    .agg(
+                        F.array_sort(
+                            F.collect_list(F.struct("dim", "cd"))
+                        ).alias("a")
+                    )
+                    .select(
+                        "cid", F.transform("a", lambda s: s["cd"]).alias("c")
+                    )
+                    .select(
+                        "cid", "c", idot(F.col("c"), F.col("c")).alias("cn")
+                    )
+                )
+            c.write.mode("overwrite").parquet(cents_path)
 
     build_once(base_dir, build)
     cents = spark.read.parquet(cents_path)

@@ -32,9 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from crime_data_batch_processing_spark.cachekit import track
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
 from crime_data_batch_processing_spark.functions.textkit import (
     SHINGLE_K,
@@ -122,7 +121,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle sets, persisted: every dedup plan references this frame
     from 2-4 branches (both sides of a self-join, then verification),
     and without a persist each branch re-runs tokenize+shingle from
-    the scan. MEMORY_AND_DISK spills instead of OOMing at scale —
+    the scan. The cached level spills instead of OOMing at scale —
     derived signature state is O(corpus) and persisting it once is the
     standard trade against recomputing it per branch."""
     docs = spread_table(spark, sf_dir, "documents")
@@ -133,8 +132,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", tokens("text").alias("toks"))
         .where(F.size("toks") >= SHINGLE_K)
         .select("doc_id", shingles_of(F.col("toks")).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
 
 
@@ -353,8 +351,7 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_sh = _doc_shingles(spark, sf_dir)
     banded = (
         _band_rows(with_sh)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     # persisted AND materialized before the self-join: two cold
     # branches in one job would otherwise race the cache and each run
@@ -529,10 +526,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.bval").persist(
-        StorageLevel.MEMORY_AND_DISK  # self-joined below; 64-bit
-        # fingerprint math would otherwise run once per side
-    ).transform(track)
+    ).select("doc_id", "simhash", "bb.band", "bb.bval")
+    # persisted: self-joined below, and the 64-bit fingerprint math
+    # would otherwise run once per side
+    bands = cachekit.persist(bands)
     bands.count()  # materialize before the self-join (cache race)
     return (
         bands.alias("a")
@@ -1491,7 +1488,7 @@ def connected_components(
     # symmetrize via ONE explode, not a self-union (as in
     # `knn_rank_directed`): `pairs` is usually the whole banded
     # candidate + exact-verify chain, and a union of two selects over
-    # it RUNS that chain once per branch when the persist below
+    # it RUNS that chain once per branch when the held frame below
     # materializes — the explode emits both directed rows in the same
     # task, so the chain runs once. Same rows, same downstream math.
     edges = (
@@ -1508,52 +1505,58 @@ def connected_components(
             ).alias("e")
         )
         .select("e.src", "e.dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    edges.count()  # materialize: referenced twice per round
+    with cachekit.held(edges):
+        edges.count()  # materialize: referenced twice per round
 
-    # iterate ONLY over docs that appear in some pair — everything
-    # else keeps its identity label by definition. At scale this is
-    # the difference between looping over the corpus and looping over
-    # the (far smaller) near-dup subgraph.
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col("doc_id").alias("src"), "cluster_id"),
-                "src",
+        # iterate ONLY over docs that appear in some pair — everything
+        # else keeps its identity label by definition. At scale this is
+        # the difference between looping over the corpus and looping
+        # over the (far smaller) near-dup subgraph.
+        labels = (
+            edges.select(F.col("src").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("doc_id"))
+            .localCheckpoint(eager=True)
+        )
+        for _ in range(max_rounds):
+            nbr_min = (
+                edges.join(
+                    labels.select(F.col("doc_id").alias("src"), "cluster_id"),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("doc_id"))
+                .agg(F.min("cluster_id").alias("nbr_min"))
             )
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(nbr_min, "doc_id")
-            .select(
-                "doc_id",
-                "cluster_id",
-                F.least(F.col("cluster_id"), F.col("nbr_min")).alias("next_id"),
+            stepped = (
+                labels.join(nbr_min, "doc_id")
+                .select(
+                    "doc_id",
+                    "cluster_id",
+                    F.least(F.col("cluster_id"), F.col("nbr_min")).alias(
+                        "next_id"
+                    ),
+                )
+                # LAZY checkpoint: the convergence count below is the
+                # round's first action, so it both materializes the
+                # checkpoint AND returns the scalar — one job per round
+                # instead of the eager-checkpoint-then-count two
+                # (measured ~0.2-0.3s of per-job overhead per round per
+                # key)
+                .localCheckpoint(eager=False)
             )
-            # LAZY checkpoint: the convergence count below is the
-            # round's first action, so it both materializes the
-            # checkpoint AND returns the scalar — one job per round
-            # instead of the eager-checkpoint-then-count two (measured
-            # ~0.2-0.3s of per-job overhead per round per key)
-            .localCheckpoint(eager=False)
-        )
-        changed = stepped.where(F.col("next_id") < F.col("cluster_id")).count()
-        labels = stepped.select("doc_id", F.col("next_id").alias("cluster_id"))
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"label propagation did not converge in {max_rounds} rounds"
-        )
-    edges.unpersist()
+            changed = stepped.where(
+                F.col("next_id") < F.col("cluster_id")
+            ).count()
+            labels = stepped.select(
+                "doc_id", F.col("next_id").alias("cluster_id")
+            )
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"label propagation did not converge in {max_rounds} rounds"
+            )
     return labels
 
 
@@ -1801,8 +1804,7 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_sh = (
         docs.select("doc_id", tokens("text").alias("toks"))
         .select("doc_id", shingles_of(F.col("toks"), DECON_K).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     bench_grams = (
         with_sh.where(F.col("doc_id") % BENCH_MOD == 0)
@@ -2061,11 +2063,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus.select("doc_id", tokens("text").alias("toks"))
             .where(F.size("toks") >= SHINGLE_K)
             .select("doc_id", shingles_of(F.col("toks")).alias("sh"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        corpus_sh.write.mode("overwrite").parquet(shingle_dir)
-        _band_rows(corpus_sh).write.mode("overwrite").parquet(index_dir)
-        corpus_sh.unpersist()
+        with cachekit.held(corpus_sh):
+            corpus_sh.write.mode("overwrite").parquet(shingle_dir)
+            _band_rows(corpus_sh).write.mode("overwrite").parquet(index_dir)
 
     build_once(base, build)
 
@@ -2078,22 +2079,16 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     inc = (
         docs.where(is_inc)
         .unionByName(redelivered)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     inc_digest = inc.select("doc_id", F.md5("text").alias("digest"))
     inc_sh = (
         inc.select("doc_id", tokens("text").alias("toks"))
         .where(F.size("toks") >= SHINGLE_K)
         .select("doc_id", shingles_of(F.col("toks")).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
-    inc_bands = (
-        _band_rows(inc_sh).persist(StorageLevel.MEMORY_AND_DISK).transform(
-            track
-        )
-    )
+    inc_bands = cachekit.persist(_band_rows(inc_sh))
     inc_bands.count()  # fill band+shingle caches once, before reuse
 
     # target pool: persisted corpus artifacts UNION lower-id increment

@@ -26,9 +26,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.storagelevel import StorageLevel
-
-from crime_data_batch_processing_spark.cachekit import track
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.functions.textkit import (
     shingles_of,
     sql_shingles,
@@ -210,8 +208,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = (
         q.join(winners.select("doc_id"), "doc_id")
         .select("doc_id", "lang")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     return mixture_sample(kept)
 
@@ -819,8 +816,7 @@ def _decon_quality_profile(docs: DataFrame) -> DataFrame:
             F.size(toks).alias("n_toks"),
             (quality_logit(toks) >= QM_THRESHOLD).alias("q_ok"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
 
 
@@ -1127,14 +1123,10 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the release as of ingest N: eval grams over the FULL corpus
         # (fixed suite), then pipeline_release's stages over the base
         # slice only
-        with_sh = _decon_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
-        kept = _quality_kept(docs.where(~is_batch & ~is_bench)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        dedup = _keep_first(
-            kept, "digest", "doc_id", "lang", "n_toks"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        with_sh = _decon_shingles(docs)
+        kept = _quality_kept(docs.where(~is_batch & ~is_bench))
+        dedup = _keep_first(kept, "digest", "doc_id", "lang", "n_toks")
+        with cachekit.held(with_sh, kept, dedup):
             with_sh.where(is_bench).select(
                 F.explode("sh").alias("g")
             ).distinct().write.mode("overwrite").parquet(dirs["qgrams"])
@@ -1148,15 +1140,12 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
             _card_counters(_flag(dedup, contaminated)).write.mode(
                 "overwrite"
             ).parquet(dirs["card"])
-        finally:
-            for df in (dedup, kept, with_sh):
-                df.unpersist()
 
     build_once(dirs["base"], build)
 
     # ---- the per-ingest fold: O(batch) + one pruned index scan ----
     batch = docs.where(is_batch)
-    dedup_b = track(
+    dedup_b = (
         _quality_kept(batch.where(~is_bench))
         .withColumn(
             "keep_id",
@@ -1166,7 +1155,7 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("doc_id") == F.col("keep_id"))
         .select("digest", "doc_id", "lang", "n_toks")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(cachekit.persist)
     )
     # broadcast the batch's digests AT the index, never the reverse:
     # the index is corpus-sized, the batch is an ingest
@@ -1177,11 +1166,7 @@ def pipeline_release_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     new_b = dedup_b.join(F.broadcast(matched), "digest", "left_anti")
-    batch_sh = track(
-        _decon_shingles(batch.where(~is_bench)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    batch_sh = cachekit.persist(_decon_shingles(batch.where(~is_bench)))
     contaminated_b = _contaminated(
         batch_sh, spark.read.parquet(dirs["qgrams"])
     )

@@ -37,8 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.functions.veckit import (
     SCALE_SQ,
     descale,
@@ -46,7 +46,6 @@ from crime_data_batch_processing_spark.functions.veckit import (
     quantize,
     sql_cosine,
 )
-from crime_data_batch_processing_spark.cachekit import track
 from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
 from crime_data_batch_processing_spark.operators.text_analysis import (
     sql_bm25_ctes,
@@ -194,15 +193,12 @@ def _with_sig_cols(corpus_q, bits: int = LSH_BITS):
 
 
 def signature_frame(corpus_q, bits: int = LSH_BITS):
-    """`_with_sig_cols` persisted (MEMORY_AND_DISK), cachekit-tracked,
-    and materialized: the form every query-path banded consumer reads,
-    so the band explode and both exact-cosine join-backs hit the cache
-    and the Arrow signature matmul runs once per vector."""
-    out = (
-        _with_sig_cols(corpus_q, bits)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
-    )
+    """`_with_sig_cols` under `cachekit.persist` (query-scoped, Spark's
+    DataFrame default level) and materialized: the form every
+    query-path banded consumer reads, so the band explode and both
+    exact-cosine join-backs hit the cache and the Arrow signature
+    matmul runs once per vector."""
+    out = cachekit.persist(_with_sig_cols(corpus_q, bits))
     out.count()
     return out
 
@@ -388,20 +384,16 @@ def write_sig_index(
     sig) and `{path}/bands` its `band_rows_of` (vec_id, band, bval).
     `mode="append"` grows both by exactly the given rows (new parquet
     files, existing ones untouched). The corpus is signed once, under
-    an untracked MEMORY_AND_DISK persist released in `finally`, so a
-    failed write never leaks the frame across `build_once` retries
-    (cachekit tracking is for query-path frames). `knn_inc_probe` is
-    the one reader of this layout."""
-    signed = _with_sig_cols(corpus_q, bits).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
+    `cachekit.held` (block-scoped: released on exit, also when a write
+    raises), so a failed write never leaks the frame across
+    `build_once` retries. `knn_inc_probe` is the one reader of this
+    layout."""
+    signed = _with_sig_cols(corpus_q, bits)
+    with cachekit.held(signed):
         signed.write.mode(mode).parquet(f"{path}/index")
         band_rows_of(signed, bands, band_bits).write.mode(mode).parquet(
             f"{path}/bands"
         )
-    finally:
-        signed.unpersist()
 
 
 def knn_inc_probe(
@@ -719,7 +711,7 @@ def sim_search_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantization + norms feed three branches (query side, candidate
     # side, scoring); persist + materialize once so the Arrow
     # signature UDF and int64 norm pipeline run a single time
-    corpus = track(corpus.persist(StorageLevel.MEMORY_AND_DISK))
+    corpus = cachekit.persist(corpus)
     corpus.count()
 
     def banded(df: DataFrame, vec_col: str) -> DataFrame:
@@ -830,7 +822,7 @@ def sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     queries, corpus = _with_norms(emb)
-    corpus = track(corpus.persist(StorageLevel.MEMORY_AND_DISK))
+    corpus = cachekit.persist(corpus)
     n = corpus.count()
     stride = max(1, n // IVF_NLIST)
     cents = (
@@ -1015,8 +1007,7 @@ def sim_search_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (
             with_code.select("vec_id", "embedding", "code", csq.alias("cnsq"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-            .transform(track)
+            .transform(cachekit.persist)
         )
 
     coded = encode(emb)
@@ -1203,8 +1194,7 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.select("vec_id", quantize(F.col("embedding")).alias("q"))
     corpus = (
         corpus.select("vec_id", "q", idot(F.col("q"), F.col("q")).alias("nsq"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     subs_arr = F.transform(
         F.sequence(F.lit(0), F.lit(PQ_M - 1)),
@@ -1212,8 +1202,7 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sub = (
         corpus.select("vec_id", F.posexplode(subs_arr).alias("m", "sv"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     seeds = sub.where(
         (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + PQ_K)
@@ -1254,8 +1243,7 @@ def sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("dim", "cd"))).alias("a"))
         .select("m", "cid", F.transform("a", lambda s: s["cd"]).alias("c"))
         .select("m", "cid", "c", idot(F.col("c"), F.col("c")).alias("cn"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-        .transform(track)
+        .transform(cachekit.persist)
     )
     codes = assign(cents)
     rnsq = (
@@ -1520,12 +1508,12 @@ def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    with_sh = track(
+    with_sh = (
         docs.select("doc_id", tokens("text").alias("toks"))
         .select(
             "doc_id", shingles_of(F.col("toks"), HN_EXCL_K).alias("sh")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(cachekit.persist)
     )
     qgrams = (
         with_sh.where(F.col("doc_id") < HN_N_Q)
@@ -1704,7 +1692,7 @@ def sim_search_knn_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe agree
     bit-for-bit and the increment's edges equal what a full rebuild
     would assign those vectors. The increment computes its own
-    signatures in-plan (persisted + tracked), probes the index on
+    signatures in-plan (`cachekit.persist`), probes the index on
     (band, bval) — a hash join against LSH_BANDS rows per corpus
     vector — adds increment-internal collisions from a self-join of
     its own (tiny) band set, exact-cosine re-ranks candidates with

@@ -191,7 +191,6 @@ def latest_snapshot_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = scratch_dir("snapcat", sf_dir, "orders")
     snap = f"{base}/orders"
-    paths: dict[str, str] = {}
 
     def build() -> None:
         orders = load_table(spark, sf_dir, "orders")
@@ -201,21 +200,17 @@ def latest_snapshot_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_snapshot(orders, snap, "2026-08-13")
 
     build_once(base, build)
-    paths["stale"] = f"{snap}/y=2026/m=8/d=12"
-    paths["latest"] = f"{snap}/y=2026/m=8/d=13"
 
     sf_tag = "".join(
         c if c.isalnum() else "_" for c in os.path.basename(sf_dir.rstrip("/"))
     )
     tbl = f"cdbp_catalog.orders_latest_{sf_tag}"
     spark.sql("CREATE DATABASE IF NOT EXISTS cdbp_catalog")
-    # deterministic replay: reset, then CREATE (absent branch) against
-    # the stale day, then ALTER (present branch) to the latest day
+    # deterministic replay: reset, then pin the stale day (the CREATE
+    # branch), then the latest day (the ALTER branch)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    assert not spark.catalog.tableExists(tbl)
-    spark.sql(f"CREATE TABLE {tbl} USING PARQUET LOCATION '{paths['stale']}'")
-    assert spark.catalog.tableExists(tbl)
-    spark.sql(f"ALTER TABLE {tbl} SET LOCATION '{paths['latest']}'")
+    pin_latest_table(spark, tbl, f"{snap}/y=2026/m=8/d=12")
+    pin_latest_table(spark, tbl, f"{snap}/y=2026/m=8/d=13")
     spark.sql(f"REFRESH TABLE {tbl}")
     return (
         spark.table(tbl)
@@ -435,10 +430,9 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Z-order layout: 8 output files, 8 bits per dimension (256 buckets).
 ZORDER_FILES = 8
 #: Fixture kind for the z-ordered rewrite — shared with the footer-
-#: stats layout test so a kind bump can never desync them again: the
-#: round-5 bump to v2 left the test globbing the pre-v2 path, where it
-#: silently validated STALE round-4 files for five rounds until the
-#: leftover /tmp state finally aged out (round-11 failure).
+#: stats layout test so a kind bump can never desync them: a test
+#: globbing an older kind's path would validate stale files left in
+#: /tmp by an earlier layout instead of the current rewrite.
 ZORDER_KIND = "zorder_v2"
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crime_data_batch_processing_spark import cachekit
 from crime_data_batch_processing_spark.functions.textkit import (
     raw_shingles_of,
     sql_raw_shingles,
@@ -308,7 +309,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = ln((N+1)/(df+1)) + 1 (sklearn's smoothing — never divides
     by zero, never negative).
 
-    Bit-exactness design (revised in round 5): the JVM's Math.log and
+    Bit-exactness design: the JVM's Math.log and
     glibc's log disagree by 1 ULP on some arguments — invisible at
     sf0.01, surfaced at sf0.1 (df=3847, N=5000 → Spark
     …99194 vs DuckDB …992). Rounding can't close a ULP gap safely
@@ -334,20 +335,18 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from crime_data_batch_processing_spark import cachekit
-
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()  # scalar; one job over parquet row-group stats
     # no _spread here: measured NEGATIVE on this key (1.29s → 1.78s
-    # warm, r14) — tf-idf's cost is its two aggregates, not the
+    # warm) — tf-idf's cost is its two aggregates, not the
     # single-split explode, and the extra exchange is a net loss
     terms = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
     counts = terms.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     # persisted: the df table feeds BOTH the distinct-df scalar fetch
     # and the final broadcast join — without the cache the whole
     # explode→aggregate chain would run twice
-    df = cachekit.track(
-        counts.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
+    df = cachekit.persist(
+        counts.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     )
     df_values = [
         r[0] for r in df.select("df").distinct().limit(IDF_TABLE_CAP + 1).collect()
@@ -765,8 +764,6 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the `text_tfidf` df-join shape. Documents with fewer than
     two tokens have no transitions and no row (both engines).
     """
-    from crime_data_batch_processing_spark import cachekit
-
     docs = spread_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokens("text").alias("t"))
     n = F.size("t")
@@ -785,7 +782,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection collapse would otherwise inline the transform() into
     # the generator and re-evaluate it per OUTPUT row (~n_tokens x
     # blowup — textkit's documented rule)
-    with_pairs = cachekit.track(
+    with_pairs = cachekit.persist(
         toks.select(
             "doc_id",
             F.when(n >= 2, pairs)
@@ -793,7 +790,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array().cast("array<struct<ctx:string,gram:string>>")
             )
             .alias("pairs"),
-        ).persist()
+        )
     )
     g = with_pairs.select(
         "doc_id", F.explode("pairs").alias("p")
@@ -935,13 +932,11 @@ def _bm25_ranked(
     the identical value chain."""
     import math
 
-    from crime_data_batch_processing_spark import cachekit
-
     # _spread before the tokenize/explode pass: the local documents
     # table is ONE parquet row group → one input split, so without it
-    # the corpus-sized explode+count runs on a single core (r14
-    # measured: counts materialization 1.8s single-split vs ~0.4s
-    # spread; a real multi-split corpus skips the shuffle entirely)
+    # the corpus-sized explode+count runs on a single core (counts
+    # materialization measured 1.8s single-split vs ~0.4s spread; a
+    # real multi-split corpus skips the shuffle entirely)
     docs = spread_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id",
@@ -950,10 +945,9 @@ def _bm25_ranked(
     )
     # persisted: feeds the corpus stats, the df aggregate AND the
     # posting join — ONE tokenize pass over the corpus total
-    counts = cachekit.track(
+    counts = cachekit.persist(
         terms.groupBy("doc_id", "dl", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     # corpus stats fold FROM the persisted tf table (dl rides along
     # as a group key, so one distinct over doc-count rows — never a
@@ -967,8 +961,8 @@ def _bm25_ranked(
         .first()
     )
     avgdl = sum_dl / n_docs  # exact ints < 2^53 → one IEEE division
-    dft = cachekit.track(
-        counts.groupBy("token").agg(F.count(F.lit(1)).alias("df")).persist()
+    dft = cachekit.persist(
+        counts.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     )
     df_values = [
         r[0]
@@ -1153,10 +1147,9 @@ def _sql_bpe_parts(n_rounds: int = BPE_ROUNDS) -> tuple[str, str]:
 
 def _sql_bpe_apply_parts(n_rounds: int = BPE_ROUNDS) -> tuple[str, str]:
     """Generate the apply-side oracle pieces FROM the round count —
-    the nested `replace(...)` chain over the per-round 1-row merge
+    the nested `replace(...)` chain over each round's one-row merge
     CTEs and the matching FROM list — so the oracle can never
-    desynchronize from BPE_ROUNDS (round-7 advisor item: the chain
-    was previously hand-unrolled for exactly 3 rounds)."""
+    desynchronize from BPE_ROUNDS."""
     expr = "s"
     for i in range(1, n_rounds + 1):
         expr = (
@@ -1179,8 +1172,6 @@ def _learn_merges(
     n_words)] in merge order. Shared by `text_bpe_train` (which
     reports the table) and `text_bpe_apply` (which tokenizes the
     corpus with it) — one implementation, two readouts."""
-    from crime_data_batch_processing_spark import cachekit
-
     docs = spread_table(spark, sf_dir, "documents")
     words = (
         docs.select(
@@ -1193,11 +1184,12 @@ def _learn_merges(
     # LAZY persist: each round's argmax collect below is the frame's
     # first (and only cold) consumer, so it both materializes the
     # cache and returns the scalar — one job per round instead of the
-    # eager count-then-collect two (the connected_components r14
-    # lesson; r15 A/B: 1.55 s → 1.08 s warm, identical merge list).
+    # eager count-then-collect two (measured 1.55 s → 1.08 s warm,
+    # identical merge list; `connected_components` does the same with
+    # its lazy per-round checkpoint).
     # No cache race: `pairs` is the single cold reference, and the
     # replace chain below it only runs after the collect returns.
-    vocab = cachekit.track(
+    vocab = cachekit.persist(
         words.select(
             F.concat(
                 F.lit("·"),
@@ -1205,7 +1197,7 @@ def _learn_merges(
                 F.lit("·"),
             ).alias("s"),
             "freq",
-        ).persist()
+        )
     )
     merges: list[tuple] = []
     for rnd in range(1, n_rounds + 1):
@@ -1243,7 +1235,7 @@ def _learn_merges(
             ).alias("s"),
             "freq",
         )
-        vocab = cachekit.track(merged.persist())
+        vocab = cachekit.persist(merged)
     return merges
 
 
@@ -1345,7 +1337,7 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = _learn_merges(spark, sf_dir)
     # no _spread here: the corpus path carries a single-Exchange plan
     # contract (tests/test_plans.py bpe_apply stays-JVM-side) and the
-    # spread measured neutral (2.25s vs 2.31s warm, r14) — the fold,
+    # spread measured neutral (2.25s vs 2.31s warm) — the fold,
     # not the explode, dominates this key
     docs = load_table(spark, sf_dir, "documents")
     s = F.concat(

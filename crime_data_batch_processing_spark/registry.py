@@ -40,7 +40,7 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     driver then records a weaker rows-only check.
 
     The REGISTERED entry (what ``QUERIES[key]`` holds) releases every
-    cachekit-tracked frame from the *previous* registered invocation
+    ``cachekit.persist`` frame from the *previous* registered invocation
     before building its own plan, so a harness that walks many queries
     sequentially without calling ``cachekit.release_all()`` itself
     (the external driver) accumulates at most one query's signature
@@ -48,7 +48,8 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     is free; an unconsumed one merely recomputes lazily. The decorator
     returns the ORIGINAL function, so operators composing each other
     directly (e.g. clustering calling the pair detector) never drop
-    caches mid-plan.
+    caches mid-plan. Block-scoped ``cachekit.held`` frames are released
+    by their own ``with`` block, never here.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

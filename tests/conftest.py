@@ -7,9 +7,12 @@ read true):
 - **fast (default)**: ``pytest tests/`` deselects every test in
   ``SLOW_NODEIDS`` (measured >= 3 s each in the r15 full-suite run,
   ``--durations`` log; together ~1280 s of the 1697 s total) and
-  finishes in ~7 min while still covering every module, all plan
-  contracts except the two build-every-key sweeps, and the oracle
-  match for ~190 of the 244 keys.
+  finishes in ~10 min while still covering every module, every plan
+  contract, and the oracle match for ~190 of the 244 keys. The
+  registry-wide plan rules (no CartesianProduct, no BatchEvalPython)
+  ride on each key's own build in
+  ``test_oracle.py::test_query_returns_rows``, so the fast tier checks
+  them on every key whose row test it runs.
 - **full**: ``SPARK_GRAFT_FULL_TESTS=1 pytest tests/`` runs everything
   (the builder's pre-commit gate). Passing an explicit ``-m`` marker
   expression also bypasses the tier (e.g. ``-m slow`` to run only the
@@ -17,8 +20,8 @@ read true):
 
 Membership is by measured duration, not by kind: the slow set is the
 expensive oracle replays (banded similarity / release / multimodal
-keys), the streaming-restart tests, the two build-every-key plan
-sweeps, and a handful of property tests with large reference loops.
+keys), the streaming-restart tests, and a handful of property tests
+with large reference loops.
 """
 
 from __future__ import annotations
@@ -103,8 +106,6 @@ SLOW_NODEIDS = frozenset({
     "tests/test_oracle.py::test_query_returns_rows[pipeline_collapse]",
     "tests/test_oracle.py::test_query_returns_rows[pipeline_eval_decontaminate]",
     "tests/test_oracle.py::test_query_returns_rows[stream_pysource_partitioned]",
-    "tests/test_plans.py::test_no_cartesian_products_anywhere",
-    "tests/test_plans.py::test_no_row_at_a_time_python_udfs",
     "tests/test_properties.py::TestBigramLmScore::test_engine_matches_reference",
     "tests/test_properties.py::test_bpe_ten_rounds_cross_engine_and_oracle_generators",
     "tests/test_properties.py::test_sample_hash32_overflow_safe_and_cross_engine",

@@ -110,7 +110,19 @@ def test_query_returns_rows(spark, sf_dir, key):
     VACUOUS pass (a symmetric bug zeroes both sides; round 4's
     cluster-assignment key shipped exactly that way until caught).
     No registered key legitimately returns an empty frame on this
-    testdata; if one ever should, allowlist it here explicitly."""
-    assert registry.QUERIES[key](spark, sf_dir).count() > 0, (
-        f"{key} returned 0 rows — vacuous-oracle hazard"
-    )
+    testdata; if one ever should, allowlist it here explicitly.
+
+    The same build is held to two plan rules. No CartesianProduct:
+    the non-broadcast all-pairs join cannot survive any scale
+    (BroadcastNestedLoopJoin is allowed; its build side is broadcast
+    by construction, and every one in this engine crosses a tiny
+    frame — scalar totals, per-dim stats rows, k-row centroid tables —
+    against the scan map-side). No BatchEvalPython: Python appears
+    only as Arrow-vectorized nodes, never row-at-a-time."""
+    from crime_data_batch_processing_spark.plans import physical_plan
+
+    df = registry.QUERIES[key](spark, sf_dir)
+    plan = physical_plan(df)
+    assert "CartesianProduct" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
+    assert df.count() > 0, f"{key} returned 0 rows — vacuous-oracle hazard"

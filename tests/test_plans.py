@@ -71,24 +71,6 @@ def test_sim_search_broadcasts_queries(spark, sf_dir):
     assert uses_broadcast_join(df), "the small query set must broadcast"
 
 
-def test_no_row_at_a_time_python_udfs(spark, sf_dir):
-    """Python appears in plans ONLY as Arrow-vectorized nodes
-    (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) — never
-    row-at-a-time BatchEvalPython, which serializes per row and is
-    banned from this engine's hot paths."""
-    from crime_data_batch_processing_spark.plans import physical_plan
-
-    streaming_keys = {"stream_events", "stream_stateful"}  # memory-sink tables
-    offenders = []
-    for key, fn in sorted(registry.QUERIES.items()):
-        if key in streaming_keys:
-            continue
-        plan = physical_plan(fn(spark, sf_dir))
-        if "BatchEvalPython" in plan:
-            offenders.append(key)
-    assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
-
-
 def test_pivot_is_single_aggregate(spark, sf_dir):
     """Explicit pivot values → exactly one aggregate pass over the
     fact table (no distinct-values pre-job materialized in the plan)."""
@@ -845,29 +827,6 @@ def test_bitmap_distinct_no_expand(spark, sf_dir):
     assert count_nodes(df, "HashAggregate") >= 2
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
-    """No registered query may plan a CartesianProduct — the
-    non-broadcast all-pairs join that cannot survive any scale.
-    (BroadcastNestedLoopJoin is allowed: its build side is broadcast
-    by construction, and every occurrence in this engine is a
-    deliberately tiny frame — scalar totals, per-dim stats rows,
-    k-row centroid tables — crossed against the scan map-side.)"""
-    from crime_data_batch_processing_spark import cachekit
-    from crime_data_batch_processing_spark.plans import physical_plan
-
-    streaming_keys = {"stream_events", "stream_stateful"}
-    offenders = []
-    for key, fn in sorted(registry.QUERIES.items()):
-        if key in streaming_keys:
-            continue
-        try:
-            if "CartesianProduct" in physical_plan(fn(spark, sf_dir)):
-                offenders.append(key)
-        finally:
-            cachekit.release_all()
-    assert not offenders, f"CartesianProduct in: {offenders}"
-
-
 def test_sort_keyset_is_pushed_filter_plus_top_k(spark, sf_dir):
     """Keyset pagination's scale claim: the cursor predicate reaches
     the parquet scan (row-group stats skip everything above the
@@ -1183,6 +1142,8 @@ def test_min_cost_supplier_semi_restricted_pre_aggregate(spark, sf_dir):
     joined back on (part, cost-equality); the corpus-scale pair
     aggregate must be pre-restricted by BOTH broadcast semi-joins
     (part set, region supplier set) BEFORE its shuffle."""
+    import re
+
     from crime_data_batch_processing_spark.plans import (
         count_nodes,
         physical_plan,
@@ -1198,6 +1159,16 @@ def test_min_cost_supplier_semi_restricted_pre_aggregate(spark, sf_dir):
     # per-part min (partial+final) = 6; O(1), never one per part
     assert count_nodes(df, "HashAggregate") <= 6, plan
     assert "CartesianProduct" not in plan, plan
+    # the per-part minimum is hinted as the broadcast (build) side of
+    # the cost-equality join-back, so AQE cannot flip the build side
+    # between runs by which shuffle finished first
+    logical = df._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(
+        r"Join Inner, \(\(l_partkey#\d+L = b_partkey#\d+L\) AND .*"
+        r"min_cost#.*\), rightHint=\(strategy=broadcast\)$",
+        logical,
+        re.M,
+    ), logical
 
 
 def test_entropy_broadcast_log_tables_over_persisted_fold(spark, sf_dir):
@@ -1766,6 +1737,64 @@ def test_driver_tables_are_built_only_by_local_frame():
             values.append(f"{path.relative_to(lib)}:{line_no}")
     assert not stray, stray
     assert not values, values
+
+
+def test_frames_are_cached_only_through_cachekit():
+    """Source guard: under the library, only `cachekit.py` calls
+    `.persist(` / `.unpersist(` or names `StorageLevel`; every other
+    module caches through `cachekit.persist` or `cachekit.held`, so
+    the storage level and both frame lifetimes are defined once."""
+    import ast
+    from pathlib import Path
+
+    lib = Path(registry.__file__).parent
+    stray = []
+    for path in sorted(lib.rglob("*.py")):
+        if path == lib / "cachekit.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr in (
+                "persist", "unpersist"
+            ):
+                hit = not (
+                    isinstance(node.value, ast.Name)
+                    and node.value.id == "cachekit"
+                )
+            else:
+                hit = "StorageLevel" in {
+                    getattr(node, "id", None),
+                    getattr(node, "attr", None),
+                    getattr(node, "name", None),
+                }
+            if hit:
+                stray.append(f"{path.relative_to(lib)}:{node.lineno}")
+    assert not stray, stray
+
+
+def test_held_unpersists_when_the_block_raises(spark):
+    import pytest
+    from pyspark.storagelevel import StorageLevel
+
+    from crime_data_batch_processing_spark import cachekit
+
+    df = spark.range(3)
+    with pytest.raises(RuntimeError):
+        with cachekit.held(df):
+            assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+            raise RuntimeError("boom")
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_persist_is_released_by_release_all(spark):
+    from pyspark.storagelevel import StorageLevel
+
+    from crime_data_batch_processing_spark import cachekit
+
+    cachekit.release_all()
+    df = cachekit.persist(spark.range(4))
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    assert cachekit.release_all() == 1
+    assert df.storageLevel == StorageLevel.NONE
 
 
 def test_banded_oracles_materialize_sig_and_scored():

@@ -2,11 +2,12 @@
 """Strict cross-engine sweep: every registered query vs its DuckDB
 oracle, bit-exact, in one fresh process walking the driver's key order.
 
-This is the repo-checked-in form of the driver-replica harness.
-Cells compare by exact repr (doubles bit-for-bit), the rule
-tests/oracle_harness.py's `_norm_cell` also applies, with int/float
-type tags on top. Running it at MULTIPLE scale factors and parallelism configs is the
-point: the sf0.1 sweep is what surfaced the 1-ULP JVM-vs-libm log
+This is the repo-checked-in form of the driver-replica harness. Rows
+compare through tests/oracle_harness.py's `_normalize`, the rule the
+oracle tests apply: exact repr (doubles bit-for-bit), int/float type
+tags, NULL distinct from any string, map cells in key order, bytes by
+hex. Running it at MULTIPLE scale factors and parallelism configs is
+the point: the sf0.1 sweep is what surfaced the 1-ULP JVM-vs-libm log
 drift in text_tfidf that the sf0.01 gate could never see.
 
 Usage (ALWAYS from a cwd outside the repo — a repo cwd lands on
@@ -21,29 +22,15 @@ worker sys.path and masks by-reference pickling bugs in UDF closures):
 from __future__ import annotations
 
 import argparse
-import datetime as dt
-import decimal
 import os
 import sys
 import time
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent.parent)
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
-
-from crime_data_batch_processing_spark.sources.tables import TABLES  # noqa: E402
-
-
-def canon(v: object) -> str:
-    """Exact canonical cell: repr round-trips doubles bit-for-bit."""
-    if isinstance(v, decimal.Decimal):
-        return repr(float(v))
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, float):
-        return repr(v)
-    return repr(v)
+for _p in (REPO, f"{REPO}/tests"):
+    if _p not in sys.path:
+        sys.path.insert(0, _p)
 
 
 def _recall_guard(spark, sf_dir: str) -> list[str]:
@@ -170,7 +157,7 @@ def main() -> int:
             print("# non-driver sf-dir: recall guard implied "
                   "(--no-recall-guard suppresses)", flush=True)
 
-    import duckdb
+    from oracle_harness import _normalize, duck_connection
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
@@ -187,12 +174,7 @@ def main() -> int:
     assert len(entrymod.entry(spark).collect()) > 0, "entry smoke failed"
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = duck_connection(args.sf_dir)
 
     keys = args.keys.split(",") if args.keys else list(qs)
     fails: list[str] = []
@@ -210,10 +192,7 @@ def main() -> int:
             assert sorted(scols) == sorted(dcols), (
                 f"cols {sorted(scols)} vs {sorted(dcols)}"
             )
-            so = sorted(range(len(scols)), key=lambda i: scols[i])
-            do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-            sn = sorted(tuple(canon(r[i]) for i in so) for r in srows)
-            dn = sorted(tuple(canon(r[i]) for i in do) for r in drows)
+            sn, dn = _normalize(scols, srows), _normalize(dcols, drows)
             assert len(sn) == len(dn), f"rows {len(sn)} vs {len(dn)}"
             assert sn == dn, "value mismatch, first diff: " + repr(
                 next((a, b) for a, b in zip(sn, dn) if a != b)

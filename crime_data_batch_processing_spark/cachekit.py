@@ -18,8 +18,11 @@ branches, and deserialized blocks skip the per-read decode: at sf0.1
 on 4 cores the serialized level cost `sim_search_lsh` 3.31 vs 2.85 s,
 `dedup_minhash` 5.72 vs 5.36 s and `cluster_kmeans` 5.79 vs 5.57 s of
 JVM CPU, while `agg_entropy` went 2.14 s deserialized vs 2.49 s
-serialized. Both levels spill to disk rather than fail when executor
-memory runs out.
+serialized. Wall time disagrees: `bench.py` over the 43 keys whose
+frames changed level (plus two uncached keys), sf0.1, 4 cores, summed
+203.3 s serialized vs 219.3 s deserialized (median of 3 alternated
+runs). Both levels spill to disk
+rather than fail when executor memory runs out.
 
 Spark keeps cached blocks until `unpersist()` or session end, so a
 long-lived session must release per-query state; nothing outside this

@@ -49,39 +49,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # The driver's correctness pass walks queries() in dict order and
 # checks about 50 keys per run, so the order decides what gets
 # re-verified. _VERIFY_FIRST lists the keys the latest change touched,
-# in this order: keys whose cached frames moved from the serialized
-# MEMORY_AND_DISK level to the DataFrame default; among them last, the
-# keys whose build reaches a block-scoped `cachekit.held` frame; then
-# the two keys whose Spark body changed (the pinned broadcast side, the
-# shared location-pinning protocol). Every change replaces the list
-# with its own touched keys, at most 50 of them, each a registered key
-# (tests/test_plans.py pins both); all other keys follow in
+# in this order: the keys whose build reaches
+# `similarity._distinct_at_width` from `banded_scored_pairs`, then those
+# that reach it from `knn_inc_probe` (the width now also reads a
+# non-numeric spark.sql.shuffle.partitions). Every change replaces the
+# list with its own touched keys, at most 50 of them, each a registered
+# key (tests/test_plans.py pins both); all other keys follow in
 # registration order.
 _VERIFY_FIRST = [
-    # storage level changed
-    "pipeline_pretrain", "pipeline_curate", "sim_search_knn_graph",
-    "sim_search_knn_graph_prod", "dedup_semantic",
-    "pipeline_release_semantic", "pipeline_release_semantic_prod",
-    "sim_search_lsh", "sim_search_ivf", "sim_search_sq", "sim_search_pq",
+    # banded_scored_pairs
+    "sim_search_knn_graph", "sim_search_knn_graph_prod", "dedup_semantic",
     "dedup_embedding_lsh", "dedup_embedding_lsh_prod",
     "multimodal_dedup_semantic", "multimodal_dedup_semantic_wide",
-    "multimodal_dedup_semantic_xwide", "pipeline_release_media",
-    "sample_hard_negatives", "cluster_kmeans", "sample_cluster_balanced",
-    "dedup_ngram_jaccard", "dedup_minhash", "dedup_simhash",
-    "dedup_clusters_star", "text_decontaminate", "dedup_containment",
-    "graph_triangles", "graph_pagerank", "graph_bfs",
-    "graph_label_propagation", "pipeline_eval_decontaminate",
-    "pipeline_release",
-    # storage level changed and the build reaches a `cachekit.held`
-    # frame: the signature index write, the two fixture builds, the
-    # release-inc base build, connected components
+    "multimodal_dedup_semantic_xwide", "pipeline_release_semantic",
+    "pipeline_release_semantic_prod", "pipeline_release_media",
+    # knn_inc_probe
     "sim_search_knn_inc", "sim_search_knn_inc_prod", "dedup_semantic_inc",
     "sim_search_index_append", "sim_search_index_maintain",
-    "multimodal_dedup_semantic_inc", "cluster_assign_incremental",
-    "dedup_incremental", "pipeline_release_inc", "dedup_clusters",
-    "pipeline_collapse",
-    # Spark body changed
-    "analytics_min_cost_supplier", "latest_snapshot_catalog",
+    "multimodal_dedup_semantic_inc",
 ]
 
 

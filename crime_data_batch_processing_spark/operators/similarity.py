@@ -254,14 +254,14 @@ def _distinct_at_width(pairs: DataFrame, a: str, b: str) -> DataFrame:
     (~200 long ops plus array traffic per pair). A user-specified
     repartition is exempt from AQE coalescing and dropDuplicates
     reuses its hash partitioning, so the plan keeps one exchange, at
-    width max(cores, spark.sql.shuffle.partitions). Measured (sf0.1,
-    local[32], warm): weak-geometry kernel exec 1.92 s → 0.93 s,
-    identical rows."""
+    width max(cores, spark.sql.shuffle.partitions), or cores where the
+    runtime allows the value "auto". Measured (sf0.1, local[32],
+    warm): weak-geometry kernel exec 1.92 s → 0.93 s, identical rows."""
     spark = pairs.sparkSession
-    width = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
+    width = spark.sparkContext.defaultParallelism
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    if partitions.isdigit():
+        width = max(width, int(partitions))
     return pairs.repartition(width, a, b).dropDuplicates([a, b])
 
 

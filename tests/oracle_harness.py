@@ -13,14 +13,34 @@ import datetime as dt
 import decimal
 import json
 import math
+import os
+import tempfile
+import uuid
 
 import duckdb
 
 from crime_data_batch_processing_spark.sources.tables import TABLES
 
+#: The share of the host's memory (MemTotal) one oracle connection may
+#: hold. Without a cap DuckDB took a strict sweep's process to 13.9 GB
+#: on a 15 GB host (the `graph_*` oracles at sf0.1). Capped, it spills
+#: to its temp directory instead, or fails the query with an
+#: out-of-memory error; the spill has no bound (those oracles wrote
+#: 6-10 GB of temp files).
+DUCK_MEMORY_SHARE = 0.25
+
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB with a view per table of `sf_dir`. It spills
+    into a directory of its own under the temp dir, which DuckDB
+    creates on the first spill and removes on close."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(config={
+        "memory_limit": f"{int(mem * DUCK_MEMORY_SHARE) // 2**20}MiB",
+        "temp_directory": os.path.join(
+            tempfile.gettempdir(), f"duckdb-spill-{uuid.uuid4().hex}"
+        ),
+    })
     for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"

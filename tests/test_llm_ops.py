@@ -233,6 +233,38 @@ class TestDedup:
 
 
 class TestSimilarity:
+    @pytest.mark.parametrize("partitions", ["auto", "cores+3"])
+    def test_distinct_at_width_reads_any_shuffle_partitions(
+        self, spark, monkeypatch, partitions
+    ):
+        """Runtimes that size shuffles themselves allow
+        spark.sql.shuffle.partitions = "auto", which OSS Spark rejects
+        at set time: the conf read is faked. "auto" falls back to the
+        cores; a number wider than the cores sets the width."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        from crime_data_batch_processing_spark.operators.similarity import (
+            _distinct_at_width,
+        )
+
+        cores = spark.sparkContext.defaultParallelism
+        value, width = (
+            ("auto", cores) if partitions == "auto" else (str(cores + 3), cores + 3)
+        )
+        real_get = RuntimeConfig.get
+
+        def get(self, key, *default):
+            if key == "spark.sql.shuffle.partitions":
+                return value
+            return real_get(self, key, *default)
+
+        pairs = spark.createDataFrame([(1, 2), (1, 2), (3, 4)], "a long, b long")
+        monkeypatch.setattr(RuntimeConfig, "get", get)
+        out = _distinct_at_width(pairs, "a", "b")
+        monkeypatch.undo()
+        assert out.rdd.getNumPartitions() == width
+        assert sorted(map(tuple, out.collect())) == [(1, 2), (3, 4)]
+
     def test_lsh_recall_vs_brute_force(self, spark, sf_dir):
         """Banded hyperplane LSH must recover most of the true top-k.
 

@@ -19,34 +19,40 @@ the configs that matter at 100 TB up front:
 Class-data sharing. When ``get_spark`` launches the driver JVM itself,
 it starts it from a JDK application class-data-sharing (AppCDS)
 archive, so the classes a session loads are mapped instead of parsed
-and verified. The first session for a given JDK and Spark
-install dumps the archive when its JVM exits
-(``-XX:ArchiveClassesAtExit``); that start is not faster. Every later
-session maps it (``-XX:SharedArchiveFile``). On 4 cores, ``perfbench``
-``setup_s`` fell from a median of 11.8 s to 6.3 s on ``engine_keys``
-and from 10.7 s to 5.6 s on ``daily_etl`` (README has the A/B).
+and verified. No user start dumps the archive: the first start on a
+host for a given JDK and Spark install launches its JVM as without
+AppCDS and then starts a detached background process, at the lowest
+CPU priority, that runs one warm-up session whose JVM writes the
+archive when it exits (``-XX:ArchiveClassesAtExit``). Every start after
+that maps it (``-XX:SharedArchiveFile``). So the gain needs a warm
+host: one where an earlier start's dump has finished. On 4 cores,
+``perfbench`` ``setup_s`` on ``engine_keys`` fell from a median of
+11.0 s to 5.9 s with the archive warm, and from 12.8 s to 9.9 s with a
+fresh cache per run, where only the run's second set-up finds the
+archive; the first start on a cold host is not faster. README has the
+A/B.
 
 * The archive lives in ``${XDG_CACHE_HOME:-~/.cache}/crimegraft/cds/``
-  (141-178 MB), named by a fingerprint of the ``java`` binary's real path,
+  (~140 MB), named by a fingerprint of the ``java`` binary's real path,
   the stat of ``libjvm.so``, the name, size and mtime of every jar in
   ``$SPARK_HOME/jars`` and the driver heap size. Only the current
   fingerprint's files are kept.
-* One process claims the dump with a claim file that names the
-  dumping JVM (pid and start time). The claim is a hard link to its
-  written record, so it is exclusive and never seen empty. The JVM writes a temporary file; a later
-  start publishes it with ``os.replace`` once that JVM is gone and the
-  file's header is written (the JVM writes it last). A failed dump is
-  not retried; delete the directory to start over.
+* The dumper holds the archive's ``.lock`` (``fixtures.acquire_lock``,
+  with its heartbeat) while it dumps, so one process dumps at a time.
+  A failed or killed dump leaves the lock behind, and no start retries
+  it until the lock is an hour stale. The JVM writes ``.dump``, header
+  last; a ``.dump`` whose header is written is published with
+  ``os.replace``, by the dumper or by any later start.
 * The JDK refuses a non-empty directory on an archived class path, and
-  Spark's launcher puts the conf dir first. While the JVM launches,
-  ``SPARK_CONF_DIR`` points at the empty ``cds/conf``; this is a no-op
-  only while the real conf dir holds nothing but ``*.template`` files.
+  Spark's launcher puts the conf dir first. While a JVM that dumps or
+  maps the archive launches, ``SPARK_CONF_DIR`` points at the empty
+  ``cds/conf``; this is a no-op only while the real conf dir holds
+  nothing but ``*.template`` files.
 * AppCDS is off, and the environment untouched, when the conf dir
   holds any other file; when ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or
   ``SPARK_DIST_CLASSPATH`` is set; when the caller passes
   ``spark.driver.extraClassPath``; when a JVM is already running; when
-  the cache is not writable; while another process is dumping; and
-  when a dump failed.
+  the cache is not writable; and until a dump is published.
 * The options go through ``spark.driver.defaultJavaOptions``, which
   Spark puts before the caller's ``spark.driver.extraJavaOptions``.
   The JVM's CDS log goes to stderr, never to stdout.
@@ -57,12 +63,17 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
+import subprocess
+import sys
+import time
 from contextlib import contextmanager, suppress
 from dataclasses import dataclass
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from crime_data_batch_processing_spark.fixtures import acquire_lock, release_lock
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -73,6 +84,10 @@ _CLASSPATH_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 #: The JVM's CDS log: off on stdout (callers read results from it),
 #: warnings on stderr.
 _CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=warning:stderr"
+
+#: How long a dump's lock stays valid without its holder's heartbeat:
+#: a dump that failed, or whose dumper was killed, is retried after it.
+_DUMP_RETRY_S = 3600
 
 #: The first 4 bytes of a JDK dynamic CDS archive. The JVM writes the
 #: header after every region, so a file that starts with it was
@@ -93,17 +108,39 @@ def get_spark(
     spark-submit own the resource configs — everything set here is
     topology-independent.
     """
+    extra = dict(extra_conf or {})
+    driver_mem = extra.get(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    )
+    builder = _engine_builder(app_name, master, shuffle_partitions, driver_mem)
+    cds = _class_archive(driver_mem, extra)
+    env = {}
+    if cds is not None and cds.mapped:
+        key = "spark.driver.defaultJavaOptions"
+        extra[key] = " ".join(
+            filter(None, [extra.get(key), _java_opts(f"-XX:SharedArchiveFile={cds.archive}")])
+        )
+        env["SPARK_CONF_DIR"] = _empty_conf(cds.archive)
+    for k, v in extra.items():
+        builder = builder.config(k, v)
+    with _scoped_environ(env):
+        spark = builder.getOrCreate()
+    if cds is not None and not cds.mapped:
+        _start_dumper(cds.archive, driver_mem)
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _engine_builder(
+    app_name: str, master: str | None, shuffle_partitions: int | None, driver_mem: str
+) -> SparkSession.Builder:
+    """A builder with the engine's defaults (see `get_spark`)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    extra = dict(extra_conf or {})
-    driver_mem = extra.get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    )
-
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # --- adaptive execution: the scale-up insurance policy ---
@@ -129,22 +166,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", driver_mem)
     )
-    cds = _class_archive(driver_mem, extra)
-    if cds is not None:
-        key = "spark.driver.defaultJavaOptions"
-        extra[key] = " ".join(filter(None, [extra.get(key), cds.java_opts]))
-    for k, v in extra.items():
-        builder = builder.config(k, v)
-    with _scoped_environ({"SPARK_CONF_DIR": cds.conf_dir} if cds else {}):
-        spark = builder.getOrCreate()
-    if cds is not None and cds.claim is not None:
-        # Until this lands the claim names this process, which the JVM
-        # outlives only while it dumps; the header check covers that.
-        with suppress(OSError):
-            jvm = SparkContext._gateway.proc.pid
-            os.replace(_writer_record(cds.claim, jvm), cds.claim)
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
 
 
 @contextmanager
@@ -175,13 +196,16 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]):
 
 @dataclass(frozen=True)
 class _Cds:
-    """How to launch the driver JVM with the archive: its options, the
-    empty conf dir to launch it with and, when this start dumps, the
-    claim file to record the dumping JVM in."""
+    """The archive of this start's fingerprint, and whether this start
+    maps it (else it launches as without it and starts the dumper)."""
 
-    java_opts: str
-    conf_dir: str
-    claim: str | None
+    archive: str
+    mapped: bool
+
+
+def _java_opts(opts: str) -> str:
+    """`opts` with the JVM's CDS log kept off stdout."""
+    return f"{_CDS_LOG} {opts}"
 
 
 @contextmanager
@@ -204,6 +228,11 @@ def _cds_dir() -> str:
     """The directory that holds the class-data archive."""
     cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
     return os.path.join(cache, "crimegraft", "cds")
+
+
+def _empty_conf(archive: str) -> str:
+    """The empty conf dir a JVM that dumps or maps `archive` launches with."""
+    return os.path.join(os.path.dirname(archive), "conf")
 
 
 def _java() -> str | None:
@@ -230,37 +259,6 @@ def _fingerprint(java: str, spark_home: str, driver_mem: str) -> str:
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()[:20]
 
 
-def _started(pid: int) -> str | None:
-    """The start time (clock ticks after boot) of process `pid` while it
-    runs; None once it has exited, a zombie included."""
-    try:
-        with open(f"/proc/{pid}/stat") as f:
-            state, *rest = f.read().rsplit(")", 1)[1].split()
-    except (OSError, IndexError):
-        return None
-    return None if state == "Z" else rest[18]
-
-
-def _writer_record(claim: str, pid: int) -> str:
-    """Write `pid` and its start time to a file beside `claim`, to be
-    moved or linked into place; returns its path."""
-    tmp = f"{claim}.{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write(f"{pid} {_started(pid)}")
-    return tmp
-
-
-def _writer_alive(claim: str) -> bool:
-    """Whether the process `claim` records may still be writing. A
-    claim that cannot be read yet counts as alive."""
-    try:
-        with open(claim) as f:
-            pid, start = f.read().split()
-    except (OSError, ValueError):
-        return True
-    return _started(int(pid)) == start
-
-
 def _complete(path: str) -> bool:
     """Whether `path` is a dynamic archive whose header is written."""
     try:
@@ -270,26 +268,18 @@ def _complete(path: str) -> bool:
         return False
 
 
-def _publish(archive: str, claim: str) -> bool:
-    """Publish the dump of `claim`'s writer as `archive` once that
-    writer is gone and the dump is complete. Returns whether `archive`
-    is published."""
-    if os.path.exists(archive):
-        return True
-    if not os.path.exists(claim) or _writer_alive(claim):
-        return False
-    if not _complete(archive + ".dump"):
-        return False
-    try:
-        os.replace(archive + ".dump", archive)
-    except FileNotFoundError:  # another start published it first
-        pass
-    return os.path.exists(archive)
+def _published(archive: str) -> bool:
+    """Whether `archive` is a complete archive, after publishing its
+    dump if that is complete."""
+    if _complete(archive + ".dump"):
+        with suppress(FileNotFoundError):  # another start published it first
+            os.replace(archive + ".dump", archive)
+    return _complete(archive)
 
 
 def _class_archive(driver_mem: str, conf: dict[str, str]) -> _Cds | None:
     """How this start uses the class-data archive, or None to launch
-    the JVM exactly as without it."""
+    the JVM exactly as without it and leave the archive to others."""
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return None
     if any(os.environ.get(v) for v in _CLASSPATH_ENV):
@@ -308,9 +298,8 @@ def _class_archive(driver_mem: str, conf: dict[str, str]) -> _Cds | None:
         return None
     try:
         root = _cds_dir()
-        empty_conf = os.path.join(root, "conf")
-        os.makedirs(empty_conf, exist_ok=True)
-        if os.listdir(empty_conf):
+        os.makedirs(os.path.join(root, "conf"), exist_ok=True)
+        if os.listdir(os.path.join(root, "conf")):
             return None
         fp = _fingerprint(java, spark_home, driver_mem)
         for name in os.listdir(root):
@@ -318,18 +307,65 @@ def _class_archive(driver_mem: str, conf: dict[str, str]) -> _Cds | None:
                 with suppress(FileNotFoundError):  # a concurrent start's prune
                     os.remove(os.path.join(root, name))
         archive = os.path.join(root, f"{fp}.jsa")
-        claim = os.path.join(root, f"{fp}.claim")
-        if _publish(archive, claim):
-            if not _complete(archive):
-                return None
-            opts, claimed = f"-XX:SharedArchiveFile={archive}", None
-        else:
-            record = _writer_record(claim, os.getpid())
-            try:
-                os.link(record, claim)  # fails while another start holds it
-            finally:
-                os.remove(record)
-            opts, claimed = f"-XX:ArchiveClassesAtExit={archive}.dump", claim
-    except OSError:  # unwritable cache, or another start holds the claim
+        if _published(archive):
+            return _Cds(archive, mapped=True)
+        with suppress(FileNotFoundError):
+            if time.time() - os.stat(archive + ".lock").st_mtime < _DUMP_RETRY_S:
+                return None  # a dump runs, or failed within the retry time
+    except OSError:  # the cache is not writable
         return None
-    return _Cds(f"{_CDS_LOG} {opts}", empty_conf, claimed)
+    return _Cds(archive, mapped=False)
+
+
+#: The background dumper: forks once more so that it is no child of
+#: the caller (whose CPU accounting it would otherwise join when reaped).
+_DUMPER = """
+import os, sys
+if os.fork():
+    os._exit(0)
+os.nice(19)
+from crime_data_batch_processing_spark.session import _dump
+_dump(sys.argv[1], sys.argv[2])
+"""
+
+
+def _start_dumper(archive: str, driver_mem: str) -> None:
+    """Start the detached process that dumps and publishes `archive`,
+    at the lowest CPU priority. It imports from the caller's module
+    path, and gets no temp or Spark local dir of the caller's, which
+    the caller may delete while the dump runs."""
+    env = {k: v for k, v in os.environ.items() if k not in ("TMPDIR", "SPARK_LOCAL_DIRS")}
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join([package_root, *filter(None, sys.path)])
+    with suppress(OSError):
+        subprocess.run(
+            [sys.executable, "-c", _DUMPER, archive, driver_mem],
+            env=env, stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, start_new_session=True,
+        )
+
+
+def _dump(archive: str, driver_mem: str) -> None:
+    """Under `archive`'s lock, run one warm-up session whose JVM writes
+    the dump when it exits, and publish it. A failed dump keeps the
+    lock, so no start retries it until the lock is stale."""
+    lock = archive + ".lock"
+    try:
+        held = acquire_lock(lock, _DUMP_RETRY_S, timeout_s=1)
+    except TimeoutError:  # another dumper holds it
+        return
+    if not _published(archive):
+        builder = _engine_builder("crimegraft-cds-dump", None, None, driver_mem).config(
+            "spark.driver.defaultJavaOptions",
+            _java_opts(f"-XX:ArchiveClassesAtExit={archive}.dump"),
+        )
+        with _scoped_environ({"SPARK_CONF_DIR": _empty_conf(archive)}):
+            spark = builder.getOrCreate()
+        spark.sql("SELECT sum(id) FROM range(1000)").collect()
+        jvm = SparkContext._gateway.proc
+        spark.stop()
+        jvm.stdin.close()  # the JVM exits, and dumps, when its stdin closes
+        jvm.wait()
+        if not _published(archive):
+            return
+    release_lock(lock, held)

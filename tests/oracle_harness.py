@@ -21,22 +21,37 @@ import duckdb
 
 from crime_data_batch_processing_spark.sources.tables import TABLES
 
-#: The share of the host's memory (MemTotal) one oracle connection may
-#: hold. Without a cap DuckDB took a strict sweep's process to 13.9 GB
-#: on a 15 GB host (the `graph_*` oracles at sf0.1). Capped, it spills
-#: to its temp directory instead, or fails the query with an
-#: out-of-memory error; the spill has no bound (those oracles wrote
-#: 6-10 GB of temp files).
+#: The share of the memory this process may use (MemTotal, or a lower
+#: cgroup limit) one oracle connection may hold. Without a cap DuckDB
+#: took a strict sweep's process to 13.9 GB on a 15 GB host (the
+#: `graph_*` oracles at sf0.1). Capped, it spills to its temp directory
+#: instead, or fails the query with an out-of-memory error.
 DUCK_MEMORY_SHARE = 0.25
+
+
+def _memory_bytes() -> int:
+    """MemTotal, or this process's cgroup memory limit when lower."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            return min(mem, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 limit ("max")
+        return mem
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """An in-memory DuckDB with a view per table of `sf_dir`. It spills
-    into a directory of its own under the temp dir, which DuckDB
-    creates on the first spill and removes on close."""
-    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    into `duck_spill_dir(con)`, under the temp dir, which DuckDB creates
+    on the first spill and removes on a clean close.
+
+    The spill has no bound (DuckDB 1.0 ignores
+    `max_temp_directory_size`): a runaway oracle can fill the temp
+    dir's disk instead of the memory (the `graph_*` oracles at sf0.1
+    wrote 6-10 GB), and a process killed mid-spill leaves its files
+    behind. Callers that may be stopped remove the dir themselves.
+    """
     con = duckdb.connect(config={
-        "memory_limit": f"{int(mem * DUCK_MEMORY_SHARE) // 2**20}MiB",
+        "memory_limit": f"{int(_memory_bytes() * DUCK_MEMORY_SHARE) // 2**20}MiB",
         "temp_directory": os.path.join(
             tempfile.gettempdir(), f"duckdb-spill-{uuid.uuid4().hex}"
         ),
@@ -46,6 +61,11 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )
     return con
+
+
+def duck_spill_dir(con: duckdb.DuckDBPyConnection) -> str:
+    """The directory `con` spills into."""
+    return con.execute("SELECT current_setting('temp_directory')").fetchone()[0]
 
 
 def _norm_cell(v):

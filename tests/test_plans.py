@@ -1982,9 +1982,10 @@ MAX_DUPLICATED_WINDOWS = 4
 
 def test_copied_mechanisms_are_defined_once():
     """Source guard for the mechanisms with one definition each: the
-    O_EXCL lockfile election and its `os.utime` heartbeat (one
-    function, `fixtures.acquire_lock`); the kNN `directed AS (` CTE
-    and the quantized `CAST(SUM(__ax * __bx)` dot (one SQL builder
+    exclusive-create lockfile election (`os.O_EXCL`, `os.link` or
+    `open(..., "x")`) and its `os.utime` heartbeat (one function,
+    `fixtures.acquire_lock`); the kNN `directed AS (` CTE and the
+    quantized `CAST(SUM(__ax * __bx)` dot (one SQL builder
     each); the chunk-start `F.sequence(..., CHUNK_STRIDE)` (one
     function); `MIXTURE_BUDGET_NUM` and `MIN_DISTINCT_RATIO` (read by
     one Spark stage and one SQL builder each); and the library's
@@ -2003,6 +2004,21 @@ def test_copied_mechanisms_are_defined_once():
             and n.value.id == base
         )
 
+    def is_exclusive_create(n):
+        """`os.O_EXCL`, an `os.link` call, or `open` in an "x" mode."""
+        if is_attr(n, "os", "O_EXCL"):
+            return True
+        if not isinstance(n, ast.Call):
+            return False
+        if is_attr(n.func, "os", "link"):
+            return True
+        modes = n.args[1:2] + [k.value for k in n.keywords if k.arg == "mode"]
+        return (
+            isinstance(n.func, ast.Name)
+            and n.func.id == "open"
+            and any(isinstance(m, ast.Constant) and "x" in str(m.value) for m in modes)
+        )
+
     def top_name(top):
         targets = [t.id for t in getattr(top, "targets", []) if isinstance(t, ast.Name)]
         return getattr(top, "name", None) or ",".join(targets) or "<module>"
@@ -2015,8 +2031,8 @@ def test_copied_mechanisms_are_defined_once():
         for top in ast.parse(src).body:
             where = f"{rel}:{top_name(top)}"
             for n in ast.walk(top):
-                if is_attr(n, "os", "O_EXCL"):
-                    uses["O_EXCL"].add(where)
+                if is_exclusive_create(n):
+                    uses["exclusive_create"].add(where)
                 if is_attr(n, "os", "utime"):
                     uses["utime"].add(where)
                 if isinstance(n, ast.Constant) and isinstance(n.value, str):
@@ -2049,7 +2065,9 @@ def test_copied_mechanisms_are_defined_once():
             if len(text) >= 200:
                 windows[text].add(f"{rel}:{lines[k][0]}")
 
-    assert uses["O_EXCL"] == {"fixtures.py:acquire_lock"}, uses["O_EXCL"]
+    assert uses["exclusive_create"] == {"fixtures.py:acquire_lock"}, uses[
+        "exclusive_create"
+    ]
     assert uses["utime"] == {"fixtures.py:acquire_lock"}, uses["utime"]
     assert uses["directed"] == {"operators/similarity.py:sql_knn_ranked_ctes"}, uses[
         "directed"

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
+import signal
 import sys
 import time
 from pathlib import Path
@@ -157,7 +159,7 @@ def main() -> int:
             print("# non-driver sf-dir: recall guard implied "
                   "(--no-recall-guard suppresses)", flush=True)
 
-    from oracle_harness import _normalize, duck_connection
+    from oracle_harness import _normalize, duck_connection, duck_spill_dir
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
@@ -175,37 +177,52 @@ def main() -> int:
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
 
     con = duck_connection(args.sf_dir)
+    spill = duck_spill_dir(con)
+    # The spill is unbounded, and a stopped sweep must not leave it.
+    # DuckDB turns a signal in a query into "Query interrupted".
+    stopped: list[int] = []
 
-    keys = args.keys.split(",") if args.keys else list(qs)
-    fails: list[str] = []
-    if args.recall_guard:
-        fails += _recall_guard(spark, args.sf_dir)
-        cachekit.release_all()
-    for k in keys:
-        t0 = time.time()
-        try:
-            df = qs[k](spark, args.sf_dir)
-            scols, srows = df.columns, df.collect()
-            rel = con.execute(osql[k])
-            dcols = [c[0] for c in rel.description]
-            drows = rel.fetchall()
-            assert sorted(scols) == sorted(dcols), (
-                f"cols {sorted(scols)} vs {sorted(dcols)}"
-            )
-            sn, dn = _normalize(scols, srows), _normalize(dcols, drows)
-            assert len(sn) == len(dn), f"rows {len(sn)} vs {len(dn)}"
-            assert sn == dn, "value mismatch, first diff: " + repr(
-                next((a, b) for a, b in zip(sn, dn) if a != b)
-            )
-            assert len(sn) > 0, "0-row result — vacuous-oracle hazard"
-            print(f"OK   {k} ({len(sn)} rows, {time.time() - t0:.1f}s)",
-                  flush=True)
-        except Exception as ex:  # keep sweeping; report at the end
-            fails.append(k)
-            print(f"FAIL {k}: {type(ex).__name__}: {str(ex)[:300]}",
-                  flush=True)
-        finally:
+    def stop(signum, _frame):
+        stopped.append(signum)
+        raise SystemExit(128 + signum)
+
+    signal.signal(signal.SIGTERM, stop)
+    try:
+        keys = args.keys.split(",") if args.keys else list(qs)
+        fails: list[str] = []
+        if args.recall_guard:
+            fails += _recall_guard(spark, args.sf_dir)
             cachekit.release_all()
+        for k in keys:
+            t0 = time.time()
+            try:
+                df = qs[k](spark, args.sf_dir)
+                scols, srows = df.columns, df.collect()
+                rel = con.execute(osql[k])
+                dcols = [c[0] for c in rel.description]
+                drows = rel.fetchall()
+                assert sorted(scols) == sorted(dcols), (
+                    f"cols {sorted(scols)} vs {sorted(dcols)}"
+                )
+                sn, dn = _normalize(scols, srows), _normalize(dcols, drows)
+                assert len(sn) == len(dn), f"rows {len(sn)} vs {len(dn)}"
+                assert sn == dn, "value mismatch, first diff: " + repr(
+                    next((a, b) for a, b in zip(sn, dn) if a != b)
+                )
+                assert len(sn) > 0, "0-row result — vacuous-oracle hazard"
+                print(f"OK   {k} ({len(sn)} rows, {time.time() - t0:.1f}s)",
+                      flush=True)
+            except Exception as ex:  # keep sweeping; report at the end
+                fails.append(k)
+                print(f"FAIL {k}: {type(ex).__name__}: {str(ex)[:300]}",
+                      flush=True)
+                if stopped:
+                    raise SystemExit(128 + stopped[0]) from ex
+            finally:
+                cachekit.release_all()
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
     print("STRICT_FAILS:", fails)
     return 1 if fails else 0
 

@@ -49,24 +49,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # The driver's correctness pass walks queries() in dict order and
 # checks about 50 keys per run, so the order decides what gets
 # re-verified. _VERIFY_FIRST lists the keys the latest change touched,
-# in this order: the keys whose build reaches
-# `similarity._distinct_at_width` from `banded_scored_pairs`, then those
-# that reach it from `knn_inc_probe` (the width now also reads a
-# non-numeric spark.sql.shuffle.partitions). Every change replaces the
-# list with its own touched keys, at most 50 of them, each a registered
-# key (tests/test_plans.py pins both); all other keys follow in
+# in this order: the batch keys whose write location or dated-partition
+# paths now come from `fixtures` and `sinks.snapshot_dir`, then the
+# stream keys, whose checkpoints (all), stream sources and per-process
+# directories moved into `fixtures`. Every change replaces the list
+# with its own touched keys, at most 50 of them, each a registered key
+# (tests/test_plans.py pins both); all other keys follow in
 # registration order.
 _VERIFY_FIRST = [
-    # banded_scored_pairs
-    "sim_search_knn_graph", "sim_search_knn_graph_prod", "dedup_semantic",
-    "dedup_embedding_lsh", "dedup_embedding_lsh_prod",
-    "multimodal_dedup_semantic", "multimodal_dedup_semantic_wide",
-    "multimodal_dedup_semantic_xwide", "pipeline_release_semantic",
-    "pipeline_release_semantic_prod", "pipeline_release_media",
-    # knn_inc_probe
-    "sim_search_knn_inc", "sim_search_knn_inc_prod", "dedup_semantic_inc",
-    "sim_search_index_append", "sim_search_index_maintain",
-    "multimodal_dedup_semantic_inc",
+    # sinks, scale_patterns
+    "sink_partitioned", "latest_snapshot", "latest_snapshot_catalog",
+    "snapshot_as_of", "snapshot_expire", "snapshot_restore", "join_bucketed",
+    # stream_events, stateful
+    "stream_events", "stream_watermark_late", "stream_session",
+    "stream_static_join", "stream_dedup", "stream_stream_join",
+    "stream_stream_left_join", "stream_cdc_upsert",
+    "stream_rollup_incremental", "stream_count_min", "stream_pipeline",
+    "stream_pysource", "stream_pysource_partitioned", "stream_file_sink",
+    "stream_sink_pysource", "stream_decontaminate", "stream_stateful",
+    "stream_anomaly", "stream_transform_state",
 ]
 
 

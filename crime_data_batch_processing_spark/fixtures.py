@@ -1,10 +1,19 @@
-"""Derived-fixture scratch management shared by every operator that
-materializes state from a testdata table (CSV/JSON/ORC/binary copies,
-the Derby JDBC database, rollup/zone-map/sketch tables), plus the
-cross-process lockfile protocol that both `build_once` and the
-manifest sink's commit (`sources/pydatasource.py`) hold.
+"""Every directory a key writes, plus the cross-process lockfile
+protocol that both `build_once` and the manifest sink's commit
+(`sources/pydatasource.py`) hold.
 
-Two invariants every fixture needs:
+Scratch has three lifetimes, one function each:
+
+- content-keyed (`scratch_dir` + `build_once`): a fixture derived from
+  testdata tables (CSV/JSON/ORC/binary copies, the Derby JDBC
+  database, rollup/zone-map/sketch tables, snapshot histories), built
+  once per input generation and shared by every process;
+- per-process (`run_dir`): a fresh directory per call that a returned
+  (lazy) DataFrame still reads, removed at interpreter exit;
+- per-run (`ephemeral_dir`): a stream checkpoint or source cursor,
+  on tmpfs where there is one, removed when its block ends.
+
+Two invariants every content-keyed fixture needs:
 
 1. **Generation safety.** Scratch keys hash the absolute sf_dir AND
    each source table's (size, mtime) fingerprint: the testdata tree
@@ -40,11 +49,15 @@ the standard library only.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
+import tempfile
 import threading
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 
 def scratch_dir(kind: str, sf_dir: str, *source_tables: str) -> str:
@@ -56,6 +69,44 @@ def scratch_dir(kind: str, sf_dir: str, *source_tables: str) -> str:
         st = os.stat(p)
         h.update(f"|{name}:{st.st_size}:{st.st_mtime_ns}".encode())
     return f"/tmp/cdbp_{kind}/{h.hexdigest()[:16]}"
+
+
+#: `run_dir` roots, removed at interpreter exit.
+_RUN_DIRS: list[str] = []
+
+
+@atexit.register
+def _reclaim_run_dirs() -> None:
+    for d in _RUN_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def run_dir(prefix: str) -> str:
+    """A fresh directory under the temp dir for one key invocation.
+    Unique per call, so a later (or concurrent) call never deletes the
+    files behind a frame an earlier call returned; all are removed at
+    interpreter exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _RUN_DIRS.append(d)
+    return d
+
+
+@contextmanager
+def ephemeral_dir() -> Iterator[str]:
+    """A directory for one bounded stream run, removed when the block
+    ends: tmpfs when available.
+
+    State-store commits fsync every delta file; a bounded run whose
+    checkpoint is discarded at the end pays that disk cost for nothing
+    (measured ~40% of stream_stream_join wall time locally). Only
+    checkpoints that outlive the query need durable storage.
+    """
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+    d = tempfile.mkdtemp(prefix="cdbp_stream_ckpt_", dir=base)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 #: A fixture lock whose mtime is older than this is presumed orphaned

@@ -23,11 +23,11 @@ checked and their plans are inspectable:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crime_data_batch_processing_spark.fixtures import run_dir, scratch_dir
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum, with_scalars
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.session import scoped_conf
@@ -37,7 +37,6 @@ from crime_data_batch_processing_spark.sources.tables import (
 )
 
 N_SALTS = 8
-_BUCKET_DB_READY: set[str] = set()
 
 
 @query(
@@ -60,14 +59,17 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full shuffle of both tables into a local merge: the shuffle is
     paid ONCE at write time, amortized over every downstream join.
     Bucket counts must match (or divide) across tables.
+
+    The tables live in the session catalog, in a database named by the
+    inputs' `scratch_dir` key, so they are (re)written whenever this
+    session's catalog lacks them; the files go to a `run_dir`.
     """
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    db = f"cdbp_buckets_{tag}"
-    if db not in _BUCKET_DB_READY:
-        warehouse = tempfile.mkdtemp(prefix=f"cdbp_bucket_wh_{tag}_")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{warehouse}'")
-        for name, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{name}_b")
+    tables = {"orders": "o_custkey", "customer": "c_custkey"}
+    db = "cdbp_buckets_" + os.path.basename(scratch_dir("buckets", sf_dir, *tables))
+    if not all(spark.catalog.tableExists(f"{db}.{t}_b") for t in tables):
+        if not spark.catalog.databaseExists(db):
+            spark.sql(f"CREATE DATABASE {db} LOCATION '{run_dir('cdbp_bucket_wh_')}'")
+        for name, key in tables.items():
             (
                 load_table(spark, sf_dir, name)
                 .write.bucketBy(8, key)
@@ -76,7 +78,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .mode("overwrite")
                 .saveAsTable(f"{db}.{name}_b")
             )
-        _BUCKET_DB_READY.add(db)
     o = spark.table(f"{db}.orders_b")
     c = spark.table(f"{db}.customer_b")
     return (

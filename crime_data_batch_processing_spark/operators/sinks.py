@@ -28,10 +28,10 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crime_data_batch_processing_spark.fixtures import build_once, scratch_dir
+from crime_data_batch_processing_spark.fixtures import build_once, run_dir, scratch_dir
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum
 from crime_data_batch_processing_spark.registry import query
 from crime_data_batch_processing_spark.session import scoped_conf
@@ -41,6 +41,28 @@ from crime_data_batch_processing_spark.sources.tables import load_table
 
 #: Overwrites replace only the partitions the written rows land in.
 DYNAMIC_OVERWRITE = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+
+
+def run_number(exec_date: str) -> int:
+    """A dated run's yyyymmdd integer, which orders runs by date."""
+    y, m, d = (int(p) for p in exec_date.split("-"))
+    return y * 10000 + m * 100 + d
+
+
+def run_number_col() -> Column:
+    """`run_number` of each row of a dated table, from its y/m/d
+    partition columns."""
+    return (
+        F.col("y").cast("int") * 10000
+        + F.col("m").cast("int") * 100
+        + F.col("d").cast("int")
+    )
+
+
+def snapshot_dir(base_path: str, run: int) -> str:
+    """The `y=/m=/d=` directory of run number `run` under `base_path`,
+    unpadded as `stamp_partitions` writes it."""
+    return f"{base_path}/y={run // 10000}/m={run // 100 % 100}/d={run % 100}"
 
 
 def write_snapshot(df: DataFrame, base_path: str, exec_date: str) -> str:
@@ -58,8 +80,7 @@ def write_snapshot(df: DataFrame, base_path: str, exec_date: str) -> str:
             .format("parquet")
             .save(base_path)
         )
-    y, m, d = exec_date.split("-")
-    return f"{base_path}/y={int(y)}/m={int(m)}/d={int(d)}"
+    return snapshot_dir(base_path, run_number(exec_date))
 
 
 def read_latest_snapshot(
@@ -76,10 +97,9 @@ def read_latest_snapshot(
     path-not-found `AnalysisException` rather than returning an empty
     frame.
     """
-    y, m, d = (int(p) for p in exec_date.split("-"))
     return (
         spark.read.option("basePath", base_path)
-        .parquet(f"{base_path}/y={y}/m={m}/d={d}")
+        .parquet(snapshot_dir(base_path, run_number(exec_date)))
         .drop("y", "m", "d")
     )
 
@@ -102,7 +122,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate directly from the source, so any row lost, duplicated, or
     type-mangled by the sink/scan round trip is a hash mismatch.
     """
-    out = f"/tmp/cdbp_sink/{os.path.basename(sf_dir.rstrip('/'))}/orders_by_year"
+    out = f"{run_dir('cdbp_sink_')}/orders_by_year"
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("long")
     )
@@ -138,7 +158,7 @@ def latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks. Partition values are non-zero-padded strings, matching the
     reference's '%-m'/'%-d' formatting (spark_ingest_script.py:67-69).
     """
-    base = f"/tmp/cdbp_snap/{os.path.basename(sf_dir.rstrip('/'))}/orders"
+    base = f"{run_dir('cdbp_snap_')}/orders"
     orders = load_table(spark, sf_dir, "orders")
     write_snapshot(orders.filter(F.col("o_orderstatus") == "F"), base, "2026-08-12")
     write_snapshot(orders, base, "2026-08-13")
@@ -201,16 +221,13 @@ def latest_snapshot_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     build_once(base, build)
 
-    sf_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.basename(sf_dir.rstrip("/"))
-    )
-    tbl = f"cdbp_catalog.orders_latest_{sf_tag}"
-    spark.sql("CREATE DATABASE IF NOT EXISTS cdbp_catalog")
+    tbl = f"cdbp_catalog.orders_latest_{os.path.basename(base)}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS cdbp_catalog LOCATION '{base}/catalog'")
     # deterministic replay: reset, then pin the stale day (the CREATE
     # branch), then the latest day (the ALTER branch)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    pin_latest_table(spark, tbl, f"{snap}/y=2026/m=8/d=12")
-    pin_latest_table(spark, tbl, f"{snap}/y=2026/m=8/d=13")
+    for day in ("2026-08-12", "2026-08-13"):
+        pin_latest_table(spark, tbl, snapshot_dir(snap, run_number(day)))
     spark.sql(f"REFRESH TABLE {tbl}")
     return (
         spark.table(tbl)
@@ -741,17 +758,10 @@ def snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     build_once(os.path.dirname(base), build)
     snap = spark.read.parquet(base)
-    # comparable yyyymmdd integer from the string partition values
-    ymd = (
-        F.col("y").cast("int") * 10000
-        + F.col("m").cast("int") * 100
-        + F.col("d").cast("int")
-    )
-    ty, tm, td = (int(p) for p in _ASOF_TARGET.split("-"))
-    target = ty * 10000 + tm * 100 + td
+    ymd = run_number_col()
     chosen = (
         snap.select(ymd.alias("ymd"))
-        .where(F.col("ymd") <= target)
+        .where(F.col("ymd") <= run_number(_ASOF_TARGET))
         .agg(F.max("ymd"))
         .first()[0]
     )
@@ -864,16 +874,15 @@ def snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_snapshot(orders.filter(F.col("o_orderkey") % 7 < k), base, exec_date)
         # (1) run enumeration: partition columns only — resolved from
         # directory names, no parquet data pages touched
-        runs = sorted(
-            int(r["y"]) * 10000 + int(r["m"]) * 100 + int(r["d"])
+        runs = [
+            r[0]
             for r in spark.read.parquet(base)
-            .select("y", "m", "d")
+            .select(run_number_col())
             .distinct()
             .collect()
-        )
-        cy, cm, cd = (int(p) for p in _EXPIRE_CUTOFF.split("-"))
+        ]
         retained, expired = retention_policy(
-            runs, cy * 10000 + cm * 100 + cd, _EXPIRE_KEEP_LAST
+            runs, run_number(_EXPIRE_CUTOFF), _EXPIRE_KEEP_LAST
         )
         # (3) partition-pruned delete: exactly the expired directories.
         # Driver-side rmtree is the local-FS stand-in and is
@@ -884,19 +893,14 @@ def snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per-object serial deletes would make retention O(files)
         # round-trips at 100 TB.
         for r in expired:
-            shutil.rmtree(f"{base}/y={r // 10000}/m={r // 100 % 100}/d={r % 100}")
+            shutil.rmtree(snapshot_dir(base, r))
         with open(expired_manifest_path(base), "w") as f:
             json.dump({"expired": expired, "retained": retained}, f)
 
     build_once(os.path.dirname(base), build)
-    snap = spark.read.parquet(base)
-    run_date = (
-        F.col("y").cast("int") * 10000
-        + F.col("m").cast("int") * 100
-        + F.col("d").cast("int")
-    )
     return (
-        snap.groupBy(run_date.alias("run_date"))
+        spark.read.parquet(base)
+        .groupBy(run_number_col().alias("run_date"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             dsum("o_totalprice").alias("sum_price"),

@@ -97,22 +97,19 @@ _DYNAMIC_MAGIC = (0xF00BABA8).to_bytes(4, "little")
 
 def get_spark(
     app_name: str = "crime_data_batch_processing_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's defaults.
+    """Build (or fetch) a local SparkSession with the engine's defaults.
 
-    In local mode there is one JVM; ``spark.driver.memory`` is the only
-    memory knob. On a cluster, pass ``master=None`` and let
-    spark-submit own the resource configs — everything set here is
-    topology-independent.
+    The master is ``local[SPARK_GRAFT_CPUS]`` (default: every core) and
+    there is one JVM, so ``spark.driver.memory`` is the only memory
+    knob. `extra_conf` entries are set last and override the defaults.
     """
     extra = dict(extra_conf or {})
     driver_mem = extra.get(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
-    builder = _engine_builder(app_name, master, shuffle_partitions, driver_mem)
+    builder = _engine_builder(app_name, driver_mem)
     cds = _class_archive(driver_mem, extra)
     env = {}
     if cds is not None and cds.mapped:
@@ -131,24 +128,18 @@ def get_spark(
     return spark
 
 
-def _engine_builder(
-    app_name: str, master: str | None, shuffle_partitions: int | None, driver_mem: str
-) -> SparkSession.Builder:
+def _engine_builder(app_name: str, driver_mem: str) -> SparkSession.Builder:
     """A builder with the engine's defaults (see `get_spark`)."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     return (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         # --- adaptive execution: the scale-up insurance policy ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # --- shuffle sizing ---
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # --- scan parallelism for the LOCAL testdata (one ~10-50 MB
         # parquet file per table would otherwise be a single input
         # split; 16m yields a handful of splits so scans use the
@@ -355,7 +346,7 @@ def _dump(archive: str, driver_mem: str) -> None:
     except TimeoutError:  # another dumper holds it
         return
     if not _published(archive):
-        builder = _engine_builder("crimegraft-cds-dump", None, None, driver_mem).config(
+        builder = _engine_builder("crimegraft-cds-dump", driver_mem).config(
             "spark.driver.defaultJavaOptions",
             _java_opts(f"-XX:ArchiveClassesAtExit={archive}.dump"),
         )

@@ -114,9 +114,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 _SPREAD_PROBED: dict[tuple[int, str, int], bool] = {}
 
 
-def spread(
-    df: DataFrame, spark: SparkSession, probe_key: str | None = None
-) -> DataFrame:
+def spread(df: DataFrame, spark: SparkSession, probe_key: str) -> DataFrame:
     """Repartition ahead of superlinear per-row work (signatures,
     tokenize/explode chains, all-pairs joins) — but ONLY when the
     input is under-split. The local testdata is one parquet row group
@@ -128,21 +126,15 @@ def spread(
     full-corpus Exchange at 100 TB for nothing).
 
     The under-split probe (`df.rdd.getNumPartitions()`) compiles the
-    physical plan — cheap once, but it ran on every build of ~20 keys
-    (r14 verdict item 5). `probe_key` (callers pass the table path)
-    memoizes the verdict per (SparkContext, key, core count) so
-    repeated builds over the same scan layout skip the probe.
+    physical plan, so its verdict is memoized per (SparkContext,
+    `probe_key`, core count): callers name the scan layout (the table
+    path), and repeated builds over it skip the probe.
     """
     cores = spark.sparkContext.defaultParallelism
-    key = None
-    if probe_key is not None:
-        key = (id(spark.sparkContext), probe_key, cores)
-        hit = _SPREAD_PROBED.get(key)
-        if hit is not None:
-            return df.repartition(cores) if hit else df
-    under = df.rdd.getNumPartitions() < cores
-    if key is not None:
-        _SPREAD_PROBED[key] = under
+    key = (id(spark.sparkContext), probe_key, cores)
+    under = _SPREAD_PROBED.get(key)
+    if under is None:
+        under = _SPREAD_PROBED[key] = df.rdd.getNumPartitions() < cores
     return df.repartition(cores) if under else df
 
 

@@ -31,17 +31,21 @@ exercises a restart against the same checkpoint.
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
 import shutil
-import tempfile
+from contextlib import nullcontext, suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from crime_data_batch_processing_spark.fixtures import (
+    build_once,
+    ephemeral_dir,
+    run_dir,
+    scratch_dir,
+)
 from crime_data_batch_processing_spark.functions.exact import dsum, sql_dsum
 from crime_data_batch_processing_spark.functions.textkit import sql_shingles
 from crime_data_batch_processing_spark.operators.aggregates import (
@@ -141,19 +145,6 @@ def streaming_events(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _scratch_ckpt() -> str:
-    """Ephemeral checkpoint dir for bounded runs: tmpfs when available.
-
-    State-store commits fsync every delta file; a bounded run whose
-    checkpoint is discarded at the end pays that disk cost for nothing
-    (measured ~40% of stream_stream_join wall time locally). Only
-    checkpoints that outlive the query need durable storage, and
-    `run_stream` keeps any checkpoint its caller passes.
-    """
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="cdbp_stream_ckpt_", dir=base)
-
-
 def run_stream(
     df: DataFrame,
     sink,
@@ -169,9 +160,10 @@ def run_stream(
     stopped first), a function runs as a `foreachBatch` body, and a
     `(format, path)` pair writes to a file sink.
 
-    Without `checkpoint` the run gets a tmpfs scratch checkpoint that
-    is removed at the end. A checkpoint the caller passes is durable
-    and stays, so a second run against it is a restart.
+    Without `checkpoint` the run gets a `fixtures.ephemeral_dir`
+    checkpoint (tmpfs) that is removed at the end. A checkpoint the
+    caller passes is durable and stays, so a second run against it is
+    a restart.
 
     State partitions: a stateful query freezes
     `spark.sql.shuffle.partitions` into its checkpoint at first start,
@@ -208,45 +200,31 @@ def run_stream(
         writer = writer.format(fmt).option("path", path)
     if not drain:
         writer = writer.trigger(availableNow=True)
-    ckpt = checkpoint or _scratch_ckpt()
-    try:
-        with scoped_conf(spark, conf):
-            q = writer.option("checkpointLocation", ckpt).start()
-            try:
-                if drain:
-                    q.processAllAvailable()
-                else:
-                    q.awaitTermination()
-            finally:
-                q.stop()
-    finally:
-        if checkpoint is None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    owned = nullcontext(checkpoint) if checkpoint else ephemeral_dir()
+    with owned as ckpt, scoped_conf(spark, conf):
+        q = writer.option("checkpointLocation", ckpt).start()
+        try:
+            if drain:
+                q.processAllAvailable()
+            else:
+                q.awaitTermination()
+        finally:
+            q.stop()
     return q
 
 
 def _stream_src(sf_dir: str, table: str = "events") -> str:
     """Expose a table's single parquet file through a scratch
-    directory (file stream sources need a directory), copy-free.
-
-    The scratch key hashes the ABSOLUTE target path (sf_dir + table) —
-    basename-only keying would silently share (stale) data between two
-    sf dirs with the same basename. `lexists` (not `exists`) sees
-    dangling symlinks, and a link pointing at a different target is
-    re-pointed, so leftover state from a deleted testdata tree can't
-    shadow the real input.
-    """
-    target = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    key = hashlib.sha256(target.encode()).hexdigest()[:16]
-    src = f"/tmp/cdbp_stream_src/{key}"
+    directory (file stream sources need a directory), copy-free: a
+    symlink in a `scratch_dir` keyed by the table's path and
+    fingerprint, so a regenerated tree gets a new directory."""
+    src = scratch_dir("stream_src", sf_dir, table)
     os.makedirs(src, exist_ok=True)
-    link = os.path.join(src, f"{table}.parquet")
-    if os.path.lexists(link):
-        if os.path.realpath(link) != os.path.realpath(target):
-            os.unlink(link)
-            os.symlink(target, link)
-    else:
-        os.symlink(target, link)
+    with suppress(FileExistsError):
+        os.symlink(
+            os.path.join(os.path.abspath(sf_dir), f"{table}.parquet"),
+            os.path.join(src, f"{table}.parquet"),
+        )
     return src
 
 
@@ -491,27 +469,6 @@ def cdc_merge_batch(target_dir: str):
     return _merge
 
 
-#: Per-run scratch roots of the foreachBatch keys, removed at
-#: interpreter exit: the returned (lazy) DataFrame re-reads them, so
-#: they must outlive the call.
-_RUN_DIRS: list[str] = []
-
-
-@atexit.register
-def _reclaim_run_dirs() -> None:
-    for d in _RUN_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def _run_dir(prefix: str) -> str:
-    """A fresh scratch root for one key invocation. Unique per run, so
-    a later call (or a concurrent one) never deletes the files behind
-    a frame an earlier call returned."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    _RUN_DIRS.append(d)
-    return d
-
-
 @query(
     "stream_cdc_upsert",
     oracle="""
@@ -540,9 +497,9 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the batch latest-per-key query over all events;
     (ts, event_id) descending is a total order, so the winner per key
     is unique and the result deterministic. The target lives in a
-    per-run directory (`_run_dir`).
+    per-run directory (`fixtures.run_dir`).
     """
-    target = f"{_run_dir('cdbp_cdc_target_')}/target"
+    target = f"{run_dir('cdbp_cdc_target_')}/target"
     events = streaming_events(spark, _stream_src(sf_dir), max_files_per_trigger=None)
     run_stream(events, cdc_merge_batch(target))
     return spark.read.parquet(target).select(
@@ -594,9 +551,9 @@ def stream_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental path real even on the single-file testdata source;
     each delta is O(hours × types), so a day of micro-batches folds
     thousands of tiny rows, not the event history. Every run restreams
-    from scratch into its own delta root (`_run_dir`).
+    from scratch into its own delta root (`fixtures.run_dir`).
     """
-    delta_base = _run_dir("cdbp_rollup_delta_")
+    delta_base = run_dir("cdbp_rollup_delta_")
     events = streaming_events(spark, _stream_src(sf_dir))
     run_stream(events, rollup_delta_batch(delta_base))
     return fold_partials(spark.read.parquet(delta_base))
@@ -657,7 +614,7 @@ def stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchangeable — a batch-built grid can seed the stream and vice
     versa. The serving probe is `cms_estimates`, `agg_count_min`'s.
     """
-    delta_base = _run_dir("cdbp_cms_delta_")
+    delta_base = run_dir("cdbp_cms_delta_")
     events = streaming_events(spark, _stream_src(sf_dir))
     run_stream(events, cms_delta_batch(delta_base))
     from crime_data_batch_processing_spark.sources.tables import load_table
@@ -759,11 +716,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same serve-from-materialized shape as the rollup operators.
     """
     from crime_data_batch_processing_spark.sources.tables import load_table
-
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
 
     base = scratch_dir("wmlate", sf_dir, "events")
     src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
@@ -1202,25 +1154,22 @@ def stream_pysource_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spark.dataSource.register(PartitionedEventsStreamSource)
-    cursor = _scratch_ckpt()
-    src = (
-        spark.readStream.format("chunked_events_partitioned")
-        .option("path", os.path.join(sf_dir, "events.parquet"))
-        .option("cursor_dir", cursor)
-        .load()
-    )
-    agg = src.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        dsum("value").alias("sum_value"),
-        F.min("event_id").alias("min_event_id"),
-        F.max("event_id").alias("max_event_id"),
-    )
-    try:
+    with ephemeral_dir() as cursor:
+        src = (
+            spark.readStream.format("chunked_events_partitioned")
+            .option("path", os.path.join(sf_dir, "events.parquet"))
+            .option("cursor_dir", cursor)
+            .load()
+        )
+        agg = src.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value").alias("sum_value"),
+            F.min("event_id").alias("min_event_id"),
+            F.max("event_id").alias("max_event_id"),
+        )
         q = run_stream(
             agg, "cdbp_stream_pysource_partitioned", "complete", drain=True
         )
-    finally:
-        shutil.rmtree(cursor, ignore_errors=True)
     return spark.table(q.name)
 
 
@@ -1261,11 +1210,6 @@ def stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     dated-partition + compaction + retention lifecycle the batch sink
     family provides applies unchanged on top.
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
-
     base = scratch_dir("streamfilesink", sf_dir, "events")
     out = f"{base}/out"
     ckpt = f"{base}/ckpt"
@@ -1330,10 +1274,6 @@ def stream_sink_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     native FileStreamSink (`stream_file_sink`), here fully owned by
     user code, which is the point of the extension API.
     """
-    from crime_data_batch_processing_spark.fixtures import (
-        build_once,
-        scratch_dir,
-    )
     from crime_data_batch_processing_spark.sources.pydatasource import (
         ManifestParquetSink,
         stream_manifest_files,
@@ -1347,8 +1287,6 @@ def stream_sink_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = "event_id bigint, user_id bigint, event_type string, value double"
 
     def build() -> None:
-        import shutil as sh
-
         spark.dataSource.register(ManifestParquetSink)
         # four source files so maxFilesPerTrigger=1 drives four
         # separate micro-batch commits through the sink protocol
@@ -1369,7 +1307,7 @@ def stream_sink_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # zombie: a valid parquet file no batch log ever committed —
         # must stay invisible to manifest-resolved readers
         committed = stream_manifest_files(out)
-        sh.copyfile(committed[0], f"{out}/data-zombie.parquet")
+        shutil.copyfile(committed[0], f"{out}/data-zombie.parquet")
 
     build_once(base, build)
     back = spark.read.parquet(*stream_manifest_files(out))

@@ -137,13 +137,16 @@ def test_snapshot_stamps_match_reference_format(spark, crime_csv):
 def test_latest_snapshot_roundtrip(spark, crime_csv, tmp_path):
     from crime_data_batch_processing_spark.operators.sinks import (
         read_latest_snapshot,
+        run_number_col,
         write_snapshot,
     )
 
     df = read_crime_csv(spark, crime_csv)
     base = str(tmp_path / "snap")
     write_snapshot(df.limit(100), base, "2022-01-04")
-    write_snapshot(df, base, "2022-01-05")
+    assert write_snapshot(df, base, "2022-01-05") == f"{base}/y=2022/m=1/d=5"
+    runs = spark.read.parquet(base).select(run_number_col()).distinct().collect()
+    assert sorted(r[0] for r in runs) == [20220104, 20220105]
     latest = read_latest_snapshot(spark, base, "2022-01-05")
     assert latest.count() == 400
     # the dynamic overwrite keeps the earlier day's partition

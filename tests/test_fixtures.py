@@ -3,7 +3,8 @@
 The build-once election guards every derived fixture (CSV/JSON/ORC
 copies, Derby, rollup/zone-map/sketch tables); these tests pin its
 contract: exactly-once builds, marker short-circuit, stale-lock
-healing, and generation-fingerprinted scratch keys.
+healing, and generation-fingerprinted scratch keys; and the lifetimes
+of the per-process and per-run scratch directories.
 """
 
 from __future__ import annotations
@@ -140,6 +141,24 @@ def test_scratch_dir_keys_on_generation(tmp_path):
     f.write_bytes(b"generation-two-larger")
     k2 = fixtures.scratch_dir("t", str(sf), "orders")
     assert k2 != k1
+
+
+def test_run_dir_is_fresh_per_call_and_reclaimed_at_exit(tmp_path, monkeypatch):
+    monkeypatch.setattr(fixtures.tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(fixtures, "_RUN_DIRS", [])
+    a, b = fixtures.run_dir("cdbp_t_"), fixtures.run_dir("cdbp_t_")
+    assert a != b
+    assert os.path.dirname(a) == os.path.dirname(b) == str(tmp_path)
+    fixtures._reclaim_run_dirs()
+    assert not os.path.exists(a) and not os.path.exists(b)
+
+
+def test_ephemeral_dir_is_removed_when_its_block_ends():
+    with pytest.raises(RuntimeError):
+        with fixtures.ephemeral_dir() as d:
+            open(f"{d}/state", "w").close()
+            raise RuntimeError("stream failed")
+    assert not os.path.exists(d)
 
 
 def test_probe_ts_unit_handles_missing_dir(tmp_path):

@@ -448,10 +448,7 @@ class TestSimilarity:
             knn_rank_directed,
             signature_frame,
         )
-        from crime_data_batch_processing_spark.sources.tables import (
-            load_table,
-            spread,
-        )
+        from crime_data_batch_processing_spark.sources.tables import spread_table
 
         inc = {
             (r.src, r.rank, r.dst, r.cos_sim)
@@ -459,7 +456,7 @@ class TestSimilarity:
         }
         with_q = signature_frame(
             _planted_quantized2(
-                spread(load_table(spark, sf_dir, "embeddings"), spark)
+                spread_table(spark, sf_dir, "embeddings")
             ),
             bits=PROD_LSH_BITS,
         )
@@ -573,10 +570,7 @@ class TestSimilarity:
             knn_inc_probe,
             signature_frame,
         )
-        from crime_data_batch_processing_spark.sources.tables import (
-            load_table,
-            spread,
-        )
+        from crime_data_batch_processing_spark.sources.tables import spread_table
 
         sim_search_index_maintain(spark, sf_dir).count()  # build fixture
         dirs = _maintain_dirs(sf_dir)
@@ -586,7 +580,7 @@ class TestSimilarity:
         purge_compact_dir(spark, dirs["index"], ci, no_drops)
         purge_compact_dir(spark, dirs["bands"], cb, no_drops)
         corpus = _planted_quantized2(
-            spread(load_table(spark, sf_dir, "embeddings"), spark)
+            spread_table(spark, sf_dir, "embeddings")
         )
         inc_q = signature_frame(
             corpus.where(F.col("vec_id") >= PLANT2_OFFSET),

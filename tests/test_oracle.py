@@ -76,6 +76,20 @@ def test_query_matches_oracle(spark, sf_dir, duck, key):
     compare(df, duck, registry.ORACLES[key])
 
 
+def test_join_bucketed_rebuilds_tables_the_catalog_lacks(spark, sf_dir, duck):
+    """A new session starts with a catalog that lacks the key's bucketed
+    tables; dropping them stands in for that, and the next call must
+    write them again rather than trust an earlier session's build."""
+    key = "join_bucketed"
+    registry.QUERIES[key](spark, sf_dir).collect()
+    dbs = [db.name for db in spark.catalog.listDatabases("cdbp_buckets_*")]
+    assert dbs
+    for db in dbs:
+        for table in ("orders_b", "customer_b"):
+            spark.sql(f"DROP TABLE {db}.{table}")
+    compare(registry.QUERIES[key](spark, sf_dir), duck, registry.ORACLES[key])
+
+
 def test_every_query_carries_an_oracle():
     """100% strict-oracle coverage is a deliberate invariant: a future
     key registered without DuckDB SQL would silently fall to the

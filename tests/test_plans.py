@@ -274,10 +274,11 @@ def test_spread_skips_shuffle_on_presplit_input(spark, sf_dir):
 
     cores = spark.sparkContext.defaultParallelism
     presplit = load_table(spark, sf_dir, "documents").repartition(cores)
-    assert spread(presplit, spark) is presplit
+    assert spread(presplit, spark, f"{sf_dir}/documents#presplit") is presplit
 
     single = load_table(spark, sf_dir, "documents").coalesce(1)
-    assert spread(single, spark).rdd.getNumPartitions() == cores
+    single = spread(single, spark, f"{sf_dir}/documents#single")
+    assert single.rdd.getNumPartitions() == cores
 
 
 def test_range_join_avoids_nested_loop(spark, sf_dir):
@@ -1984,9 +1985,11 @@ def test_copied_mechanisms_are_defined_once():
     """Source guard for the mechanisms with one definition each: the
     exclusive-create lockfile election (`os.O_EXCL`, `os.link` or
     `open(..., "x")`) and its `os.utime` heartbeat (one function,
-    `fixtures.acquire_lock`); the kNN `directed AS (` CTE and the
-    quantized `CAST(SUM(__ax * __bx)` dot (one SQL builder
-    each); the chunk-start `F.sequence(..., CHUNK_STRIDE)` (one
+    `fixtures.acquire_lock`); scratch locations (`tempfile` imports,
+    `tempfile.mkdtemp` calls and "/tmp/..." strings, in `fixtures.py`
+    alone: `scratch_dir`, `run_dir`, `ephemeral_dir`); the kNN
+    `directed AS (` CTE and the quantized `CAST(SUM(__ax * __bx)` dot
+    (one SQL builder each); the chunk-start `F.sequence(..., CHUNK_STRIDE)` (one
     function); `MIXTURE_BUDGET_NUM` and `MIN_DISTINCT_RATIO` (read by
     one Spark stage and one SQL builder each); and the library's
     duplicated 8-line windows, at most MAX_DUPLICATED_WINDOWS."""
@@ -2035,7 +2038,15 @@ def test_copied_mechanisms_are_defined_once():
                     uses["exclusive_create"].add(where)
                 if is_attr(n, "os", "utime"):
                     uses["utime"].add(where)
+                if isinstance(n, ast.Call) and is_attr(n.func, "tempfile", "mkdtemp"):
+                    uses["mkdtemp"].add(where)
+                if isinstance(n, (ast.Import, ast.ImportFrom)) and "tempfile" in (
+                    [a.name for a in n.names] + [getattr(n, "module", None)]
+                ):
+                    uses["tempfile"].add(rel)
                 if isinstance(n, ast.Constant) and isinstance(n.value, str):
+                    if n.value.startswith("/tmp/"):
+                        uses["tmp"].add(where)
                     if "directed AS (" in n.value:
                         uses["directed"].add(where)
                     if "CAST(SUM(__ax * __bx)" in n.value:
@@ -2069,6 +2080,12 @@ def test_copied_mechanisms_are_defined_once():
         "exclusive_create"
     ]
     assert uses["utime"] == {"fixtures.py:acquire_lock"}, uses["utime"]
+    assert uses["tempfile"] == {"fixtures.py"}, uses["tempfile"]
+    assert uses["mkdtemp"] == {
+        "fixtures.py:run_dir",
+        "fixtures.py:ephemeral_dir",
+    }, uses["mkdtemp"]
+    assert uses["tmp"] == {"fixtures.py:scratch_dir"}, uses["tmp"]
     assert uses["directed"] == {"operators/similarity.py:sql_knn_ranked_ctes"}, uses[
         "directed"
     ]

@@ -53,10 +53,7 @@ def _recall_guard(spark, sf_dir: str) -> list[str]:
         dedup_minhash,
         dedup_ngram_jaccard,
     )
-    from crime_data_batch_processing_spark.sources.tables import (
-        load_table,
-        spread,
-    )
+    from crime_data_batch_processing_spark.sources.tables import spread_table
 
     fails: list[str] = []
 
@@ -79,7 +76,7 @@ def _recall_guard(spark, sf_dir: str) -> list[str]:
         )
 
     corpus = _planted_quantized(
-        spread(load_table(spark, sf_dir, "embeddings"), spark)
+        spread_table(spark, sf_dir, "embeddings")
     ).select(
         "vec_id", "q", descale(idot(F.col("q"), F.col("q"))).alias("nsq")
     )
